@@ -19,7 +19,10 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * regardless of table size, and the full-rewrite `commit` becomes a
   * manifest-reusing incremental commit under a real table format.
   *
-  * Layout: `dir/v=N/…parquet` + `dir/_latest` (ASCII version number).
+  * Every writer commits through ONE pipeline — stage → seal → claim →
+  * publish — described (with its policies and invariants) at
+  * [[commitStaged]]. Layout: `dir/v=N/…parquet` + `dir/_latest`
+  * (ASCII version number).
   */
 object Snapshots {
 
@@ -61,15 +64,14 @@ object Snapshots {
     0L // unreachable
   }
 
-  /** First unoccupied version slot: above the pointer, above every
-    * existing `v=` directory, AND above every live `_claim.N` marker —
-    * a crashed orphan, a staged WAP write, a BRANCH head, or a CAS
-    * committer that has claimed-but-not-yet-renamed may own slots past
-    * the pointer, and `latest+1` would silently overwrite them (on the
-    * local FS a rename onto an occupied slot MERGES instead of
-    * failing, so the collision would be silent). Stale markers moved
-    * aside by crashed-winner recovery (`.stale-` suffix) do not
-    * occupy a slot. */
+  /** First unoccupied version slot — the Replace policy's claim
+    * target: above the pointer, above every existing `v=` directory,
+    * AND above every live `_claim.N` marker — a crashed orphan, a
+    * branch head, or a committer that has claimed-but-not-yet-renamed
+    * may own slots past the pointer, and `latest+1` would silently
+    * overwrite them (on the local FS a rename onto an occupied slot
+    * MERGES instead of failing). Retired markers (`.stale-` suffix)
+    * do not occupy a slot. */
   private def nextFreeVersion(spark: SparkSession, dir: String): Long = {
     val f = fs(spark, dir)
     val d = new Path(dir)
@@ -90,9 +92,8 @@ object Snapshots {
     * if-none-match put) — of N racing claimants, one succeeds.
     * LOCAL-FS CAVEAT: Hadoop's LocalFileSystem (ChecksumFileSystem)
     * implements create(overwrite=false) as check-then-create, so two
-    * LOCAL racers can both "win" the claim; every claim-based
-    * committer therefore backstops the claim with a post-rename
-    * nested-merge check (commitToBranch, commitCAS), so claim
+    * LOCAL racers can both "win" the claim; [[occupySlot]]'s
+    * post-rename nested-merge check backstops it, so claim
     * non-atomicity degrades to a retry/conflict — never to a corrupt
     * merged version directory. */
   private def tryClaimSlot(f: org.apache.hadoop.fs.FileSystem,
@@ -100,12 +101,8 @@ object Snapshots {
     try { f.create(new Path(dir, s"_claim.$v"), false).close(); true }
     catch { case _: java.io.IOException => false }
 
-  /** Allocate AND claim the next free slot in one step, retrying the
-    * probe when a concurrent claimant takes the candidate first —
-    * every committing path (plain, WAP, branch, CAS) holds a claim
-    * marker before writing bytes into its slot, so the allocator's
-    * "live claims are occupied" rule actually excludes ALL writers
-    * from each other, not just the claim-based ones. */
+  /** Allocate AND claim the next free slot, retrying the probe when a
+    * concurrent claimant takes the candidate first. */
   private def claimNextFree(spark: SparkSession, dir: String,
       maxAttempts: Int = 64): Long = {
     val f = fs(spark, dir)
@@ -126,21 +123,15 @@ object Snapshots {
     f.rename(new Path(dir, s"_claim.$v"), new Path(dir,
       s"_claim.$v.stale-${java.util.UUID.randomUUID()}"))
 
-  /** Move freshly staged bytes into CLAIMED slot `v=$v` atomically —
-    * the one step every committing path shares, and the reason the
-    * crashed-winner invariant holds: `v=$v` only ever comes into
-    * existence via this all-or-nothing rename of COMPLETE,
-    * meant-to-publish data, never via in-place writes. Returns true
-    * when the slot now holds exactly the staged directory. If the
+  /** Move a sealed stage into CLAIMED slot `v=$v` atomically. Returns
+    * true when the slot now holds exactly the staged directory. If the
     * rename MERGED into a pre-existing `v=$v` (pre-claim-era leftover
     * never vacuumed, or a local-FS claim race — Hadoop's rename onto
     * an existing directory nests the source inside it and returns
     * true): pulls the stage back out INTACT (its contents are
-    * slot-independent, so the caller may retry the same bytes against
-    * a fresh slot instead of re-running the Spark write), retires the
-    * claim, and returns false — never publish a corrupt merged
-    * directory. Callers own the stage's final disposal.
-    */
+    * slot-independent, so a retry can reuse it against a fresh slot),
+    * retires the claim, and returns false — never publish a corrupt
+    * merged directory. */
   private def occupySlot(f: org.apache.hadoop.fs.FileSystem,
       dir: String, stage: Path, v: Long): Boolean = {
     val dst = new Path(dir, s"v=$v")
@@ -153,41 +144,361 @@ object Snapshots {
     }
   }
 
-  /** Claim a fresh slot and occupy it with the staged bytes, retrying
-    * on squatted slots (pre-claim-era leftovers, local-FS claim
-    * races) with the SAME stage — the expensive Spark write happens
-    * once, only the metadata claim/rename loop repeats. Returns the
-    * occupied version; on exhaustion deletes the stage and throws.
-    */
-  private def occupyNextFree(spark: SparkSession,
-      f: org.apache.hadoop.fs.FileSystem, dir: String, stage: Path,
-      maxAttempts: Int = 3): Long = {
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val v = claimNextFree(spark, dir)
-      if (occupySlot(f, dir, stage, v)) return v
-      attempt += 1
-    }
-    f.delete(stage, true)
-    throw new IllegalStateException(
-      s"could not occupy a version slot in $maxAttempts attempts: $dir")
+  // ---- the commit pipeline -------------------------------------------
+
+  /** THE COMMIT PIPELINE — every version this store publishes goes
+    * through the same four steps, modelled on Delta Lake's
+    * optimistic-concurrency commit (Armbrust et al., VLDB 2020):
+    *
+    *  1. STAGE ([[stage]]) — the statement's bytes land in a
+    *     writer-unique `dir/_staging/<uuid>` directory, the only
+    *     staging path this store ever names. Racing writers never
+    *     share bytes; a crash leaves an orphan stage vacuum reclaims.
+    *  2. SEAL ([[seal]]) — every sidecar the version needs lands
+    *     INSIDE the stage: the stats manifest, bloom sidecars (fresh,
+    *     or spliced with the entries of byte-carried files), `_epoch.N`,
+    *     `_dml.json` provenance, and the `_epoch.*` / `_zcluster.*`
+    *     markers carried from the base version.
+    *  3. CLAIM — an exclusive-create `_claim.N` marker reserves slot N
+    *     ([[tryClaimSlot]]), then the stage is renamed into `v=N`
+    *     ([[occupySlot]]).
+    *  4. PUBLISH — the `_latest` pointer is replaced atomically
+    *     ([[publish]]).
+    *
+    * Claim-and-publish ([[commitStaged]]) runs one of three POLICIES
+    * for a head that moved while the statement staged:
+    *  - [[Replace]] — plain, epoch, WAP, restore and branch commits:
+    *    claim the next FREE slot and publish whatever happened
+    *    meanwhile (a branch commit moves its ref instead, and retires
+    *    its claim — the version is settled, and a live claim on a
+    *    slot main never publishes would wedge every head-bound writer).
+    *  - [[Rebase]] — every row-level statement (DELETE, UPDATE, MERGE,
+    *    INSERT, OVERWRITE; copy-on-write and merge-on-read): claim the
+    *    slot above the head it staged from; on a moved head withdraw,
+    *    run the statement's validation against the new head (it throws
+    *    to abort) and re-stage there, up to `maxRetries` times.
+    *  - [[Abort]] — every maintenance rewrite (fold, purge, compact,
+    *    ZORDER) and commitCAS: like Rebase, but a moved head withdraws
+    *    and throws ConcurrentModificationException — a rewrite built
+    *    from an old head would silently revert the commit that moved
+    *    it, and maintenance is always safe to re-run.
+    *
+    * Invariants:
+    *  - `v=N` only ever comes into existence through the
+    *    all-or-nothing rename of a COMPLETE, sealed stage — never via
+    *    in-place writes — which is what lets crashed-winner recovery
+    *    treat "v=N exists" as "complete, roll it forward";
+    *  - a Rebase or Abort publish never moves the pointer backwards:
+    *    it publishes only while the head is still the one it staged
+    *    from ([[publishIfHead]]);
+    *  - a failure at any step leaves the table at its old version: the
+    *    stage is deleted, a won claim retired, an occupied slot
+    *    withdrawn.
+    *
+    * Layout: `dir/v=N/` versions, `dir/_latest` pointer,
+    * `dir/_claim.N` slot claims, `dir/_staging/<uuid>` stages. */
+  private sealed trait Policy
+  private final case class Replace(ref: Option[Long => Unit] = None,
+      maxAttempts: Int = 3) extends Policy
+  private final case class Rebase(maxRetries: Int, waitMs: Long)
+      extends Policy
+  /** `exact`: claim slot `base + 1` and never wait (commitCAS). */
+  private final case class Abort(op: String, base: Long,
+      exact: Boolean = false) extends Policy
+
+  /** A sealed stage, the statement's result, and (Rebase) the
+    * validation run with the NEW head when another commit won. */
+  private final case class Staged[T](stage: Path, result: T,
+      validate: Long => Unit = (_: Long) => ())
+
+  private val StagingDir = "_staging"
+
+  private val hooks =
+    new java.util.concurrent.ConcurrentHashMap[String, String => Unit]()
+
+  private def hookKey(dir: String): String = new Path(dir).toUri.getPath
+
+  /** TEST SEAM: run `body` with `hook` called after every pipeline
+    * step on table `dir` — "stage", "seal", "claim", and "occupy"
+    * (before the publish). A hook that commits to the same table is a
+    * deterministic race; a hook that throws is an injected fault. */
+  private[operators] def withHook[A](dir: String, hook: String => Unit)(
+      body: => A): A = {
+    hooks.put(hookKey(dir), hook)
+    try body finally { hooks.remove(hookKey(dir)); () }
   }
 
-  /** Write `df` as the next version and publish it atomically.
-    * Returns the new version number. The slot is claimed via the same
-    * `_claim.N` marker the CAS/branch committers use BEFORE any bytes
-    * are written, so a concurrent branch or CAS committer can never
-    * allocate the same slot in the window between our directory
-    * listing and our parquet write (the marker persists alongside its
-    * version; vacuum removes both together). Data is staged in a
-    * writer-unique temp directory and renamed into the slot — `v=N`
-    * therefore NEVER exists in a partial state, which is what lets
-    * CAS crashed-winner recovery treat "v=N exists under a stale
-    * claim" as "complete, roll it forward". A crash mid-write leaves
-    * only the claim marker plus a `_stage-*` orphan (vacuum reclaims
-    * both); a crash between the slot rename and the pointer replace
-    * leaves a complete v=N that recovery may legitimately publish.
-    */
+  private def step(dir: String, name: String): Unit =
+    if (!hooks.isEmpty) {
+      val h = hooks.get(hookKey(dir))
+      if (h != null) h(name)
+    }
+
+  /** STAGE: a writer-unique directory under `dir/_staging/` that
+    * `write` fills. Its last segment does not start with `_`, so the
+    * sealer's scans read it like any parquet directory (no `All paths
+    * were ignored` warnings). A failing write leaves nothing behind. */
+  private def stage(spark: SparkSession, dir: String)(
+      write: Path => Unit): Path = {
+    val p = new Path(dir, s"$StagingDir/${java.util.UUID.randomUUID()}")
+    try { write(p); step(dir, "stage") }
+    catch { case e: Throwable => fs(spark, dir).delete(p, true); throw e }
+    p
+  }
+
+  /** The one way a frame lands in a stage. `rebalance` adds an AQE
+    * REBALANCE keyed on the partition columns (size-aware — hot
+    * partitions split, small ones coalesce) so each writer task owns
+    * whole partition values: a stage write from an unclustered frame
+    * (a merge's anti-join ∪ source, a fold's assembly) otherwise opens
+    * one file per (task × partition value) — measured 520 files /
+    * 4.5 s where the clustered write stages 8 files in 0.6 s — and
+    * every later statement pays the small files again at scan time.
+    * `keepSchema`: a version needs at least one data file (schema
+    * inference has nothing to open otherwise), so a write that
+    * produced none — a statement that emptied the table — adds one
+    * schema-carrying zero-row file, unpartitioned (a dynamic-partition
+    * write of an empty frame writes nothing). */
+  private def writeFrame(df: DataFrame, stage: Path,
+      pcols: Seq[String] = Nil, rebalance: Boolean = false,
+      keepSchema: Boolean = false): Unit = {
+    import org.apache.spark.sql.functions.col
+    val balanced =
+      if (!rebalance) df
+      else if (pcols.nonEmpty) df.hint("rebalance", pcols.map(col): _*)
+      else df.hint("rebalance")
+    val w = balanced.write.mode("overwrite")
+    (if (pcols.nonEmpty) w.partitionBy(pcols: _*) else w)
+      .parquet(stage.toString)
+    if (keepSchema) {
+      val f = stage.getFileSystem(
+        df.sparkSession.sparkContext.hadoopConfiguration)
+      if (listDataRel(f, f.makeQualified(stage))._1.isEmpty)
+        df.limit(0).coalesce(1).write.mode("overwrite")
+          .parquet(stage.toString)
+    }
+  }
+
+  /** What [[seal]] writes into a stage. `statsCols`/`bloomCols` are
+    * computed over the stage's own data files; `carry` (source file,
+    * stage-relative name) is byte-copied in AFTER that scan, and its
+    * existing entries `keptStats`/`keptBlooms` are spliced in (carried
+    * files are never re-scanned). `markersFrom` is the base version
+    * whose `_epoch.*`/`_zcluster.*` markers carry forward, `markers`
+    * are fresh empty marker files, `dml` the statement's provenance
+    * (base version, op, touched files). */
+  private final case class Seal(statsCols: Seq[String] = Nil,
+      bloomCols: Seq[String] = Nil,
+      keptStats: Seq[FileStats.FileStat] = Nil,
+      keptBlooms: Map[String, Seq[BloomStats.FileBloom]] = Map.empty,
+      carry: Seq[(Path, String)] = Nil,
+      markersFrom: Option[Path] = None,
+      markers: Seq[String] = Nil,
+      dml: Option[(Long, String, Seq[String])] = None)
+
+  /** SEAL: write every sidecar of `s` into `stage` — the one place a
+    * version's metadata is produced, sealed with its data by the slot
+    * rename (a reader can never resolve a version whose manifest is
+    * missing or half-written). A failure deletes the stage. */
+  private def seal(spark: SparkSession, dir: String, stage: Path,
+      s: Seal): Path = {
+    val f = fs(spark, dir)
+    try {
+      val st = stage.toString
+      // a statement that rewrote nothing new (every row deleted from
+      // the rewritten files) keeps only the carried files' entries
+      lazy val empty = listDataRel(f, f.makeQualified(stage))._1.isEmpty
+      if (s.statsCols.nonEmpty) {
+        if (empty) FileStats.writeEntries(spark, st, s.keptStats)
+        else {
+          FileStats.writeManifest(spark, st, s.statsCols)
+          if (s.keptStats.nonEmpty) FileStats.writeEntries(spark, st,
+            FileStats.readManifest(spark, st) ++ s.keptStats)
+        }
+      }
+      s.bloomCols.foreach { c =>
+        val kept = s.keptBlooms.getOrElse(c, Nil)
+        if (empty) BloomStats.writeEntries(spark, st, c, kept)
+        else {
+          BloomStats.writeManifest(spark, st, c)
+          if (kept.nonEmpty) BloomStats.writeEntries(spark, st, c,
+            BloomStats.readManifest(spark, st, c) ++ kept)
+        }
+      }
+      val conf = spark.sparkContext.hadoopConfiguration
+      s.carry.foreach { case (src, rel) =>
+        FileUtil.copy(f, src, f, new Path(stage, rel), false, conf)
+      }
+      s.markersFrom.foreach(copyEpochMarkers(f, _, stage))
+      s.markers.foreach(m => f.create(new Path(stage, m), true).close())
+      s.dml.foreach { case (base, op, touched) =>
+        writeDml(f, stage, base, op, touched)
+      }
+      step(dir, "seal")
+      stage
+    } catch { case e: Throwable => f.delete(stage, true); throw e }
+  }
+
+  /** Stage `df` (partitioned by `pcols`) and seal it with `s`. */
+  private def stageFrame(spark: SparkSession, dir: String, df: DataFrame,
+      s: Seal = Seal(), pcols: Seq[String] = Nil): Path =
+    seal(spark, dir, stage(spark, dir)(writeFrame(df, _, pcols)), s)
+
+  /** CLAIM-AND-PUBLISH: `prepare(head)` stages and seals the statement
+    * against the current head — `Left(result)` for a provable no-op
+    * (nothing published, the head comes back), `Right(staged)`
+    * otherwise — and [[land]] claims, occupies and publishes under
+    * `policy`. Replace and Abort prepare once; Rebase re-prepares on
+    * the new head after its validation passes. */
+  private def commitStaged[T](spark: SparkSession, dir: String,
+      policy: Policy)(prepare: Long => Either[T, Staged[T]]): (Long, T) = {
+    @annotation.tailrec
+    def attempt(retries: Int): (Long, T) = {
+      val h = latestVersion(spark, dir)
+      prepare(h) match {
+        case Left(result) => (h, result)
+        case Right(st) => land(spark, dir, h, st.stage, policy) match {
+          case Some(v) => (v, st.result)
+          case None =>
+            val h2 = latestVersion(spark, dir)
+            policy match {
+              case Rebase(maxRetries, _) =>
+                st.validate(h2)
+                if (retries >= maxRetries)
+                  throw new IllegalStateException(
+                    s"conflict: lost the commit race ${retries + 1} " +
+                      s"times in $dir — retry budget exhausted")
+                attempt(retries + 1)
+              case Abort(op, base, _) =>
+                throw new java.util.ConcurrentModificationException(
+                  s"conflict: the head moved past v=$base (now v=$h2) " +
+                    s"while $op was staging — nothing was published; " +
+                    s"re-run $op on the new head")
+              case _: Replace => // land always publishes a Replace
+                throw new IllegalStateException("unreachable")
+            }
+        }
+      }
+    }
+    attempt(0)
+  }
+
+  /** Commit one stage under a policy that never re-stages. */
+  private def commitNew(spark: SparkSession, dir: String,
+      policy: Policy = Replace())(st: => Path): Long =
+    commitStaged(spark, dir, policy)(_ => Right(Staged(st, ())))._1
+
+  /** Claim, occupy and publish `stage` under `policy`, `h` being the
+    * head it was staged from. Some(version) once published; None when
+    * another commit moved the head first (stage and claim already
+    * withdrawn). Any failure withdraws everything and rethrows. */
+  private def land(spark: SparkSession, dir: String, h: Long,
+      stage: Path, policy: Policy): Option[Long] = {
+    val f = fs(spark, dir)
+    var slot = -1L
+    var claimed = false
+    var occupied = false
+    def withdraw(): Unit = {
+      if (occupied) {
+        f.delete(new Path(dir, s"v=$slot"), true)
+        morMemoInvalidate(f, dir, slot)
+      } else f.delete(stage, true)
+      if (claimed) retireClaim(f, dir, slot)
+      claimed = false
+      occupied = false
+    }
+    // a failed occupy pulled the stage back out and retired the claim
+    def occupy(): Boolean = {
+      occupied = occupySlot(f, dir, stage, slot)
+      claimed = occupied
+      if (occupied) step(dir, "occupy")
+      occupied
+    }
+    try policy match {
+      case Replace(ref, maxAttempts) =>
+        // squatted slots (pre-claim-era leftovers, local-FS claim
+        // races) retry with the SAME stage — the Spark write ran once
+        var attempt = 0
+        while (!occupied) {
+          if (attempt == maxAttempts)
+            throw new IllegalStateException(
+              s"could not occupy a version slot in $maxAttempts " +
+                s"attempts: $dir")
+          slot = claimNextFree(spark, dir)
+          claimed = true
+          step(dir, "claim")
+          occupy()
+          attempt += 1
+        }
+        ref match {
+          case Some(move) =>
+            retireClaim(f, dir, slot)
+            claimed = false
+            move(slot)
+          case None => publish(spark, dir, slot)
+        }
+        Some(slot)
+      case _ =>
+        val (expected, waitMs, exact) = policy match {
+          case Abort(_, base, e) => (base, if (e) 0L else 30000L, e)
+          case Rebase(_, w) => (h, w, false)
+          case _: Replace => throw new IllegalStateException("unreachable")
+        }
+        slot = if (exact) expected + 1 else slotAbove(f, dir, expected)
+        if (!tryClaimSlot(f, dir, slot)) {
+          // lost the claim — wait for the winner to publish
+          if (waitMs <= 0)
+            throw new java.util.ConcurrentModificationException(
+              s"conflict: v=$slot already claimed by a concurrent " +
+                "committer")
+          val deadline = System.currentTimeMillis() + waitMs
+          while (latestVersion(spark, dir) == expected &&
+              System.currentTimeMillis() < deadline) Thread.sleep(25L)
+          if (latestVersion(spark, dir) == expected)
+            throw new IllegalStateException(
+              s"conflict: v=$slot claimed but never published within " +
+                s"${waitMs}ms — crashed committer? recover with " +
+                "commitCAS claimGraceMs / vacuum")
+          withdraw()
+          None
+        } else {
+          claimed = true
+          step(dir, "claim")
+          // re-check BEFORE occupying: once v=N exists under a moved
+          // head, ranged readers (readAppendsSince, the snapshot-log
+          // source) would transiently see a version about to be
+          // withdrawn
+          if (latestVersion(spark, dir) != expected) { withdraw(); None }
+          else if (!occupy())
+            throw new java.util.ConcurrentModificationException(
+              s"conflict: v=$slot directory already exists in $dir")
+          else if (publishIfHead(spark, dir, expected, slot)) Some(slot)
+          else {
+            // a Replace committer landed ABOVE our slot and published
+            // first — publishing now would regress the pointer
+            withdraw()
+            None
+          }
+        }
+    } catch { case e: Throwable => withdraw(); throw e }
+  }
+
+  /** The slot a head-bound (Rebase/Abort) commit claims: the lowest
+    * above `h` that is not a SETTLED unpublished version — a `v=N`
+    * with no live claim (a branch commit, a rolled-back version): no
+    * writer will ever publish it, so waiting on it would wedge main.
+    * A slot under a live claim is contested, never skipped — that is
+    * what serializes head-bound writers on the same head. */
+  private def slotAbove(f: org.apache.hadoop.fs.FileSystem, dir: String,
+      h: Long): Long = {
+    val d = new Path(dir)
+    val names =
+      if (!f.exists(d)) Set.empty[String]
+      else f.listStatus(d).map(_.getPath.getName).toSet
+    Iterator.iterate(h + 1)(_ + 1)
+      .find(s => !names(s"v=$s") || names(s"_claim.$s")).get
+  }
+
   /** Observation result, or None when Spark's observation manager
     * delivered the EMPTY row: an eagerly-executed write command spawns
     * a wrapper QueryExecution whose logical plan still contains the
@@ -203,34 +514,11 @@ object Snapshots {
       : Option[Map[String, Any]] =
     scala.util.Try(obs.get).toOption.filter(_.nonEmpty)
 
-  /** Stage-write `df` clustered to the table's partition layout: an
-    * AQE REBALANCE keyed on the partition columns (size-aware — hot
-    * partitions split, small ones coalesce) so each writer task owns
-    * whole partition values. Without it a stage write from an
-    * unclustered frame (a merge's anti-join ∪ source, a fold's
-    * assembly) opens one file per (task × partition value) — measured
-    * 520 files / 4.5 s where the clustered write stages 8 files in
-    * 0.6 s — and every LATER statement pays the small files again at
-    * scan time (guide §6: REBALANCE before the write). Flat layouts
-    * rebalance keyless for advisory-sized output files. */
-  private def clusteredWriter(df: DataFrame, pcols: Seq[String])
-      : org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row] = {
-    import org.apache.spark.sql.functions.col
-    val balanced =
-      if (pcols.nonEmpty) df.hint("rebalance", pcols.map(col): _*)
-      else df.hint("rebalance")
-    val w = balanced.write.mode("overwrite")
-    if (pcols.nonEmpty) w.partitionBy(pcols: _*) else w
-  }
-
-  def commit(spark: SparkSession, df: DataFrame, dir: String): Long = {
-    val f = fs(spark, dir)
-    val stage = new Path(dir, s"_stage-${java.util.UUID.randomUUID()}")
-    df.write.mode("overwrite").parquet(stage.toString)
-    val v = occupyNextFree(spark, f, dir, stage)
-    publish(spark, dir, v)
-    v
-  }
+  /** Write `df` as the next version and publish it atomically — the
+    * Replace policy with no sidecars ([[commitWithStats]] with none).
+    * Returns the new version number. */
+  def commit(spark: SparkSession, df: DataFrame, dir: String): Long =
+    commitWithStats(spark, df, dir, statsCols = Nil)
 
   /** Version numbers of every existing `v=` directory. */
   private def existingVersions(f: org.apache.hadoop.fs.FileSystem,
@@ -289,30 +577,37 @@ object Snapshots {
     */
   def commitWithEpoch(spark: SparkSession, df: DataFrame, dir: String,
       epochId: Long, statsCols: Seq[String] = Nil,
-      bloomCols: Seq[String] = Nil): Either[String, Long] = {
+      bloomCols: Seq[String] = Nil): Either[String, Long] =
+    // a streaming table should stay pruning-capable like any other:
+    // sidecars seal with the epoch marker in ONE rename
+    epochFenced(spark, dir, epochId)(commitNew(spark, dir)(
+      stageFrame(spark, dir, df, Seal(statsCols, bloomCols,
+        markers = Seq(s"_epoch.$epochId")))))
+
+  /** The exactly-once fence shared by [[commitWithEpoch]] and
+    * [[appendWithEpoch]]: `Left` when the epoch is already published;
+    * otherwise crashed-attempt recovery — an unpublished v > head
+    * carrying THIS epoch's marker is our own prior attempt that died
+    * between slot rename and pointer publish, its data complete, so it
+    * ROLLS FORWARD instead of duplicating into a fresh slot (which
+    * would leave the orphan inside keepLast as time-travel history
+    * serving the same epoch twice); a double crash can leave several
+    * same-epoch orphans — the oldest publishes, the rest are
+    * reclaimed. With no orphan, `commitNew` commits the batch. */
+  private def epochFenced(spark: SparkSession, dir: String, epochId: Long)(
+      commitNew: => Long): Either[String, Long] = {
     require(epochId >= 0, s"epoch ids are non-negative, got $epochId")
     val f = fs(spark, dir)
     val head = latestVersion(spark, dir)
     val versions = existingVersions(f, dir)
-    val fence = newestMarked(f, dir, versions, head)
-    fence match {
+    newestMarked(f, dir, versions, head) match {
       case Some((v, ms)) if ms.contains(epochId) =>
         Left(s"epoch $epochId already published as v=$v")
       case _ =>
-        // crashed-attempt recovery: an unpublished v>head carrying
-        // THIS epoch's marker is our own prior attempt that died
-        // between slot rename and pointer publish. Its data is
-        // complete — roll it forward instead of duplicating it into a
-        // fresh slot (which would leave the orphan inside keepLast as
-        // time-travel history serving the same epoch twice).
-        val orphans = versions
-          .filter(v => v > head && epochMarkers(f, dir, v).contains(epochId))
-          .sorted
-        orphans.headOption match {
-          case Some(v) =>
-            // a double-crash can leave several same-epoch orphans;
-            // publish the oldest complete one, reclaim the rest
-            orphans.tail.foreach { o =>
+        versions.filter(v => v > head &&
+          epochMarkers(f, dir, v).contains(epochId)).sorted match {
+          case v +: rest =>
+            rest.foreach { o =>
               f.delete(new Path(dir, s"v=$o"), true)
               morMemoInvalidate(f, dir, o)
               retireClaim(f, dir, o)
@@ -320,20 +615,7 @@ object Snapshots {
             publish(spark, dir, v)
             retireClaim(f, dir, v)
             Right(v)
-          case None =>
-            val stage =
-              new Path(dir, s"_stage-${java.util.UUID.randomUUID()}")
-            df.write.mode("overwrite").parquet(stage.toString)
-            // a streaming table should stay pruning-capable like any
-            // other: sidecars seal with the epoch marker in ONE rename
-            if (statsCols.nonEmpty)
-              FileStats.writeManifest(spark, stage.toString, statsCols)
-            bloomCols.foreach(c =>
-              BloomStats.writeManifest(spark, stage.toString, c))
-            f.create(new Path(stage, s"_epoch.$epochId"), true).close()
-            val v = occupyNextFree(spark, f, dir, stage)
-            publish(spark, dir, v)
-            Right(v)
+          case _ => Right(commitNew)
         }
     }
   }
@@ -445,6 +727,9 @@ object Snapshots {
     * or half-written. `partitionByCols` (optional) forwards to the
     * parquet writer so layouts that want a deterministic
     * file-per-cluster shape (ZOrder bucket dirs) get it here.
+    * Point-lookup sidecars ([[BloomStats]], `bloomCols`) seal by the
+    * same rename — min/max serves clustered ranges, blooms serve
+    * equality probes on any other column.
     * Readers prune via [[readPruned]] — at 100 TB, manifest-based
     * file skipping is the single biggest scan lever this store has:
     * the driver reads one sidecar instead of opening 100k parquet
@@ -454,140 +739,144 @@ object Snapshots {
   def commitWithStats(spark: SparkSession, df: DataFrame, dir: String,
       statsCols: Seq[String],
       partitionByCols: Seq[String] = Nil,
-      bloomCols: Seq[String] = Nil): Long = {
-    val f = fs(spark, dir)
-    val stage = new Path(dir, s"_stage-${java.util.UUID.randomUUID()}")
-    val w = df.write.mode("overwrite")
-    (if (partitionByCols.nonEmpty) w.partitionBy(partitionByCols: _*)
-     else w).parquet(stage.toString)
-    FileStats.writeManifest(spark, stage.toString, statsCols)
-    // point-lookup sidecars ([[BloomStats]]) seal into the version by
-    // the same rename — min/max serves clustered ranges, blooms serve
-    // equality probes on any other column
-    bloomCols.foreach(c =>
-      BloomStats.writeManifest(spark, stage.toString, c))
-    val v = occupyNextFree(spark, f, dir, stage)
-    publish(spark, dir, v)
-    v
-  }
+      bloomCols: Seq[String] = Nil): Long =
+    commitNew(spark, dir)(stageFrame(spark, dir, df,
+      Seal(statsCols, bloomCols), partitionByCols))
 
-  /** APPEND as a snapshot commit: the next version = the current
-    * version's files (byte-copied through, names preserved, stats and
-    * bloom entries SPLICED — untouched files are never re-scanned)
-    * plus the new rows' files (scanned once for their sidecar
-    * entries). The input is conformed to the table schema (missing
-    * columns become typed NULLs; EXTRA columns are refused — evolving
-    * the schema is a full commit's job); partitioned layouts route
-    * new rows through the same `partitionBy`. At 100 TB the cost is
-    * the delta's write plus a metadata-speed copy of existing files —
-    * never a rescan of the table. On an empty table this is just
-    * [[commit]]. Epoch markers carry forward. */
-  def appendVersion(spark: SparkSession, df: DataFrame,
-      dir: String): Long = appendVersion0(spark, df, dir, None)
+  /** APPEND as a snapshot commit — what SQL `INSERT INTO` runs: the
+    * next version = the current version's files (byte-copied through,
+    * names preserved, stats and bloom entries SPLICED — untouched
+    * files are never re-scanned) plus the new rows' files (scanned
+    * once for their sidecar entries). The input is conformed to the
+    * table schema (missing columns become typed NULLs; EXTRA columns
+    * are refused — evolving the schema is a full commit's job);
+    * partitioned layouts route new rows through the same
+    * `partitionBy`. At 100 TB the cost is the delta's write plus a
+    * metadata-speed copy of existing files — never a rescan of the
+    * table. On an empty table this is just [[commit]]. Epoch markers
+    * carry forward.
+    *
+    * Publishes under the Rebase policy: an append COMMUTES with any
+    * concurrent commit (it rewrites nothing — its carry is re-staged
+    * against whatever the new head holds), so a lost race always
+    * re-stages and retries; the version carries `_dml.json` op
+    * `append` with an empty touched set, so concurrent DML statements
+    * validate it as disjoint and retry instead of aborting. */
+  def appendVersion(spark: SparkSession, df: DataFrame, dir: String,
+      maxRetries: Int = 3, publishWaitMs: Long = 30000L): Long =
+    appendEpoch(spark, df, dir, None, Seal(), maxRetries, publishWaitMs)
 
-  /** [[appendVersion]] with commit-time race safety — what SQL
-    * `INSERT INTO` runs: the append stages against the head it read
-    * and publishes through the same claim/occupy/publish loop as
-    * every Tx DML statement. An append COMMUTES with any concurrent
-    * commit (it rewrites nothing — its carry is re-staged against
-    * whatever the new head holds), so a lost race always re-stages
-    * and retries; the published version carries `_dml.json` op
-    * `append` with an empty touched set, so concurrent Tx DML
-    * statements validate it as disjoint and retry instead of
-    * aborting. */
-  def appendVersionTx(spark: SparkSession, df: DataFrame,
-      dir: String, maxRetries: Int = 3, publishWaitMs: Long = 30000L)
-      : Long = {
+  /** [[appendVersion]], epoch-marked when `epoch` is set; `first`
+    * seals the commit of an EMPTY table (appends inherit the table's
+    * sidecars by splicing). */
+  private def appendEpoch(spark: SparkSession, df: DataFrame,
+      dir: String, epoch: Option[Long], first: Seal, maxRetries: Int,
+      publishWaitMs: Long): Long = {
     val f = fs(spark, dir)
-    if (latestVersion(spark, dir) == 0L) return commit(spark, df, dir)
-    txCommitLoop(spark, dir, maxRetries, publishWaitMs) { h =>
-      Right((stageAppend(spark, f, dir, h, df, None), (),
-        (_: Long) => ()))
+    commitStaged(spark, dir, Rebase(maxRetries, publishWaitMs)) { h =>
+      Right(Staged(
+        if (h == 0L) stageFrame(spark, dir, df,
+          first.copy(markers = epoch.map(e => s"_epoch.$e").toSeq))
+        else stageAppend(spark, f, dir, h, df, epoch), ()))
     }._1
   }
 
-  /** Versioned OVERWRITE with commit-time race safety — what SQL
-    * `INSERT OVERWRITE` runs: replace the HEAD (old versions stay
-    * time-travelable) while carrying the table's sidecar
-    * configuration forward — statsCols from the head's manifest,
-    * bloom columns, and the partition layout — so an overwrite never
-    * silently strips a table of its pruning. Publishes via the Tx
-    * loop; a lost race re-stages and retries (replace-the-head
-    * semantics hold against any interleaving). NO `_dml.json` is
-    * written: a concurrent Tx DML statement racing an overwrite must
-    * abort (its base rows were replaced wholesale), which is exactly
-    * how validateIntervening treats a provenance-less version. */
-  def overwriteVersionTx(spark: SparkSession, df: DataFrame,
-      dir: String, maxRetries: Int = 3, publishWaitMs: Long = 30000L)
-      : Long = {
+  /** Versioned OVERWRITE — what SQL `INSERT OVERWRITE` runs: replace
+    * the HEAD (old versions stay time-travelable) while carrying the
+    * table's sidecar configuration forward — statsCols and bloom
+    * columns of the head's home versions (an MoR head's version dir
+    * carries no manifests of its own), and the partition layout — so
+    * an overwrite never silently strips a table of its pruning. A lost
+    * race re-stages and retries (replace-the-head semantics hold
+    * against any interleaving). NO `_dml.json` is written: a
+    * concurrent DML statement racing an overwrite must abort (its base
+    * rows were replaced wholesale), which is exactly how
+    * validateIntervening treats a provenance-less version. */
+  def overwriteVersion(spark: SparkSession, df: DataFrame, dir: String,
+      maxRetries: Int = 3, publishWaitMs: Long = 30000L): Long = {
     val f = fs(spark, dir)
-    if (latestVersion(spark, dir) == 0L) return commit(spark, df, dir)
-    txCommitLoop(spark, dir, maxRetries, publishWaitMs) { h =>
-      val vDir = s"$dir/v=$h"
-      // sidecar configuration survives the overwrite even on an MoR
-      // head (whose version dir carries no manifests of its own):
-      // derive from the HOME versions, foldMor-style
-      val mor = isMorVersion(spark, dir, h)
-      val homes =
-        if (mor) physicalFiles(spark, f, dir, h).map(_._1)
-          .distinct.sorted.map(x => s"$dir/v=$x")
-        else Seq(vDir)
-      // an overwrite may CHANGE the schema — carry only the sidecar
-      // columns the new data still has (root segment for nested
-      // manifest paths), or the manifest write would fail to resolve
-      def inNewSchema(c: String): Boolean =
-        df.columns.exists(_.equalsIgnoreCase(c.takeWhile(_ != '.')))
-      val statsCols = homes
-        .filter(x => f.exists(new Path(x, FileStats.ManifestName)))
-        .flatMap(x => FileStats.readManifest(spark, x)
-          .flatMap(_.cols.keys)).distinct.sorted.filter(inNewSchema)
-      val bloomCols = homes.flatMap(x => bloomColsOf(f, x))
-        .distinct.sorted.filter(inNewSchema)
-      val pcols =
-        if (mor) pcolsOf(physicalFiles(spark, f, dir, h))
-        else listDataRel(f, f.makeQualified(new Path(vDir)))._2
-      val stage = new Path(dir, s"_stage-${java.util.UUID.randomUUID()}")
-      clusteredWriter(df, pcols).parquet(stage.toString)
-      // an overwrite to EMPTY still needs one schema-carrying file —
-      // and it keeps its manifests too (splice-safe null bounds), so
-      // the table stays stats-tracked through INSERT OVERWRITE ...
-      // WHERE false just like through any other statement
-      if (listDataRel(f, f.makeQualified(stage))._1.isEmpty)
-        df.limit(0).coalesce(1).write.mode("overwrite")
-          .parquet(stage.toString)
-      if (statsCols.nonEmpty)
-        FileStats.writeManifest(spark, stage.toString, statsCols)
-      bloomCols.foreach(c =>
-        BloomStats.writeManifest(spark, stage.toString, c))
-      Right((stage, (), (_: Long) => ()))
+    // an overwrite may CHANGE the schema — carry only the sidecar
+    // columns the new data still has (root segment for nested
+    // manifest paths), or the manifest write would fail to resolve
+    def inNewSchema(c: String): Boolean =
+      df.columns.exists(_.equalsIgnoreCase(c.takeWhile(_ != '.')))
+    commitStaged(spark, dir, Rebase(maxRetries, publishWaitMs)) { h =>
+      if (h == 0L) Right(Staged(stageFrame(spark, dir, df), ()))
+      else {
+        val phys = physicalFiles(spark, f, dir, h)
+        val (statsCols, bloomCols) = inheritedSidecars(spark, f,
+          phys.map(_._1).distinct.sorted.map(x => s"$dir/v=$x"))
+        // an overwrite to EMPTY keeps one schema-carrying file — and
+        // its manifests, so the table stays stats-tracked through
+        // INSERT OVERWRITE ... WHERE false like any other statement
+        val st = stage(spark, dir)(writeFrame(df, _, pcolsOf(phys),
+          rebalance = true, keepSchema = true))
+        Right(Staged(seal(spark, dir, st, Seal(
+          statsCols.filter(inNewSchema), bloomCols.filter(inNewSchema))),
+          ()))
+      }
     }._1
   }
 
-  private def appendVersion0(spark: SparkSession, df: DataFrame,
-      dir: String, epoch: Option[Long]): Long = {
-    val f = fs(spark, dir)
-    val v = latestVersion(spark, dir)
-    if (v == 0L) return commit(spark, df, dir)
-    val stage = stageAppend(spark, f, dir, v, df, epoch)
-    val nv = occupyNextFree(spark, f, dir, stage)
-    publish(spark, dir, nv)
-    nv
+  /** The sidecar configuration a rewrite of `homes` inherits: the
+    * UNION of the stats columns and the bloom columns those version
+    * directories track. */
+  private def inheritedSidecars(spark: SparkSession,
+      f: org.apache.hadoop.fs.FileSystem, homes: Seq[String])
+      : (Seq[String], Seq[String]) =
+    (homes.filter(h => f.exists(new Path(h, FileStats.ManifestName)))
+      .flatMap(h => FileStats.readManifest(spark, h).flatMap(_.cols.keys))
+      .distinct.sorted,
+      homes.flatMap(h => bloomColsOf(f, h)).distinct.sorted)
+
+  /** The stats manifest and bloom sidecars of version directory
+    * `vDir` (empty when it has none) — read ONCE per statement. */
+  private def sidecarsOf(spark: SparkSession,
+      f: org.apache.hadoop.fs.FileSystem, vDir: String)
+      : (Seq[FileStats.FileStat], Map[String, Seq[BloomStats.FileBloom]]) =
+    (if (f.exists(new Path(vDir, FileStats.ManifestName)))
+       FileStats.readManifest(spark, vDir)
+     else Seq.empty,
+     bloomColsOf(f, vDir)
+       .map(c => c -> BloomStats.readManifest(spark, vDir, c)).toMap)
+
+  /** The [[Seal]] of a copy-on-write statement on version `v` whose
+    * base sidecars are `sidecars`: the new files are scanned for every
+    * column the base tracks, the `carried` files are byte-copied
+    * through (names preserved) with their entries spliced, markers
+    * carry forward, and the provenance records (v, op, touched). */
+  private def cowSeal(dir: String, v: Long,
+      sidecars: (Seq[FileStats.FileStat],
+        Map[String, Seq[BloomStats.FileBloom]]),
+      carried: Seq[String], op: String, touched: Seq[String]): Seal = {
+    val vDir = s"$dir/v=$v"
+    val (stats, blooms) = sidecars
+    val keep = carried.toSet
+    Seal(statsCols = stats.flatMap(_.cols.keys).distinct.sorted,
+      bloomCols = blooms.keys.toSeq.sorted,
+      keptStats = stats.filter(e => keep(e.relPath)),
+      keptBlooms = blooms.map { case (c, es) =>
+        c -> es.filter(e => keep(e.relPath)) },
+      carry = carried.map(r => (new Path(s"$vDir/$r"), r)),
+      markersFrom = Some(new Path(vDir)),
+      dml = Some((v, op, touched)))
   }
 
-  /** Build (but do NOT commit) the append of `df` onto version `v`:
+  /** Stage (but do NOT commit) the append of `df` onto version `v`:
     * the delta's files staged (partition layout preserved), existing
     * files carried — byte-copied on a plain head, by reference on an
     * MoR head — sidecars spliced, epoch markers handled, and
     * `_dml.json` op `append` (empty touched set) sealed in so
-    * concurrent Tx DML validates an interleaved append as disjoint. */
+    * concurrent DML validates an interleaved append as disjoint. An
+    * EPOCH-fenced append writes only ITS marker (the commitWithEpoch
+    * convention — the engine can only ever replay the newest epoch,
+    * and carrying the whole history would make a long-lived streaming
+    * sink O(batches) marker files per commit); a plain append carries
+    * markers forward so the fence survives interleaved maintenance. */
   private def stageAppend(spark: SparkSession,
       f: org.apache.hadoop.fs.FileSystem, dir: String, v: Long,
       df: DataFrame, epoch: Option[Long]): Path = {
-    def mark(stage: Path): Unit =
-      epoch.foreach(e =>
-        f.create(new Path(stage, s"_epoch.$e"), true).close())
     val vDir = s"$dir/v=$v"
-    val vPath = f.makeQualified(new Path(vDir))
     val target = tableSchema(spark, dir)
     val extra = df.columns.toSet -- target.fieldNames.toSet
     require(extra.isEmpty,
@@ -595,68 +884,30 @@ object Snapshots {
         s"${extra.toSeq.sorted.mkString(",")} — evolve the schema " +
         "with a full commit first")
     val conformed = conform(df, target)
+    val markersFrom = if (epoch.isEmpty) Some(new Path(vDir)) else None
+    val markers = epoch.map(e => s"_epoch.$e").toSeq
     // an MoR head appends WITHOUT folding: new rows land as this
     // version's local files, every existing file carries by
-    // reference, and the tombstones (keyed on physical homes, which
-    // do not move) copy forward — still zero data-byte movement
+    // reference, and the deletion vectors (keyed on physical homes,
+    // which do not move) carry by reference too — still zero
+    // data-byte movement
     if (isMorVersion(spark, dir, v)) {
       val phys = physicalFiles(spark, f, dir, v)
-      val pcols = pcolsOf(phys)
-      val stage = new Path(dir,
-        s"_stage-${java.util.UUID.randomUUID()}")
-      clusteredWriter(conformed, pcols).parquet(stage.toString)
-      writeRefs(f, stage, phys)
-      // deletion vectors carry BY REFERENCE, like the data files —
-      // an append copies no tombstone bytes either
-      writeDvLines(f, new Path(stage, DvRefsName),
-        carryDvLines(spark, f, dir, v))
-      // an EPOCH-fenced append writes only ITS marker (the
-      // commitWithEpoch convention — the engine can only ever replay
-      // the newest epoch, and carrying the whole history would make a
-      // long-lived streaming sink O(batches) marker files per commit);
-      // a plain append carries markers forward so the fence survives
-      // interleaved maintenance commits
-      if (epoch.isEmpty) copyEpochMarkers(f, new Path(vDir), stage)
-      mark(stage)
-      writeDml(f, stage, v, "append", Nil)
-      return stage
-    }
-    val (dataFiles, pcols) = listDataRel(f, vPath)
-    val hasStats = f.exists(new Path(vDir, FileStats.ManifestName))
-    val stage = new Path(dir, s"_stage-${java.util.UUID.randomUUID()}")
-    clusteredWriter(conformed, pcols).parquet(stage.toString)
-    val stagedEmpty = listDataRel(f, f.makeQualified(stage))._1.isEmpty
-    if (hasStats) {
-      val old = FileStats.readManifest(spark, vDir)
-      if (stagedEmpty) FileStats.writeEntries(spark, stage.toString, old)
-      else {
-        val statsCols = old.flatMap(_.cols.keys).distinct.sorted
-        FileStats.writeManifest(spark, stage.toString, statsCols)
-        val fresh = FileStats.readManifest(spark, stage.toString)
-        FileStats.writeEntries(spark, stage.toString, fresh ++ old)
+      val st = stage(spark, dir) { p =>
+        writeFrame(conformed, p, pcolsOf(phys), rebalance = true)
+        writeRefs(f, p, phys)
+        writeDvLines(f, new Path(p, DvRefsName),
+          carryDvLines(spark, f, dir, v))
       }
+      return seal(spark, dir, st, Seal(markersFrom = markersFrom,
+        markers = markers, dml = Some((v, "append", Nil))))
     }
-    bloomColsOf(f, vDir).foreach { c =>
-      val old = BloomStats.readManifest(spark, vDir, c)
-      if (stagedEmpty)
-        BloomStats.writeEntries(spark, stage.toString, c, old)
-      else {
-        BloomStats.writeManifest(spark, stage.toString, c)
-        val fresh = BloomStats.readManifest(spark, stage.toString, c)
-        BloomStats.writeEntries(spark, stage.toString, c, fresh ++ old)
-      }
-    }
-    val conf = spark.sparkContext.hadoopConfiguration
-    dataFiles.foreach { r =>
-      org.apache.hadoop.fs.FileUtil.copy(f, new Path(s"$vDir/$r"),
-        f, new Path(stage, r), false, conf)
-    }
-    // see the MoR branch above: epoch-fenced appends write only their
-    // own marker, plain appends carry the fence forward
-    if (epoch.isEmpty) copyEpochMarkers(f, new Path(vDir), stage)
-    mark(stage)
-    writeDml(f, stage, v, "append", Nil)
-    stage
+    val (dataFiles, pcols) = listDataRel(f, f.makeQualified(new Path(vDir)))
+    val st = stage(spark, dir)(writeFrame(conformed, _, pcols,
+      rebalance = true))
+    seal(spark, dir, st, cowSeal(dir, v, sidecarsOf(spark, f, vDir),
+      dataFiles, "append", Nil)
+      .copy(markersFrom = markersFrom, markers = markers))
   }
 
   /** [[appendVersion]] with the epoch fence — the streaming-sink
@@ -671,36 +922,9 @@ object Snapshots {
     * (appends inherit the table's sidecars by splicing). */
   def appendWithEpoch(spark: SparkSession, df: DataFrame, dir: String,
       epochId: Long, statsCols: Seq[String] = Nil,
-      bloomCols: Seq[String] = Nil): Either[String, Long] = {
-    require(epochId >= 0, s"epoch ids are non-negative, got $epochId")
-    val f = fs(spark, dir)
-    val head = latestVersion(spark, dir)
-    // an empty store: the first batch IS a fresh epoch-fenced commit
-    if (head == 0L)
-      return commitWithEpoch(spark, df, dir, epochId, statsCols,
-        bloomCols)
-    val versions = existingVersions(f, dir)
-    newestMarked(f, dir, versions, head) match {
-      case Some((v, ms)) if ms.contains(epochId) =>
-        Left(s"epoch $epochId already published as v=$v")
-      case _ =>
-        val orphans = versions.filter(v => v > head &&
-          epochMarkers(f, dir, v).contains(epochId)).sorted
-        orphans.headOption match {
-          case Some(v) =>
-            orphans.tail.foreach { o =>
-              f.delete(new Path(dir, s"v=$o"), true)
-              morMemoInvalidate(f, dir, o)
-              retireClaim(f, dir, o)
-            }
-            publish(spark, dir, v)
-            retireClaim(f, dir, v)
-            Right(v)
-          case None =>
-            Right(appendVersion0(spark, df, dir, Some(epochId)))
-        }
-    }
-  }
+      bloomCols: Seq[String] = Nil): Either[String, Long] =
+    epochFenced(spark, dir, epochId)(appendEpoch(spark, df, dir,
+      Some(epochId), Seal(statsCols, bloomCols), 3, 30000L))
 
   /** Columns that have `_bloom_<col>.json` sidecars in a version. */
   private def bloomColsOf(f: org.apache.hadoop.fs.FileSystem,
@@ -767,26 +991,16 @@ object Snapshots {
     require(!f.listStatus(new Path(vDir)).exists(_.isDirectory),
       s"compactVersion: $vDir has partition subdirectories — " +
         "use compactPartitionedVersion")
-    val cols =
-      if (statsCols.nonEmpty) statsCols
-      else if (f.exists(new Path(vDir, FileStats.ManifestName)))
-        FileStats.readManifest(spark, vDir)
-          .flatMap(_.cols.keys).distinct.sorted
-      else Seq.empty
-    val stage = new Path(dir, s"_stage-${java.util.UUID.randomUUID()}")
-    val stats = Compaction.compact(spark, vDir, stage.toString,
-      targetBytes)
-    if (cols.nonEmpty)
-      FileStats.writeManifest(spark, stage.toString, cols)
     // bloom sidecars are per-FILE, so the new layout needs them
     // recomputed just like the stats manifest — dropping them would
     // silently turn point lookups back into full scans
-    bloomColsOf(f, vDir).foreach(c =>
-      BloomStats.writeManifest(spark, stage.toString, c))
-    copyEpochMarkers(f, new Path(vDir), stage)
-    val nv = occupyNextFree(spark, f, dir, stage)
-    publish(spark, dir, nv)
-    (nv, stats)
+    val (carried, blooms) = inheritedSidecars(spark, f, Seq(vDir))
+    var stats: Compaction.CompactStats = null
+    val st = stage(spark, dir)(p =>
+      stats = Compaction.compact(spark, vDir, p.toString, targetBytes))
+    (commitNew(spark, dir, Abort("compactVersion", v))(seal(spark, dir,
+      st, Seal(if (statsCols.nonEmpty) statsCols else carried, blooms,
+        markersFrom = Some(new Path(vDir))))), stats)
   }
 
   /** Layout-dispatching compaction — what SQL `OPTIMIZE t` means:
@@ -837,13 +1051,6 @@ object Snapshots {
       "compactPartitionedVersion on a merge-on-read head — " +
         "compactVersion folds it (or call foldMor), then bin-pack")
     val vDir = s"$dir/v=$v"
-    val cols =
-      if (statsCols.nonEmpty) statsCols
-      else if (f.exists(new Path(vDir, FileStats.ManifestName)))
-        FileStats.readManifest(spark, vDir)
-          .flatMap(_.cols.keys).distinct.sorted
-      else Seq.empty
-    val stage = new Path(dir, s"_stage-${java.util.UUID.randomUUID()}")
     val vPath = f.makeQualified(new Path(vDir))
     def dirs(p: Path): Seq[Path] =
       p +: f.listStatus(p).toSeq
@@ -852,9 +1059,9 @@ object Snapshots {
           !s.getPath.getName.startsWith("."))
         .flatMap(s => dirs(s.getPath))
     var agg = Compaction.CompactStats(0, 0, 0, 0L, 0)
-    dirs(vPath).foreach { d =>
+    val st = stage(spark, dir)(p => dirs(vPath).foreach { d =>
       val rel = vPath.toUri.relativize(d.toUri).getPath
-      val out = if (rel.isEmpty) stage else new Path(stage, rel)
+      val out = if (rel.isEmpty) p else new Path(p, rel)
       val cs = Compaction.compact(spark, d.toString, out.toString,
         targetBytes)
       agg = Compaction.CompactStats(
@@ -863,15 +1070,12 @@ object Snapshots {
         agg.nRewrittenFiles + cs.nRewrittenFiles,
         agg.rewrittenBytes + cs.rewrittenBytes,
         agg.passthroughFiles + cs.passthroughFiles)
-    }
-    if (cols.nonEmpty)
-      FileStats.writeManifest(spark, stage.toString, cols)
-    bloomColsOf(f, vDir).foreach(c =>
-      BloomStats.writeManifest(spark, stage.toString, c))
-    copyEpochMarkers(f, vPath, stage)
-    val nv = occupyNextFree(spark, f, dir, stage)
-    publish(spark, dir, nv)
-    (nv, agg)
+    })
+    val (carried, blooms) = inheritedSidecars(spark, f, Seq(vDir))
+    (commitNew(spark, dir, Abort("compactPartitionedVersion", v))(
+      seal(spark, dir, st, Seal(
+        if (statsCols.nonEmpty) statsCols else carried, blooms,
+        markersFrom = Some(vPath)))), agg)
   }
 
   /** Accounting for [[optimizeClustered]]: file counts either side of
@@ -1009,34 +1213,22 @@ object Snapshots {
       .repartition(col(bucketCol))
       .sortWithinPartitions(col("__z"))
       .drop("__z")
-    val cols = {
-      val carried =
-        if (statsCols.nonEmpty) statsCols
-        else if (f.exists(new Path(vDir, FileStats.ManifestName)))
-          FileStats.readManifest(spark, vDir)
-            .flatMap(_.cols.keys).distinct
-        else Seq.empty
-      (carried ++ clusterCols).distinct.sorted
-    }
-    val stage = new Path(dir, s"_stage-${java.util.UUID.randomUUID()}")
-    clustered.write.mode("overwrite").partitionBy(bucketCol)
-      .parquet(stage.toString)
-    FileStats.writeManifest(spark, stage.toString, cols)
-    bloomColsOf(f, vDir).foreach(c =>
-      BloomStats.writeManifest(spark, stage.toString, c))
-    copyEpochMarkers(f, vPath, stage)
-    // record the managed bucket column INSIDE the stage (sealed by the
-    // same atomic slot rename as the data): the next OPTIMIZE run —
-    // and any DML/compaction in between, which carry markers forward —
-    // can prove the column is store-managed before dropping it
-    f.create(new Path(stage, s"_zcluster.$bucketCol"), true).close()
-    val filesBefore = countDataFiles(f, vPath)
-    val filesAfter = countDataFiles(f, stage)
-    val rows = FileStats.readManifest(spark, stage.toString)
-      .map(_.rows).sum
-    val nv = occupyNextFree(spark, f, dir, stage)
-    publish(spark, dir, nv)
-    (nv, ClusterStats(filesBefore, filesAfter, rows))
+    val (inherited, blooms) = inheritedSidecars(spark, f, Seq(vDir))
+    val cols = ((if (statsCols.nonEmpty) statsCols else inherited) ++
+      clusterCols).distinct.sorted
+    // the managed bucket column is recorded INSIDE the stage (sealed
+    // by the same atomic slot rename as the data): the next OPTIMIZE
+    // run — and any DML/compaction in between, which carry markers
+    // forward — can prove the column is store-managed before dropping
+    // it
+    val st = seal(spark, dir,
+      stage(spark, dir)(writeFrame(clustered, _, Seq(bucketCol))),
+      Seal(cols, blooms, markersFrom = Some(vPath),
+        markers = Seq(s"_zcluster.$bucketCol")))
+    val stats = ClusterStats(countDataFiles(f, vPath),
+      countDataFiles(f, st),
+      FileStats.readManifest(spark, st.toString).map(_.rows).sum)
+    (commitNew(spark, dir, Abort("optimizeClustered", v))(st), stats)
   }
 
   // ---- copy-on-write row-level DML ------------------------------------
@@ -1064,21 +1256,41 @@ object Snapshots {
     * partition column moves its rows to the right directory.
     * Returns the new version and the accounting; a provably-no-op
     * delete (every file skipped) publishes nothing and returns the
-    * current version with zero stats. */
+    * current version with zero stats.
+    *
+    * Safe for CONCURRENT writers (the Rebase policy): the statement
+    * stages against the head it read and publishes only onto that
+    * head. If another writer committed first, it re-validates instead
+    * of clobbering:
+    *  - every version the new head's `_dml.json` chain leads back
+    *    through rewrote files DISJOINT from this statement's admitted
+    *    set → RETRY: re-stage against the new head (predicate DML
+    *    re-executes serializably), up to `maxRetries` times;
+    *  - any of them overlaps this statement's files, or is not a DML
+    *    version (a full commit replaced the table) → ABORT with
+    *    ConcurrentModificationException — the caller must re-reason,
+    *    exactly like Delta's ConcurrentDeleteDelete / ConcurrentWrite
+    *    conflicts.
+    * A lost claim whose winner never publishes within `publishWaitMs`
+    * aborts with a crashed-committer diagnosis (the commitCAS
+    * `claimGraceMs` recovery is the unblocking tool). */
   def deleteWhere(spark: SparkSession, dir: String,
-      pred: org.apache.spark.sql.Column): (Long, RewriteStats) =
-    rewriteWhere(spark, dir, pred, None)
+      pred: org.apache.spark.sql.Column, maxRetries: Int = 3,
+      publishWaitMs: Long = 30000L): (Long, RewriteStats) =
+    cowDml(spark, dir, pred, None, maxRetries, publishWaitMs)
 
-  /** Row-level UPDATE, same copy-on-write shape: files the sidecars
-    * prove can't contain a matching row are byte-copied; the rest are
-    * rewritten with `sets` applied to matching rows only
-    * (`when(pred, expr).otherwise(col)` per column). */
+  /** Row-level UPDATE, same copy-on-write shape and commit protocol as
+    * [[deleteWhere]]: files the sidecars prove can't contain a
+    * matching row are byte-copied; the rest are rewritten with `sets`
+    * applied to matching rows only (`when(pred, expr).otherwise(col)`
+    * per column). */
   def updateWhere(spark: SparkSession, dir: String,
       pred: org.apache.spark.sql.Column,
-      sets: Map[String, org.apache.spark.sql.Column])
+      sets: Map[String, org.apache.spark.sql.Column],
+      maxRetries: Int = 3, publishWaitMs: Long = 30000L)
       : (Long, RewriteStats) = {
     require(sets.nonEmpty, "updateWhere needs at least one SET column")
-    rewriteWhere(spark, dir, pred, Some(sets))
+    cowDml(spark, dir, pred, Some(sets), maxRetries, publishWaitMs)
   }
 
   /** Recursive relative data-file listing of a version directory plus
@@ -1119,30 +1331,6 @@ object Snapshots {
         else Some(c -> Some((value, value)))
       }
     }.toMap
-
-  /** Route every copy-on-write DML statement: stage the rewrite
-    * against the current head and publish into the next free slot
-    * (single-statement path — racing writers serialize on slot
-    * claims but do not cross-validate; use the Tx variants for
-    * that). */
-  private def rewriteWhere(spark: SparkSession, dir: String,
-      pred: org.apache.spark.sql.Column,
-      sets: Option[Map[String, org.apache.spark.sql.Column]])
-      : (Long, RewriteStats) = {
-    val f = fs(spark, dir)
-    val v = latestVersion(spark, dir)
-    require(v > 0, s"$dir has no committed version")
-    require(!isMorVersion(spark, dir, v),
-      "copy-on-write DML on a merge-on-read head — fold the " +
-        "tombstones first (foldMor), then rewrite")
-    stageRewrite(spark, dir, v, pred, sets) match {
-      case None => (v, RewriteStats(0, 0, 0, 0))
-      case Some((stage, _, rs)) =>
-        val nv = occupyNextFree(spark, f, dir, stage)
-        publish(spark, dir, nv)
-        (nv, rs)
-    }
-  }
 
   /** The predicate's sidecar-decidable condition: resolve `pred`
     * against `frame` and take the OPTIMIZED plan's filter — the
@@ -1235,11 +1423,7 @@ object Snapshots {
     // footer-inference job was a fixed per-statement tax)
     val cond = dmlCond(spark,
       readFileSet(spark, vDir, dataFiles.map(r => s"$vDir/$r")), pred)
-    val hasStats = f.exists(new Path(vDir, FileStats.ManifestName))
-    val stats =
-      if (hasStats) FileStats.readManifest(spark, vDir) else Seq.empty
-    val blooms = bloomColsOf(f, vDir)
-      .map(c => c -> BloomStats.readManifest(spark, vDir, c)).toMap
+    val sidecars @ (stats, blooms) = sidecarsOf(spark, f, vDir)
     val (affected, untouched) = dmlAdmission(spark, f, vDir,
       dataFiles, pcols, cond, Some(stats), Some(blooms))
     if (affected.isEmpty) return None
@@ -1274,10 +1458,10 @@ object Snapshots {
             .getOrElse(col(c))
         }: _*)
     }
-    val stage = new Path(dir, s"_stage-${java.util.UUID.randomUUID()}")
-    val w = rewritten.write.mode("overwrite")
-    (if (pcols.nonEmpty) w.partitionBy(pcols: _*) else w)
-      .parquet(stage.toString)
+    // a statement that empties the WHOLE table (no rewritten rows, no
+    // untouched files) still leaves one schema-carrying file
+    val st = stage(spark, dir)(writeFrame(rewritten, _, pcols,
+      keepSchema = untouched.isEmpty))
     val (rowsChanged, totalRows) =
       (if (constPred) None else observedOrNone(obs)) match {
         case Some(metrics) =>
@@ -1299,74 +1483,29 @@ object Snapshots {
       case None => totalRows - rowsChanged
       case Some(_) => totalRows
     }
-    // a statement that empties the WHOLE table (no rewritten rows, no
-    // untouched files) must still leave one schema-carrying zero-row
-    // data file: a file-less version is unreadable (parquet schema
-    // inference has nothing to open). Unpartitioned deliberately — a
-    // dynamic-partition write of an empty frame writes nothing, and
-    // an empty table's layout is degenerate anyway; subsequent
-    // appends simply start a fresh layout.
-    if (untouched.isEmpty &&
-        listDataRel(f, f.makeQualified(stage))._1.isEmpty)
-      rewritten.limit(0).coalesce(1).write.mode("overwrite")
-        .parquet(stage.toString)
-    // splice sidecars: scan ONLY the new files, keep the untouched
-    // files' existing entries verbatim (a fully-emptied rewrite may
-    // leave zero new data files — then the splice is old entries only)
-    val stagedEmpty =
-      listDataRel(f, f.makeQualified(stage))._1.isEmpty
-    if (hasStats) {
-      val oldKept = stats.filter(e => untouched.contains(e.relPath))
-      if (stagedEmpty) FileStats.writeEntries(spark, stage.toString,
-        oldKept)
-      else {
-        val statsCols = stats.flatMap(_.cols.keys).distinct.sorted
-        FileStats.writeManifest(spark, stage.toString, statsCols)
-        val fresh = FileStats.readManifest(spark, stage.toString)
-        FileStats.writeEntries(spark, stage.toString, fresh ++ oldKept)
-      }
-    }
-    blooms.foreach { case (c, entries) =>
-      val oldKept = entries.filter(e => untouched.contains(e.relPath))
-      if (stagedEmpty) BloomStats.writeEntries(spark, stage.toString,
-        c, oldKept)
-      else {
-        BloomStats.writeManifest(spark, stage.toString, c)
-        val fresh = BloomStats.readManifest(spark, stage.toString, c)
-        BloomStats.writeEntries(spark, stage.toString, c,
-          fresh ++ oldKept)
-      }
-    }
-    // byte-copy untouched files through, names preserved (the splice
-    // above depends on it)
-    val conf = spark.sparkContext.hadoopConfiguration
-    untouched.foreach { r =>
-      org.apache.hadoop.fs.FileUtil.copy(f, new Path(s"$vDir/$r"),
-        f, new Path(stage, r), false, conf)
-    }
-    copyEpochMarkers(f, new Path(vDir), stage)
-    writeDml(f, stage, v,
-      if (sets.isEmpty) "delete" else "update", affected)
-    Some((stage, affected,
+    // splice sidecars: scan ONLY the new files, byte-copy the
+    // untouched ones through with their existing entries
+    Some((seal(spark, dir, st, cowSeal(dir, v, sidecars, untouched,
+      if (sets.isEmpty) "delete" else "update", affected)), affected,
       RewriteStats(affected.size.toLong, untouched.size.toLong,
         rowsChanged, rowsKept)))
   }
 
   // ---- commit-time conflict detection for concurrent DML -------------
-  // `commitCAS` guards the version ALLOCATOR, but two writers doing
-  // copy-on-write DML on disjoint files would still last-write-wins a
-  // whole version: each stages "my rewrite + byte-copies of
-  // everything else", so whichever publishes second silently reverts
-  // the first statement's effect. The Tx variants close that hole the
-  // way Delta's optimistic concurrency does: every DML version
-  // records its provenance (`_dml.json`: base version + the files it
-  // rewrote), a Tx committer claims EXACTLY slot head+1 (the CAS
-  // primitive), and on losing the race it re-validates — intervening
-  // versions that are all DML and touched DISJOINT files mean the
-  // statement simply re-executes on the new head (serializable:
-  // predicate DML recomputes); any overlap, or any interleaved
-  // non-DML commit (full rewrite — touched everything), aborts
-  // loudly with ConcurrentModificationException rather than guessing.
+  // Two writers doing copy-on-write DML on disjoint files would
+  // last-write-wins a whole version if they only serialized on slot
+  // claims: each stages "my rewrite + byte-copies of everything
+  // else", so whichever publishes second silently reverts the first
+  // statement's effect. The Rebase policy closes that hole the way
+  // Delta's optimistic concurrency does: every DML version records its
+  // provenance (`_dml.json`: base version + the files it rewrote), a
+  // statement publishes only onto the head it staged from, and on
+  // losing the race it re-validates — intervening versions that are
+  // all DML and touched DISJOINT files mean the statement simply
+  // re-executes on the new head (serializable: predicate DML
+  // recomputes); any overlap, or any interleaved non-DML commit (full
+  // rewrite — touched everything), aborts loudly with
+  // ConcurrentModificationException rather than guessing.
 
   private val DmlName = "_dml.json"
 
@@ -1405,47 +1544,13 @@ object Snapshots {
     Some((base, op, files))
   }
 
-  /** [[deleteWhere]] with commit-time conflict detection — safe for
-    * CONCURRENT writers on the same table. See [[updateWhereTx]]. */
-  def deleteWhereTx(spark: SparkSession, dir: String,
-      pred: org.apache.spark.sql.Column, maxRetries: Int = 3,
-      publishWaitMs: Long = 30000L): (Long, RewriteStats) =
-    rewriteWhereTx(spark, dir, pred, None, maxRetries, publishWaitMs)
-
-  /** [[updateWhere]] with commit-time conflict detection. The
-    * statement stages against the head it read, then claims EXACTLY
-    * slot head+1 (exclusive-create, the commitCAS primitive). Losing
-    * the claim means another writer committed first; the statement
-    * then re-validates instead of clobbering:
-    *  - every intervening version carries `_dml.json` AND rewrote
-    *    files DISJOINT from this statement's admitted set → RETRY:
-    *    re-stage against the new head (predicate DML re-executes
-    *    serializably), up to `maxRetries` times;
-    *  - any intervening version overlaps this statement's files, or
-    *    is not a DML version (a full commit replaced the table) →
-    *    ABORT with ConcurrentModificationException — the caller must
-    *    re-reason, exactly like Delta's ConcurrentDeleteDelete /
-    *    ConcurrentWrite conflicts.
-    * A lost claim whose winner never publishes within
-    * `publishWaitMs` aborts with a crashed-committer diagnosis (the
-    * commitCAS `claimGraceMs` recovery is the unblocking tool). */
-  def updateWhereTx(spark: SparkSession, dir: String,
-      pred: org.apache.spark.sql.Column,
-      sets: Map[String, org.apache.spark.sql.Column],
-      maxRetries: Int = 3, publishWaitMs: Long = 30000L)
-      : (Long, RewriteStats) = {
-    require(sets.nonEmpty, "updateWhereTx needs at least one SET column")
-    rewriteWhereTx(spark, dir, pred, Some(sets), maxRetries,
-      publishWaitMs)
-  }
-
   /** Publish `v` only if the head is still `expected` — the guard
-    * that keeps a Tx committer from moving the pointer BACKWARDS over
-    * a non-claim-based writer (plain commit/append allocate the next
-    * FREE slot, skipping live claims, so they can land ABOVE a
-    * claimed-but-unpublished Tx slot and publish first). A residual
-    * check-to-rename window of one metadata read remains against
-    * such writers; Tx/CAS writers among themselves are fully
+    * that keeps a Rebase/Abort committer from moving the pointer
+    * BACKWARDS over a Replace committer (which allocates the next FREE
+    * slot, skipping live claims, so it can land ABOVE a
+    * claimed-but-unpublished slot and publish first). A residual
+    * check-to-rename window of one metadata read remains against such
+    * writers; head-bound writers among themselves are fully
     * serialized by the slot claims. */
   private[operators] def publishIfHead(spark: SparkSession,
       dir: String, expected: Long, v: Long): Boolean = {
@@ -1453,147 +1558,70 @@ object Snapshots {
     else { publish(spark, dir, v); true }
   }
 
-  /** The ONE claim/occupy/publish commit-race loop every Tx DML
-    * statement runs, copy-on-write and merge-on-read alike.
-    * `prepare(head)` stages the statement against `head` and returns
-    * either `Left(result)` for a provable no-op (published nothing)
-    * or `Right((stage, result, onRace))` — the ready stage directory,
-    * the statement's result, and a validation callback invoked with
-    * the NEW head whenever another writer committed first: it throws
-    * to abort the statement, or returns to authorize re-staging on
-    * that head (one more `prepare` call, bounded by `maxRetries`).
-    * The loop owns every protocol invariant: claim EXACTLY head+1,
-    * re-check the head BEFORE occupying (once v=h+1 exists under a
-    * moved head, ranged readers — readAppendsSince, the snapshot-log
-    * source — would transiently see a version about to be
-    * withdrawn), publish through [[publishIfHead]] (never a
-    * backwards pointer move over a non-claim committer), withdraw +
-    * memo-invalidate on the residual race, surface squatted slots,
-    * and diagnose a claimed-but-never-published winner after a
-    * bounded wait. */
-  private def txCommitLoop[T](spark: SparkSession, dir: String,
-      maxRetries: Int, publishWaitMs: Long)(
-      prepare: Long => Either[T, (Path, T, Long => Unit)])
-      : (Long, T) = {
-    val f = fs(spark, dir)
-    var attempt = 0
-    while (attempt <= maxRetries) {
-      val h = latestVersion(spark, dir)
-      require(h > 0, s"$dir has no committed version")
-      prepare(h) match {
-        case Left(result) => return (h, result)
-        case Right((stage, result, onRace)) =>
-          if (tryClaimSlot(f, dir, h + 1)) {
-            if (latestVersion(spark, dir) != h) {
-              retireClaim(f, dir, h + 1)
-              f.delete(stage, true)
-              onRace(latestVersion(spark, dir))
-              attempt += 1
-            } else if (occupySlot(f, dir, stage, h + 1)) {
-              if (publishIfHead(spark, dir, h, h + 1))
-                return (h + 1, result)
-              // a non-claim committer landed ABOVE our claimed slot
-              // and already published — publishing h+1 now would
-              // regress the pointer over its commit. Withdraw ours
-              // and validate/retry exactly like a lost claim.
-              f.delete(new Path(dir, s"v=${h + 1}"), true)
-              morMemoInvalidate(f, dir, h + 1)
-              retireClaim(f, dir, h + 1)
-              onRace(latestVersion(spark, dir))
-              attempt += 1
-            } else {
-              // claim won but the slot was squatted (pre-claim-era
-              // leftover): surface it rather than publish a merge
-              f.delete(stage, true)
-              throw new IllegalStateException(
-                s"conflict: v=${h + 1} directory already exists in $dir")
-            }
-          } else {
-            // lost the claim — wait for the winner to publish, then
-            // let the statement validate what it touched
-            f.delete(stage, true)
-            val deadline = System.currentTimeMillis() + publishWaitMs
-            var h2 = latestVersion(spark, dir)
-            while (h2 == h && System.currentTimeMillis() < deadline) {
-              Thread.sleep(25L)
-              h2 = latestVersion(spark, dir)
-            }
-            if (h2 == h)
-              throw new IllegalStateException(
-                s"conflict: v=${h + 1} claimed but never published " +
-                  s"within ${publishWaitMs}ms — crashed committer? " +
-                  "recover with commitCAS claimGraceMs / vacuum")
-            onRace(h2)
-            attempt += 1
-          }
-      }
-    }
-    throw new IllegalStateException(
-      s"conflict: lost the commit race $maxRetries times in $dir — " +
-        "retry budget exhausted")
-  }
-
-  private def rewriteWhereTx(spark: SparkSession, dir: String,
+  private def cowDml(spark: SparkSession, dir: String,
       pred: org.apache.spark.sql.Column,
       sets: Option[Map[String, org.apache.spark.sql.Column]],
       maxRetries: Int, publishWaitMs: Long): (Long, RewriteStats) = {
     val f = fs(spark, dir)
-    txCommitLoop(spark, dir, maxRetries, publishWaitMs) { h =>
+    commitStaged(spark, dir, Rebase(maxRetries, publishWaitMs)) { h =>
+      require(h > 0, s"$dir has no committed version")
       require(!isMorVersion(spark, dir, h),
         "copy-on-write DML on a merge-on-read head — fold the " +
           "tombstones first (foldMor), then rewrite")
       stageRewrite(spark, dir, h, pred, sets) match {
         case None => Left(RewriteStats(0, 0, 0, 0))
         case Some((stage, affected, rs)) =>
-          Right((stage, rs,
-            (h2: Long) => validateIntervening(f, dir, h, h2, affected)))
+          Right(Staged(stage, rs,
+            validateIntervening(f, dir, h, _, affected)))
       }
     }
   }
 
-  /** Intervening-commit validation every copy-on-write Tx statement
-    * runs when another writer committed first: aborts loudly on any
-    * overlap or non-DML interleave; returns normally when every
-    * intervening version is DML over DISJOINT files (safe retry —
+  /** Intervening-commit validation every copy-on-write statement runs
+    * when another writer moved the head from `h` to `h2` first: the
+    * versions main published in between are the new head's
+    * `_dml.json` base chain back to `h` (a branch commit or a
+    * rolled-back version sitting in (h, h2] was never main's history).
+    * Aborts loudly on any overlap or non-DML link; returns normally
+    * when every link is DML over DISJOINT files (safe retry —
     * predicate/keyed DML re-executes serializably against the new
-    * head). Shared by delete/update ([[rewriteWhereTx]]) and MERGE
-    * ([[mergeInto]]) — one conflict taxonomy for the whole CoW DML
-    * surface. */
+    * head). Shared by delete/update and MERGE — one conflict taxonomy
+    * for the whole CoW DML surface. */
   private def validateIntervening(f: org.apache.hadoop.fs.FileSystem,
       dir: String, h: Long, h2: Long, affected: Seq[String]): Unit = {
-    val intervening = existingVersions(f, dir)
-      .filter(x => x > h && x <= h2).sorted
-    val provenance = intervening.map(x =>
-      x -> readDml(f, s"$dir/v=$x"))
-    provenance.find(_._2.isEmpty).foreach { case (x, _) =>
-      throw new java.util.ConcurrentModificationException(
-        s"conflict: concurrent NON-DML commit v=$x replaced " +
-          s"the table under this statement (base v=$h) — " +
-          "re-read and re-reason")
+    def conflict(msg: String) =
+      new java.util.ConcurrentModificationException(
+        s"conflict: $msg (base v=$h) — re-read and re-reason")
+    val chain = scala.collection.mutable.ArrayBuffer.empty[
+      (Long, (Long, String, Seq[String]))]
+    var x = h2
+    while (x > h) {
+      val dml = readDml(f, s"$dir/v=$x").getOrElse(throw conflict(
+        s"concurrent NON-DML commit v=$x replaced the table under " +
+          "this statement"))
+      chain += (x -> dml)
+      x = dml._1
     }
-    // a concurrent MERGE-ON-READ statement moved the head to an
-    // MoR version this copy-on-write statement cannot re-stage
-    // against (and its 'v=N/rel'-namespaced tombstone keys can
-    // never intersect CoW rel paths, so the overlap check below
-    // would misreport it as disjoint) — abort with the honest
-    // diagnosis instead of retrying into the fold-first require
-    provenance.find(_._2.exists(_._2.startsWith("mor_")))
-      .foreach { case (x, _) =>
-        throw new java.util.ConcurrentModificationException(
-          s"conflict: concurrent merge-on-read DML v=$x under " +
-            s"this copy-on-write statement (base v=$h) — fold " +
-            "the tombstones (foldMor), then re-run")
-      }
-    val touchedByOthers = provenance
-      .flatMap(_._2.toSeq.flatMap(_._3)).toSet
+    if (x != h) throw conflict(
+      s"the head v=$h2 does not descend from this statement's base")
+    // a concurrent MERGE-ON-READ statement moved the head to an MoR
+    // version this copy-on-write statement cannot re-stage against
+    // (and its 'v=N/rel'-namespaced tombstone keys can never
+    // intersect CoW rel paths, so the overlap check below would
+    // misreport it as disjoint) — abort with the honest diagnosis
+    // instead of retrying into the fold-first require
+    chain.find(_._2._2.startsWith("mor_")).foreach { case (v, _) =>
+      throw conflict(s"concurrent merge-on-read DML v=$v under this " +
+        "copy-on-write statement — fold the tombstones (foldMor), " +
+        "then re-run")
+    }
+    val touchedByOthers = chain.flatMap(_._2._3).toSet
     val overlap = affected.filter(touchedByOthers)
-    if (overlap.nonEmpty)
-      throw new java.util.ConcurrentModificationException(
-        s"conflict: concurrent DML (v=${intervening.mkString(",")}) " +
-          s"rewrote files this statement (base v=$h) also " +
-          s"admits: ${overlap.take(4).mkString(", ")}" +
-          (if (overlap.size > 4) ", …" else "") +
-          " — re-read and re-reason")
+    if (overlap.nonEmpty) throw conflict(
+      s"concurrent DML (v=${chain.map(_._1).reverse.mkString(",")}) " +
+        s"rewrote files this statement also admits: " +
+        overlap.take(4).mkString(", ") +
+        (if (overlap.size > 4) ", …" else ""))
   }
 
   /** MERGE INTO as a copy-on-write snapshot commit — the K1 full-row
@@ -1619,22 +1647,22 @@ object Snapshots {
       : (Long, RewriteStats) = {
     require(keys.nonEmpty, "mergeInto needs at least one key column")
     val f = fs(spark, dir)
-    // the same claim/occupy/publish race loop as every Tx DML
-    // statement: a commit landing during the (potentially long)
-    // merge rewrite is never silently reverted — the stage is
-    // withdrawn, intervening versions are validated (disjoint DML →
-    // re-stage on the new head; overlap or non-DML → loud abort),
-    // and the version publishes with _dml.json provenance so
-    // CONCURRENT Tx statements validate against this merge too
-    txCommitLoop(spark, dir, maxRetries, publishWaitMs) { h =>
+    // the Rebase policy like every DML statement: a commit landing
+    // during the (potentially long) merge rewrite is never silently
+    // reverted — the stage is withdrawn, intervening versions are
+    // validated (disjoint DML → re-stage on the new head; overlap or
+    // non-DML → loud abort), and the version publishes with _dml.json
+    // provenance so CONCURRENT statements validate against this merge
+    commitStaged(spark, dir, Rebase(maxRetries, publishWaitMs)) { h =>
+      require(h > 0, s"$dir has no committed version")
       require(!isMorVersion(spark, dir, h),
         "mergeInto on a merge-on-read head — fold the tombstones " +
           "first (foldMor), then merge")
       stageMerge(spark, dir, h, source, keys, maxRoutedKeys) match {
         case None => Left(RewriteStats(0, 0, 0, 0))
         case Some((stage, affected, rs)) =>
-          Right((stage, rs,
-            (h2: Long) => validateIntervening(f, dir, h, h2, affected)))
+          Right(Staged(stage, rs,
+            validateIntervening(f, dir, h, _, affected)))
       }
     }
   }
@@ -1654,13 +1682,9 @@ object Snapshots {
     val conformed = conform(source, tableSchema(spark, dir))
     val (dataFiles, pcols) = listDataRel(f, vPath)
     val routeCol = keys.head
-    val hasStats = f.exists(new Path(vDir, FileStats.ManifestName))
-    val stats =
-      if (hasStats) FileStats.readManifest(spark, vDir) else Seq.empty
+    val sidecars @ (stats, blooms) = sidecarsOf(spark, f, vDir)
     val statsByRel = stats.map(e => e.relPath -> e).toMap
-    val bloom = bloomColsOf(f, vDir).find(_ == routeCol)
-      .map(c => BloomStats.readManifest(spark, vDir, c)
-        .map(b => b.relPath -> b).toMap)
+    val bloom = blooms.get(routeCol).map(_.map(b => b.relPath -> b).toMap)
     val routedKeys: Option[Seq[String]] =
       if (stats.isEmpty && !pcols.contains(routeCol)) None
       else {
@@ -1708,8 +1732,8 @@ object Snapshots {
               org.apache.spark.sql.functions.lit(1)).as("__kept"))
         (anti.unionByName(conformed), true)
       }
-    val stage = new Path(dir, s"_stage-${java.util.UUID.randomUUID()}")
-    clusteredWriter(newData, pcols).parquet(stage.toString)
+    val st = stage(spark, dir)(writeFrame(newData, _, pcols,
+      rebalance = true))
     val rowsKept =
       if (!observedKept) 0L
       else observedOrNone(obs)
@@ -1726,28 +1750,8 @@ object Snapshots {
             affected.map(r => s"$vDir/$r"))
             .join(conformed, keys, "left_anti").count()
         }
-    if (hasStats) {
-      val oldKept = stats.filter(e => untouched.contains(e.relPath))
-      val statsCols = stats.flatMap(_.cols.keys).distinct.sorted
-      FileStats.writeManifest(spark, stage.toString, statsCols)
-      val fresh = FileStats.readManifest(spark, stage.toString)
-      FileStats.writeEntries(spark, stage.toString, fresh ++ oldKept)
-    }
-    bloomColsOf(f, vDir).foreach { c =>
-      val old = BloomStats.readManifest(spark, vDir, c)
-        .filter(e => untouched.contains(e.relPath))
-      BloomStats.writeManifest(spark, stage.toString, c)
-      val fresh = BloomStats.readManifest(spark, stage.toString, c)
-      BloomStats.writeEntries(spark, stage.toString, c, fresh ++ old)
-    }
-    val conf = spark.sparkContext.hadoopConfiguration
-    untouched.foreach { r =>
-      org.apache.hadoop.fs.FileUtil.copy(f, new Path(s"$vDir/$r"),
-        f, new Path(stage, r), false, conf)
-    }
-    copyEpochMarkers(f, new Path(vDir), stage)
-    writeDml(f, stage, v, "merge", affected)
-    Some((stage, affected,
+    Some((seal(spark, dir, st,
+      cowSeal(dir, v, sidecars, untouched, "merge", affected)), affected,
       RewriteStats(affected.size.toLong, untouched.size.toLong,
         rowsChanged, rowsKept)))
   }
@@ -1791,7 +1795,7 @@ object Snapshots {
     * `WHEN MATCHED [AND …] THEN UPDATE/DELETE`, `WHEN NOT MATCHED
     * THEN INSERT`, and `WHEN NOT MATCHED BY SOURCE THEN
     * UPDATE/DELETE` — as a copy-on-write snapshot commit through the
-    * same claim/occupy/publish Tx loop as every DML statement
+    * same Rebase commit policy as every DML statement
     * (provenance recorded, disjoint concurrent DML retries, overlap
     * aborts). [[mergeInto]] remains the fast path for the canonical
     * full-row upsert (anti-join, no wide outer join).
@@ -1853,7 +1857,8 @@ object Snapshots {
       case _ => ()
     }
     val f = fs(spark, dir)
-    txCommitLoop(spark, dir, maxRetries, publishWaitMs) { h =>
+    commitStaged(spark, dir, Rebase(maxRetries, publishWaitMs)) { h =>
+      require(h > 0, s"$dir has no committed version")
       require(!isMorVersion(spark, dir, h),
         "mergeApply on a merge-on-read head — fold the tombstones " +
           "first (foldMor), then merge")
@@ -1861,8 +1866,8 @@ object Snapshots {
         notMatchedBySource, maxRoutedKeys) match {
         case None => Left(MergeApplyStats(0, 0, 0, 0, 0))
         case Some((stage, affected, st)) =>
-          Right((stage, st,
-            (h2: Long) => validateIntervening(f, dir, h, h2, affected)))
+          Right(Staged(stage, st,
+            validateIntervening(f, dir, h, _, affected)))
       }
     }
   }
@@ -1882,13 +1887,9 @@ object Snapshots {
     // file admission: NOT-MATCHED-BY-SOURCE reads everything; else
     // the leading ON pair routes through sidecars like mergeInto
     val (routeT, routeS) = on.head
-    val hasStats = f.exists(new Path(vDir, FileStats.ManifestName))
-    val stats =
-      if (hasStats) FileStats.readManifest(spark, vDir) else Seq.empty
+    val sidecars @ (stats, blooms) = sidecarsOf(spark, f, vDir)
     val statsByRel = stats.map(e => e.relPath -> e).toMap
-    val bloom = bloomColsOf(f, vDir).find(_ == routeT)
-      .map(c => BloomStats.readManifest(spark, vDir, c)
-        .map(b => b.relPath -> b).toMap)
+    val bloom = blooms.get(routeT).map(_.map(b => b.relPath -> b).toMap)
     val routedKeys: Option[Seq[String]] =
       if (notMatchedBySource.nonEmpty ||
           (stats.isEmpty && !pcols.contains(routeT))) None
@@ -2018,46 +2019,13 @@ object Snapshots {
           }.otherwise(lit(null)).cast(fd.dataType).as(fd.name)
       }: _*)
     val newData = targetOut.unionByName(insertOut)
-    val stage = new Path(dir, s"_stage-${java.util.UUID.randomUUID()}")
-    clusteredWriter(newData, pcols).parquet(stage.toString)
     // a merge that empties the table still needs one schema-carrying
     // file (same rule as a full-table delete)
-    if (untouched.isEmpty &&
-        listDataRel(f, f.makeQualified(stage))._1.isEmpty)
-      newData.limit(0).coalesce(1).write.mode("overwrite")
-        .parquet(stage.toString)
-    val stagedEmpty =
-      listDataRel(f, f.makeQualified(stage))._1.isEmpty
-    if (hasStats) {
-      val oldKept = stats.filter(e => untouched.contains(e.relPath))
-      if (stagedEmpty)
-        FileStats.writeEntries(spark, stage.toString, oldKept)
-      else {
-        val statsCols = stats.flatMap(_.cols.keys).distinct.sorted
-        FileStats.writeManifest(spark, stage.toString, statsCols)
-        val fresh = FileStats.readManifest(spark, stage.toString)
-        FileStats.writeEntries(spark, stage.toString, fresh ++ oldKept)
-      }
-    }
-    bloomColsOf(f, vDir).foreach { c =>
-      val old = BloomStats.readManifest(spark, vDir, c)
-        .filter(e => untouched.contains(e.relPath))
-      if (stagedEmpty)
-        BloomStats.writeEntries(spark, stage.toString, c, old)
-      else {
-        BloomStats.writeManifest(spark, stage.toString, c)
-        val fresh = BloomStats.readManifest(spark, stage.toString, c)
-        BloomStats.writeEntries(spark, stage.toString, c, fresh ++ old)
-      }
-    }
-    val conf = spark.sparkContext.hadoopConfiguration
-    untouched.foreach { r =>
-      org.apache.hadoop.fs.FileUtil.copy(f, new Path(s"$vDir/$r"),
-        f, new Path(stage, r), false, conf)
-    }
-    copyEpochMarkers(f, new Path(vDir), stage)
-    writeDml(f, stage, v, "merge", affected)
-    Some((stage, affected, MergeApplyStats(affected.size.toLong,
+    val st = stage(spark, dir)(writeFrame(newData, _, pcols,
+      rebalance = true, keepSchema = untouched.isEmpty))
+    Some((seal(spark, dir, st,
+      cowSeal(dir, v, sidecars, untouched, "merge", affected)),
+      affected, MergeApplyStats(affected.size.toLong,
       untouched.size.toLong, nUpd, nDel, nIns)))
   }
 
@@ -2116,7 +2084,7 @@ object Snapshots {
   //                       (tombstone-applying) plan. Exactness beats
   //                       a shortcut here; folding restores both.
   // All sidecars are sealed by the same atomic stage→slot rename as
-  // every commit: a crash mid-delete leaves only a _stage-* orphan.
+  // every commit: a crash mid-delete leaves only an orphan stage.
   //
   // READ-PATH consequence of knowing each dv's touched keys: the
   // assembly splits physical files into DIRTY (some dv touches them —
@@ -2312,7 +2280,7 @@ object Snapshots {
       java.lang.Boolean]()
 
   /** Drop every memo entry for `v=$v` — called wherever THIS JVM
-    * deletes a version directory (Tx withdrawals, epoch-orphan
+    * deletes a version directory (commit withdrawals, epoch-orphan
     * reclaim, vacuum), so a later re-occupant of the same slot can
     * never be answered from the deleted incarnation's cache even if
     * the two directories land in the same mtime tick. External
@@ -2586,10 +2554,21 @@ object Snapshots {
     *
     * Refuses a layout with a partition column named `v` — the
     * tombstone key is derived from the path after the LAST `/v=`
-    * segment, which such a layout would make ambiguous. */
+    * segment, which such a layout would make ambiguous.
+    *
+    * Safe for CONCURRENT writers (the Rebase policy): unlike the
+    * copy-on-write [[deleteWhere]], a merge-on-read statement NEVER
+    * needs an overlap abort — its stage carries the head's complete
+    * reference+tombstone state, so re-staging against the new head
+    * re-evaluates the predicate over the winner's committed result
+    * (serializable re-execution), whatever kind of commit the winner
+    * was. Retries are bounded by `maxRetries`; a lost claim whose
+    * winner never publishes within `publishWaitMs` aborts with the
+    * crashed-committer diagnosis. */
   def deleteWhereMor(spark: SparkSession, dir: String,
-      pred: org.apache.spark.sql.Column): (Long, MorStats) =
-    morDmlPublish(spark, dir, pred, None)
+      pred: org.apache.spark.sql.Column, maxRetries: Int = 3,
+      publishWaitMs: Long = 30000L): (Long, MorStats) =
+    morDml(spark, dir, pred, None, maxRetries, publishWaitMs)
 
   /** Stage one MoR DML statement (delete, or update when `sets` is
     * set) against head `v`. Returns None on a provably-no-op
@@ -2597,8 +2576,7 @@ object Snapshots {
     * sidecar, reference list, updated images (update only), epoch
     * markers, and `_dml.json` provenance (op `mor_delete`/
     * `mor_update`, touched = the physical files whose rows this
-    * statement tombstoned) — plus the statement's accounting. The
-    * caller owns slot allocation and publication (plain vs Tx). */
+    * statement tombstoned) — plus the statement's accounting. */
   private def stageMorDml(spark: SparkSession, dir: String, v: Long,
       pred: org.apache.spark.sql.Column,
       sets: Option[Map[String, org.apache.spark.sql.Column]])
@@ -2672,20 +2650,20 @@ object Snapshots {
         else d.withColumn(fd.name, lit(null).cast(fd.dataType))
     }
     val oldCount = dvTotal(spark, dir, v)
-    val stage = new Path(dir, s"_stage-${java.util.UUID.randomUUID()}")
     val dvFile = s"dv-${java.util.UUID.randomUUID()}"
-    val dvPath = new Path(stage, s"$DvDirName/$dvFile").toString
+    def dvPath(stage: Path) =
+      new Path(stage, s"$DvDirName/$dvFile").toString
     // sidecars + accounting shared by both statement kinds, written
     // once the statement is known non-no-op
-    def finishStage(added: Long, rawTouched: Seq[String])
+    def finishStage(stage: Path, added: Long, rawTouched: Seq[String])
         : Option[(Path, MorStats)] = {
       writeDvLines(f, new Path(s"$stage/$DvDirName", DvIndexName),
         Seq(renderDvLine(None, dvFile, added, Some(rawTouched))))
       val carried = carryDvLines(spark, f, dir, v)
       writeDvLines(f, new Path(stage, DvRefsName), carried)
       writeRefs(f, stage, phys)
-      copyEpochMarkers(f, new Path(vDir), stage)
-      writeDml(f, stage, v, op, rawTouched.map(k => s"v=$k"))
+      seal(spark, dir, stage, Seal(markersFrom = Some(new Path(vDir)),
+        dml = Some((v, op, rawTouched.map(k => s"v=$k")))))
       val sidecarBytes = f.getContentSummary(stage).getLength
       // accounting only: one directory walk per HOME version, never
       // a per-file getFileStatus RPC loop
@@ -2716,8 +2694,8 @@ object Snapshots {
             org.apache.spark.sql.functions.count(lit(1)).as("__added"),
             org.apache.spark.sql.functions.collect_set(col("key"))
               .as("__touched"))
-        f.mkdirs(stage)
-        tombsObs.coalesce(1).write.mode("overwrite").parquet(dvPath)
+        val st = stage(spark, dir)(p =>
+          tombsObs.coalesce(1).write.mode("overwrite").parquet(dvPath(p)))
         val (added, rawTouched) =
           (if (constPred) None else observedOrNone(obs)) match {
             case Some(m) =>
@@ -2729,7 +2707,7 @@ object Snapshots {
               if (!constPred) log.warn(
                 "stageMorDml: dv-write observation unavailable — " +
                   "falling back to re-reading the written sidecar")
-              val written = readDv(spark, dvPath)
+              val written = readDv(spark, dvPath(st))
               val r = written.agg(
                 org.apache.spark.sql.functions.count(lit(1)),
                 org.apache.spark.sql.functions.collect_set(col("key")))
@@ -2738,8 +2716,8 @@ object Snapshots {
           }
         // a provably-no-op delete publishes nothing — discard the
         // staged sidecar (nothing was renamed into a version slot)
-        if (added == 0L) { f.delete(stage, true); return None }
-        finishStage(added, rawTouched)
+        if (added == 0L) { f.delete(st, true); return None }
+        finishStage(st, added, rawTouched)
       case Some(s) =>
         // UPDATE: two consumers (dv write + image write) read the
         // matched rows, so the scan is cached once
@@ -2754,7 +2732,6 @@ object Snapshots {
           // free at stage time, what lets readers skip clean files
           val rawTouched = newTombs.select(col("key")).distinct()
             .collect().map(_.getString(0)).toSeq.sorted
-          f.mkdirs(stage)
           // the matched rows' new images land as this version's own
           // data files, re-routed through the partition layout
           val dataCols = lineage.columns.toSeq
@@ -2762,88 +2739,35 @@ object Snapshots {
           val updated = matching.select(dataCols.map { c =>
             s.get(c).map(_.as(c)).getOrElse(col(c))
           }: _*)
-          val pcols = pcolsOf(phys)
-          clusteredWriter(updated, pcols).parquet(stage.toString)
-          // incremental deletion vector: ONLY this statement's
-          // tombstones are written; prior statements' dvs carry by
-          // reference in _dvrefs.json — statement cost is
-          // O(statement), independent of accumulated deletes
-          newTombs.coalesce(1).write.mode("overwrite").parquet(dvPath)
-          finishStage(added, rawTouched)
+          val st = stage(spark, dir) { p =>
+            writeFrame(updated, p, pcolsOf(phys), rebalance = true)
+            // incremental deletion vector: ONLY this statement's
+            // tombstones are written; prior statements' dvs carry by
+            // reference in _dvrefs.json — statement cost is
+            // O(statement), independent of accumulated deletes
+            newTombs.coalesce(1).write.mode("overwrite")
+              .parquet(dvPath(p))
+          }
+          finishStage(st, added, rawTouched)
         } finally { matching.unpersist(); () }
     }
   }
 
-  /** Shared publish path of [[deleteWhereMor]]/[[updateWhereMor]]:
-    * stage, occupy the next free slot, publish. Single-writer
-    * semantics (two concurrent statements from the same head would
-    * last-write-wins each other's tombstones) — concurrent writers
-    * use [[deleteWhereMorTx]]/[[updateWhereMorTx]]. */
-  private def morDmlPublish(spark: SparkSession, dir: String,
-      pred: org.apache.spark.sql.Column,
-      sets: Option[Map[String, org.apache.spark.sql.Column]])
-      : (Long, MorStats) = {
-    val f = fs(spark, dir)
-    val v = latestVersion(spark, dir)
-    require(v > 0, s"$dir has no committed version")
-    stageMorDml(spark, dir, v, pred, sets) match {
-      case None =>
-        (v, MorStats(0L, dvTotal(spark, dir, v),
-          physicalFiles(spark, f, dir, v).size.toLong, 0L, 0L))
-      case Some((stage, stats)) =>
-        val nv = occupyNextFree(spark, f, dir, stage)
-        publish(spark, dir, nv)
-        (nv, stats)
-    }
-  }
-
-  /** [[deleteWhereMor]] with commit-time conflict handling — safe for
-    * CONCURRENT writers. See [[updateWhereMorTx]]. */
-  def deleteWhereMorTx(spark: SparkSession, dir: String,
-      pred: org.apache.spark.sql.Column, maxRetries: Int = 3,
-      publishWaitMs: Long = 30000L): (Long, MorStats) =
-    morDmlTx(spark, dir, pred, None, maxRetries, publishWaitMs)
-
-  /** [[updateWhereMor]] with commit-time conflict handling. The
-    * statement stages against the head it read, claims EXACTLY slot
-    * head+1 (the commitCAS primitive, which serializes it against
-    * every other claiming writer), and publishes only if the head is
-    * still the one it staged from. Losing the claim or the head
-    * race means another writer committed first; unlike the
-    * copy-on-write [[updateWhereTx]], a merge-on-read statement NEVER
-    * needs an overlap abort — its stage carries the head's complete
-    * reference+tombstone state, so re-staging against the new head
-    * re-evaluates the predicate over the winner's committed result
-    * (serializable re-execution), whatever kind of commit the winner
-    * was. Retries are bounded by `maxRetries`; a lost claim whose
-    * winner never publishes within `publishWaitMs` aborts with the
-    * crashed-committer diagnosis. Tombstone-key provenance lands in
-    * `_dml.json` (`mor_delete`/`mor_update`) either way. */
-  def updateWhereMorTx(spark: SparkSession, dir: String,
-      pred: org.apache.spark.sql.Column,
-      sets: Map[String, org.apache.spark.sql.Column],
-      maxRetries: Int = 3, publishWaitMs: Long = 30000L)
-      : (Long, MorStats) = {
-    require(sets.nonEmpty, "updateWhereMorTx needs at least one SET column")
-    morDmlTx(spark, dir, pred, Some(sets), maxRetries, publishWaitMs)
-  }
-
-  private def morDmlTx(spark: SparkSession, dir: String,
+  private def morDml(spark: SparkSession, dir: String,
       pred: org.apache.spark.sql.Column,
       sets: Option[Map[String, org.apache.spark.sql.Column]],
       maxRetries: Int, publishWaitMs: Long): (Long, MorStats) = {
     val f = fs(spark, dir)
-    txCommitLoop(spark, dir, maxRetries, publishWaitMs) { h =>
+    commitStaged(spark, dir, Rebase(maxRetries, publishWaitMs)) { h =>
+      require(h > 0, s"$dir has no committed version")
       stageMorDml(spark, dir, h, pred, sets) match {
         case None =>
           Left(MorStats(0L, dvTotal(spark, dir, h),
             physicalFiles(spark, f, dir, h).size.toLong, 0L, 0L))
-        case Some((stage, stats)) =>
-          // an MoR stage carries the head's COMPLETE reference +
-          // tombstone state, so re-staging against any winner's head
-          // is serializable re-execution — no overlap abort needed,
-          // the race callback authorizes every retry
-          Right((stage, stats, (_: Long) => ()))
+        // an MoR stage carries the head's COMPLETE reference +
+        // tombstone state, so re-staging against any winner's head is
+        // serializable re-execution — every retry is authorized
+        case Some((stage, stats)) => Right(Staged(stage, stats))
       }
     }
   }
@@ -2855,13 +2779,15 @@ object Snapshots {
     * update. Bytes moved = the updated rows only, never the files
     * that hold them; an update that changes a partition column
     * re-routes its rows through `partitionBy` like the CoW path.
-    * Same no-op/NULL-keeps/layout contracts as deleteWhereMor. */
+    * Same no-op/NULL-keeps/layout/concurrency contracts as
+    * deleteWhereMor. */
   def updateWhereMor(spark: SparkSession, dir: String,
       pred: org.apache.spark.sql.Column,
-      sets: Map[String, org.apache.spark.sql.Column])
+      sets: Map[String, org.apache.spark.sql.Column],
+      maxRetries: Int = 3, publishWaitMs: Long = 30000L)
       : (Long, MorStats) = {
     require(sets.nonEmpty, "updateWhereMor needs at least one SET column")
-    morDmlPublish(spark, dir, pred, Some(sets))
+    morDml(spark, dir, pred, Some(sets), maxRetries, publishWaitMs)
   }
 
   /** Total live tombstones of version `v` — metadata arithmetic over
@@ -2888,32 +2814,18 @@ object Snapshots {
     require(v > 0, s"$dir has no committed version")
     require(isMorVersion(spark, dir, v),
       s"foldMor: v=$v is already self-contained")
-    val vPath = f.makeQualified(new Path(s"$dir/v=$v"))
     val phys = physicalFiles(spark, f, dir, v)
-    val pcols = pcolsOf(phys)
-    val homes = phys.map(_._1).distinct.sorted.map(h => s"$dir/v=$h")
-    val sCols =
-      if (statsCols.nonEmpty) statsCols
-      else homes
-        .filter(h => f.exists(new Path(h, FileStats.ManifestName)))
-        .flatMap(h => FileStats.readManifest(spark, h)
-          .flatMap(_.cols.keys)).distinct.sorted
-    val bCols =
-      if (bloomCols.nonEmpty) bloomCols
-      else homes.flatMap(h => bloomColsOf(f, h)).distinct.sorted
+    val (sCols, bCols) = inheritedSidecars(spark, f,
+      phys.map(_._1).distinct.sorted.map(h => s"$dir/v=$h"))
     val folded = readMorAssembled(spark, dir, v, lineage = false)
-    val stage = new Path(dir, s"_stage-${java.util.UUID.randomUUID()}")
-    clusteredWriter(folded, pcols).parquet(stage.toString)
-    if (sCols.nonEmpty)
-      FileStats.writeManifest(spark, stage.toString, sCols)
-    bCols.foreach(c =>
-      BloomStats.writeManifest(spark, stage.toString, c))
-    copyEpochMarkers(f, vPath, stage)
-    val nv = occupyNextFree(spark, f, dir, stage)
+    val st = stage(spark, dir)(writeFrame(folded, _, pcolsOf(phys),
+      rebalance = true))
     // the fold was assembled from head v: a DML statement that
     // committed during the rewrite must not be silently reverted
-    publishMaintenance(spark, f, dir, v, nv, "foldMor")
-    nv
+    commitNew(spark, dir, Abort("foldMor", v))(seal(spark, dir, st, Seal(
+      if (statsCols.nonEmpty) statsCols else sCols,
+      if (bloomCols.nonEmpty) bloomCols else bCols,
+      markersFrom = Some(new Path(s"$dir/v=$v")))))
   }
 
   /** Accounting for a [[purgeMor]]: dirty files rewritten, clean
@@ -2967,67 +2879,32 @@ object Snapshots {
         throw new IllegalStateException(
           s"purgeMor: v=$v has deletion vectors but no dirty files")),
       dvs).drop("__key", "__pos")
-    val stage = new Path(dir, s"_stage-${java.util.UUID.randomUUID()}")
-    clusteredWriter(survivors, pcols).parquet(stage.toString)
     // a purge that empties the whole table (tombstones covered every
     // row, nothing clean) still needs one schema-carrying file — the
-    // same rule as a full-table delete
-    if (clean.isEmpty &&
-        listDataRel(f, f.makeQualified(stage))._1.isEmpty)
-      survivors.limit(0).coalesce(1).write.mode("overwrite")
-        .parquet(stage.toString)
-    // nothing left to reference → the purge IS a self-contained
-    // version (a plain read, no assembly at all)
-    if (clean.nonEmpty) writeRefs(f, stage, clean)
-    else {
-      // fully-rewritten output: the head is no longer MoR, so the
-      // "a later foldMor restores the stats-indexed form" contract
-      // can never fire — restore it HERE (same home-manifest
-      // derivation as foldMor), or a stats-tracked table silently
-      // stops pruning after the one purge that happened to dirty
-      // every file
-      val homes = phys.map(_._1).distinct.sorted.map(h => s"$dir/v=$h")
-      val sCols = homes
-        .filter(h => f.exists(new Path(h, FileStats.ManifestName)))
-        .flatMap(h => FileStats.readManifest(spark, h)
-          .flatMap(_.cols.keys)).distinct.sorted
-      val bCols = homes.flatMap(h => bloomColsOf(f, h)).distinct.sorted
-      if (sCols.nonEmpty)
-        FileStats.writeManifest(spark, stage.toString, sCols)
-      bCols.foreach(c =>
-        BloomStats.writeManifest(spark, stage.toString, c))
+    // same rule as a full-table delete; nothing left to reference →
+    // the purge IS a self-contained version (a plain read)
+    val st = stage(spark, dir) { p =>
+      writeFrame(survivors, p, pcols, rebalance = true,
+        keepSchema = clean.isEmpty)
+      if (clean.nonEmpty) writeRefs(f, p, clean)
     }
-    copyEpochMarkers(f, vPath, stage)
+    // fully-rewritten output: the head is no longer MoR, so the "a
+    // later foldMor restores the stats-indexed form" contract can
+    // never fire — restore it HERE (foldMor's home-manifest
+    // derivation), or a stats-tracked table silently stops pruning
+    // after the one purge that happened to dirty every file
+    val (sCols, bCols) =
+      if (clean.nonEmpty) (Nil, Nil)
+      else inheritedSidecars(spark, f,
+        phys.map(_._1).distinct.sorted.map(h => s"$dir/v=$h"))
+    seal(spark, dir, st, Seal(sCols, bCols, markersFrom = Some(vPath)))
     // accounting: one walk per home version, no per-file RPC loop
     val lens = physLengths(f, dir, phys)
     def bytesOf(files: Seq[(Long, String)]): Long =
       files.map(lens.getOrElse(_, 0L)).sum
     val stats = PurgeStats(dirty.size.toLong, clean.size.toLong,
       applied, bytesOf(dirty), bytesOf(clean))
-    val nv = occupyNextFree(spark, f, dir, stage)
-    publishMaintenance(spark, f, dir, v, nv, "purgeMor")
-    (nv, stats)
-  }
-
-  /** Publish a maintenance rewrite (fold/purge) built FROM head
-    * `base` — only if the head is still `base`. A DML statement that
-    * committed during the (long) maintenance job would otherwise be
-    * silently reverted: the staged rewrite was assembled WITHOUT its
-    * tombstones/rows. On a moved head the staged version is
-    * withdrawn and the caller told to re-run — maintenance is always
-    * safe to retry. */
-  private def publishMaintenance(spark: SparkSession,
-      f: org.apache.hadoop.fs.FileSystem, dir: String, base: Long,
-      nv: Long, op: String): Unit = {
-    if (!publishIfHead(spark, dir, base, nv)) {
-      f.delete(new Path(dir, s"v=$nv"), true)
-      morMemoInvalidate(f, dir, nv)
-      retireClaim(f, dir, nv)
-      throw new java.util.ConcurrentModificationException(
-        s"conflict: the head moved past v=$base while $op was " +
-          s"rewriting — re-run $op on the new head (nothing was " +
-          "published)")
-    }
+    (commitNew(spark, dir, Abort("purgeMor", v))(st), stats)
   }
 
   /** Manifest-pruned range read of a committed version (default
@@ -3427,56 +3304,42 @@ object Snapshots {
       expectedParent: Long, claimGraceMs: Long = 0L)
       : Either[String, Long] = {
     val f = fs(spark, dir)
-    f.mkdirs(new Path(dir))
     val cur = latestVersion(spark, dir)
     if (cur != expectedParent)
       return Left(
         s"conflict: expected parent v=$expectedParent, table is at v=$cur")
     val v = expectedParent + 1
-    val stage = new Path(dir, s"_stage-${java.util.UUID.randomUUID()}")
-    df.write.mode("overwrite").parquet(stage.toString)
     val claim = new Path(dir, s"_claim.$v")
-    var won = tryClaimSlot(f, dir, v)
-    if (!won && claimGraceMs > 0) {
-      val stale =
-        (try Option(f.getFileStatus(claim))
-         catch { case _: java.io.FileNotFoundException => None })
-          .exists(_.getModificationTime <
-            System.currentTimeMillis() - claimGraceMs)
-      if (stale) {
-        if (f.exists(new Path(dir, s"v=$v"))) {
-          // complete but unpublished: roll the dead commit forward.
-          // Retire the dead winner's claim marker (rename aside to the
-          // vacuumable .stale- form) — once v=N is the published head
-          // it is slot-protection enough, and a lingering live marker
-          // would only be pointlessly grace-stolen by a later
-          // same-slot probe.
-          publish(spark, dir, v)
-          retireClaim(f, dir, v)
-          f.delete(stage, true)
-          return Left(s"conflict: crashed commit v=$v rolled forward; " +
-            s"table now at v=$v — retry on top")
-        }
-        // atomic claim-steal; the loser of the rename stays conflicted
-        if (f.rename(claim, new Path(dir,
-            s"_claim.$v.stale-${java.util.UUID.randomUUID()}")))
-          won = tryClaimSlot(f, dir, v)
+    val stale = claimGraceMs > 0 &&
+      (try Option(f.getFileStatus(claim))
+       catch { case _: java.io.FileNotFoundException => None })
+        .exists(_.getModificationTime <
+          System.currentTimeMillis() - claimGraceMs)
+    if (stale) {
+      if (f.exists(new Path(dir, s"v=$v"))) {
+        // complete but unpublished: roll the dead commit forward.
+        // Retire the dead winner's claim marker (rename aside to the
+        // vacuumable .stale- form) — once v=N is the published head
+        // it is slot-protection enough, and a lingering live marker
+        // would only be pointlessly grace-stolen by a later
+        // same-slot probe.
+        publish(spark, dir, v)
+        retireClaim(f, dir, v)
+        return Left(s"conflict: crashed commit v=$v rolled forward; " +
+          s"table now at v=$v — retry on top")
       }
+      // atomic claim-steal; the loser of the rename fails its claim
+      f.rename(claim, new Path(dir,
+        s"_claim.$v.stale-${java.util.UUID.randomUUID()}"))
     }
-    if (!won) {
-      f.delete(stage, true)
-      Left(s"conflict: v=$v already claimed by a concurrent committer")
-    } else if (occupySlot(f, dir, stage, v)) {
-      publish(spark, dir, v)
-      Right(v)
-    } else {
-      // occupySlot found the claim did not actually cover the slot
-      // (pre-claim-era v=N, or a local-FS claim race): it pulled the
-      // stage back out and retired the claim. CAS can't retry another
-      // slot (the version is fixed at expectedParent+1), so drop the
-      // stage and surface the conflict.
-      f.delete(stage, true)
-      Left(s"conflict: v=$v directory already exists")
+    // the Abort policy at the fixed slot v, never waiting: a lost
+    // claim, an occupied slot or a moved head is a conflict
+    try Right(commitNew(spark, dir,
+      Abort("commitCAS", expectedParent, exact = true))(
+      stageFrame(spark, dir, df)))
+    catch {
+      case e: java.util.ConcurrentModificationException =>
+        Left(e.getMessage)
     }
   }
 
@@ -3682,9 +3545,15 @@ object Snapshots {
   /** Roll the table back to an earlier committed version — a pointer
     * move; later versions stay on disk (forensics) until vacuumed. */
   def rollback(spark: SparkSession, dir: String, v: Long): Unit = {
-    require(v > 0 && v <= latestVersion(spark, dir),
-      s"cannot roll back to unpublished v=$v")
+    val head = latestVersion(spark, dir)
+    require(v > 0 && v <= head, s"cannot roll back to unpublished v=$v")
     publish(spark, dir, v)
+    // the abandoned versions are settled: retire their claims, or
+    // every head-bound writer would wait on a slot nobody publishes
+    val f = fs(spark, dir)
+    ((v + 1) to head)
+      .filter(x => f.exists(new Path(dir, s"_claim.$x")))
+      .foreach(retireClaim(f, dir, _))
   }
 
   /** RESTORE: reinstate an earlier committed version's content as a
@@ -3709,9 +3578,9 @@ object Snapshots {
       s"cannot restore unpublished v=$version")
     val srcPath = f.makeQualified(new Path(dir, s"v=$version"))
     require(f.exists(srcPath), s"v=$version was vacuumed")
-    val stage = new Path(dir, s"_stage-${java.util.UUID.randomUUID()}")
     val conf = spark.sparkContext.hadoopConfiguration
-    def copyTree(p: Path): Unit = f.listStatus(p).toSeq.foreach { s =>
+    def copyTree(stage: Path, p: Path): Unit =
+      f.listStatus(p).toSeq.foreach { s =>
       val n = s.getPath.getName
       // sidecars that ARE the version's content travel with it:
       // stats/bloom manifests, the managed-cluster marker, and — for
@@ -3732,12 +3601,10 @@ object Snapshots {
         FileUtil.copy(f, s.getPath, f, new Path(stage, rel), false, conf)
       else if (s.isDirectory && !n.startsWith(".") &&
           (!n.startsWith("_") || n == TombstoneName || n == DvDirName))
-        copyTree(s.getPath)
+        copyTree(stage, s.getPath)
     }
-    copyTree(srcPath)
-    val nv = occupyNextFree(spark, f, dir, stage)
-    publish(spark, dir, nv)
-    nv
+    commitNew(spark, dir)(seal(spark, dir,
+      stage(spark, dir)(copyTree(_, srcPath)), Seal()))
   }
 
   /** Write-audit-publish: stage `df` in a writer-unique temp
@@ -3759,38 +3626,30 @@ object Snapshots {
       statsCols: Seq[String] = Nil,
       bloomCols: Seq[String] = Nil)
       : Either[Seq[(String, Long)], Long] = {
-    val f = fs(spark, dir)
-    val stage = new Path(dir, s"_stage-${java.util.UUID.randomUUID()}")
-    df.write.mode("overwrite").parquet(stage.toString)
-    val staged = spark.read.parquet(stage.toString)
-    val bad = DataQuality.suite(checks(staged))
+    val st = stage(spark, dir)(writeFrame(df, _))
+    val bad = DataQuality.suite(checks(spark.read.parquet(st.toString)))
       .filter(org.apache.spark.sql.functions.col("n_violations") > 0)
       .collect()
       .map(r => (r.getString(0), r.getLong(2))).toSeq
     if (bad.nonEmpty) {
-      // no claim exists yet (claims are taken only at occupy time),
+      // no claim exists yet (claims are taken only after sealing),
       // so a rejected batch leaves NOTHING behind
-      f.delete(stage, true)
+      fs(spark, dir).delete(st, true)
       Left(bad)
     } else {
-      // audit passed: the stage is publish-worthy — same retry loop
-      // as plain commit(), the audit never re-runs. Sidecars are
-      // computed only for ACCEPTED batches (a rejected batch never
-      // pays the stats scan) and seal with the data
-      if (statsCols.nonEmpty)
-        FileStats.writeManifest(spark, stage.toString, statsCols)
-      bloomCols.foreach(c =>
-        BloomStats.writeManifest(spark, stage.toString, c))
-      val v = occupyNextFree(spark, f, dir, stage)
-      publish(spark, dir, v)
-      Right(v)
+      // audit passed: the stage is publish-worthy — the audit never
+      // re-runs. Sidecars are computed only for ACCEPTED batches (a
+      // rejected batch never pays the stats scan) and seal with the
+      // data
+      Right(commitNew(spark, dir)(
+        seal(spark, dir, st, Seal(statsCols, bloomCols))))
     }
   }
 
   /** Delete version directories that are (a) orphans ABOVE the
     * committed pointer (failed/rolled-back writes) or (b) older than
     * the `keepLast` most recent committed versions, plus any CAS
-    * claim markers and abandoned `_stage-*` directories covered by
+    * claim markers and abandoned stage directories covered by
     * the same rule. Never touches the pointer or the versions it
     * protects. Returns deleted versions.
     *
@@ -3859,15 +3718,19 @@ object Snapshots {
       f.delete(new Path(dir, s"_claim.$v"), false)
       f.delete(new Path(dir, s"_pubtime.$v"), false)
     }
-    // stage dirs abandoned by crashed CAS losers/winners, plus claim
+    // stages abandoned by crashed writers (and the `_stage-*`
+    // siblings of stores written before `_staging/`), plus claim
     // markers moved aside by crashed-winner recovery (dead by
     // construction once renamed — kept only through the grace window
     // for forensics)
-    entries.filter(s => aged(s) &&
-        ((s.isDirectory && s.getPath.getName.startsWith("_stage-")) ||
+    val staging = new Path(dir, StagingDir)
+    val stages =
+      if (f.exists(staging)) f.listStatus(staging).toSeq else Nil
+    (stages ++ entries.filter(s =>
+        (s.isDirectory && s.getPath.getName.startsWith("_stage-")) ||
           (s.isFile && s.getPath.getName.startsWith("_claim.") &&
             s.getPath.getName.contains(".stale-"))))
-      .foreach(s => f.delete(s.getPath, s.isDirectory))
+      .filter(aged).foreach(s => f.delete(s.getPath, s.isDirectory))
     // LIVE claim markers with no corresponding v=N directory: a
     // committer that died between claim and data write (and, with
     // claimGraceMs=0, no CAS steal will ever run). nextFreeVersion
@@ -3974,30 +3837,24 @@ object Snapshots {
     read(spark, dir, branchHead(spark, dir, name)._1)
 
   /** Commit `df` onto a branch: the data lands in the shared version
-    * log (next free `v=` slot, claimed by an EXCLUSIVE-CREATE
-    * `_claim.N` marker — the same primitive commitCAS uses — so
+    * log through the pipeline's Replace policy (next free `v=` slot,
+    * claimed by an EXCLUSIVE-CREATE `_claim.N` marker and occupied by
+    * an all-or-nothing rename with the nested-merge backstop — so
     * concurrent main or sibling-branch committers can never take the
     * same slot) and only the branch ref moves; main's pointer is
-    * untouched. A bare stage→rename is NOT a safe claim: on the local
-    * FS (and object-store FSs) Hadoop's rename onto an existing
-    * directory falls back to a copy INSIDE it and returns true, so a
-    * racer would "win" an occupied slot and point its ref at another
-    * committer's data. After the rename we additionally verify the
-    * stage did not end up nested under an occupied `v=N` and treat
-    * that as a lost race. Single writer PER BRANCH (like main's plain
-    * commit); cross-branch concurrency is safe via the claim marker. */
+    * untouched. The claim is RETIRED once the slot is occupied: the
+    * branch version is settled, and a live claim on a slot main never
+    * publishes would make every head-bound writer on main (every SQL
+    * statement) wait for a publish that never comes. Single writer PER
+    * BRANCH (like main's plain commit); cross-branch concurrency is
+    * safe via the claim marker. */
   def commitToBranch(spark: SparkSession, df: DataFrame, dir: String,
       name: String, maxAttempts: Int = 5): Long = {
-    val f = fs(spark, dir)
     val (_, base) = branchHead(spark, dir, name)
-    val stage = new Path(dir, s"_stage-${java.util.UUID.randomUUID()}")
-    df.write.mode("overwrite").parquet(stage.toString)
-    // same claim/occupy/retry protocol as plain commit — shared
-    // occupySlot backstop, stage written once and reused per attempt
-    val won = occupyNextFree(spark, f, dir, stage, maxAttempts)
-    writeRefAtomic(spark, dir, new Path(dir, s"_branch.${refName(name)}"),
-      won, base)
-    won
+    val ref = new Path(dir, s"_branch.${refName(name)}")
+    commitNew(spark, dir, Replace(
+      Some((v: Long) => writeRefAtomic(spark, dir, ref, v, base)),
+      maxAttempts))(stageFrame(spark, dir, df))
   }
 
   /** Fast-forward main to the branch head, ONLY if main still sits

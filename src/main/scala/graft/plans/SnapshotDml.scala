@@ -41,10 +41,9 @@ import graft.operators.Snapshots
   * DeleteFromTable → DeleteCommand). Statements over any OTHER table
   * pass through untouched and fail exactly as before.
   *
-  * CONCURRENCY: the SQL path always routes through the Tx entry
-  * points (`deleteWhereTx` / `updateWhereMorTx` / …) — a SQL user
-  * gets commit-time conflict detection by default, never the
-  * single-writer fast path. MoR vs CoW is a TABLE option: `CREATE
+  * CONCURRENCY: every library statement commits through the store's
+  * Rebase policy — a SQL user gets commit-time conflict detection by
+  * default. MoR vs CoW is a TABLE option: `CREATE
   * TABLE t USING snapshot OPTIONS (path '…', dmlMode 'mor')` makes
   * DELETE/UPDATE merge-on-read (tombstone sidecars, zero data bytes
   * moved); the default 'cow' rewrites files. MERGE is always
@@ -216,7 +215,7 @@ case class SnapshotDmlRule(spark: SparkSession)
   * mutating history in place — and its `verifyNotReadPath` refuses
   * the perfectly-versioned `INSERT OVERWRITE t SELECT … FROM t`.
   * This rule runs in the MAIN resolution batch and rewrites the
-  * resolved statement onto the versioned Tx write path first. The
+  * resolved statement onto the versioned write path first. The
   * source plan gets the same per-query freshness treatment a
   * standalone SELECT would (the post-hoc freshness rule never sees
   * it — commands hide their query in innerChildren). */
@@ -442,7 +441,7 @@ final case class SqlMergeDelete(cond: Option[Expression])
 final case class SqlMergeInsert(cond: Option[Expression],
     values: Seq[(String, Expression)]) extends SqlMergeClause
 
-/** `DELETE FROM t [WHERE …]` on a snapshot table → the Tx library
+/** `DELETE FROM t [WHERE …]` on a snapshot table → the library
   * delete (conflict-detected); `dmlMode 'mor'` tombstones instead of
   * rewriting. Returns the affected row count. */
 case class SnapshotDeleteCommand(dir: String, mor: Boolean,
@@ -454,14 +453,14 @@ case class SnapshotDeleteCommand(dir: String, mor: Boolean,
   override def run(spark: SparkSession): Seq[Row] = {
     val pred = cond.map(SnapshotDml.rebind).getOrElse(lit(true))
     val n =
-      if (mor) Snapshots.deleteWhereMorTx(spark, dir, pred)._2
+      if (mor) Snapshots.deleteWhereMor(spark, dir, pred)._2
         .tombstonesAdded
-      else Snapshots.deleteWhereTx(spark, dir, pred)._2.rowsChanged
+      else Snapshots.deleteWhere(spark, dir, pred)._2.rowsChanged
     Seq(Row(n))
   }
 }
 
-/** `UPDATE t SET … [WHERE …]` on a snapshot table → the Tx library
+/** `UPDATE t SET … [WHERE …]` on a snapshot table → the library
   * update; `dmlMode 'mor'` writes tombstones + updated images only. */
 case class SnapshotUpdateCommand(dir: String, mor: Boolean,
     assigns: Seq[(String, Expression)], cond: Option[Expression])
@@ -476,9 +475,9 @@ case class SnapshotUpdateCommand(dir: String, mor: Boolean,
       k -> SnapshotDml.rebind(v)
     }.toMap
     val n =
-      if (mor) Snapshots.updateWhereMorTx(spark, dir, pred, sets)._2
+      if (mor) Snapshots.updateWhereMor(spark, dir, pred, sets)._2
         .tombstonesAdded
-      else Snapshots.updateWhereTx(spark, dir, pred, sets)._2.rowsChanged
+      else Snapshots.updateWhere(spark, dir, pred, sets)._2.rowsChanged
     Seq(Row(n))
   }
 }
@@ -517,7 +516,7 @@ case class SnapshotMergeCommand(dir: String, source: LogicalPlan,
   * multiple matched actions, `WHEN MATCHED THEN DELETE`, partial SET
   * lists, conditional INSERT, `WHEN NOT MATCHED BY SOURCE` — lowered
   * onto [[Snapshots.mergeApply]] (key-routed full-outer join with
-  * per-clause CASE routing, Tx commit loop). Returns the Delta
+  * per-clause CASE routing, Rebase commit). Returns the Delta
   * num_affected_rows (updated + deleted + inserted). */
 case class SnapshotMergeApplyCommand(dir: String, source: LogicalPlan,
     on: Seq[(String, String)], matched: Seq[SqlMergeClause],
@@ -557,9 +556,9 @@ case class SnapshotMergeApplyCommand(dir: String, source: LogicalPlan,
 
 /** `INSERT INTO t …` / `INSERT OVERWRITE t …` on a snapshot table —
   * the most common SQL write: append publishes a NEW version through
-  * [[Snapshots.appendVersionTx]] (delta write + metadata-speed carry,
+  * [[Snapshots.appendVersion]] (delta write + metadata-speed carry,
   * commit-race safe); overwrite replaces the HEAD through
-  * [[Snapshots.overwriteVersionTx]] (old versions stay
+  * [[Snapshots.overwriteVersion]] (old versions stay
   * time-travelable, sidecar configuration carried forward). Column
   * mapping follows SQL semantics: positional by default (with casts
   * to the table types), `INSERT INTO t (a, b)` routes through the
@@ -630,9 +629,9 @@ case class SnapshotInsertCommand(dir: String, query: LogicalPlan,
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val n = src.count()
-      if (overwrite) Snapshots.overwriteVersionTx(spark, dir = dir,
+      if (overwrite) Snapshots.overwriteVersion(spark, dir = dir,
         df = src)
-      else Snapshots.appendVersionTx(spark, src, dir)
+      else Snapshots.appendVersion(spark, src, dir)
       Seq(Row(n))
     } finally { src.unpersist(); () }
   }

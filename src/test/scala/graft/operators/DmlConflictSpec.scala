@@ -3,18 +3,17 @@ package graft.operators
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** Commit-time conflict detection for concurrent copy-on-write DML
-  * (deleteWhereTx/updateWhereTx): two writers on DISJOINT files must
-  * BOTH land (the loser re-validates and re-executes); overlapping
-  * files or an interleaved non-DML commit must abort LOUDLY — never
-  * a silent lost update, which is exactly what the single-statement
-  * path would produce.
+/** Commit-time conflict detection for concurrent DML (the commit
+  * pipeline's Rebase policy): two writers on DISJOINT files must BOTH
+  * land (the loser re-validates and re-executes); overlapping files
+  * or an interleaved non-DML commit must abort LOUDLY — never a
+  * silent lost update.
   *
-  * The race is made deterministic by squatting the contended slot
-  * with a foreign `_claim` marker: the Tx writer always loses its
-  * claim of head+1 and must take the validation path, while the
-  * competing statement (on a worker thread) publishes into a later
-  * slot exactly like a real concurrent writer would.
+  * The race is made deterministic by the pipeline's test seam
+  * ([[PipelineHook]]): the competing statement commits at an exact
+  * step of the statement under test — after it staged, before it
+  * claims — so the statement always loses its claim and must take
+  * the validation path.
   */
 class DmlConflictSpec extends SparkSpec {
   import spark.implicits._
@@ -34,6 +33,7 @@ class DmlConflictSpec extends SparkSpec {
       partitionByCols = Seq("b"))
   }
 
+  /** A claim with no publisher: a committer that died after claiming. */
   private def squatNextSlot(dir: String): Unit =
     hfs.create(new org.apache.hadoop.fs.Path(dir, "_claim.2"),
       false).close()
@@ -60,19 +60,14 @@ class DmlConflictSpec extends SparkSpec {
     "re-validates against the winner's provenance and re-executes") {
     val dir = freshDir("graft-txd")
     build(dir)
-    squatNextSlot(dir)
-    @volatile var workerV = -1L
-    val worker = new Thread(() => {
-      Thread.sleep(500)
+    var workerV = -1L
+    // reads head v1, stages; the worker publishes v2; the statement
+    // loses its claim of v2, validates disjointness, re-executes
+    val (vB, rsB) = PipelineHook.raceAt(dir, "seal") {
       workerV = Snapshots.deleteWhere(spark, dir, col("k") >= 350L)._1
-    })
-    worker.start()
-    // reads head v1, stages, loses the squatted claim of v2, waits
-    // for the worker's publish, validates disjointness, re-executes
-    val (vB, rsB) = Snapshots.deleteWhereTx(spark, dir, col("k") < 50L)
-    worker.join()
-    assert(workerV == 3L, s"worker landed at $workerV")
-    assert(vB == 4L, s"Tx writer landed at $vB")
+    }(Snapshots.deleteWhere(spark, dir, col("k") < 50L))
+    assert(workerV == 2L, s"worker landed at $workerV")
+    assert(vB == 3L, s"the re-executed statement landed at $vB")
     assert(rsB.rowsChanged == 50L)
     val t = Snapshots.read(spark, dir)
     assert(t.count() == 300L) // BOTH deletes applied
@@ -83,17 +78,12 @@ class DmlConflictSpec extends SparkSpec {
     "ConcurrentModificationException — never a silent lost update") {
     val dir = freshDir("graft-txo")
     build(dir)
-    squatNextSlot(dir)
-    val worker = new Thread(() => {
-      Thread.sleep(500)
-      Snapshots.deleteWhere(spark, dir, col("k") === 10L); ()
-    })
-    worker.start()
     val e = intercept[java.util.ConcurrentModificationException] {
       // same bucket file (k<100 lives in b=0) as the worker's delete
-      Snapshots.deleteWhereTx(spark, dir, col("k") < 50L)
+      PipelineHook.raceAt(dir, "stage") {
+        Snapshots.deleteWhere(spark, dir, col("k") === 10L); ()
+      }(Snapshots.deleteWhere(spark, dir, col("k") < 50L))
     }
-    worker.join()
     assert(e.getMessage.contains("conflict"), e.getMessage)
     // the worker's statement alone is in effect
     assert(Snapshots.read(spark, dir).count() == 399L)
@@ -103,17 +93,15 @@ class DmlConflictSpec extends SparkSpec {
     "full rewrite invalidates any staged statement") {
     val dir = freshDir("graft-txn")
     build(dir)
-    squatNextSlot(dir)
-    val worker = new Thread(() => {
-      Thread.sleep(500)
-      Snapshots.commit(spark,
-        (0L until 10L).map(i => (i, 0L)).toDF("k", "b"), dir); ()
-    })
-    worker.start()
+    // the full commit lands while the statement HOLDS its claim: it
+    // takes the next free slot above it and publishes first, so the
+    // statement's head re-check withdraws the claim and validates
     val e = intercept[java.util.ConcurrentModificationException] {
-      Snapshots.deleteWhereTx(spark, dir, col("k") < 50L)
+      PipelineHook.raceAt(dir, "claim") {
+        Snapshots.commit(spark,
+          (0L until 10L).map(i => (i, 0L)).toDF("k", "b"), dir); ()
+      }(Snapshots.deleteWhere(spark, dir, col("k") < 50L))
     }
-    worker.join()
     assert(e.getMessage.contains("NON-DML"), e.getMessage)
     assert(Snapshots.read(spark, dir).count() == 10L)
   }
@@ -124,7 +112,7 @@ class DmlConflictSpec extends SparkSpec {
     build(dir)
     squatNextSlot(dir)
     val e = intercept[IllegalStateException] {
-      Snapshots.deleteWhereTx(spark, dir, col("k") < 50L,
+      Snapshots.deleteWhere(spark, dir, col("k") < 50L,
         publishWaitMs = 400L)
     }
     assert(e.getMessage.contains("never published"), e.getMessage)
@@ -169,52 +157,37 @@ class DmlConflictSpec extends SparkSpec {
     "winner's head — BOTH tombstone sets apply, never last-write-wins") {
     val dir = freshDir("graft-txmd")
     build(dir)
-    squatNextSlot(dir)
-    @volatile var workerV = -1L
-    val worker = new Thread(() => {
-      Thread.sleep(500)
-      workerV = Snapshots.deleteWhereMor(spark, dir, col("k") >= 350L)._1
-    })
-    worker.start()
-    // reads head v1, stages refs+tombstones, loses the squatted claim
-    // of v2, waits for the worker's publish, re-stages on v3 — the
+    var workerV = -1L
+    // reads head v1, stages refs+tombstones; the worker publishes v2;
+    // the statement loses its claim and re-stages on v2 — the
     // re-staged version carries the WORKER's tombstones too
-    val (vB, msB) = Snapshots.deleteWhereMorTx(spark, dir,
-      col("k") < 50L)
-    worker.join()
-    assert(workerV == 3L, s"worker landed at $workerV")
-    assert(vB == 4L, s"Tx writer landed at $vB")
+    val (vB, msB) = PipelineHook.raceAt(dir, "seal") {
+      workerV = Snapshots.deleteWhereMor(spark, dir, col("k") >= 350L)._1
+    }(Snapshots.deleteWhereMor(spark, dir, col("k") < 50L))
+    assert(workerV == 2L, s"worker landed at $workerV")
+    assert(vB == 3L, s"the re-executed statement landed at $vB")
     assert(msB.tombstonesAdded == 50L && msB.tombstonesTotal == 100L,
       msB)
     val t = Snapshots.read(spark, dir)
     assert(t.count() == 300L) // BOTH deletes applied
     assert(t.agg(min("k"), max("k")).head().toSeq == Seq(50L, 349L))
-    // the pre-fix single-statement hole, pinned the other way: the
-    // plain path from a COMMON head does lose the first statement —
-    // which is exactly why the SQL path routes through Tx
   }
 
   test("a MoR Tx statement racing a COPY-ON-WRITE commit re-executes " +
     "on the new self-contained head and both land") {
     val dir = freshDir("graft-txmx")
     build(dir)
-    squatNextSlot(dir)
-    val worker = new Thread(() => {
-      Thread.sleep(500)
+    val (vB, msB) = PipelineHook.raceAt(dir, "stage") {
       Snapshots.deleteWhere(spark, dir, col("k") >= 390L); ()
-    })
-    worker.start()
-    val (vB, msB) = Snapshots.deleteWhereMorTx(spark, dir,
-      col("k") < 10L)
-    worker.join()
-    assert(vB == 4L && msB.tombstonesAdded == 10L)
+    }(Snapshots.deleteWhereMor(spark, dir, col("k") < 10L))
+    assert(vB == 3L && msB.tombstonesAdded == 10L)
     assert(Snapshots.read(spark, dir).count() == 380L)
     // crashed-committer diagnosis on a never-published claim
     val dir2 = freshDir("graft-txmc")
     build(dir2)
     squatNextSlot(dir2)
     val e = intercept[IllegalStateException] {
-      Snapshots.deleteWhereMorTx(spark, dir2, col("k") < 50L,
+      Snapshots.deleteWhereMor(spark, dir2, col("k") < 50L,
         publishWaitMs = 400L)
     }
     assert(e.getMessage.contains("never published"), e.getMessage)
@@ -225,13 +198,13 @@ class DmlConflictSpec extends SparkSpec {
     "lands at head+1, provenance recorded, no-ops publish nothing") {
     val dir = freshDir("graft-txq")
     build(dir)
-    val (v2, rs) = Snapshots.updateWhereTx(spark, dir,
+    val (v2, rs) = Snapshots.updateWhere(spark, dir,
       col("k") === 5L, Map("k" -> lit(-5L)))
     assert(v2 == 2L && rs.filesRewritten == 1L)
     assert(Snapshots.read(spark, dir).filter(col("k") === -5L)
       .count() == 1L)
     // provably-no-op delete: nothing published
-    val (v2b, rs2) = Snapshots.deleteWhereTx(spark, dir,
+    val (v2b, rs2) = Snapshots.deleteWhere(spark, dir,
       col("k") === 777777L)
     assert(v2b == 2L && rs2.filesRewritten == 0L)
   }
@@ -250,39 +223,27 @@ class DmlConflictSpec extends SparkSpec {
     assert(dml._1 == 1L && dml._2 == "merge", dml)
     assert(dml._3.size == 1 && dml._3.head.startsWith("b=0/"), dml._3)
     // disjoint race: worker deletes in b=3 while the merge (routed
-    // to b=0) loses its claim — the merge re-validates and re-stages
-    // (head is v2 now, so the contended slot is 3)
-    hfs.create(new org.apache.hadoop.fs.Path(dir, "_claim.3"),
-      false).close()
-    @volatile var workerV = -1L
-    val worker = new Thread(() => {
-      Thread.sleep(500)
-      workerV = Snapshots.deleteWhere(spark, dir, col("k") >= 350L)._1
-    })
-    worker.start()
+    // to b=0) is staged — the merge loses its claim of v3,
+    // re-validates and re-stages
+    var workerV = -1L
     val upd = (0L to 4L).map(i => (i, 0L)).toDF("k", "b")
-    val (vM, rsM) = Snapshots.mergeInto(spark, dir,
-      upd.withColumn("k", col("k") + 1000L), Seq("k"))
-    worker.join()
-    assert(workerV == 4L && vM == 5L, s"worker=$workerV merge=$vM")
+    val (vM, rsM) = PipelineHook.raceAt(dir, "seal") {
+      workerV = Snapshots.deleteWhere(spark, dir, col("k") >= 350L)._1
+    }(Snapshots.mergeInto(spark, dir,
+      upd.withColumn("k", col("k") + 1000L), Seq("k")))
+    assert(workerV == 3L && vM == 4L, s"worker=$workerV merge=$vM")
     assert(rsM.rowsChanged == 5L)
     // both landed: 400 - 50 deleted + 5 inserted (keys 1000..1004)
     assert(Snapshots.read(spark, dir).count() == 355L)
     // overlap: worker deletes in b=0, merge also routed to b=0 → CME
     val dir2 = freshDir("graft-txm3")
     build(dir2)
-    val sq = new org.apache.hadoop.fs.Path(dir2, "_claim.2")
-    hfs.create(sq, false).close()
-    val worker2 = new Thread(() => {
-      Thread.sleep(500)
-      Snapshots.deleteWhere(spark, dir2, col("k") === 10L); ()
-    })
-    worker2.start()
     val e = intercept[java.util.ConcurrentModificationException] {
-      Snapshots.mergeInto(spark, dir2,
-        (0L to 4L).map(i => (i, 0L)).toDF("k", "b"), Seq("k"))
+      PipelineHook.raceAt(dir2, "seal") {
+        Snapshots.deleteWhere(spark, dir2, col("k") === 10L); ()
+      }(Snapshots.mergeInto(spark, dir2,
+        (0L to 4L).map(i => (i, 0L)).toDF("k", "b"), Seq("k")))
     }
-    worker2.join()
     assert(e.getMessage.contains("conflict"), e.getMessage)
     // the worker's statement alone is in effect
     assert(Snapshots.read(spark, dir2).count() == 399L)

@@ -5,6 +5,11 @@ import graft.SparkSpec
 class SnapshotsSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Stage directories left under a store's `_staging/`. */
+  private def stages(dir: String): Seq[String] =
+    Option(new java.io.File(dir, "_staging").listFiles())
+      .toSeq.flatten.map(_.getName)
+
   test("commit publishes atomically: versions are immutable, reads " +
     "resolve the pointer, an unpublished directory is invisible") {
     val dir = java.nio.file.Files
@@ -49,7 +54,7 @@ class SnapshotsSpec extends SparkSpec {
     // v=2 directory and no live claim: CAS crashed-winner recovery
     // publishes any unpublished v=N it finds under a stale claim, so
     // rejected bytes in a version slot would be resurrectable as the
-    // table head (they live only in a deleted _stage-*)
+    // table head (they live only in a deleted stage)
     assert(Snapshots.latestVersion(spark, dir) == 1L)
     assert(Snapshots.read(spark, dir).orderBy("id").collect()
       .map(_.getInt(0)).toSeq == Seq(1, 2))
@@ -124,8 +129,7 @@ class SnapshotsSpec extends SparkSpec {
       assert(Set("A", "B").contains(Snapshots.read(spark, dir)
         .collect().head.getString(1)))
       // loser's staging was cleaned up
-      val leftovers = new java.io.File(dir).listFiles()
-        .filter(_.getName.startsWith("_stage-"))
+      val leftovers = stages(dir)
       assert(leftovers.isEmpty, leftovers.mkString(","))
     } finally pool.shutdown()
     // version numbers are not silently reused under CAS: after a
@@ -348,13 +352,13 @@ class SnapshotsSpec extends SparkSpec {
       r.toString)
     // v=2 was NOT merged-into: exactly the old rows, no nested stage
     val inside = new java.io.File(s"$dir/v=2").listFiles()
-      .filter(_.getName.startsWith("_stage-"))
+      .filter(_.isDirectory)
     assert(inside.isEmpty, inside.mkString(","))
     assert(spark.read.parquet(s"$dir/v=2").collect()
       .map(_.getString(1)).toSeq == Seq("old-v2"))
     // the loser's staging is gone and its claim was retired
     val d = new java.io.File(dir)
-    assert(!d.listFiles().exists(_.getName.startsWith("_stage-")))
+    assert(stages(dir).isEmpty)
     assert(!new java.io.File(d, "_claim.2").exists())
     assert(d.listFiles().exists(_.getName.startsWith("_claim.2.stale-")))
     // table head is untouched
@@ -445,7 +449,7 @@ class SnapshotsSpec extends SparkSpec {
       // rename-merge failure mode the claim marker exists to prevent)
       Seq(va, vb).foreach { v =>
         val nested = new java.io.File(s"$dir/v=$v").listFiles()
-          .filter(_.getName.startsWith("_stage-"))
+          .filter(_.isDirectory)
         assert(nested.isEmpty, nested.mkString(","))
       }
     } finally pool.shutdown()

@@ -1,7 +1,7 @@
 package graft.plans
 
 import graft.SparkSpec
-import graft.operators.Snapshots
+import graft.operators.{PipelineHook, Snapshots}
 import org.apache.spark.sql.functions._
 
 /** SQL DML on `USING snapshot` tables (SnapshotDmlRule) and per-query
@@ -155,22 +155,14 @@ class SnapshotSqlDmlSpec extends SparkSpec {
     "commit race re-validates like deleteWhereTx — disjoint DML " +
     "re-executes, both land") {
     val (t, dir) = mkTable()
-    // squat the contended slot so the SQL statement always loses its
-    // claim of head+1 (the DmlConflictSpec determinism trick)
-    val f = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    f.create(new org.apache.hadoop.fs.Path(dir, "_claim.2"),
-      false).close()
-    @volatile var workerV = -1L
-    val worker = new Thread(() => {
-      Thread.sleep(500)
+    // the worker commits after the SQL statement staged, so the
+    // statement always loses its claim of v2 (the DmlConflictSpec
+    // determinism trick)
+    var workerV = -1L
+    val affected = PipelineHook.raceAt(dir, "seal") {
       workerV = Snapshots.deleteWhere(spark, dir, col("k") >= 350L)._1
-    })
-    worker.start()
-    val affected =
-      spark.sql(s"DELETE FROM $t WHERE k < 50").head.getLong(0)
-    worker.join()
-    assert(workerV == 3L && affected == 50L)
+    }(spark.sql(s"DELETE FROM $t WHERE k < 50").head.getLong(0))
+    assert(workerV == 2L && affected == 50L)
     assert(spark.sql(s"SELECT count(*) AS n FROM $t").head.getLong(0)
       == 300L) // BOTH deletes applied — never last-write-wins
     assert(spark.sql(s"SELECT min(k) AS mn, max(k) AS mx FROM $t")
@@ -259,21 +251,16 @@ class SnapshotSqlDmlSpec extends SparkSpec {
     assert(graft.operators.FileStats
       .readManifest(spark, s"$dir/v=$head").nonEmpty,
       "overwrite dropped the stats manifest")
-    // race: the INSERT loses its claim to a squatter, a worker lands
-    // a delete, the INSERT re-stages and BOTH land (append commutes)
-    hfs.create(new org.apache.hadoop.fs.Path(dir,
-      s"_claim.${head + 1}"), false).close()
-    @volatile var workerV = -1L
-    val worker = new Thread(() => {
-      Thread.sleep(500)
+    // race: a worker lands a delete after the INSERT staged, the
+    // INSERT loses its claim, re-stages and BOTH land (append
+    // commutes)
+    var workerV = -1L
+    assert(PipelineHook.raceAt(dir, "seal") {
       workerV = Snapshots.deleteWhere(spark, dir, col("k") < 10L)._1
-    })
-    worker.start()
-    assert(spark.sql(s"INSERT INTO $t (k, b, payload) " +
-      "VALUES (9100, 9, 'race')").head.getLong(0) == 1L)
-    worker.join()
-    assert(workerV == head + 2, s"worker landed at $workerV")
-    assert(Snapshots.latestVersion(spark, dir) == head + 3)
+    }(spark.sql(s"INSERT INTO $t (k, b, payload) " +
+      "VALUES (9100, 9, 'race')").head.getLong(0)) == 1L)
+    assert(workerV == head + 1, s"worker landed at $workerV")
+    assert(Snapshots.latestVersion(spark, dir) == head + 2)
     assert(spark.sql(s"SELECT count(*) AS n FROM $t").head.getLong(0)
       == 91L) // 100 - 10 deleted + 1 inserted
     // static PARTITION specs are refused loudly
