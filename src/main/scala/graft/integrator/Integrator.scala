@@ -20,13 +20,21 @@ import org.apache.spark.sql.functions._
   *   2. form outline — per-form incremental scan with watermark
   *      pushdown (T1/S3) + canceled-after-completion re-sweep (T2);
   *   3. form detail — target set = outline ∪ open-status − ignore
-  *      (T3/U2), fetched, shredded to the 26 tables, MERGE-upserted
+  *      (T3/U2), fetched, shredded to the 30 tables, MERGE-upserted
   *      (K1–K4), watermark committed after the batch (T1);
   *   4. views registered (the BI surface, §3.2).
   *
   * State (silver tables, watermarks, DLQ) lives in a parquet directory
   * tree at `statePath`; every write is an idempotent overwrite-after-
-  * merge so a crashed run resumes safely (T4). Fetching is pluggable
+  * merge so a failed run resumes safely (T4). A phase merges its
+  * tables concurrently (phase 1: 11 master tables, phase 3: 30 request
+  * tables), so a crash mid-phase can leave any subset of that phase's
+  * tables merged, not only a prefix. Resume is still safe after a
+  * failed merge or a kill between table commits: each per-table merge
+  * is idempotent, and the watermark commits last, after every merge of
+  * the batch has landed. A kill DURING a table's overwrite is not
+  * covered — that table loses its history (see `ParquetMerge`; ROADMAP
+  * direction 3). Fetching is pluggable
   * (`Ingest.Fetcher`) and throttled (S1).
   */
 class Integrator(spark: SparkSession, fetcher: Fetcher, statePath: String,
@@ -60,19 +68,14 @@ class Integrator(spark: SparkSession, fetcher: Fetcher, statePath: String,
   private val fetchFanout = math.max(1, math.min(
     Integrator.FetchFanout, spark.sparkContext.defaultParallelism * 2))
 
-  private def tablePath(name: String) = s"$statePath/silver/$name"
+  private val silverDir = s"$statePath/silver"
+  private def tablePath(name: String) = s"$silverDir/$name"
 
   def readTable(name: String): Option[DataFrame] =
     graft.operators.ParquetMerge.read(spark, tablePath(name))
 
   private def writeTable(name: String, df: DataFrame): Unit =
     graft.operators.ParquetMerge.write(spark, tablePath(name), df)
-
-  /** Merge per the table's canonical strategy (shared with the
-    * streaming sink — NormalizeTables.mergeStrategy). */
-  private def mergeByStrategy(name: String, incoming: DataFrame): Unit =
-    graft.operators.ParquetMerge.mergeTable(spark, tablePath(name), name,
-      incoming)
 
   /** Phase 1 — the 7 master endpoints (integrator.py:535-539). The
     * reference drains them one after another; here all 7 scan in one
@@ -112,37 +115,23 @@ class Integrator(spark: SparkSession, fetcher: Fetcher, statePath: String,
           .select("doc").as[String])
     // a partially-fetched endpoint must not merge: its diff-deletes
     // (K4) would drop rows that still exist upstream
-    def whenClean(api: String)(merge: => Unit): Unit =
-      if (!failedApis(api)) merge
-    whenClean("users") {
-      Normalize.users(docsOf("users", JobcanSchemas.userSchema))
-        .foreach { case (name, df) => mergeByStrategy(name, df) }
-    }
-    whenClean("groups") {
-      mergeByStrategy("groups",
-        Normalize.groups(docsOf("groups", JobcanSchemas.groupSchema)))
-    }
-    whenClean("positions") {
-      mergeByStrategy("positions", Normalize.positions(
-        docsOf("positions", JobcanSchemas.positionSchema)))
-    }
-    whenClean("projects") {
-      mergeByStrategy("projects", Normalize.projects(
-        docsOf("projects", JobcanSchemas.projectSchema)))
-    }
-    whenClean("companies") {
-      mergeByStrategy("companies", Normalize.companies(
-        docsOf("companies", JobcanSchemas.companySchema)))
-    }
-    whenClean("fix_journals") {
-      Normalize.fixJournals(
-        docsOf("fix_journals", JobcanSchemas.fixJournalSchema))
-        .foreach { case (name, df) => mergeByStrategy(name, df) }
-    }
-    whenClean("forms") {
-      mergeByStrategy("forms",
-        Normalize.forms(docsOf("forms", JobcanSchemas.formSchema)))
-    }
+    val shreds: Seq[(String, Map[String, DataFrame])] = Seq(
+      "users" -> Normalize.users(docsOf("users", JobcanSchemas.userSchema)),
+      "groups" -> Map("groups" ->
+        Normalize.groups(docsOf("groups", JobcanSchemas.groupSchema))),
+      "positions" -> Map("positions" -> Normalize.positions(
+        docsOf("positions", JobcanSchemas.positionSchema))),
+      "projects" -> Map("projects" -> Normalize.projects(
+        docsOf("projects", JobcanSchemas.projectSchema))),
+      "companies" -> Map("companies" -> Normalize.companies(
+        docsOf("companies", JobcanSchemas.companySchema))),
+      "fix_journals" -> Normalize.fixJournals(
+        docsOf("fix_journals", JobcanSchemas.fixJournalSchema)),
+      "forms" -> Map("forms" ->
+        Normalize.forms(docsOf("forms", JobcanSchemas.formSchema))))
+    graft.operators.ParquetMerge.mergeTables(spark, silverDir,
+      shreds.collect { case (api, tables) if !failedApis(api) => tables }
+        .flatten)
     report(Progress.BasicData,
       if (failedApis.isEmpty) "master endpoints merged"
       else s"master endpoints merged (stale: ${failedApis.mkString(",")})",
@@ -240,7 +229,7 @@ class Integrator(spark: SparkSession, fetcher: Fetcher, statePath: String,
     (outlineDf, capturedCp)
   }
 
-  /** Phase 3 — detail fetch + 26-table shred + MERGE + watermark
+  /** Phase 3 — detail fetch + 30-table shred + MERGE + watermark
     * commit (gateway.py:434-541, integrator.py:816-853).
     */
   def updateFormDetails(outline: DataFrame, captured: DataFrame): Unit = {
@@ -310,10 +299,17 @@ class Integrator(spark: SparkSession, fetcher: Fetcher, statePath: String,
     // parse here (not after the DLQ block) so parse failures can be
     // recorded alongside fetch failures; the eager checkpoint also
     // stops the 30 child-table merges below from re-reading the OLD
-    // requests parquet (overwritten first) through the parse plan
+    // requests parquet (overwritten first) through the parse plan.
+    // Every one of those merges scans this checkpoint, so it keeps
+    // only what they and the DLQ need (not the raw bodies) in at most
+    // one partition per slot: each scan is a few small partitions,
+    // and each table lands in as few files
     val parsedAll = Ingest.parseDocs(
       fetched.filter(col("error").isNull), "doc",
-      JobcanSchemas.requestDetailSchema).localCheckpoint(true)
+      JobcanSchemas.requestDetailSchema)
+      .select("id", "parsed", "parse_ok")
+      .coalesce(spark.sparkContext.defaultParallelism)
+      .localCheckpoint(true)
     // T5: fetch AND parse failures → DLQ (S5: a 200 response whose
     // body doesn't parse is a failure record in the reference too,
     // api_client.py:390-453 JSON-decode warnings)
@@ -388,11 +384,9 @@ class Integrator(spark: SparkSession, fetcher: Fetcher, statePath: String,
     // result (the checkpoint above is the lineage cut that keeps the
     // 30 child-table merges from re-reading the OLD requests parquet)
     val parsed = parsedAll.filter(col("parse_ok")).select("parsed.*")
-    if (parsed.limit(1).count() > 0) {
-      Normalize.requests(parsed).foreach {
-        case (name, df) => mergeByStrategy(name, df)
-      }
-    }
+    if (parsed.limit(1).count() > 0)
+      graft.operators.ParquetMerge.mergeTables(spark, silverDir,
+        Normalize.requests(parsed))
     // T1: commit watermarks only after the batch landed, and only for
     // forms whose detail fetches ALL succeeded — the reference writes
     // a form's watermark only once every request of that form is

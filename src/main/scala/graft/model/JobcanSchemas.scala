@@ -121,7 +121,7 @@ object JobcanSchemas {
     "user_name" -> StringType, "date" -> StringType,
     "text" -> StringType, "deleted" -> BooleanType)
 
-  /** `/v1/requests/{request_id}` detail document — the 26-table source. */
+  /** `/v1/requests/{request_id}` detail document — the 30-table source. */
   val requestDetailSchema: StructType = s(
     "id" -> StringType, "title" -> StringType, "status" -> StringType,
     "form_id" -> LongType, "form_name" -> StringType,

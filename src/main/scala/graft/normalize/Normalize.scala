@@ -88,7 +88,7 @@ object Normalize {
     Map("fix_journals" -> flat, "custom_journal_items" -> items)
   }
 
-  // ---- request detail: the 26-table shred ------------------------------
+  // ---- request detail: the 30-table shred ------------------------------
 
   /** Shred `/v1/requests/{id}` documents (`_table_init.py:16-45` table
     * list). Every child table carries (request_id, ...ancestor

@@ -114,4 +114,65 @@ object Parallelism {
     else if (by.nonEmpty) df.repartition(target, by: _*)
     else df.repartition(target)
   }
+
+  /** Run independent driver-side actions (table merges, store setups)
+    * concurrently, so the jobs of one back-fill the executor slots the
+    * tail of another leaves idle.
+    *
+    * The threads are created by the CALLING thread on every call, so
+    * each inherits the caller's Spark local properties — job group,
+    * scheduler pool, active session — exactly as a sequential loop
+    * would run with them. A shared pool (or the global execution
+    * context) would instead carry whatever properties its threads
+    * were born with.
+    *
+    * Every thunk runs to completion: none is cancelled or interrupted
+    * when another fails, because an interrupted overwrite
+    * (`ParquetMerge.write`) can lose its table. Once all have
+    * finished — and all threads have exited — the first failure in
+    * input order is rethrown as its original exception, with any
+    * later failures attached as suppressed. At most
+    * `defaultParallelism` thunks run at once; a single thunk (or a
+    * session one slot wide) runs on the calling thread.
+    */
+  def concurrently(spark: org.apache.spark.sql.SparkSession)(
+      batch: Seq[() => Unit]): Unit = {
+    val thunks = batch.toIndexedSeq
+    val width = math.min(thunks.size,
+      spark.sparkContext.defaultParallelism)
+    val failures = new Array[Throwable](thunks.size)
+    val next = new java.util.concurrent.atomic.AtomicInteger(0)
+    val drain: Runnable = () => {
+      var i = next.getAndIncrement()
+      while (i < thunks.size) {
+        try thunks(i)()
+        catch { case e: Throwable => failures(i) = e }
+        i = next.getAndIncrement()
+      }
+    }
+    if (width <= 1) drain.run()
+    else {
+      val workers = Seq.tabulate(width) { w =>
+        val t = new Thread(drain, s"graft-concurrently-$w")
+        t.setDaemon(true)
+        t.start()
+        t
+      }
+      // wait out every worker even if this thread is interrupted, then
+      // restore the interrupt for the caller to see
+      var interrupted = false
+      workers.foreach { t =>
+        while (t.isAlive)
+          try t.join()
+          catch { case _: InterruptedException => interrupted = true }
+      }
+      if (interrupted) Thread.currentThread().interrupt()
+    }
+    failures.filter(_ != null) match {
+      case Array(first, rest @ _*) =>
+        rest.filter(_ ne first).foreach(first.addSuppressed)
+        throw first
+      case _ =>
+    }
+  }
 }

@@ -12,6 +12,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * listing afterwards or later same-session reads resolve to deleted
   * part files. At scale this whole object is replaced by MERGE INTO on
   * a transactional table format; call sites don't change shape.
+  *
+  * Each [[mergeTable]] commits one table; [[mergeTables]] commits a
+  * phase's tables concurrently, so a crash mid-phase can leave any
+  * subset of them merged, not only a prefix. Resume is safe after a
+  * failed merge, or after a kill between table commits: each
+  * per-table merge is idempotent — re-merging the same batch into a
+  * table that already holds it yields the same table — and the
+  * watermark commits last. It is NOT safe after a kill during
+  * [[write]]: the overwrite deletes the old files before the new ones
+  * land, so that table loses its history, and an incremental re-run
+  * only re-fetches the delta. With concurrent merges one kill can hit
+  * up to `defaultParallelism` writes at once. Making a kill mid-write
+  * safe is the open item of ROADMAP direction 3.
   */
 object ParquetMerge {
 
@@ -68,4 +81,14 @@ object ParquetMerge {
       case Left(pk) => mergeFull(spark, path, incoming, pk)
       case Right(parents) => replaceChildren(spark, path, incoming, parents)
     }
+
+  /** Merge a phase's `(table, incoming)` pairs into `dir/<table>`
+    * concurrently (the merges are independent). A failed merge is
+    * rethrown only after the others have finished, so the caller
+    * commits its watermark only if every table landed. */
+  def mergeTables(spark: SparkSession, dir: String,
+      tables: Iterable[(String, DataFrame)]): Unit =
+    Parallelism.concurrently(spark)(tables.toSeq.map {
+      case (name, df) => () => mergeTable(spark, s"$dir/$name", name, df)
+    })
 }

@@ -1077,14 +1077,10 @@ object ExtOps {
       try {
         // independent table setups run from two driver threads —
         // xq41's note (guide §2.6); results unaffected
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        import scala.concurrent.duration.Duration
-        val setup = Seq(storeM, storeC).map(st => Future {
-          Snapshots.commitWithStats(s, base, st,
-            statsCols = Seq("k"), partitionByCols = Seq("bucket"))
-        })
-        setup.foreach(Await.result(_, Duration.Inf))
+        graft.operators.Parallelism.concurrently(s)(
+          Seq(storeM, storeC).map(st => () =>
+            Snapshots.commitWithStats(s, base, st,
+              statsCols = Seq("k"), partitionByCols = Seq("bucket"))))
         val pred = pmod(col("k"), lit(7)) === 2
         val n1 = Snapshots.read(s, storeM).count()
         val (v2, m) = Snapshots.deleteWhereMor(s, storeM, pred)
@@ -1193,14 +1189,10 @@ object ExtOps {
         // executor slots the first one's tail leaves idle (guide
         // §2.6 "overlap independent jobs"); results are unaffected
         // (separate stores, separate version slots)
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        import scala.concurrent.duration.Duration
-        val setup = Seq(storeM, storeC).map(st => Future {
-          Snapshots.commitWithStats(s, base, st,
-            statsCols = Seq("k"), partitionByCols = Seq("bucket"))
-        })
-        setup.foreach(Await.result(_, Duration.Inf))
+        graft.operators.Parallelism.concurrently(s)(
+          Seq(storeM, storeC).map(st => () =>
+            Snapshots.commitWithStats(s, base, st,
+              statsCols = Seq("k"), partitionByCols = Seq("bucket"))))
         val pred = pmod(col("k"), lit(6)) === 1
         val sets = Map("v" -> (col("v") + 1000L))
         val (_, m) = Snapshots.updateWhereMor(s, storeM, pred, sets)
@@ -1252,14 +1244,10 @@ object ExtOps {
       try {
         // independent table setups run from two driver threads —
         // xq41's note (guide §2.6); results unaffected
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        import scala.concurrent.duration.Duration
-        val setup = Seq(store, storeM).map(st => Future {
-          Snapshots.commitWithStats(s, base, st,
-            statsCols = Seq("k"), partitionByCols = Seq("bucket"))
-        })
-        setup.foreach(Await.result(_, Duration.Inf))
+        graft.operators.Parallelism.concurrently(s)(
+          Seq(store, storeM).map(st => () =>
+            Snapshots.commitWithStats(s, base, st,
+              statsCols = Seq("k"), partitionByCols = Seq("bucket"))))
         s.sql(s"CREATE TABLE $tbl USING snapshot OPTIONS (path '$store')")
         s.sql(s"CREATE TABLE $tblM USING snapshot " +
           s"OPTIONS (path '$storeM', dmlMode 'mor')")

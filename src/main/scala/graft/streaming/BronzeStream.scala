@@ -65,13 +65,11 @@ object BronzeStream {
       if (bad != null && !bad.isEmpty)
         bad.write.mode("append").parquet(s"$silverDir/_quarantine")
       if (!clean.isEmpty)
-        Normalize.requests(clean).foreach { case (name, df) =>
-          // the SAME canonical merge semantics as the batch Integrator
-          // (NormalizeTables.mergeStrategy via ParquetMerge) — the two
-          // sinks cannot drift
-          graft.operators.ParquetMerge.mergeTable(spark,
-            s"$silverDir/$name", name, df)
-        }
+        // the SAME canonical merge semantics as the batch Integrator
+        // (NormalizeTables.mergeStrategy via ParquetMerge, independent
+        // tables merged concurrently) — the two sinks cannot drift
+        graft.operators.ParquetMerge.mergeTables(spark, silverDir,
+          Normalize.requests(clean))
     } finally docs.unpersist()
   }
 

@@ -324,6 +324,53 @@ class IntegratorSpec extends SparkSpec {
       "late cancellation must be re-fetched and merged")
   }
 
+  test("a request-table merge failing mid-phase rethrows its own " +
+    "exception, holds the watermark, and a re-run converges") {
+    import graft.normalize.NormalizeTables
+    def mkDir(p: String) =
+      java.nio.file.Files.createTempDirectory(p).toString
+    val clean = new Integrator(spark, new SyntheticApi, mkDir("graft-ok"))
+    clean.run()
+
+    val dir = mkDir("graft-mf")
+    val integ = new Integrator(spark, new SyntheticApi, dir)
+    // a plain file where one request table's directory belongs: that
+    // table's merge fails while the other 29 run beside it
+    val obstacle = java.nio.file.Paths.get(dir, "silver",
+      "expense_specific_rows")
+    java.nio.file.Files.createDirectories(obstacle.getParent)
+    java.nio.file.Files.writeString(obstacle, "not a parquet table")
+    val expected = intercept[Exception] {
+      graft.operators.ParquetMerge.read(spark, obstacle.toString)
+    }
+    // the phases are called directly: run()'s T6 ladder would sleep
+    // before retrying an IO-rooted failure
+    integ.updateBasicData()
+    val (outline, captured) = integ.fetchOutlines()
+    val e = intercept[Exception](integ.updateFormDetails(outline, captured))
+    assert(e.getClass == expected.getClass &&
+      e.getMessage.contains(obstacle.toString),
+      s"expected the merge's own $expected, got $e")
+    assert(integ.readTable("_watermarks").forall(_.count() == 0),
+      "a failed merge must not advance the watermark")
+
+    java.nio.file.Files.delete(obstacle)
+    val (outline2, captured2) = integ.fetchOutlines()
+    integ.updateFormDetails(outline2, captured2)
+    val tables = NormalizeTables.masters ++ NormalizeTables.requestTables
+    def counts(i: Integrator) =
+      tables.map(n => n -> i.readTable(n).map(_.count())).toMap
+    assert(counts(integ) == counts(clean))
+    assert(integ.readTable("_watermarks").get.collect().toSeq ==
+      clean.readTable("_watermarks").get.collect().toSeq)
+    def docs(i: Integrator) = graft.docs.Reassembly.toJsonDocs(
+        NormalizeTables.requestTables.map(n => n -> i.readTable(n).get)
+          .toMap)
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val rebuilt = docs(integ)
+    assert(rebuilt.size == 2 && rebuilt == docs(clean))
+  }
+
   test("token preflight (api_client.py:240-249): an invalid " +
     "credential aborts BEFORE any data fetch — one probe call, zero " +
     "endpoint scans, zero detail fetches, no retry-ladder churn") {
