@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Per-file Bloom sidecars for POINT lookups — the equality
@@ -145,24 +145,4 @@ object BloomStats {
   def pruneEquals(manifest: Seq[FileBloom], value: String)
       : (Seq[FileBloom], Seq[FileBloom]) =
     manifest.partition(admits(_, value))
-
-  /** Bloom-pruned point-lookup read of `dataDir` (the [[FileStats
-    * .readPredsPruned]] shape): only files whose filter admits
-    * `column = value` are opened; the caller still applies the
-    * row-level predicate. */
-  def readEqualsPruned(spark: SparkSession, dataDir: String,
-      column: String, value: String)
-      : (DataFrame, FileStats.PruneStats) = {
-    val manifest = readManifest(spark, dataDir, column)
-    val (kept, skipped) = pruneEquals(manifest, value)
-    val stats = FileStats.PruneStats(kept.size.toLong,
-      skipped.size.toLong, kept.map(_.rows).sum, skipped.map(_.rows).sum)
-    val df =
-      if (kept.isEmpty)
-        spark.read.parquet(dataDir).filter(lit(false))
-      else
-        spark.read.option("basePath", dataDir)
-          .parquet(kept.map(b => s"$dataDir/${b.relPath}"): _*)
-    (df, stats)
-  }
 }

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
@@ -59,8 +59,13 @@ object FileStats {
       cols: Map[String, Option[(String, String)]],
       nonNull: Map[String, Long] = Map.empty)
 
-  /** Pruning census — surfaced by readers so a skipped file is
-    * always visible accounting, never silence. */
+  /** A version directory's pruning sidecars: its stats manifest and
+    * its bloom filters by column (see `Snapshots.sidecarsOf`). */
+  type Sidecars = (Seq[FileStat], Map[String, Seq[BloomStats.FileBloom]])
+
+  /** Pruning census — surfaced by the planner's stats index and the
+    * top-k / join readers, so a skipped file is always visible
+    * accounting, never silence. */
   case class PruneStats(filesRead: Long, filesSkipped: Long,
       rowsInRead: Long, rowsInSkipped: Long)
 
@@ -398,13 +403,6 @@ object FileStats {
     }
   }
 
-  /** Numeric-tuple convenience over [[prune]] (closed ranges). */
-  def pruneRanges(manifest: Seq[FileStat],
-      preds: Seq[(String, BigDecimal, BigDecimal)])
-      : (Seq[FileStat], Seq[FileStat]) =
-    prune(manifest,
-      preds.map { case (c, lo, hi) => NumRange(c, Some(lo), Some(hi)) })
-
   /** Can a file whose stats bracket is [mn, mx] contain point value
     * `v` (all three in the manifest's cast-to-string rendering)?
     * Numeric when all three parse (so "1" meets "1.0"), UTF-8 binary
@@ -418,51 +416,5 @@ object FileStats {
       case _ =>
         utf8Compare(v, mn) >= 0 && utf8Compare(v, mx) <= 0
     }
-  }
-
-  /** Single-predicate [[pruneRanges]]. */
-  def pruneRange(manifest: Seq[FileStat], column: String,
-      lo: BigDecimal, hi: BigDecimal): (Seq[FileStat], Seq[FileStat]) =
-    pruneRanges(manifest, Seq((column, lo, hi)))
-
-  /** Manifest-pruned read of `dataDir`: resolve the manifest, keep
-    * only files whose [min,max] on `column` intersects [lo,hi], and
-    * read THOSE files (basePath preserves partition-directory
-    * columns). The predicate itself is NOT applied — the caller
-    * filters, exactly like a table format's scan planner (pruning is
-    * a superset guarantee, not a filter). Returns the pruned frame
-    * plus the [[PruneStats]] census.
-    */
-  def readRangePruned(spark: SparkSession, dataDir: String,
-      column: String, lo: BigDecimal, hi: BigDecimal)
-      : (DataFrame, PruneStats) =
-    readRangesPruned(spark, dataDir, Seq((column, lo, hi)))
-
-  /** [[readRangePruned]] for a conjunction of range predicates —
-    * a file survives only if every predicate's range intersects its
-    * stats. */
-  def readRangesPruned(spark: SparkSession, dataDir: String,
-      preds: Seq[(String, BigDecimal, BigDecimal)])
-      : (DataFrame, PruneStats) =
-    readPredsPruned(spark, dataDir,
-      preds.map { case (c, lo, hi) => NumRange(c, Some(lo), Some(hi)) })
-
-  /** [[readRangesPruned]] generalized to typed predicates — the entry
-    * point for string/date range pruning ([[StrRange]]). */
-  def readPredsPruned(spark: SparkSession, dataDir: String,
-      preds: Seq[StatsPred]): (DataFrame, PruneStats) = {
-    val manifest = readManifest(spark, dataDir)
-    val (kept, skipped) = prune(manifest, preds)
-    val stats = PruneStats(kept.size.toLong, skipped.size.toLong,
-      kept.map(_.rows).sum, skipped.map(_.rows).sum)
-    val df =
-      if (kept.isEmpty)
-        // preserve schema on a fully-pruned read: scan the directory
-        // with an always-false filter instead of fabricating a frame
-        spark.read.parquet(dataDir).filter(lit(false))
-      else
-        spark.read.option("basePath", dataDir)
-          .parquet(kept.map(k => s"$dataDir/${k.relPath}"): _*)
-    (df, stats)
   }
 }

@@ -531,6 +531,40 @@ object Snapshots {
     }
   }
 
+  /** Main-line history in `(since, to]`, ascending: the versions
+    * main's pointer published. A version is main when it carries a
+    * publication record (`_pubtime.N`, written by [[publish]]); a
+    * branch commit or a crashed orphan has none, so the ranged
+    * readers ([[readAppendsSince]], [[mirrorAppends]], the
+    * snapshot-log stream) never serve one as main history. A store
+    * with no record at all predates them: every version counts. A
+    * version DIRECTORY missing from the range throws — a silent hole
+    * would be data loss. */
+  private[graft] def mainHistory(spark: SparkSession, dir: String,
+      since: Long, to: Long): Seq[Long] = {
+    val f = fs(spark, dir)
+    val range = (since + 1) to to
+    val missing = range.filterNot(existingVersions(f, dir).toSet)
+    if (missing.nonEmpty)
+      throw new IllegalStateException(
+        s"range ($since, $to] of $dir has vacuumed versions: " +
+          s"${missing.mkString(",")} — a silent hole would be data " +
+          "loss; raise vacuum keepLast for log consumers")
+    range.filter(onMain(f, dir))
+  }
+
+  /** Membership in main's history — see [[mainHistory]]. */
+  private def onMain(f: org.apache.hadoop.fs.FileSystem,
+      dir: String): Long => Boolean = {
+    val pubs = f.listStatus(new Path(dir)).toSeq.flatMap { s =>
+      val n = s.getPath.getName
+      if (n.startsWith("_pubtime."))
+        scala.util.Try(n.stripPrefix("_pubtime.").toLong).toOption
+      else None
+    }.toSet
+    v => pubs.isEmpty || pubs(v)
+  }
+
   /** Epoch ids of the `_epoch.N` markers inside `v=$v` (empty when
     * the version directory is missing or unmarked). */
   private def epochMarkers(f: org.apache.hadoop.fs.FileSystem,
@@ -655,8 +689,10 @@ object Snapshots {
     *    carrying the epoch marker and ROLLS IT FORWARD;
     *  - die after publish → the fence refuses the replayed epoch
     *    (`Left`) and the loop moves to the next version.
-    * Source versions must still exist — a vacuumed gap throws loudly
-    * (the [[readAppendsSince]] contract: a silent hole is data loss).
+    * Only main-line source versions mirror ([[mainHistory]]: a branch
+    * commit inside the range is not main's history), and they must
+    * still exist — a vacuumed gap throws loudly (the
+    * [[readAppendsSince]] contract: a silent hole is data loss).
     * Batches are conformed to the source's LATEST schema before
     * `transform` (the evolution contract), so a consumer written
     * against the current shape replays old history uniformly. The
@@ -678,16 +714,9 @@ object Snapshots {
     val from = lastEpoch(spark, dstDir).getOrElse(0L)
     val to = latestVersion(spark, srcDir)
     if (to <= from) return Seq.empty
-    val f = fs(spark, srcDir)
-    val have = existingVersions(f, srcDir).toSet
-    val missing = ((from + 1) to to).filterNot(have)
-    if (missing.nonEmpty)
-      throw new IllegalStateException(
-        s"mirror range ($from, $to] has vacuumed source versions: " +
-          s"${missing.mkString(",")} — a silent hole would be data " +
-          "loss; raise vacuum keepLast for log consumers")
+    val versions = mainHistory(spark, srcDir, from, to)
     val target = tableSchema(spark, srcDir)
-    ((from + 1) to to).flatMap { v =>
+    versions.flatMap { v =>
       val batch = transform(conform(read(spark, srcDir, v), target))
       commitWithEpoch(spark, batch, dstDir, epochId = v,
         statsCols = statsCols, bloomCols = bloomCols) match {
@@ -730,8 +759,9 @@ object Snapshots {
     * Point-lookup sidecars ([[BloomStats]], `bloomCols`) seal by the
     * same rename — min/max serves clustered ranges, blooms serve
     * equality probes on any other column.
-    * Readers prune via [[readPruned]] — at 100 TB, manifest-based
-    * file skipping is the single biggest scan lever this store has:
+    * Filtered [[table]] reads prune through it — at 100 TB,
+    * manifest-based file skipping is the single biggest scan lever
+    * this store has:
     * the driver reads one sidecar instead of opening 100k parquet
     * footers, and a clustered layout turns a selective range
     * predicate into reading a handful of files.
@@ -830,24 +860,25 @@ object Snapshots {
       homes.flatMap(h => bloomColsOf(f, h)).distinct.sorted)
 
   /** The stats manifest and bloom sidecars of version directory
-    * `vDir` (empty when it has none) — read ONCE per statement. */
-  private def sidecarsOf(spark: SparkSession,
-      f: org.apache.hadoop.fs.FileSystem, vDir: String)
-      : (Seq[FileStats.FileStat], Map[String, Seq[BloomStats.FileBloom]]) =
+    * `vDir` (empty when it has none) — the one sidecar loader: table
+    * reads, the planner rule and DML admission all load through it,
+    * once per statement. A sidecar that fails to parse throws. */
+  private[graft] def sidecarsOf(spark: SparkSession, vDir: String)
+      : FileStats.Sidecars = {
+    val f = fs(spark, vDir)
     (if (f.exists(new Path(vDir, FileStats.ManifestName)))
        FileStats.readManifest(spark, vDir)
      else Seq.empty,
      bloomColsOf(f, vDir)
        .map(c => c -> BloomStats.readManifest(spark, vDir, c)).toMap)
+  }
 
   /** The [[Seal]] of a copy-on-write statement on version `v` whose
     * base sidecars are `sidecars`: the new files are scanned for every
     * column the base tracks, the `carried` files are byte-copied
     * through (names preserved) with their entries spliced, markers
     * carry forward, and the provenance records (v, op, touched). */
-  private def cowSeal(dir: String, v: Long,
-      sidecars: (Seq[FileStats.FileStat],
-        Map[String, Seq[BloomStats.FileBloom]]),
+  private def cowSeal(dir: String, v: Long, sidecars: FileStats.Sidecars,
       carried: Seq[String], op: String, touched: Seq[String]): Seal = {
     val vDir = s"$dir/v=$v"
     val (stats, blooms) = sidecars
@@ -905,7 +936,7 @@ object Snapshots {
     val (dataFiles, pcols) = listDataRel(f, f.makeQualified(new Path(vDir)))
     val st = stage(spark, dir)(writeFrame(conformed, _, pcols,
       rebalance = true))
-    seal(spark, dir, st, cowSeal(dir, v, sidecarsOf(spark, f, vDir),
+    seal(spark, dir, st, cowSeal(dir, v, sidecarsOf(spark, vDir),
       dataFiles, "append", Nil)
       .copy(markersFrom = markersFrom, markers = markers))
   }
@@ -933,23 +964,6 @@ object Snapshots {
       case n if n.startsWith("_bloom_") && n.endsWith(".json") =>
         n.stripPrefix("_bloom_").stripSuffix(".json")
     }.sorted
-
-  /** Bloom-pruned POINT lookup of a committed version (default
-    * latest): only files whose `_bloom_<column>.json` filter admits
-    * `column = value` are read ([[BloomStats]]); the caller still
-    * applies the row-level predicate. */
-  def readPointLookup(spark: SparkSession, dir: String, column: String,
-      value: String, version: Long = -1L)
-      : (DataFrame, FileStats.PruneStats) = {
-    val v = if (version > 0) version else latestVersion(spark, dir)
-    require(v > 0, s"$dir has no committed version")
-    // merge-on-read heads have no bloom sidecars and their local
-    // files are not the table — full assembly, everything-kept census
-    // (same guard as every other pruned reader)
-    if (isMorVersion(spark, dir, v))
-      return morUnprunedRead(spark, dir, v)
-    BloomStats.readEqualsPruned(spark, s"$dir/v=$v", column, value)
-  }
 
   /** Small-file compaction AS a snapshot commit: bin-pack the latest
     * version's files ([[Compaction]] — rewrite volume proportional
@@ -1346,41 +1360,17 @@ object Snapshots {
     }.toSeq
 
   /** Sidecar admission for a predicate DML statement over ONE
-    * version directory's data files: a file is skipped when the
-    * manifest range, a bloom sidecar, or its directory-encoded
-    * partition values refute the predicate. Superset guarantee —
-    * files with no deciding sidecar stay admitted. Returns
-    * (affected, untouched). Shared by copy-on-write rewrites and the
-    * merge-on-read matching scan, so both route the same way. */
-  private def dmlAdmission(spark: SparkSession,
-      f: org.apache.hadoop.fs.FileSystem, vDir: String,
-      dataFiles: Seq[String], pcols: Seq[String],
+    * version directory's data files: a file is skipped when
+    * [[graft.plans.StatsFilters.refuted]] — the planner's own
+    * decision — or its directory-encoded partition values refute the
+    * predicate. Superset guarantee — files with no deciding sidecar
+    * stay admitted. Returns (affected, untouched). Shared by
+    * copy-on-write rewrites and the merge-on-read matching scan, so
+    * both route the same way. */
+  private def dmlAdmission(dataFiles: Seq[String], pcols: Seq[String],
       cond: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
-      statsOpt: Option[Seq[FileStats.FileStat]] = None,
-      bloomsOpt: Option[Map[String, Seq[BloomStats.FileBloom]]] = None)
-      : (Seq[String], Seq[String]) = {
-    val stats = statsOpt.getOrElse {
-      if (f.exists(new Path(vDir, FileStats.ManifestName)))
-        FileStats.readManifest(spark, vDir)
-      else Seq.empty
-    }
-    // sidecars read ONCE per statement: callers that already hold
-    // the manifests for splicing pass them in, and the bloom listing
-    // never repeats per equality column
-    lazy val blooms: Map[String, Seq[BloomStats.FileBloom]] =
-      bloomsOpt.getOrElse(bloomColsOf(f, vDir)
-        .map(c => c -> BloomStats.readManifest(spark, vDir, c)).toMap)
-    val rangeSkipped: Set[String] = {
-      val preds = graft.plans.StatsFilters.extract(cond)
-      if (preds.isEmpty || stats.isEmpty) Set.empty
-      else FileStats.prune(stats, preds)._2.map(_.relPath).toSet
-    }
-    val bloomSkipped: Set[String] =
-      graft.plans.StatsFilters.extractEquals(cond).flatMap {
-        case (c, vals) => blooms.getOrElse(c, Seq.empty)
-          .filter(fb => !vals.exists(BloomStats.admits(fb, _)))
-          .map(_.relPath)
-      }.toSet
+      sidecars: FileStats.Sidecars): (Seq[String], Seq[String]) = {
+    val refuted = graft.plans.StatsFilters.refuted(cond, sidecars)
     // directory-encoded values are point stats, so a predicate on a
     // partition column routes to that partition's files only
     val partSkipped: Set[String] =
@@ -1395,9 +1385,7 @@ object Snapshots {
           FileStats.prune(synth, pPreds)._2.map(_.relPath).toSet
         }
       }
-    val untouched = dataFiles.filter(r =>
-      rangeSkipped(r) || bloomSkipped(r) || partSkipped(r))
-    (dataFiles.filterNot(untouched.toSet), untouched)
+    dataFiles.partition(r => !refuted(r) && !partSkipped(r))
   }
 
   /** Build (but do NOT commit) a copy-on-write rewrite of version
@@ -1423,9 +1411,9 @@ object Snapshots {
     // footer-inference job was a fixed per-statement tax)
     val cond = dmlCond(spark,
       readFileSet(spark, vDir, dataFiles.map(r => s"$vDir/$r")), pred)
-    val sidecars @ (stats, blooms) = sidecarsOf(spark, f, vDir)
-    val (affected, untouched) = dmlAdmission(spark, f, vDir,
-      dataFiles, pcols, cond, Some(stats), Some(blooms))
+    val sidecars = sidecarsOf(spark, vDir)
+    val (affected, untouched) = dmlAdmission(dataFiles, pcols, cond,
+      sidecars)
     if (affected.isEmpty) return None
     val hit = coalesce(pred, lit(false))
     // basePath keeps directory-encoded partition columns in the frame
@@ -1682,7 +1670,7 @@ object Snapshots {
     val conformed = conform(source, tableSchema(spark, dir))
     val (dataFiles, pcols) = listDataRel(f, vPath)
     val routeCol = keys.head
-    val sidecars @ (stats, blooms) = sidecarsOf(spark, f, vDir)
+    val sidecars @ (stats, blooms) = sidecarsOf(spark, vDir)
     val statsByRel = stats.map(e => e.relPath -> e).toMap
     val bloom = blooms.get(routeCol).map(_.map(b => b.relPath -> b).toMap)
     val routedKeys: Option[Seq[String]] =
@@ -1887,7 +1875,7 @@ object Snapshots {
     // file admission: NOT-MATCHED-BY-SOURCE reads everything; else
     // the leading ON pair routes through sidecars like mergeInto
     val (routeT, routeS) = on.head
-    val sidecars @ (stats, blooms) = sidecarsOf(spark, f, vDir)
+    val sidecars @ (stats, blooms) = sidecarsOf(spark, vDir)
     val statsByRel = stats.map(e => e.relPath -> e).toMap
     val bloom = blooms.get(routeT).map(_.map(b => b.relPath -> b).toMap)
     val routedKeys: Option[Seq[String]] =
@@ -2617,8 +2605,8 @@ object Snapshots {
     val admitted: Seq[(Long, String)] = byHome.flatMap {
       case (src, files) =>
         val hDir = s"$dir/v=$src"
-        val (aff, _) = dmlAdmission(spark, f, hDir, files.map(_._2),
-          pcolsOf(files), cond)
+        val (aff, _) = dmlAdmission(files.map(_._2), pcolsOf(files),
+          cond, sidecarsOf(spark, hDir))
         aff.map(r => (src, r))
     }
     // no admitted file → no row can match → publish nothing
@@ -2907,31 +2895,6 @@ object Snapshots {
     (commitNew(spark, dir, Abort("purgeMor", v))(st), stats)
   }
 
-  /** Manifest-pruned range read of a committed version (default
-    * latest): only files whose stats admit `column ∈ [lo, hi]` are
-    * read; the census of what was skipped comes back alongside.
-    * The caller still applies the row-level predicate — pruning is a
-    * superset guarantee. */
-  def readPruned(spark: SparkSession, dir: String, column: String,
-      lo: BigDecimal, hi: BigDecimal, version: Long = -1L)
-      : (DataFrame, FileStats.PruneStats) =
-    readPrunedMulti(spark, dir, Seq((column, lo, hi)), version)
-
-  /** [[readPruned]] for a CONJUNCTION of range predicates — the
-    * multi-dimensional case Z-ordered layouts exist for: each Morton
-    * tile is tight on every clustered dimension, so conjunctive
-    * ranges prune multiplicatively instead of only on the leading
-    * sort column. */
-  def readPrunedMulti(spark: SparkSession, dir: String,
-      preds: Seq[(String, BigDecimal, BigDecimal)],
-      version: Long = -1L): (DataFrame, FileStats.PruneStats) = {
-    val v = if (version > 0) version else latestVersion(spark, dir)
-    require(v > 0, s"$dir has no committed version")
-    if (isMorVersion(spark, dir, v))
-      return morUnprunedRead(spark, dir, v)
-    FileStats.readRangesPruned(spark, s"$dir/v=$v", preds)
-  }
-
   /** Dynamic file pruning for a key equi-join (the API-level analog
     * of Delta's dynamic file pruning): collect the BUILD side's
     * distinct join keys (driver-bounded by `maxKeys` — the dimension
@@ -3142,19 +3105,6 @@ object Snapshots {
     (df, stats)
   }
 
-  /** [[readPrunedMulti]] over TYPED predicates — the entry point for
-    * string/date pruning ([[FileStats.StrRange]]: UTF-8 binary order,
-    * truncated bounds stay sound) alongside numeric ranges. */
-  def readPrunedPreds(spark: SparkSession, dir: String,
-      preds: Seq[FileStats.StatsPred],
-      version: Long = -1L): (DataFrame, FileStats.PruneStats) = {
-    val v = if (version > 0) version else latestVersion(spark, dir)
-    require(v > 0, s"$dir has no committed version")
-    if (isMorVersion(spark, dir, v))
-      return morUnprunedRead(spark, dir, v)
-    FileStats.readPredsPruned(spark, s"$dir/v=$v", preds)
-  }
-
   // ---- schema evolution ---------------------------------------------
   // Versions are whole-table snapshots, so each version carries its
   // own (internally consistent) schema — but add/drop a column
@@ -3350,14 +3300,16 @@ object Snapshots {
       tags: Seq[String], branches: Seq[String])
 
   /** DESCRIBE HISTORY: the version log as driver-side metadata — one
-    * row per existing `v=` directory (published head marked; orphans
-    * above the pointer visible for forensics), row counts from the
+    * row per existing `v=` directory (`published` marks main's
+    * history up to the head, [[mainHistory]]'s rule; branch commits
+    * and orphans stay visible for forensics), row counts from the
     * stats manifest when one exists (never a data scan), epoch
     * markers, sidecar presence, and the tags/branches pinning each
     * version. Pure metadata reads: O(versions) directory listings. */
   def history(spark: SparkSession, dir: String): Seq[VersionInfo] = {
     val f = fs(spark, dir)
     val head = latestVersion(spark, dir)
+    val main = onMain(f, dir)
     val entries = f.listStatus(new Path(dir)).toSeq
     val refs: Seq[(String, Long, Boolean)] = entries.collect {
       case s if s.isFile && !s.getPath.getName.contains(".tmp.") &&
@@ -3380,7 +3332,7 @@ object Snapshots {
           Some(FileStats.readManifest(spark, s"$dir/v=$v")
             .map(_.rows).sum)
         else None
-      VersionInfo(v, published = v <= head,
+      VersionInfo(v, published = v <= head && main(v),
         data.size.toLong, data.map(_.getLen).sum, rows,
         epochMarkers(f, dir, v).toSeq.sorted,
         f.exists(new Path(vPath, FileStats.ManifestName)),
@@ -3397,25 +3349,18 @@ object Snapshots {
     * replay a downstream consumer needs to catch up or backfill. Each
     * batch is CONFORMED to the latest schema (the evolution contract:
     * a stream that added a column mid-history replays uniformly) and
-    * tagged with its `_version`. Vacuumed gaps in the range throw —
-    * a silent hole in a replay is data loss, not a degraded read;
-    * retention for consumers is vacuum's `keepLast`. */
+    * tagged with its `_version`. Only main-line versions replay
+    * ([[mainHistory]]). Vacuumed gaps in the range throw — a silent
+    * hole in a replay is data loss, not a degraded read; retention
+    * for consumers is vacuum's `keepLast`. */
   def readAppendsSince(spark: SparkSession, dir: String,
       sinceVersion: Long, endVersion: Long = -1L): DataFrame = {
     import org.apache.spark.sql.functions.lit
     val head =
       if (endVersion > 0) endVersion else latestVersion(spark, dir)
-    require(sinceVersion >= 0 && head > sinceVersion,
-      s"empty replay range ($sinceVersion, $head]")
-    val f = fs(spark, dir)
-    val want = (sinceVersion + 1) to head
-    val have = existingVersions(f, dir).toSet
-    val missing = want.filterNot(have)
-    if (missing.nonEmpty)
-      throw new IllegalStateException(
-        s"replay range ($sinceVersion, $head] has vacuumed gaps: " +
-          s"${missing.mkString(",")} — a silent hole would be data " +
-          "loss; raise vacuum keepLast for log consumers")
+    require(sinceVersion >= 0, s"negative sinceVersion $sinceVersion")
+    val want = mainHistory(spark, dir, sinceVersion, head)
+    require(want.nonEmpty, s"empty replay range ($sinceVersion, $head]")
     val target = tableSchema(spark, dir)
     want.map { v =>
       conform(read(spark, dir, v), target)
@@ -3437,9 +3382,10 @@ object Snapshots {
 
   /** [[read]] with PLANNER-INTEGRATED file skipping: when the version
     * carries a `_stats.json` manifest, the returned frame's file index
-    * consults it at listing time, so ordinary `.filter(...)` calls —
-    * no explicit ranges, no readPruned — skip files whose min/max
-    * provably exclude the predicate ([[graft.plans.StatsFileIndex]]).
+    * consults it at listing time, so ordinary `.filter(...)` calls
+    * skip files whose min/max or bloom sidecars provably exclude the
+    * predicate ([[graft.plans.StatsFileIndex]]; the census of the
+    * decision is its `lastPrune`).
     * Sessions built with GraftExtensions get the same behavior on a
     * bare `spark.read.parquet(versionDir)` via the injected
     * StatsPruneRule; this entry point works without the extension.
@@ -3456,12 +3402,10 @@ object Snapshots {
     if (isMorVersion(spark, dir, v))
       return readMorAssembled(spark, dir, v, lineage = false)
     val plain = spark.read.parquet(vDir)
-    if (!f.exists(new Path(vDir, FileStats.ManifestName))) plain
+    val (stats, blooms) = sidecarsOf(spark, vDir)
+    if (stats.isEmpty) plain
     else graft.plans.StatsFileIndex.attach(spark, plain,
-      f.makeQualified(new Path(vDir)),
-      FileStats.readManifest(spark, vDir),
-      bloomColsOf(f, vDir).map(c =>
-        c -> BloomStats.readManifest(spark, vDir, c)).toMap)
+      f.makeQualified(new Path(vDir)), stats, blooms)
   }
 
   /** Time travel by TIMESTAMP: the newest version FIRST PUBLISHED at

@@ -9,7 +9,7 @@ import org.apache.spark.sql.execution.datasources.{FileIndex,
   HadoopFsRelation, LogicalRelation, PartitionDirectory}
 import org.apache.spark.sql.types._
 
-import graft.operators.FileStats
+import graft.operators.{BloomStats, FileStats, Snapshots}
 import graft.operators.FileStats.{NumRange, StatsPred, StrRange}
 
 /** Planner-integrated file skipping: a [[FileIndex]] that consults a
@@ -18,15 +18,10 @@ import graft.operators.FileStats.{NumRange, StatsPred, StrRange}
   * [[graft.operators.Snapshots.table]] — skips files whose min/max
   * provably exclude the predicate, with zero query rewriting and the
   * standard parquet scan (PushedFilters, whole-stage codegen, AQE)
-  * untouched downstream. This closes the gap where manifest pruning
-  * was a side API (`readPruned` with explicit literal ranges) instead
-  * of the read path: the planner hands `listFiles` the query's own
-  * data filters, [[StatsFilters]] turns the range-shaped conjuncts
-  * into [[FileStats.StatsPred]]s, and the non-matching files never
-  * enter the scan. At 100 TB this is the difference between "the
-  * user remembered to call the pruning API" and "every filtered read
-  * of the table prunes" — the same contract Delta/Iceberg give
-  * through their own file indexes.
+  * untouched downstream. The planner hands `listFiles` the query's
+  * own data filters and [[StatsFilters.refuted]] — the same decision
+  * snapshot DML admits files by — names the files that never enter
+  * the scan; the census of that decision is [[lastPrune]].
   *
   * The index DELEGATES to the relation's original [[FileIndex]]
   * (partition discovery, partition pruning, directory layout all
@@ -38,8 +33,8 @@ final class StatsFileIndex(
     val underlying: FileIndex,
     versionRoot: Path,
     manifest: Seq[FileStats.FileStat],
-    blooms: Map[String, Seq[graft.operators.BloomStats.FileBloom]] =
-      Map.empty) extends FileIndex {
+    blooms: Map[String, Seq[BloomStats.FileBloom]] = Map.empty)
+    extends FileIndex {
 
   private val rootPathStr = versionRoot.toUri.getPath
 
@@ -66,42 +61,15 @@ final class StatsFileIndex(
     val listedRels = listed
       .flatMap(_.files.map(f => relOf(f.getPath))).toSet
     val visible = manifest.filter(m => listedRels(m.relPath))
-    val preds = StatsFilters.extract(dataFilters)
-    // equality probes against bloom sidecars: a file is bloom-skipped
-    // when NO candidate value is admitted by its filter — a proof
-    // independent of (and conjunctive with) the min/max ranges
-    val bloomSkipped: Set[String] =
-      StatsFilters.extractEquals(dataFilters).flatMap {
-        case (c, vals) => blooms.get(c).toSeq.flatMap { fbs =>
-          fbs.filter(fb => listedRels(fb.relPath) &&
-            !vals.exists(v =>
-              graft.operators.BloomStats.admits(fb, v)))
-            .map(_.relPath)
-        }
-      }.toSet
-    if (preds.isEmpty && bloomSkipped.isEmpty) {
-      lastPrune = Some(FileStats.PruneStats(
-        visible.size.toLong, 0L, visible.map(_.rows).sum, 0L))
-      listed
-    } else {
-      val rangeSkipped: Set[String] =
-        if (preds.isEmpty) Set.empty
-        else FileStats.prune(visible, preds)._2.map(_.relPath).toSet
-      val skippedRel = rangeSkipped ++ bloomSkipped
-      val (kept, skipped) = visible.partition(m => !skippedRel(m.relPath))
-      lastPrune = Some(FileStats.PruneStats(
-        kept.size.toLong, skipped.size.toLong,
-        kept.map(_.rows).sum, skipped.map(_.rows).sum))
-      val covered = manifest.map(_.relPath).toSet
-      listed.map { pd =>
-        PartitionDirectory(pd.values, pd.files.filter { f =>
-          val rel = relOf(f.getPath)
-          // bloom skips are proofs even for files the stats manifest
-          // doesn't cover; otherwise uncovered files stay conservative
-          !bloomSkipped(rel) && (!skippedRel(rel) || !covered(rel))
-        })
-      }.filter(_.files.nonEmpty)
-    }
+    val skipped = StatsFilters.refuted(dataFilters, (visible, blooms))
+    val (kept, gone) = visible.partition(m => !skipped(m.relPath))
+    lastPrune = Some(FileStats.PruneStats(kept.size.toLong,
+      gone.size.toLong, kept.map(_.rows).sum, gone.map(_.rows).sum))
+    if (skipped.isEmpty) listed
+    else listed.map { pd =>
+      PartitionDirectory(pd.values,
+        pd.files.filter(f => !skipped(relOf(f.getPath))))
+    }.filter(_.files.nonEmpty)
   }
 }
 
@@ -112,8 +80,8 @@ object StatsFileIndex {
     * [[HadoopFsRelation]] or the index is already stats-backed. */
   def attach(spark: SparkSession, df: DataFrame, versionRoot: Path,
       manifest: Seq[FileStats.FileStat],
-      blooms: Map[String, Seq[graft.operators.BloomStats.FileBloom]] =
-        Map.empty): DataFrame = {
+      blooms: Map[String, Seq[BloomStats.FileBloom]] = Map.empty)
+      : DataFrame = {
     val swapped = df.queryExecution.analyzed.transform {
       case lr: LogicalRelation
           if lr.relation.isInstanceOf[HadoopFsRelation] &&
@@ -179,6 +147,28 @@ object StatsFilters {
 
   def extract(filters: Seq[Expression]): Seq[StatsPred] =
     filters.flatMap(splitConj).flatMap(toPred)
+
+  /** THE keep/skip decision: the relative paths of the files whose
+    * sidecars prove that no row satisfies `filters` — min/max and
+    * non-null counts refuting a conjunct of [[extract]], or a bloom
+    * filter admitting none of an [[extractEquals]] conjunct's values
+    * (a bloom proof holds even for files the manifest does not
+    * cover). The planner's listing ([[StatsFileIndex]]) and snapshot
+    * DML admission both decide through it, so a read and a statement
+    * with the same predicate skip the same files. */
+  def refuted(filters: Seq[Expression],
+      sidecars: FileStats.Sidecars): Set[String] = {
+    val (manifest, blooms) = sidecars
+    val preds = extract(filters)
+    val ranged =
+      if (preds.isEmpty || manifest.isEmpty) Seq.empty
+      else FileStats.prune(manifest, preds)._2.map(_.relPath)
+    (ranged ++ extractEquals(filters).flatMap { case (c, vals) =>
+      blooms.getOrElse(c, Nil)
+        .filterNot(fb => vals.exists(BloomStats.admits(fb, _)))
+        .map(_.relPath)
+    }).toSet
+  }
 
   /** Equality probes for bloom sidecars: (column, candidate values in
     * canonical string form). Only types whose Spark cast-to-string
@@ -381,11 +371,7 @@ object StatsFilters {
   */
 object StatsPruneRule extends Rule[LogicalPlan] {
 
-  import graft.operators.BloomStats
-
-  private type Cached =
-    (Long, Seq[FileStats.FileStat],
-      Map[String, Seq[BloomStats.FileBloom]])
+  private type Cached = (Long, FileStats.Sidecars)
 
   private val cache = new java.util.concurrent.ConcurrentHashMap[
     String, Option[Cached]]()
@@ -394,22 +380,11 @@ object StatsPruneRule extends Rule[LogicalPlan] {
     cache.remove(rootPath); ()
   }
 
-  /** Bloom sidecars alongside the stats manifest (column name is
-    * encoded in the `_bloom_<col>.json` file name). */
-  private def bloomsFor(spark: SparkSession,
-      f: org.apache.hadoop.fs.FileSystem, root: Path)
-      : Map[String, Seq[BloomStats.FileBloom]] =
-    f.listStatus(root).toSeq.map(_.getPath.getName).collect {
-      case n if n.startsWith("_bloom_") && n.endsWith(".json") =>
-        n.stripPrefix("_bloom_").stripSuffix(".json")
-    }.flatMap { c =>
-      try Some(c -> BloomStats.readManifest(spark, root.toString, c))
-      catch { case _: Exception => None }
-    }.toMap
-
+  /** The sidecars of `root` when it carries a non-empty stats
+    * manifest. An unreadable sidecar counts as no manifest: the
+    * relation keeps its plain index and reads every file. */
   private[plans] def manifestFor(spark: SparkSession, root: Path)
-      : Option[(Seq[FileStats.FileStat],
-        Map[String, Seq[BloomStats.FileBloom]])] = {
+      : Option[FileStats.Sidecars] = {
     val f = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val mf = new Path(root, FileStats.ManifestName)
     val key = root.toString
@@ -419,18 +394,15 @@ object StatsPruneRule extends Rule[LogicalPlan] {
       catch { case _: java.io.IOException => None }
     (cached, mtime) match {
       case (Some(None), None) => None // negative-cached, still absent
-      case (Some(Some((t, m, b))), Some(t2)) if t == t2 => Some((m, b))
+      case (Some(Some((t, sc))), Some(t2)) if t == t2 => Some(sc)
       case (_, None) => cache.put(key, None); None
       case (_, Some(t2)) =>
-        val m =
-          try FileStats.readManifest(spark, root.toString)
-          catch { case _: Exception => Seq.empty }
-        if (m.isEmpty) { cache.put(key, None); None }
-        else {
-          val b = bloomsFor(spark, f, root)
-          cache.put(key, Some((t2, m, b)))
-          Some((m, b))
-        }
+        val loaded =
+          try Some(Snapshots.sidecarsOf(spark, root.toString))
+          catch { case _: Exception => None }
+        val usable = loaded.filter(_._1.nonEmpty)
+        cache.put(key, usable.map(t2 -> _))
+        usable
     }
   }
 

@@ -15,6 +15,62 @@ object ExtOps {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     graft.Tables.load(s, dir, name)
 
+  /** lineitem's (x, y) = (partkey, suppkey) mod 1024, Z-clustered
+    * into Morton buckets of 16384 curve points: `partitionBy(z_bucket)`
+    * after this repartition writes exactly one data file per
+    * non-empty bucket — the bijection that makes the pruning queries'
+    * physical file census SQL-replayable. */
+  private def zBuckets(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "lineitem")
+      .select(pmod(col("l_partkey"), lit(1024)).as("x"),
+        pmod(col("l_suppkey"), lit(1024)).as("y"))
+      .withColumn("z",
+        graft.operators.ZOrder.interleave2(col("x"), col("y"), 10))
+      .withColumn("z_bucket",
+        call_function("div", col("z"), lit(16384L)))
+      .drop("z")
+      .repartition(col("z_bucket"))
+
+  /** The census the stats index in `tbl`'s plan recorded for the
+    * last action run over a frame derived from `tbl`. */
+  private def lastPrune(tbl: DataFrame)
+      : graft.operators.FileStats.PruneStats =
+    graft.plans.StatsFileIndex.indexOf(tbl).flatMap(_.lastPrune)
+      .getOrElse(sys.error("planner index recorded no census"))
+
+  /** The pruning queries' one-row census: `ps`'s file and row
+    * accounting, then `m`'s matched-row count and checksums (longs),
+    * named `rows_matched` and `checks`. */
+  private def censusRow(s: SparkSession,
+      ps: graft.operators.FileStats.PruneStats,
+      m: org.apache.spark.sql.Row, checks: String*): DataFrame = {
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val names = Seq("files_total", "files_read", "files_skipped",
+      "rows_in_read", "rows_in_skipped", "rows_matched") ++ checks
+    val values = Seq(ps.filesRead + ps.filesSkipped, ps.filesRead,
+      ps.filesSkipped, ps.rowsInRead, ps.rowsInSkipped) ++
+      (0 until m.length).map(m.getLong)
+    s.createDataFrame(
+      java.util.List.of(org.apache.spark.sql.Row.fromSeq(values)),
+      StructType(names.map(StructField(_, LongType, nullable = false))))
+  }
+
+  /** Run `body` on one fresh snapshot-store path per name
+    * (`<tmpdir>/graft-<name>-<uuid>`) and delete every store on exit,
+    * whether `body` returns or throws. */
+  private def withStores[A](s: SparkSession, names: String*)(
+      body: Seq[String] => A): A = {
+    val tag = java.util.UUID.randomUUID()
+    val stores = names.map(n => new java.io.File(
+      System.getProperty("java.io.tmpdir", "/tmp"), s"graft-$n-$tag")
+      .getAbsolutePath)
+    try body(stores)
+    finally stores.foreach { st =>
+      val p = new org.apache.hadoop.fs.Path(st)
+      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    }
+  }
+
   /** Argmin cell assignment against broadcast centroids (cl, c):
     * the k centroids are packed into ONE broadcast row and the argmin
     * is an `aggregate` fold over that array per vector — genuinely
@@ -798,51 +854,30 @@ object ExtOps {
     // SQL-replayable), commit WITH a per-file min/max manifest
     // (Snapshots.commitWithStats → _stats.json sealed into the
     // version by the atomic slot rename), then answer a selective
-    // range predicate through Snapshots.readPruned — only files
-    // whose manifest [min,max] intersects [100,299] are opened. The
-    // emitted one-row census is entirely REAL accounting: files
-    // read/skipped and their row counts come from the manifest
-    // pruning decision, rows_matched/x_checksum come from scanning
-    // ONLY the pruned files — if pruning ever skipped a file it
-    // shouldn't, rows_matched comes up short and the hash compare
+    // range predicate through an ordinary filtered Snapshots.table
+    // read — its stats index opens only files whose manifest
+    // [min,max] intersects [100,299]. The emitted one-row census is
+    // entirely REAL accounting: files read/skipped and their row
+    // counts come from the index's listing decision
+    // (StatsFileIndex.lastPrune), rows_matched/x_checksum come from
+    // scanning ONLY the pruned files — if pruning ever skipped a file
+    // it shouldn't, rows_matched comes up short and the hash compare
     // fails loudly. The DuckDB twin replays the whole decision from
     // the bucket arithmetic (per-bucket min/max → intersect →
     // census). At 100 TB this is the read-path lever: one sidecar
     // manifest read instead of 100k parquet footer opens, and the
     // Z-layout turns the x-range into touching ~3/8 of the files.
     "xq22_file_pruning" -> ((s, dir) => {
-      import graft.operators.{Snapshots, ZOrder}
-      val base = t(s, dir, "lineitem")
-        .select(pmod(col("l_partkey"), lit(1024)).as("x"),
-          pmod(col("l_suppkey"), lit(1024)).as("y"))
-        .withColumn("z",
-          ZOrder.interleave2(col("x"), col("y"), 10))
-        .withColumn("z_bucket",
-          call_function("div", col("z"), lit(16384L)))
-        .drop("z")
-        .repartition(col("z_bucket"))
-      val store = new java.io.File(
-        System.getProperty("java.io.tmpdir", "/tmp"),
-        s"graft-xq22-${java.util.UUID.randomUUID()}").getAbsolutePath
-      val hfs = new org.apache.hadoop.fs.Path(store)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      try {
+      import graft.operators.Snapshots
+      val base = zBuckets(s, dir)
+      withStores(s, "xq22") { case Seq(store) =>
         val v = Snapshots.commitWithStats(s, base, store,
           statsCols = Seq("x"), partitionByCols = Seq("z_bucket"))
-        val (pruned, ps) = Snapshots.readPruned(s, store, "x",
-          BigDecimal(100), BigDecimal(299), v)
-        val m = pruned.filter(col("x").between(100, 299))
+        val tbl = Snapshots.table(s, store, v)
+        val m = tbl.filter(col("x").between(100, 299))
           .agg(count(lit(1)).as("n"),
             coalesce(sum(col("x")), lit(0L)).as("sx")).head()
-        import s.implicits._
-        Seq((ps.filesRead + ps.filesSkipped, ps.filesRead,
-          ps.filesSkipped, ps.rowsInRead, ps.rowsInSkipped,
-          m.getLong(0), m.getLong(1)))
-          .toDF("files_total", "files_read", "files_skipped",
-            "rows_in_read", "rows_in_skipped", "rows_matched",
-            "x_checksum")
-      } finally {
-        hfs.delete(new org.apache.hadoop.fs.Path(store), true); ()
+        censusRow(s, lastPrune(tbl), m, "x_checksum")
       }
     }),
 
@@ -852,47 +887,24 @@ object ExtOps {
     // each Morton tile is tight on BOTH, so a conjunctive
     // (x-range AND y-range) predicate prunes MULTIPLICATIVELY
     // (~3/8 × ~2/8 of the files here). Same real machinery as xq22
-    // (commitWithStats manifest sealed into the version,
-    // readPrunedMulti decides from the sidecar alone), with BOTH
+    // (commitWithStats manifest sealed into the version, the
+    // table's stats index decides from the sidecar alone), with BOTH
     // dimensions in the manifest; the census plus matched-row
     // checksums of both coordinates pin the decision and the
     // superset guarantee in one hash compare.
     "xq23_file_pruning_2d" -> ((s, dir) => {
-      import graft.operators.{Snapshots, ZOrder}
-      val base = t(s, dir, "lineitem")
-        .select(pmod(col("l_partkey"), lit(1024)).as("x"),
-          pmod(col("l_suppkey"), lit(1024)).as("y"))
-        .withColumn("z",
-          ZOrder.interleave2(col("x"), col("y"), 10))
-        .withColumn("z_bucket",
-          call_function("div", col("z"), lit(16384L)))
-        .drop("z")
-        .repartition(col("z_bucket"))
-      val store = new java.io.File(
-        System.getProperty("java.io.tmpdir", "/tmp"),
-        s"graft-xq23-${java.util.UUID.randomUUID()}").getAbsolutePath
-      val hfs = new org.apache.hadoop.fs.Path(store)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      try {
+      import graft.operators.Snapshots
+      val base = zBuckets(s, dir)
+      withStores(s, "xq23") { case Seq(store) =>
         val v = Snapshots.commitWithStats(s, base, store,
           statsCols = Seq("x", "y"), partitionByCols = Seq("z_bucket"))
-        val (pruned, ps) = Snapshots.readPrunedMulti(s, store,
-          Seq(("x", BigDecimal(100), BigDecimal(299)),
-            ("y", BigDecimal(0), BigDecimal(199))), v)
-        val m = pruned.filter(col("x").between(100, 299) &&
+        val tbl = Snapshots.table(s, store, v)
+        val m = tbl.filter(col("x").between(100, 299) &&
             col("y").between(0, 199))
           .agg(count(lit(1)).as("n"),
             coalesce(sum(col("x")), lit(0L)).as("sx"),
             coalesce(sum(col("y")), lit(0L)).as("sy")).head()
-        import s.implicits._
-        Seq((ps.filesRead + ps.filesSkipped, ps.filesRead,
-          ps.filesSkipped, ps.rowsInRead, ps.rowsInSkipped,
-          m.getLong(0), m.getLong(1), m.getLong(2)))
-          .toDF("files_total", "files_read", "files_skipped",
-            "rows_in_read", "rows_in_skipped", "rows_matched",
-            "x_checksum", "y_checksum")
-      } finally {
-        hfs.delete(new org.apache.hadoop.fs.Path(store), true); ()
+        censusRow(s, lastPrune(tbl), m, "x_checksum", "y_checksum")
       }
     }),
 
@@ -915,12 +927,7 @@ object ExtOps {
           call_function("div", col("z"), lit(32768L)))
         .drop("z")
         .repartition(col("z_bucket"))
-      val store = new java.io.File(
-        System.getProperty("java.io.tmpdir", "/tmp"),
-        s"graft-xq37-${java.util.UUID.randomUUID()}").getAbsolutePath
-      val hfs = new org.apache.hadoop.fs.Path(store)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      try {
+      withStores(s, "xq37") { case Seq(store) =>
         val v = Snapshots.commitWithStats(s, base, store,
           statsCols = Seq("x", "y", "w"),
           partitionByCols = Seq("z_bucket"))
@@ -931,68 +938,32 @@ object ExtOps {
             coalesce(sum(col("x")), lit(0L)).as("sx"),
             coalesce(sum(col("y")), lit(0L)).as("sy"),
             coalesce(sum(col("w")), lit(0L)).as("sw")).head()
-        val ps = graft.plans.StatsFileIndex.indexOf(tbl)
-          .flatMap(_.lastPrune)
-          .getOrElse(sys.error("planner index recorded no census"))
-        import s.implicits._
-        Seq((ps.filesRead + ps.filesSkipped, ps.filesRead,
-          ps.filesSkipped, ps.rowsInRead, ps.rowsInSkipped,
-          m.getLong(0), m.getLong(1), m.getLong(2), m.getLong(3)))
-          .toDF("files_total", "files_read", "files_skipped",
-            "rows_in_read", "rows_in_skipped", "rows_matched",
-            "x_checksum", "y_checksum", "w_checksum")
-      } finally {
-        hfs.delete(new org.apache.hadoop.fs.Path(store), true); ()
+        censusRow(s, lastPrune(tbl), m,
+          "x_checksum", "y_checksum", "w_checksum")
       }
     }),
 
-    // Planner-integrated pruning — the SAME census as xq22 but
-    // decided by the READ PATH itself: Snapshots.table returns a
-    // frame whose graft.plans.StatsFileIndex consults _stats.json at
-    // listing time, so an ordinary `.filter(x BETWEEN 100 AND 299)`
-    // skips the files — no readPruned call, no explicit literal
-    // ranges, PushedFilters and codegen untouched downstream (the
-    // GraftExtensions StatsPruneRule gives bare spark.read.parquet
-    // the same behavior). The census is the index's own listing
-    // decision; rows_matched/x_checksum come from the pruned scan —
-    // a wrongly skipped file diverges the checksum loudly. The
-    // DuckDB twin is xq22's, verbatim: the decision semantics are
-    // identical, only the mechanism moved into the planner.
+    // Planner-integrated pruning — xq22's census, kept as its own
+    // oracle entry: Snapshots.table returns a frame whose
+    // graft.plans.StatsFileIndex consults _stats.json at listing
+    // time, so an ordinary `.filter(x BETWEEN 100 AND 299)` skips the
+    // files — no explicit literal ranges, PushedFilters and codegen
+    // untouched downstream (the GraftExtensions StatsPruneRule gives
+    // bare spark.read.parquet the same behavior). The census is the
+    // index's own listing decision; rows_matched/x_checksum come from
+    // the pruned scan — a wrongly skipped file diverges the checksum
+    // loudly. The DuckDB twin is xq22's, verbatim.
     "xq24_planner_pruning" -> ((s, dir) => {
-      import graft.operators.{Snapshots, ZOrder}
-      val base = t(s, dir, "lineitem")
-        .select(pmod(col("l_partkey"), lit(1024)).as("x"),
-          pmod(col("l_suppkey"), lit(1024)).as("y"))
-        .withColumn("z",
-          ZOrder.interleave2(col("x"), col("y"), 10))
-        .withColumn("z_bucket",
-          call_function("div", col("z"), lit(16384L)))
-        .drop("z")
-        .repartition(col("z_bucket"))
-      val store = new java.io.File(
-        System.getProperty("java.io.tmpdir", "/tmp"),
-        s"graft-xq24-${java.util.UUID.randomUUID()}").getAbsolutePath
-      val hfs = new org.apache.hadoop.fs.Path(store)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      try {
+      import graft.operators.Snapshots
+      val base = zBuckets(s, dir)
+      withStores(s, "xq24") { case Seq(store) =>
         val v = Snapshots.commitWithStats(s, base, store,
           statsCols = Seq("x"), partitionByCols = Seq("z_bucket"))
         val tbl = Snapshots.table(s, store, v)
         val m = tbl.filter(col("x").between(100, 299))
           .agg(count(lit(1)).as("n"),
             coalesce(sum(col("x")), lit(0L)).as("sx")).head()
-        val ps = graft.plans.StatsFileIndex.indexOf(tbl)
-          .flatMap(_.lastPrune)
-          .getOrElse(sys.error("planner index recorded no census"))
-        import s.implicits._
-        Seq((ps.filesRead + ps.filesSkipped, ps.filesRead,
-          ps.filesSkipped, ps.rowsInRead, ps.rowsInSkipped,
-          m.getLong(0), m.getLong(1)))
-          .toDF("files_total", "files_read", "files_skipped",
-            "rows_in_read", "rows_in_skipped", "rows_matched",
-            "x_checksum")
-      } finally {
-        hfs.delete(new org.apache.hadoop.fs.Path(store), true); ()
+        censusRow(s, lastPrune(tbl), m, "x_checksum")
       }
     }),
 
@@ -1009,22 +980,8 @@ object ExtOps {
     // contract is that a pyspark/SQL user gets the whole pruning
     // stack from the format name alone.
     "xq38_snapshot_source" -> ((s, dir) => {
-      import graft.operators.ZOrder
-      val base = t(s, dir, "lineitem")
-        .select(pmod(col("l_partkey"), lit(1024)).as("x"),
-          pmod(col("l_suppkey"), lit(1024)).as("y"))
-        .withColumn("z",
-          ZOrder.interleave2(col("x"), col("y"), 10))
-        .withColumn("z_bucket",
-          call_function("div", col("z"), lit(16384L)))
-        .drop("z")
-        .repartition(col("z_bucket"))
-      val store = new java.io.File(
-        System.getProperty("java.io.tmpdir", "/tmp"),
-        s"graft-xq38-${java.util.UUID.randomUUID()}").getAbsolutePath
-      val hfs = new org.apache.hadoop.fs.Path(store)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      try {
+      val base = zBuckets(s, dir)
+      withStores(s, "xq38") { case Seq(store) =>
         base.write.format("snapshot")
           .option("statsCols", "x")
           .option("partitionBy", "z_bucket")
@@ -1037,18 +994,7 @@ object ExtOps {
         val m = tbl.filter(col("x").between(100, 299))
           .agg(count(lit(1)).as("n"),
             coalesce(sum(col("x")), lit(0L)).as("sx")).head()
-        val ps = graft.plans.StatsFileIndex.indexOf(tbl)
-          .flatMap(_.lastPrune)
-          .getOrElse(sys.error("connector read carried no stats index"))
-        import s.implicits._
-        Seq((ps.filesRead + ps.filesSkipped, ps.filesRead,
-          ps.filesSkipped, ps.rowsInRead, ps.rowsInSkipped,
-          m.getLong(0), m.getLong(1)))
-          .toDF("files_total", "files_read", "files_skipped",
-            "rows_in_read", "rows_in_skipped", "rows_matched",
-            "x_checksum")
-      } finally {
-        hfs.delete(new org.apache.hadoop.fs.Path(store), true); ()
+        censusRow(s, lastPrune(tbl), m, "x_checksum")
       }
     }),
 
@@ -1068,13 +1014,7 @@ object ExtOps {
         .select(col("l_orderkey").cast("long").as("k"),
           pmod(col("l_orderkey"), lit(8)).cast("long").as("bucket"))
         .repartition(col("bucket"))
-      val tmp = System.getProperty("java.io.tmpdir", "/tmp")
-      val tag = java.util.UUID.randomUUID()
-      val storeM = new java.io.File(tmp, s"graft-xq39m-$tag").getAbsolutePath
-      val storeC = new java.io.File(tmp, s"graft-xq39c-$tag").getAbsolutePath
-      val hfs = new org.apache.hadoop.fs.Path(storeM)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      try {
+      withStores(s, "xq39m", "xq39c") { case Seq(storeM, storeC) =>
         // independent table setups run from two driver threads —
         // xq41's note (guide §2.6); results unaffected
         graft.operators.Parallelism.concurrently(s)(
@@ -1094,12 +1034,13 @@ object ExtOps {
           .agg(count(lit(1)).as("n"), sum(col("k")).as("ck")).head()
         // the MoR version directory must hold zero data files
         def dataFiles(p: org.apache.hadoop.fs.Path): Long =
-          hfs.listStatus(p).toSeq.map { st =>
-            val nm = st.getPath.getName
-            if (nm.startsWith("_") || nm.startsWith(".")) 0L
-            else if (st.isDirectory) dataFiles(st.getPath)
-            else 1L
-          }.sum
+          p.getFileSystem(s.sparkContext.hadoopConfiguration)
+            .listStatus(p).toSeq.map { st =>
+              val nm = st.getPath.getName
+              if (nm.startsWith("_") || nm.startsWith(".")) 0L
+              else if (st.isDirectory) dataFiles(st.getPath)
+              else 1L
+            }.sum
         val morLocal = dataFiles(
           new org.apache.hadoop.fs.Path(s"$storeM/v=$v2"))
         import s.implicits._
@@ -1110,9 +1051,6 @@ object ExtOps {
             "mor_local_files", "rows_mor", "k_checksum_mor",
             "rows_cow", "k_checksum_cow", "rows_fold",
             "k_checksum_fold")
-      } finally {
-        hfs.delete(new org.apache.hadoop.fs.Path(storeM), true)
-        hfs.delete(new org.apache.hadoop.fs.Path(storeC), true); ()
       }
     }),
 
@@ -1136,12 +1074,7 @@ object ExtOps {
           least(floor(col("o_totalprice") / 50000).cast("long"),
             lit(7L)).as("bucket"))
         .repartition(col("bucket"))
-      val store = new java.io.File(
-        System.getProperty("java.io.tmpdir", "/tmp"),
-        s"graft-xq40-${java.util.UUID.randomUUID()}").getAbsolutePath
-      val hfs = new org.apache.hadoop.fs.Path(store)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      try {
+      withStores(s, "xq40") { case Seq(store) =>
         val v = Snapshots.commitWithStats(s, base, store,
           statsCols = Seq("k", "detail.amount"),
           partitionByCols = Seq("bucket"))
@@ -1149,18 +1082,7 @@ object ExtOps {
         val m = tbl.filter(col("detail.amount").between(60000, 119999))
           .agg(count(lit(1)).as("n"),
             coalesce(sum(col("k")), lit(0L)).as("ck")).head()
-        val ps = graft.plans.StatsFileIndex.indexOf(tbl)
-          .flatMap(_.lastPrune)
-          .getOrElse(sys.error("nested read carried no stats index"))
-        import s.implicits._
-        Seq((ps.filesRead + ps.filesSkipped, ps.filesRead,
-          ps.filesSkipped, ps.rowsInRead, ps.rowsInSkipped,
-          m.getLong(0), m.getLong(1)))
-          .toDF("files_total", "files_read", "files_skipped",
-            "rows_in_read", "rows_in_skipped", "rows_matched",
-            "k_checksum")
-      } finally {
-        hfs.delete(new org.apache.hadoop.fs.Path(store), true); ()
+        censusRow(s, lastPrune(tbl), m, "k_checksum")
       }
     }),
 
@@ -1177,13 +1099,7 @@ object ExtOps {
           (col("l_orderkey").cast("long") * 3L).as("v"),
           pmod(col("l_orderkey"), lit(8)).cast("long").as("bucket"))
         .repartition(col("bucket"))
-      val tmp = System.getProperty("java.io.tmpdir", "/tmp")
-      val tag = java.util.UUID.randomUUID()
-      val storeM = new java.io.File(tmp, s"graft-xq41m-$tag").getAbsolutePath
-      val storeC = new java.io.File(tmp, s"graft-xq41c-$tag").getAbsolutePath
-      val hfs = new org.apache.hadoop.fs.Path(storeM)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      try {
+      withStores(s, "xq41m", "xq41c") { case Seq(storeM, storeC) =>
         // the two table setups are independent — submit them from two
         // driver threads so the second commit's jobs back-fill the
         // executor slots the first one's tail leaves idle (guide
@@ -1211,9 +1127,6 @@ object ExtOps {
           .toDF("rows_updated", "rows_mor", "v_checksum_mor",
             "rows_cow", "v_checksum_cow", "rows_fold",
             "v_checksum_fold")
-      } finally {
-        hfs.delete(new org.apache.hadoop.fs.Path(storeM), true)
-        hfs.delete(new org.apache.hadoop.fs.Path(storeC), true); ()
       }
     }),
 
@@ -1233,63 +1146,58 @@ object ExtOps {
           pmod(col("l_orderkey"), lit(8)).cast("long").as("bucket"),
           col("l_quantity").cast("long").as("qty"))
         .repartition(col("bucket"))
-      val tmp = System.getProperty("java.io.tmpdir", "/tmp")
       val tag = java.util.UUID.randomUUID().toString.replace("-", "")
-      val store = new java.io.File(tmp, s"graft-xq42-$tag").getAbsolutePath
-      val storeM = new java.io.File(tmp, s"graft-xq42m-$tag").getAbsolutePath
       val tbl = s"g_xq42_$tag"
       val tblM = s"g_xq42m_$tag"
-      val hfs = new org.apache.hadoop.fs.Path(store)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      try {
-        // independent table setups run from two driver threads —
-        // xq41's note (guide §2.6); results unaffected
-        graft.operators.Parallelism.concurrently(s)(
-          Seq(store, storeM).map(st => () =>
-            Snapshots.commitWithStats(s, base, st,
-              statsCols = Seq("k"), partitionByCols = Seq("bucket"))))
-        s.sql(s"CREATE TABLE $tbl USING snapshot OPTIONS (path '$store')")
-        s.sql(s"CREATE TABLE $tblM USING snapshot " +
-          s"OPTIONS (path '$storeM', dmlMode 'mor')")
-        val delRows = s.sql(s"DELETE FROM $tbl WHERE k % 7 = 2")
-          .head.getLong(0)
-        val updRows = s.sql(
-          s"UPDATE $tbl SET qty = qty + 100 WHERE k % 5 = 0")
-          .head.getLong(0)
-        val sk = base.select(col("k"))
-          .where(pmod(col("k"), lit(11)) === 3).distinct()
-        val src = sk.select(col("k"),
-            pmod(col("k"), lit(8)).cast("long").as("bucket"),
-            lit(777L).as("qty"))
-          .unionByName(sk.select((col("k") + 10000000L).as("k"),
-            pmod(col("k") + 10000000L, lit(8)).cast("long").as("bucket"),
-            lit(777L).as("qty")))
-        src.createOrReplaceTempView(s"src_$tag")
-        val mrgRows = s.sql(
-          s"MERGE INTO $tbl USING src_$tag src ON $tbl.k = src.k " +
-            "WHEN MATCHED THEN UPDATE SET * " +
-            "WHEN NOT MATCHED THEN INSERT *").head.getLong(0)
-        val fin = s.sql(s"SELECT count(*) AS n, sum(qty) AS sq, " +
-          s"sum(k) AS sk, count(CASE WHEN qty = 777 THEN 1 END) " +
-          s"AS n7 FROM $tbl").head
-        val delM = s.sql(s"DELETE FROM $tblM WHERE k % 7 = 2")
-          .head.getLong(0)
-        val nM = s.sql(s"SELECT count(*) AS n FROM $tblM")
-          .head.getLong(0)
-        val morHead = if (Snapshots.isMorVersion(s, storeM,
-          Snapshots.latestVersion(s, storeM))) 1L else 0L
-        import s.implicits._
-        Seq((delRows, updRows, mrgRows, fin.getLong(0), fin.getLong(1),
-          fin.getLong(2), fin.getLong(3), delM, nM, morHead))
-          .toDF("del_rows", "upd_rows", "merge_rows", "n_final",
-            "qty_sum", "k_sum", "n_merged", "mor_del_rows", "n_mor",
-            "mor_head")
-      } finally {
-        scala.util.Try(s.sql(s"DROP TABLE IF EXISTS $tbl"))
-        scala.util.Try(s.sql(s"DROP TABLE IF EXISTS $tblM"))
-        scala.util.Try(s.catalog.dropTempView(s"src_$tag"))
-        hfs.delete(new org.apache.hadoop.fs.Path(store), true)
-        hfs.delete(new org.apache.hadoop.fs.Path(storeM), true); ()
+      withStores(s, "xq42", "xq42m") { case Seq(store, storeM) =>
+        try {
+          // independent table setups run from two driver threads —
+          // see xq41's note; results unaffected
+          graft.operators.Parallelism.concurrently(s)(
+            Seq(store, storeM).map(st => () =>
+              Snapshots.commitWithStats(s, base, st,
+                statsCols = Seq("k"), partitionByCols = Seq("bucket"))))
+          s.sql(s"CREATE TABLE $tbl USING snapshot OPTIONS (path '$store')")
+          s.sql(s"CREATE TABLE $tblM USING snapshot " +
+            s"OPTIONS (path '$storeM', dmlMode 'mor')")
+          val delRows = s.sql(s"DELETE FROM $tbl WHERE k % 7 = 2")
+            .head.getLong(0)
+          val updRows = s.sql(
+            s"UPDATE $tbl SET qty = qty + 100 WHERE k % 5 = 0")
+            .head.getLong(0)
+          val sk = base.select(col("k"))
+            .where(pmod(col("k"), lit(11)) === 3).distinct()
+          val src = sk.select(col("k"),
+              pmod(col("k"), lit(8)).cast("long").as("bucket"),
+              lit(777L).as("qty"))
+            .unionByName(sk.select((col("k") + 10000000L).as("k"),
+              pmod(col("k") + 10000000L, lit(8)).cast("long").as("bucket"),
+              lit(777L).as("qty")))
+          src.createOrReplaceTempView(s"src_$tag")
+          val mrgRows = s.sql(
+            s"MERGE INTO $tbl USING src_$tag src ON $tbl.k = src.k " +
+              "WHEN MATCHED THEN UPDATE SET * " +
+              "WHEN NOT MATCHED THEN INSERT *").head.getLong(0)
+          val fin = s.sql(s"SELECT count(*) AS n, sum(qty) AS sq, " +
+            s"sum(k) AS sk, count(CASE WHEN qty = 777 THEN 1 END) " +
+            s"AS n7 FROM $tbl").head
+          val delM = s.sql(s"DELETE FROM $tblM WHERE k % 7 = 2")
+            .head.getLong(0)
+          val nM = s.sql(s"SELECT count(*) AS n FROM $tblM")
+            .head.getLong(0)
+          val morHead = if (Snapshots.isMorVersion(s, storeM,
+            Snapshots.latestVersion(s, storeM))) 1L else 0L
+          import s.implicits._
+          Seq((delRows, updRows, mrgRows, fin.getLong(0), fin.getLong(1),
+            fin.getLong(2), fin.getLong(3), delM, nM, morHead))
+            .toDF("del_rows", "upd_rows", "merge_rows", "n_final",
+              "qty_sum", "k_sum", "n_merged", "mor_del_rows", "n_mor",
+              "mor_head")
+        } finally {
+          scala.util.Try(s.sql(s"DROP TABLE IF EXISTS $tbl"))
+          scala.util.Try(s.sql(s"DROP TABLE IF EXISTS $tblM"))
+          scala.util.Try(s.catalog.dropTempView(s"src_$tag"))
+        }
       }
     }),
 
@@ -1309,12 +1217,7 @@ object ExtOps {
           pmod(col("l_orderkey"), lit(8)).cast("long").as("bucket"),
           col("l_quantity").cast("long").as("qty"))
         .repartition(col("bucket"))
-      val tmp = System.getProperty("java.io.tmpdir", "/tmp")
-      val store = new java.io.File(tmp,
-        s"graft-xq43-${java.util.UUID.randomUUID()}").getAbsolutePath
-      val hfs = new org.apache.hadoop.fs.Path(store)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      try {
+      withStores(s, "xq43") { case Seq(store) =>
         Snapshots.commitWithStats(s, base, store,
           statsCols = Seq("k"), partitionByCols = Seq("bucket"))
         val (_, big) = Snapshots.deleteWhereMor(s, store,
@@ -1345,8 +1248,6 @@ object ExtOps {
           fin.getLong(0), fin.getLong(1), costFlat, routed))
           .toDF("big_rows", "small_rows", "tombstones_total",
             "n_final", "qty_sum", "cost_flat", "routed")
-      } finally {
-        hfs.delete(new org.apache.hadoop.fs.Path(store), true); ()
       }
     }),
 
@@ -1366,34 +1267,31 @@ object ExtOps {
           pmod(col("l_orderkey"), lit(8)).cast("long").as("bucket"),
           col("l_quantity").cast("long").as("qty"))
         .repartition(col("bucket"))
-      val tmp = System.getProperty("java.io.tmpdir", "/tmp")
       val tag = java.util.UUID.randomUUID().toString.replace("-", "")
-      val store = new java.io.File(tmp, s"graft-xq44-$tag").getAbsolutePath
       val tbl = s"g_xq44_$tag"
-      val hfs = new org.apache.hadoop.fs.Path(store)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      try {
-        Snapshots.commitWithStats(s, base, store,
-          statsCols = Seq("k"), partitionByCols = Seq("bucket"))
-        s.sql(s"CREATE TABLE $tbl USING snapshot " +
-          s"OPTIONS (path '$store', dmlMode 'mor')")
-        val delRows = s.sql(s"DELETE FROM $tbl WHERE k % 7 = 1")
-          .head.getLong(0) // v2: MoR tombstones
-        val purge = s.sql(s"OPTIMIZE $tbl PURGE").head // v3
-        val purgeOk = if (purge.getString(1) == "purge") 1L else 0L
-        s.sql(s"OPTIMIZE $tbl") // v4: fold self-contained
-        val histN = s.sql(s"DESCRIBE HISTORY $tbl").count()
-        val reclaimed = s.sql(s"VACUUM $tbl RETAIN 1 VERSIONS").count()
-        val fin = s.sql(s"SELECT count(*) AS n, sum(qty) AS sq " +
-          s"FROM $tbl").head
-        import s.implicits._
-        Seq((delRows, purgeOk, histN, reclaimed,
-          fin.getLong(0), fin.getLong(1)))
-          .toDF("del_rows", "purge_ok", "hist_versions", "reclaimed",
-            "n_final", "qty_sum")
-      } finally {
-        scala.util.Try(s.sql(s"DROP TABLE IF EXISTS $tbl"))
-        hfs.delete(new org.apache.hadoop.fs.Path(store), true); ()
+      withStores(s, "xq44") { case Seq(store) =>
+        try {
+          Snapshots.commitWithStats(s, base, store,
+            statsCols = Seq("k"), partitionByCols = Seq("bucket"))
+          s.sql(s"CREATE TABLE $tbl USING snapshot " +
+            s"OPTIONS (path '$store', dmlMode 'mor')")
+          val delRows = s.sql(s"DELETE FROM $tbl WHERE k % 7 = 1")
+            .head.getLong(0) // v2: MoR tombstones
+          val purge = s.sql(s"OPTIMIZE $tbl PURGE").head // v3
+          val purgeOk = if (purge.getString(1) == "purge") 1L else 0L
+          s.sql(s"OPTIMIZE $tbl") // v4: fold self-contained
+          val histN = s.sql(s"DESCRIBE HISTORY $tbl").count()
+          val reclaimed = s.sql(s"VACUUM $tbl RETAIN 1 VERSIONS").count()
+          val fin = s.sql(s"SELECT count(*) AS n, sum(qty) AS sq " +
+            s"FROM $tbl").head
+          import s.implicits._
+          Seq((delRows, purgeOk, histN, reclaimed,
+            fin.getLong(0), fin.getLong(1)))
+            .toDF("del_rows", "purge_ok", "hist_versions", "reclaimed",
+              "n_final", "qty_sum")
+        } finally {
+          scala.util.Try(s.sql(s"DROP TABLE IF EXISTS $tbl"))
+        }
       }
     }),
 
@@ -1411,33 +1309,30 @@ object ExtOps {
       val base = t(s, dir, "lineitem")
         .select(col("l_orderkey").cast("long").as("k"),
           col("l_quantity").cast("long").as("qty"))
-      val tmp = System.getProperty("java.io.tmpdir", "/tmp")
       val tag = java.util.UUID.randomUUID().toString.replace("-", "")
-      val store = new java.io.File(tmp, s"graft-xq45-$tag").getAbsolutePath
       val tbl = s"g_xq45_$tag"
-      val hfs = new org.apache.hadoop.fs.Path(store)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      try {
-        Snapshots.commitWithStats(s, base, store, statsCols = Seq("k"))
-        s.sql(s"CREATE TABLE $tbl USING snapshot " +
-          s"OPTIONS (path '$store')")
-        val ins1 = s.sql(s"INSERT INTO $tbl SELECT k + 10000000, " +
-          s"qty + 1 FROM $tbl WHERE k % 9 = 4").head.getLong(0) // v2
-        val ins2 = s.sql(s"INSERT INTO $tbl (qty) VALUES (777), (778)")
-          .head.getLong(0) // v3: k lands NULL
-        val ovr = s.sql(s"INSERT OVERWRITE $tbl SELECT k, qty " +
-          s"FROM $tbl WHERE qty % 2 = 0 AND k IS NOT NULL")
-          .head.getLong(0) // v4: self-referencing head replace
-        val hist = s.sql(s"DESCRIBE HISTORY $tbl").count()
-        val fin = s.sql(s"SELECT count(*) AS n, sum(qty) AS sq " +
-          s"FROM $tbl").head
-        import s.implicits._
-        Seq((ins1, ins2, ovr, hist, fin.getLong(0), fin.getLong(1)))
-          .toDF("ins_rows", "collist_rows", "ovr_rows",
-            "hist_versions", "n_final", "qty_sum")
-      } finally {
-        scala.util.Try(s.sql(s"DROP TABLE IF EXISTS $tbl"))
-        hfs.delete(new org.apache.hadoop.fs.Path(store), true); ()
+      withStores(s, "xq45") { case Seq(store) =>
+        try {
+          Snapshots.commitWithStats(s, base, store, statsCols = Seq("k"))
+          s.sql(s"CREATE TABLE $tbl USING snapshot " +
+            s"OPTIONS (path '$store')")
+          val ins1 = s.sql(s"INSERT INTO $tbl SELECT k + 10000000, " +
+            s"qty + 1 FROM $tbl WHERE k % 9 = 4").head.getLong(0) // v2
+          val ins2 = s.sql(s"INSERT INTO $tbl (qty) VALUES (777), (778)")
+            .head.getLong(0) // v3: k lands NULL
+          val ovr = s.sql(s"INSERT OVERWRITE $tbl SELECT k, qty " +
+            s"FROM $tbl WHERE qty % 2 = 0 AND k IS NOT NULL")
+            .head.getLong(0) // v4: self-referencing head replace
+          val hist = s.sql(s"DESCRIBE HISTORY $tbl").count()
+          val fin = s.sql(s"SELECT count(*) AS n, sum(qty) AS sq " +
+            s"FROM $tbl").head
+          import s.implicits._
+          Seq((ins1, ins2, ovr, hist, fin.getLong(0), fin.getLong(1)))
+            .toDF("ins_rows", "collist_rows", "ovr_rows",
+              "hist_versions", "n_final", "qty_sum")
+        } finally {
+          scala.util.Try(s.sql(s"DROP TABLE IF EXISTS $tbl"))
+        }
       }
     }),
 
@@ -1453,51 +1348,48 @@ object ExtOps {
       val base = t(s, dir, "orders")
         .select(col("o_orderkey").cast("long").as("k"),
           col("o_custkey").cast("long").as("qty"))
-      val tmp = System.getProperty("java.io.tmpdir", "/tmp")
       val tag = java.util.UUID.randomUUID().toString.replace("-", "")
-      val store = new java.io.File(tmp, s"graft-xq46-$tag").getAbsolutePath
       val tbl = s"g_xq46_$tag"
-      val hfs = new org.apache.hadoop.fs.Path(store)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      try {
-        Snapshots.commitWithStats(s, base, store, statsCols = Seq("k"))
-        s.sql(s"CREATE TABLE $tbl USING snapshot " +
-          s"OPTIONS (path '$store')")
-        // the MERGE sources read the raw orders parquet through a
-        // session view (the Verify session has no catalog tables)
-        t(s, dir, "orders").createOrReplaceTempView(s"${tbl}_orders")
-        val m1 = s.sql(
-          s"""MERGE INTO $tbl USING (
-             |  SELECT CAST(o_orderkey AS BIGINT) AS id,
-             |         CAST(o_orderkey % 10 AS BIGINT) AS amt
-             |  FROM ${tbl}_orders WHERE o_orderkey % 7 = 0
-             |  UNION ALL
-             |  SELECT CAST(o_orderkey + 900000000 AS BIGINT),
-             |         CAST(o_orderkey % 10 AS BIGINT)
-             |  FROM ${tbl}_orders WHERE o_orderkey % 13 = 0
-             |) src ON $tbl.k = src.id
-             |WHEN MATCHED AND src.amt < 3 THEN DELETE
-             |WHEN MATCHED AND src.amt < 8 THEN
-             |  UPDATE SET qty = $tbl.qty + src.amt
-             |WHEN NOT MATCHED AND src.amt >= 5 THEN
-             |  INSERT (k, qty) VALUES (src.id, src.amt)"""
-            .stripMargin).head.getLong(0)
-        val m2 = s.sql(
-          s"""MERGE INTO $tbl USING (
-             |  SELECT CAST(o_orderkey AS BIGINT) AS id
-             |  FROM ${tbl}_orders WHERE o_orderkey % 2 = 0
-             |) src ON $tbl.k = src.id
-             |WHEN NOT MATCHED BY SOURCE AND $tbl.k < 900000000
-             |  THEN DELETE""".stripMargin).head.getLong(0)
-        val fin = s.sql(s"SELECT count(*) AS n, sum(qty) AS sq " +
-          s"FROM $tbl").head
-        import s.implicits._
-        Seq((m1, m2, fin.getLong(0), fin.getLong(1)))
-          .toDF("m1_rows", "m2_rows", "n_final", "qty_sum")
-      } finally {
-        scala.util.Try(s.sql(s"DROP TABLE IF EXISTS $tbl"))
-        scala.util.Try(s.catalog.dropTempView(s"${tbl}_orders"))
-        hfs.delete(new org.apache.hadoop.fs.Path(store), true); ()
+      withStores(s, "xq46") { case Seq(store) =>
+        try {
+          Snapshots.commitWithStats(s, base, store, statsCols = Seq("k"))
+          s.sql(s"CREATE TABLE $tbl USING snapshot " +
+            s"OPTIONS (path '$store')")
+          // the MERGE sources read the raw orders parquet through a
+          // session view (the Verify session has no catalog tables)
+          t(s, dir, "orders").createOrReplaceTempView(s"${tbl}_orders")
+          val m1 = s.sql(
+            s"""MERGE INTO $tbl USING (
+               |  SELECT CAST(o_orderkey AS BIGINT) AS id,
+               |         CAST(o_orderkey % 10 AS BIGINT) AS amt
+               |  FROM ${tbl}_orders WHERE o_orderkey % 7 = 0
+               |  UNION ALL
+               |  SELECT CAST(o_orderkey + 900000000 AS BIGINT),
+               |         CAST(o_orderkey % 10 AS BIGINT)
+               |  FROM ${tbl}_orders WHERE o_orderkey % 13 = 0
+               |) src ON $tbl.k = src.id
+               |WHEN MATCHED AND src.amt < 3 THEN DELETE
+               |WHEN MATCHED AND src.amt < 8 THEN
+               |  UPDATE SET qty = $tbl.qty + src.amt
+               |WHEN NOT MATCHED AND src.amt >= 5 THEN
+               |  INSERT (k, qty) VALUES (src.id, src.amt)"""
+              .stripMargin).head.getLong(0)
+          val m2 = s.sql(
+            s"""MERGE INTO $tbl USING (
+               |  SELECT CAST(o_orderkey AS BIGINT) AS id
+               |  FROM ${tbl}_orders WHERE o_orderkey % 2 = 0
+               |) src ON $tbl.k = src.id
+               |WHEN NOT MATCHED BY SOURCE AND $tbl.k < 900000000
+               |  THEN DELETE""".stripMargin).head.getLong(0)
+          val fin = s.sql(s"SELECT count(*) AS n, sum(qty) AS sq " +
+            s"FROM $tbl").head
+          import s.implicits._
+          Seq((m1, m2, fin.getLong(0), fin.getLong(1)))
+            .toDF("m1_rows", "m2_rows", "n_final", "qty_sum")
+        } finally {
+          scala.util.Try(s.sql(s"DROP TABLE IF EXISTS $tbl"))
+          scala.util.Try(s.catalog.dropTempView(s"${tbl}_orders"))
+        }
       }
     }),
 
@@ -1515,12 +1407,7 @@ object ExtOps {
     "xq25_schema_evolution" -> ((s, dir) => {
       import graft.operators.Snapshots
       val o = t(s, dir, "orders")
-      val store = new java.io.File(
-        System.getProperty("java.io.tmpdir", "/tmp"),
-        s"graft-xq25-${java.util.UUID.randomUUID()}").getAbsolutePath
-      val hfs = new org.apache.hadoop.fs.Path(store)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      try {
+      withStores(s, "xq25") { case Seq(store) =>
         Snapshots.commit(s, o.select(
           col("o_orderkey").cast("long").as("k"),
           col("o_totalprice").as("price")), store)
@@ -1543,8 +1430,6 @@ object ExtOps {
         import s.implicits._
         out.toDF("version", "n", "n_status", "n_clerk", "k_sum")
           .orderBy("version")
-      } finally {
-        hfs.delete(new org.apache.hadoop.fs.Path(store), true); ()
       }
     }),
 
@@ -1561,39 +1446,21 @@ object ExtOps {
     // some value in it shares the probe's bit. rows_matched +
     // y_checksum from the pruned scan pin the superset guarantee.
     "xq26_bloom_lookup" -> ((s, dir) => {
-      import graft.operators.{Snapshots, ZOrder}
-      val base = t(s, dir, "lineitem")
-        .select(pmod(col("l_partkey"), lit(1024)).as("x"),
-          pmod(col("l_suppkey"), lit(1024)).as("y"))
-        .withColumn("z",
-          ZOrder.interleave2(col("x"), col("y"), 10))
-        .withColumn("z_bucket",
-          call_function("div", col("z"), lit(16384L)))
-        .drop("z")
-        .repartition(col("z_bucket"))
-      val store = new java.io.File(
-        System.getProperty("java.io.tmpdir", "/tmp"),
-        s"graft-xq26-${java.util.UUID.randomUUID()}").getAbsolutePath
-      val hfs = new org.apache.hadoop.fs.Path(store)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      try {
+      import graft.operators.Snapshots
+      val base = zBuckets(s, dir)
+      withStores(s, "xq26") { case Seq(store) =>
+        // stats on y, NOT x: x keeps only its bloom, so the index's
+        // decision for `x = 137` is the bloom's alone — the decision
+        // the DuckDB twin replays (the manifest still carries every
+        // file's row count for the census)
         val v = Snapshots.commitWithStats(s, base, store,
-          statsCols = Seq("x"), partitionByCols = Seq("z_bucket"),
+          statsCols = Seq("y"), partitionByCols = Seq("z_bucket"),
           bloomCols = Seq("x"))
-        val (pruned, ps) = Snapshots.readPointLookup(s, store,
-          "x", "137", v)
-        val m = pruned.filter(col("x") === 137)
+        val tbl = Snapshots.table(s, store, v)
+        val m = tbl.filter(col("x") === 137)
           .agg(count(lit(1)).as("n"),
             coalesce(sum(col("y")), lit(0L)).as("sy")).head()
-        import s.implicits._
-        Seq((ps.filesRead + ps.filesSkipped, ps.filesRead,
-          ps.filesSkipped, ps.rowsInRead, ps.rowsInSkipped,
-          m.getLong(0), m.getLong(1)))
-          .toDF("files_total", "files_read", "files_skipped",
-            "rows_in_read", "rows_in_skipped", "rows_matched",
-            "y_checksum")
-      } finally {
-        hfs.delete(new org.apache.hadoop.fs.Path(store), true); ()
+        censusRow(s, lastPrune(tbl), m, "y_checksum")
       }
     }),
 
@@ -1613,12 +1480,7 @@ object ExtOps {
         col("o_orderkey").cast("long").as("k"),
         col("o_orderstatus").as("status"))
         .repartitionByRange(8, col("o_orderkey"))
-      val store = new java.io.File(
-        System.getProperty("java.io.tmpdir", "/tmp"),
-        s"graft-xq27-${java.util.UUID.randomUUID()}").getAbsolutePath
-      val hfs = new org.apache.hadoop.fs.Path(store)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      try {
+      withStores(s, "xq27") { case Seq(store) =>
         Snapshots.commitWithStats(s, o, store, statsCols = Seq("k"))
         val before = Snapshots.read(s, store).count()
         val (_, del) = Snapshots.deleteWhere(s, store,
@@ -1635,8 +1497,6 @@ object ExtOps {
           m.getLong(0), m.getLong(1), m.getLong(2)))
           .toDF("rows_before", "rows_deleted", "rows_updated",
             "rows_after", "k_sum_after", "n_flagged")
-      } finally {
-        hfs.delete(new org.apache.hadoop.fs.Path(store), true); ()
       }
     }),
 
@@ -1657,12 +1517,7 @@ object ExtOps {
         col("o_orderkey").cast("long").as("k"),
         col("o_orderstatus").as("status"))
         .repartitionByRange(8, col("o_orderkey"))
-      val store = new java.io.File(
-        System.getProperty("java.io.tmpdir", "/tmp"),
-        s"graft-xq28-${java.util.UUID.randomUUID()}").getAbsolutePath
-      val hfs = new org.apache.hadoop.fs.Path(store)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      try {
+      withStores(s, "xq28") { case Seq(store) =>
         Snapshots.commitWithStats(s, o, store, statsCols = Seq("k"))
         val before = Snapshots.read(s, store).count()
         val src = o.filter(col("k") <= 1500)
@@ -1682,8 +1537,6 @@ object ExtOps {
           agg.getLong(2), agg.getLong(3)))
           .toDF("rows_before", "rows_merged", "rows_after",
             "k_sum_after", "n_updated", "n_inserted")
-      } finally {
-        hfs.delete(new org.apache.hadoop.fs.Path(store), true); ()
       }
     }),
 
@@ -1705,12 +1558,7 @@ object ExtOps {
         col("o_custkey").cast("long").as("c"),
         col("o_orderdate").cast("date").as("d"))
         .repartitionByRange(8, col("k"))
-      val store = new java.io.File(
-        System.getProperty("java.io.tmpdir", "/tmp"),
-        s"graft-xq29-${java.util.UUID.randomUUID()}").getAbsolutePath
-      val hfs = new org.apache.hadoop.fs.Path(store)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      try {
+      withStores(s, "xq29") { case Seq(store) =>
         Snapshots.commitWithStats(s, o, store,
           statsCols = Seq("k", "c", "d"))
         val q = Snapshots.table(s, store).agg(
@@ -1729,8 +1577,6 @@ object ExtOps {
           if (meta) 1L else 0L))
           .toDF("n", "k_min", "k_max", "c_min", "c_max",
             "d_min", "d_max", "metadata_only")
-      } finally {
-        hfs.delete(new org.apache.hadoop.fs.Path(store), true); ()
       }
     }),
 
@@ -1755,12 +1601,7 @@ object ExtOps {
           pmod(col("l_suppkey"), lit(1024)).as("y"),
           pmod(col("l_orderkey"), lit(8)).as("h"))
         .repartition(col("h"))
-      val store = new java.io.File(
-        System.getProperty("java.io.tmpdir", "/tmp"),
-        s"graft-xq30-${java.util.UUID.randomUUID()}").getAbsolutePath
-      val hfs = new org.apache.hadoop.fs.Path(store)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      try {
+      withStores(s, "xq30") { case Seq(store) =>
         val v1 = Snapshots.commitWithStats(s, base, store,
           statsCols = Seq("x"), partitionByCols = Seq("h"))
         def census(version: Long) = {
@@ -1785,8 +1626,6 @@ object ExtOps {
             "files_total_after", "files_read_after",
             "files_skipped_after", "rows_total",
             "rows_matched_before", "rows_matched_after", "x_checksum")
-      } finally {
-        hfs.delete(new org.apache.hadoop.fs.Path(store), true); ()
       }
     }),
 
@@ -1804,12 +1643,7 @@ object ExtOps {
         col("o_orderkey").cast("long").as("k"),
         pmod(col("o_orderkey"), lit(5)).as("h"))
         .repartition(col("h"))
-      val store = new java.io.File(
-        System.getProperty("java.io.tmpdir", "/tmp"),
-        s"graft-xq32-${java.util.UUID.randomUUID()}").getAbsolutePath
-      val hfs = new org.apache.hadoop.fs.Path(store)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      try {
+      withStores(s, "xq32") { case Seq(store) =>
         Snapshots.commitWithStats(s, o, store, statsCols = Seq("k"),
           partitionByCols = Seq("h"))
         val q = Snapshots.table(s, store).groupBy(col("h"))
@@ -1825,8 +1659,6 @@ object ExtOps {
           .sortBy(_._1).toSeq
         import s.implicits._
         rows.toDF("h", "n", "k_min", "k_max", "metadata_only")
-      } finally {
-        hfs.delete(new org.apache.hadoop.fs.Path(store), true); ()
       }
     }),
 
@@ -1852,12 +1684,7 @@ object ExtOps {
           lit(total + 1)))
         .withColumn("v", when(col("b") =!= 0, col("k")))
         .repartition(col("b"))
-      val store = new java.io.File(
-        System.getProperty("java.io.tmpdir", "/tmp"),
-        s"graft-xq33-${java.util.UUID.randomUUID()}").getAbsolutePath
-      val hfs = new org.apache.hadoop.fs.Path(store)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      try {
+      withStores(s, "xq33") { case Seq(store) =>
         Snapshots.commitWithStats(s, o, store,
           statsCols = Seq("k", "v"), partitionByCols = Seq("b"))
         val q = Snapshots.table(s, store).agg(
@@ -1882,8 +1709,6 @@ object ExtOps {
           .toDF("n", "nv", "metadata_only", "notnull_rows",
             "notnull_files_skipped", "topk_files_read",
             "topk_files_skipped", "topk_sum")
-      } finally {
-        hfs.delete(new org.apache.hadoop.fs.Path(store), true); ()
       }
     }),
 
@@ -1928,12 +1753,7 @@ object ExtOps {
         col("o_orderkey").cast("long").as("k"),
         pmod(col("o_orderkey"), lit(5)).as("h"))
         .repartition(col("h"))
-      val store = new java.io.File(
-        System.getProperty("java.io.tmpdir", "/tmp"),
-        s"graft-xq35-${java.util.UUID.randomUUID()}").getAbsolutePath
-      val hfs = new org.apache.hadoop.fs.Path(store)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      try {
+      withStores(s, "xq35") { case Seq(store) =>
         Snapshots.commitWithStats(s, o, store, statsCols = Seq("k"),
           partitionByCols = Seq("h"))
         val q = Snapshots.table(s, store)
@@ -1949,8 +1769,6 @@ object ExtOps {
         Seq((m.getLong(0), m.getLong(1), m.getLong(2),
           if (meta) 1L else 0L))
           .toDF("n", "k_min", "k_max", "metadata_only")
-      } finally {
-        hfs.delete(new org.apache.hadoop.fs.Path(store), true); ()
       }
     }),
 
@@ -1965,26 +1783,13 @@ object ExtOps {
     // admit (false positives included), kept iff ANY key passes both;
     // the joined census pins superset-correctness.
     "xq34_join_pruning" -> ((s, dir) => {
-      import graft.operators.{Snapshots, ZOrder}
-      val base = t(s, dir, "lineitem")
-        .select(pmod(col("l_partkey"), lit(1024)).as("x"),
-          pmod(col("l_suppkey"), lit(1024)).as("y"))
-        .withColumn("z",
-          ZOrder.interleave2(col("x"), col("y"), 10))
-        .withColumn("z_bucket",
-          call_function("div", col("z"), lit(16384L)))
-        .drop("z")
-        .repartition(col("z_bucket"))
+      import graft.operators.Snapshots
+      val base = zBuckets(s, dir)
       val dim = t(s, dir, "part")
         .filter(pmod(col("p_partkey"), lit(389)) === 0)
         .select(pmod(col("p_partkey"), lit(1024)).as("x"))
         .distinct()
-      val store = new java.io.File(
-        System.getProperty("java.io.tmpdir", "/tmp"),
-        s"graft-xq34-${java.util.UUID.randomUUID()}").getAbsolutePath
-      val hfs = new org.apache.hadoop.fs.Path(store)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      try {
+      withStores(s, "xq34") { case Seq(store) =>
         Snapshots.commitWithStats(s, base, store,
           statsCols = Seq("x"), partitionByCols = Seq("z_bucket"),
           bloomCols = Seq("x"))
@@ -1992,15 +1797,7 @@ object ExtOps {
         val m = pruned.join(broadcast(dim), Seq("x"))
           .agg(count(lit(1)).as("n"),
             coalesce(sum(col("y")), lit(0L)).as("sy")).head()
-        import s.implicits._
-        Seq((ps.filesRead + ps.filesSkipped, ps.filesRead,
-          ps.filesSkipped, ps.rowsInRead, ps.rowsInSkipped,
-          m.getLong(0), m.getLong(1)))
-          .toDF("files_total", "files_read", "files_skipped",
-            "rows_in_read", "rows_in_skipped", "rows_matched",
-            "y_checksum")
-      } finally {
-        hfs.delete(new org.apache.hadoop.fs.Path(store), true); ()
+        censusRow(s, ps, m, "y_checksum")
       }
     }),
 
@@ -2022,13 +1819,7 @@ object ExtOps {
       val o = t(s, dir, "orders").select(
         col("o_orderkey").cast("long").as("k"),
         col("o_orderstatus").as("status"))
-      val tmp = System.getProperty("java.io.tmpdir", "/tmp")
-      val tag = java.util.UUID.randomUUID()
-      val src = new java.io.File(tmp, s"graft-xq31s-$tag").getAbsolutePath
-      val dst = new java.io.File(tmp, s"graft-xq31d-$tag").getAbsolutePath
-      val hfs = new org.apache.hadoop.fs.Path(src)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      try {
+      withStores(s, "xq31s", "xq31d") { case Seq(src, dst) =>
         (0 to 2).foreach(i => Snapshots.commit(s,
           o.filter(pmod(col("k"), lit(3)) === i), src))
         Snapshots.mirrorAppends(s, src, dst,
@@ -2042,9 +1833,6 @@ object ExtOps {
           .toSeq
         import s.implicits._
         rows.toDF("version", "n", "k_sum")
-      } finally {
-        hfs.delete(new org.apache.hadoop.fs.Path(src), true)
-        hfs.delete(new org.apache.hadoop.fs.Path(dst), true); ()
       }
     }),
 
@@ -2929,9 +2717,9 @@ object ExtOps {
              WHERE x BETWEEN 100 AND 299 AND y BETWEEN 0 AND 199)
              AS y_checksum
          FROM cls""",
-    // xq22's twin verbatim: the planner-integrated index makes the
-    // SAME keep/skip decision from the same per-bucket min/max — only
-    // the mechanism moved from the readPruned side API into listFiles
+    // xq22's twin verbatim: both queries read through the same
+    // planner-integrated index, deciding from the same per-bucket
+    // min/max
     "xq24_planner_pruning" -> plannerPruningOracle,
     // the SAME decision again through the registered format("snapshot")
     // connector (+ time travel past a decoy head, which by

@@ -35,11 +35,12 @@ import graft.operators.Snapshots
   * one batch of new rows, the `versionedSink`/`commitWithEpoch`
   * discipline): for a full-snapshot table each version would replay
   * whole-table states, which is a different query (use k9's diff).
-  * A vacuumed gap inside a requested range throws loudly — a silent
-  * hole in a replayed stream is data loss; size vacuum `keepLast` to
-  * the slowest consumer. Rolling a streamed table BACK breaks offset
-  * monotonicity (offsets are versions) — prefer RESTORE, which moves
-  * history forward.
+  * Only main-line versions are delivered (a branch commit is not the
+  * table's history). A vacuumed gap inside a requested range throws
+  * loudly — a silent hole in a replayed stream is data loss; size
+  * vacuum `keepLast` to the slowest consumer. Rolling a streamed
+  * table BACK breaks offset monotonicity (offsets are versions) —
+  * prefer RESTORE, which moves history forward.
   *
   * `maxVersionsPerTrigger` paces a BACKFILL: without it, a stream
   * started against a long version history delivers the whole log as
@@ -212,29 +213,19 @@ private[streaming] class SnapshotLogStreamSource(spark: SparkSession,
     // read per batch than the previous pacingBase() comparison.)
     if (maxVersionsPerTrigger.isDefined)
       bumpBase(e)
+    // main-line versions only, loud on vacuumed gaps —
+    // readAppendsSince's contract, but conformed to the STREAM's
+    // fixed schema, not today's
+    val versions = Snapshots.mainHistory(spark, dir, s0, e)
     val batch =
-      if (e <= s0)
-        // an empty recovery range: schema-correct empty batch
+      if (versions.isEmpty)
+        // an empty (recovery) range: schema-correct empty batch
         GraftColumnBridge.internalCreateDataFrame(spark,
           spark.sparkContext.emptyRDD, schema)
-      else {
-        // loud on vacuumed gaps — readAppendsSince's contract, but
-        // conformed to the STREAM's fixed schema, not today's
-        val f = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
-        val want = (s0 + 1) to e
-        val missing = want.filterNot(v => f.exists(
-          new org.apache.hadoop.fs.Path(dir, s"v=$v")))
-        if (missing.nonEmpty)
-          throw new IllegalStateException(
-            s"stream range ($s0, $e] has vacuumed versions: " +
-              s"${missing.mkString(",")} — raise vacuum keepLast " +
-              "for log consumers")
-        want.map { v =>
-          Snapshots.conform(Snapshots.read(spark, dir, v), fixed)
-            .withColumn(SnapshotLogSource.VersionColumn, lit(v))
-        }.reduce(_ unionByName _)
-      }
+      else versions.map { v =>
+        Snapshots.conform(Snapshots.read(spark, dir, v), fixed)
+          .withColumn(SnapshotLogSource.VersionColumn, lit(v))
+      }.reduce(_ unionByName _)
     GraftColumnBridge.internalCreateStreamingDataFrame(spark,
       batch.queryExecution.toRdd, batch.schema)
   }

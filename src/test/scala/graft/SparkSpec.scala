@@ -1,7 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.operators.{FileStats, Snapshots}
+import graft.plans.StatsFileIndex
 
 /** Shared local SparkSession for all specs (one JVM-wide session —
   * getOrCreate — so the suite doesn't pay startup per class).
@@ -9,6 +14,27 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def sf0001 = "/root/testdata/sf0.001"
+
+  /** The executed parquet scan of `df` (unwrapping AQE), after an
+    * action ran through `df`'s own QueryExecution. */
+  def scanOf(df: DataFrame): FileSourceScanExec = {
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    plan.collectFirst { case s: FileSourceScanExec => s }.get
+  }
+
+  /** A filtered `Snapshots.table` read of `dir` (default: the latest
+    * version) after one action, and the census its stats index
+    * recorded for that action. */
+  def prunedRead(dir: String, pred: Column, version: Long = -1L)
+      : (DataFrame, FileStats.PruneStats) = {
+    val q = Snapshots.table(spark, dir, version).filter(pred)
+    q.collect()
+    (q, StatsFileIndex.indexOf(q).flatMap(_.lastPrune)
+      .getOrElse(fail(s"no stats index census in the read of $dir")))
+  }
 }
 
 object SparkSpec {

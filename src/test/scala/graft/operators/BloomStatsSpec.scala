@@ -26,17 +26,15 @@ class BloomStatsSpec extends SparkSpec {
       bloomCols = Seq("uid"))
     // uid is NOT clustered: min/max on it would prune nothing — the
     // bloom is the only lever for this lookup
-    val (pruned, ps) = Snapshots.readPointLookup(spark, dir,
-      "uid", "u-250")
+    val (pruned, ps) = prunedRead(dir, col("uid") === "u-250")
     assert(ps.filesRead + ps.filesSkipped == 4)
     assert(ps.filesRead < 4, s"bloom must prune: $ps")
-    val got = pruned.filter(col("uid") === "u-250").collect()
+    val got = pruned.collect()
     assert(got.length == 1 && got.head.getLong(0) == 250L)
     // a value that was never written: every kept file is a false
     // positive; whatever is read, zero rows match (never lossy)
-    val (prunedNo, psNo) = Snapshots.readPointLookup(spark, dir,
-      "uid", "u-99999")
-    assert(prunedNo.filter(col("uid") === "u-99999").count() == 0)
+    val (prunedNo, psNo) = prunedRead(dir, col("uid") === "u-99999")
+    assert(prunedNo.count() == 0)
     assert(psNo.filesRead + psNo.filesSkipped == 4)
   }
 
@@ -77,9 +75,8 @@ class BloomStatsSpec extends SparkSpec {
       targetBytes = 1L << 30)
     assert(new java.io.File(s"$dir/v=$nv/_bloom_uid.json").exists(),
       "compaction must recompute the bloom sidecar")
-    val (pruned, ps) = Snapshots.readPointLookup(spark, dir,
-      "uid", "u-150", nv)
+    val (pruned, ps) = prunedRead(dir, col("uid") === "u-150", nv)
     assert(ps.filesRead + ps.filesSkipped >= 2)
-    assert(pruned.filter(col("uid") === "u-150").count() == 1)
+    assert(pruned.count() == 1)
   }
 }

@@ -4,11 +4,12 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** The file-skipping manifest's contracts: a committed version and
-  * its `_stats.json` are inseparable, a range read through the
-  * manifest opens STRICTLY fewer files than the full scan while
-  * losing no matching row, pruning is conservative for null/absent
-  * stats, min/max round-trip exactly for longs past 2^53 (the
-  * double-corruption zone), and a fully-pruned read keeps schema.
+  * its `_stats.json` are inseparable, a filtered table read opens
+  * STRICTLY fewer files than the full scan while losing no matching
+  * row, the manifest decision ([[FileStats.prune]]) is conservative
+  * for null/absent stats, min/max round-trip exactly for longs past
+  * 2^53 (the double-corruption zone), and a fully-pruned read keeps
+  * schema.
   */
 class FileStatsSpec extends SparkSpec {
   import spark.implicits._
@@ -17,7 +18,8 @@ class FileStatsSpec extends SparkSpec {
     java.nio.file.Files.createTempDirectory(prefix).toString + "/t"
 
   test("commitWithStats seals a per-file manifest into the version; " +
-    "readPruned opens strictly fewer files and loses no matching row") {
+    "a filtered table read opens strictly fewer files and loses no " +
+    "matching row") {
     val dir = freshDir("graft-fstats")
     // 4 disjoint key ranges, one file each via the partition column
     val df = (0L until 400L).map(i => (i, i / 100, s"r$i"))
@@ -29,20 +31,24 @@ class FileStatsSpec extends SparkSpec {
     val full = Snapshots.read(spark, dir)
     assert(full.inputFiles.length == 4)
     // range [150, 249] spans exactly buckets 1 and 2
-    val (pruned, ps) = Snapshots.readPruned(spark, dir, "k",
-      BigDecimal(150), BigDecimal(249))
+    val (pruned, ps) = prunedRead(dir, col("k").between(150, 249))
     // THE plan-shape guarantee: the pruned scan reads strictly fewer
     // files, and only files the full scan also reads
-    assert(pruned.inputFiles.length == 2,
-      pruned.inputFiles.mkString(","))
-    assert(pruned.inputFiles.length < full.inputFiles.length)
-    assert(pruned.inputFiles.toSet.subsetOf(full.inputFiles.toSet))
+    val scanned = scanOf(pruned).metrics("numFiles").value
+    assert(scanned == 2, s"scanned $scanned files")
+    assert(scanned < full.inputFiles.length)
+    def paths(fs: Seq[String]) =
+      fs.map(f => new org.apache.hadoop.fs.Path(f).toUri.getPath).toSet
+    val readFrom = paths(pruned.select(input_file_name()).distinct()
+      .as[String].collect().toSeq)
+    assert(readFrom.size == 2 &&
+      readFrom.subsetOf(paths(full.inputFiles.toSeq)), readFrom)
     assert(ps == FileStats.PruneStats(2, 2, 200, 200))
     // superset guarantee: every matching row survives pruning
-    val got = pruned.filter(col("k").between(150, 249))
-      .orderBy(col("k")).select(col("k")).as[Long].collect()
+    val got = pruned.orderBy(col("k")).select(col("k")).as[Long]
+      .collect()
     assert(got.toSeq == (150L to 249L))
-    // partition-directory column survives the explicit-file read
+    // the partition-directory column survives the pruned listing
     assert(pruned.columns.contains("bucket"))
   }
 
@@ -58,17 +64,13 @@ class FileStatsSpec extends SparkSpec {
     Snapshots.commitWithStats(spark, df, dir,
       statsCols = Seq("k", "j"), partitionByCols = Seq("bucket"))
     // k-range keeps 2 of 4 quadrants; adding the j-range keeps 1
-    val (_, psK) = Snapshots.readPruned(spark, dir, "k",
-      BigDecimal(0), BigDecimal(99))
+    val (_, psK) = prunedRead(dir, col("k").between(0, 99))
     assert(psK.filesRead == 2 && psK.filesSkipped == 2)
-    val (pruned, ps2) = Snapshots.readPrunedMulti(spark, dir,
-      Seq(("k", BigDecimal(0), BigDecimal(99)),
-        ("j", BigDecimal(0), BigDecimal(99))))
+    val (pruned, ps2) = prunedRead(dir,
+      col("k").between(0, 99) && col("j").between(0, 99))
     assert(ps2.filesRead == 1 && ps2.filesSkipped == 3,
       ps2.toString)
-    val got = pruned.filter(col("k").between(0, 99) &&
-      col("j").between(0, 99)).count()
-    assert(got == 100)
+    assert(pruned.count() == 100)
   }
 
   test("pruning is conservative: a file whose stats column is " +
@@ -82,11 +84,19 @@ class FileStatsSpec extends SparkSpec {
     // range far away from [1,2]: the stats-bearing file is skipped,
     // the all-null file MUST be kept (its rows might match under a
     // different predicate form; min/max proves nothing about it)
-    val (pruned, ps) = Snapshots.readPruned(spark, dir, "k",
-      BigDecimal(100), BigDecimal(200))
-    assert(ps.filesRead == 1 && ps.filesSkipped == 1)
-    assert(pruned.count() == 2)
-    assert(pruned.select(col("k")).collect().forall(_.isNullAt(0)))
+    val manifest = FileStats.readManifest(spark, s"$dir/v=1")
+    val (kept, skipped) = FileStats.prune(manifest,
+      Seq(FileStats.NumRange("k", Some(100), Some(200))))
+    assert(kept.size == 1 && skipped.size == 1)
+    assert(kept.head.cols("k").isEmpty && kept.head.rows == 2)
+    // through the planner: a null-safe equality implies no IS NOT
+    // NULL, so only min/max decide — the all-null file is read and
+    // never counted as skipped, and nothing matches
+    val (pruned, ps) = prunedRead(dir, col("k") <=> 150L)
+    assert(ps.filesRead == 1 && ps.filesSkipped == 1, ps)
+    assert(ps.rowsInRead == 2, ps)
+    assert(scanOf(pruned).metrics("numFiles").value == 1)
+    assert(pruned.count() == 0)
   }
 
   test("manifest min/max are exact decimal strings: longs beyond " +
@@ -103,8 +113,7 @@ class FileStatsSpec extends SparkSpec {
     assert(m.head.cols("k").contains((big.toString, (big + 2).toString)))
     // a range that excludes [big, big+2] only under EXACT compare:
     // [big+3, big+4] — as doubles, big+2 == big+3 rounds together
-    val (_, ps) = Snapshots.readPruned(spark, dir, "k",
-      BigDecimal(big + 3), BigDecimal(big + 4))
+    val (_, ps) = prunedRead(dir, col("k").between(big + 3, big + 4))
     assert(ps.filesSkipped == 1 && ps.filesRead == 0)
   }
 
@@ -130,10 +139,9 @@ class FileStatsSpec extends SparkSpec {
     assert(m.size == v2Files)
     assert(Snapshots.read(spark, dir).count() == 400)
     // stats columns inherited from the source manifest (none passed)
-    val (pruned, ps) = Snapshots.readPruned(spark, dir, "k",
-      BigDecimal(0), BigDecimal(399))
+    val (pruned, ps) = prunedRead(dir, col("k").between(0, 399))
     assert(ps.filesRead == v2Files.toLong && ps.rowsInRead == 400)
-    assert(pruned.filter(col("k").between(0, 399)).count() == 400)
+    assert(pruned.count() == 400)
     // the OLD version is untouched until vacuum — maintenance never
     // breaks an in-flight reader
     assert(Snapshots.read(spark, dir, v1).count() == 400)
@@ -179,10 +187,9 @@ class FileStatsSpec extends SparkSpec {
       Seq((0L, 200L), (1L, 200L)))
     // manifest recomputed over the compacted layout; k-range pruning
     // now skips the bucket the predicate can't touch
-    val (pruned, ps) = Snapshots.readPruned(spark, dir, "k",
-      BigDecimal(0), BigDecimal(150))
+    val (pruned, ps) = prunedRead(dir, col("k").between(0, 150))
     assert(ps.filesRead == 1 && ps.filesSkipped == 1, ps.toString)
-    assert(pruned.filter(col("k") <= 150).count() == 151)
+    assert(pruned.count() == 151)
   }
 
   test("non-numeric stats never prune and never throw: a range " +
@@ -192,10 +199,13 @@ class FileStatsSpec extends SparkSpec {
       .toDF("k", "s", "bucket").repartition(col("bucket"))
     Snapshots.commitWithStats(spark, df, dir,
       statsCols = Seq("k", "s"), partitionByCols = Seq("bucket"))
-    val (pruned, ps) = Snapshots.readPruned(spark, dir, "s",
-      BigDecimal(0), BigDecimal(1))
-    assert(ps.filesRead == 2 && ps.filesSkipped == 0)
-    assert(pruned.count() == 2)
+    // the planner only extracts type-matched predicates, so a numeric
+    // range on a string column exists only as a manifest decision
+    val (kept, skipped) = FileStats.prune(
+      FileStats.readManifest(spark, s"$dir/v=1"),
+      Seq(FileStats.NumRange("s", Some(0), Some(1))))
+    assert(kept.size == 2 && skipped.isEmpty)
+    assert(kept.map(_.rows).sum == 2)
   }
 
   test("a fully-pruned read returns an empty frame with the full " +
@@ -205,8 +215,7 @@ class FileStatsSpec extends SparkSpec {
       .repartition(col("bucket"))
     Snapshots.commitWithStats(spark, df, dir,
       statsCols = Seq("k"), partitionByCols = Seq("bucket"))
-    val (pruned, ps) = Snapshots.readPruned(spark, dir, "k",
-      BigDecimal(100), BigDecimal(200))
+    val (pruned, ps) = prunedRead(dir, col("k").between(100, 200))
     assert(ps.filesRead == 0 && ps.filesSkipped == 2)
     assert(ps.rowsInSkipped == 2)
     assert(pruned.count() == 0)
@@ -218,8 +227,8 @@ class FileStatsSpec extends SparkSpec {
     "newlines in the data") {
     val dir = freshDir("graft-fstats-esc")
     // adversarial min/max per file: the old raw interpolation wrote a
-    // manifest readManifest could not parse, breaking readPruned AND
-    // compactVersion on a validly published table
+    // manifest readManifest could not parse, breaking pruned reads
+    // AND compactVersion on a validly published table
     val df = Seq(
       ("\"quoted\" start", 0), ("zz\\backslash", 0),
       ("line\nbreak", 1), ("tab\there ctl", 1))
@@ -234,8 +243,7 @@ class FileStatsSpec extends SparkSpec {
     assert(allStats.exists(_._1 == "line\nbreak"), allStats.toString)
     // the manifest stays consumable end-to-end: string-pruned read
     // and compaction both parse it
-    val (pruned, ps) = Snapshots.readPrunedPreds(spark, dir,
-      Seq(FileStats.StrRange("s", Some("a"), Some("z"))))
+    val (pruned, ps) = prunedRead(dir, col("s").between("a", "z"))
     assert(ps.filesRead + ps.filesSkipped == 2)
     assert(pruned.count() >= 1)
     Snapshots.compactPartitionedVersion(spark, dir,
@@ -255,20 +263,17 @@ class FileStatsSpec extends SparkSpec {
     }.toDF("applied_date", "k", "bucket").repartition(col("bucket"))
     Snapshots.commitWithStats(spark, df, dir,
       statsCols = Seq("applied_date"), partitionByCols = Seq("bucket"))
-    val (pruned, ps) = Snapshots.readPrunedPreds(spark, dir,
-      Seq(FileStats.StrRange("applied_date",
-        Some("2024-02-15"), Some("2024-03-15"))))
+    val (pruned, ps) = prunedRead(dir,
+      col("applied_date").between("2024-02-15", "2024-03-15"))
     assert(ps.filesRead == 2 && ps.filesSkipped == 2, ps.toString)
-    val got = pruned
-      .filter(col("applied_date").between("2024-02-15", "2024-03-15"))
-      .count()
+    val got = pruned.count()
     val want = Snapshots.read(spark, dir)
       .filter(col("applied_date").between("2024-02-15", "2024-03-15"))
       .count()
     assert(got == want && want > 0)
     // open-ended bound — the applied_after pushdown shape
-    val (_, psOpen) = Snapshots.readPrunedPreds(spark, dir,
-      Seq(FileStats.StrRange("applied_date", Some("2024-04-01"), None)))
+    val (_, psOpen) = prunedRead(dir,
+      col("applied_date") >= "2024-04-01")
     assert(psOpen.filesRead == 1 && psOpen.filesSkipped == 3)
   }
 

@@ -84,6 +84,31 @@ class MirrorSpec extends SparkSpec {
     assert(e.getMessage.contains("vacuumed"))
   }
 
+  test("ranged readers follow main's publication records: a branch " +
+    "commit that main skipped is never replayed, mirrored or listed " +
+    "as published") {
+    val src = freshDir("graft-mainline")
+    Snapshots.commit(spark, batch(0, 5), src)                // v1 main
+    Snapshots.createBranch(spark, src, "audit")
+    Snapshots.commitToBranch(spark, batch(100, 103), src, "audit") // v2
+    Snapshots.commit(spark, batch(5, 9), src)                // v3 main
+    assert(Snapshots.latestVersion(spark, src) == 3L)
+    val replay = Snapshots.readAppendsSince(spark, src, 0L)
+    assert(replay.select("_version").distinct().as[Long].collect()
+      .sorted.toSeq == Seq(1L, 3L))
+    assert(replay.select("k").as[Long].collect().sorted.toSeq ==
+      (0L until 9L))
+    val dst = freshDir("graft-mainline-dst")
+    assert(Snapshots.mirrorAppends(spark, src, dst) == Seq(1L, 2L))
+    assert(Snapshots.read(spark, dst).count() +
+      Snapshots.read(spark, dst, 1L).count() == 9L)
+    assert(Snapshots.history(spark, src)
+      .map(h => (h.version, h.published)) ==
+      Seq((1L, true), (2L, false), (3L, true)))
+    // the branch still reads as the branch
+    assert(Snapshots.readBranch(spark, src, "audit").count() == 3L)
+  }
+
   test("restore reinstates an old version as a NEW commit: linear " +
     "history, sidecars carried, epoch markers dropped") {
     val dir = freshDir("graft-restore")
@@ -96,9 +121,9 @@ class MirrorSpec extends SparkSpec {
     // the bad version stays time-travelable
     assert(Snapshots.read(spark, dir, 2L).count() == 3L)
     // sidecars came along: pruning + point lookup work on v3
-    val (_, ps) = Snapshots.readPruned(spark, dir, "k", 0, 0, 3L)
+    val (_, ps) = prunedRead(dir, col("k") === 0, 3L)
     assert(ps.filesRead + ps.filesSkipped > 0)
-    val (_, bl) = Snapshots.readPointLookup(spark, dir, "k", "5", 3L)
+    val (_, bl) = prunedRead(dir, col("k") === 5, 3L)
     assert(bl.filesRead >= 1)
     // restoring an epoch-marked version drops the marker: the fence
     // must not see the restored commit as that epoch

@@ -324,15 +324,13 @@ class MorDeleteSpec extends SparkSpec {
       desc = false, nullsFirst = true)
     assert(bot.orderBy(col("k")).limit(3)
       .collect().map(_.getAs[Long]("k")).toSeq == Seq(100L, 101L, 102L))
-    // readPrunedMulti / readPrunedPreds: superset guarantee holds
-    val (pm, psM) = Snapshots.readPrunedMulti(spark, dir,
-      Seq(("k", BigDecimal(0), BigDecimal(150))))
-    assert(pm.filter(col("k") <= 150L).count() == 51L) // 100..150
-    assert(psM.filesSkipped == 0L, psM)
-    val (pp, _) = Snapshots.readPrunedPreds(spark, dir,
-      Seq(FileStats.NumRange("k", Some(BigDecimal(0)),
-        Some(BigDecimal(99)))))
-    assert(pp.filter(col("k") < 100L).count() == 0L) // all tombstoned
+    // a filtered planner read of the head: exactly the live rows of
+    // the range, no tombstoned row resurrected
+    val live = Snapshots.table(spark, dir).filter(col("k") <= 150L)
+      .select(col("k")).as[Long].collect().sorted.toSeq
+    assert(live == (100L to 150L)) // 0..99 tombstoned
+    assert(Snapshots.table(spark, dir).filter(col("k") < 100L)
+      .count() == 0L) // all tombstoned
     // readJoinPruned: full assembly, join still row-level correct
     val dim = Seq(50L, 150L, 250L).toDF("k")
     val (jp, psJ) = Snapshots.readJoinPruned(spark, dir, "k", dim)
@@ -449,12 +447,14 @@ class MorDeleteSpec extends SparkSpec {
       "clean split misclassified an encoded-key file as clean")
     assert(t.filter(col("city") === "New York").count() == 40L)
     assert(t.filter(col("k") < 10L).count() == 0L)
-    // and readPointLookup routes through the assembly on an MoR head
-    val (pl, ps) = Snapshots.readPointLookup(spark, dir, "k", "5")
-    assert(pl.filter(col("k") === 5L).count() == 0L)
-    assert(ps.filesSkipped == 0L, ps)
-    val (pl2, _) = Snapshots.readPointLookup(spark, dir, "k", "55")
-    assert(pl2.filter(col("k") === 55L).count() == 1L)
+    // and a filtered planner read serves the assembly on an MoR
+    // head: the tombstoned point stays deleted, a live one is served
+    assert(Snapshots.table(spark, dir).filter(col("k") === 5L)
+      .count() == 0L)
+    val p55 = Snapshots.table(spark, dir).filter(col("k") === 55L)
+      .collect()
+    assert(p55.length == 1 &&
+      p55.head.getAs[String]("city") == "Sao Paulo")
   }
 
   test("purgeMor rewrites ONLY dirty files (clean files carry by " +
@@ -574,17 +574,15 @@ class MorDeleteSpec extends SparkSpec {
     assert(ms.nonEmpty && ms.forall(_.cols.contains("k")),
       s"purge lost the stats manifest: $ms")
     // ...and it actually prunes: k in [0,50] lives only in b=0's file
-    val (pr, pst) = Snapshots.readPruned(spark, dir, "k",
-      BigDecimal(0), BigDecimal(50))
+    val (pr, pst) = prunedRead(dir, col("k").between(0, 50))
     assert(pst.filesSkipped == 3L && pst.filesRead == 1L, pst.toString)
-    assert(pr.filter(col("k") <= 50L).count() == 38L) // 51 - 13 purged
+    assert(pr.count() == 38L) // 51 - 13 purged
     // SQL OPTIMIZE's dispatcher routes the partitioned layout where
     // compactVersion would refuse, and keeps the manifest again
     val (cv, _) = Snapshots.compactAuto(spark, dir, 1L << 30)
     assert(cv == nv + 1)
     assert(FileStats.readManifest(spark, s"$dir/v=$cv").nonEmpty)
-    val (_, pst2) = Snapshots.readPruned(spark, dir, "k",
-      BigDecimal(0), BigDecimal(50))
+    val (_, pst2) = prunedRead(dir, col("k").between(0, 50))
     assert(pst2.filesSkipped == 3L, pst2.toString)
     assert(Snapshots.read(spark, dir).count() == 300L)
   }

@@ -570,10 +570,9 @@ class SnapshotsSpec extends SparkSpec {
     assert(timeline.count() == 7)
     assert(timeline.filter(col("c").isNotNull).count() == 2)
     // an OLD version still prunes through ITS OWN manifest
-    val (pruned, ps) = Snapshots.readPruned(spark, dir, "id",
-      BigDecimal(3), BigDecimal(3), version = 2)
+    val (pruned, ps) = prunedRead(dir, col("id") === 3, version = 2)
     assert(ps.filesRead + ps.filesSkipped >= 1)
-    assert(pruned.filter(col("id") === 3).count() == 1)
+    assert(pruned.count() == 1)
   }
 
   test("epoch-fenced and quality-gated commits seal stats/bloom " +
@@ -591,11 +590,10 @@ class SnapshotsSpec extends SparkSpec {
     assert(new java.io.File(s"$dir/v=1/_stats.json").exists())
     assert(new java.io.File(s"$dir/v=1/_bloom_uid.json").exists())
     assert(new java.io.File(s"$dir/v=1/_epoch.0").exists())
-    val (_, ps) = Snapshots.readPruned(spark, dir, "k",
-      BigDecimal(0), BigDecimal(10))
+    val (_, ps) = prunedRead(dir, col("k").between(0, 10))
     assert(ps.filesSkipped >= 1, ps.toString)
-    val (pl, _) = Snapshots.readPointLookup(spark, dir, "uid", "u-150")
-    assert(pl.filter(col("uid") === "u-150").count() == 1)
+    val (pl, _) = prunedRead(dir, col("uid") === "u-150")
+    assert(pl.count() == 1)
     // WAP: an accepted batch seals sidecars; a rejected one leaves
     // nothing (and pays no stats scan)
     val dir2 = java.nio.file.Files
@@ -640,10 +638,9 @@ class SnapshotsSpec extends SparkSpec {
     val copied = newManifest.filter(e => oldByRel.contains(e.relPath))
     assert(copied.size.toLong == d1.filesCopied)
     copied.foreach(e => assert(e == oldByRel(e.relPath)))
-    val (pruned, ps2) = Snapshots.readPruned(spark, dir, "k",
-      BigDecimal(300), BigDecimal(399))
+    val (pruned, ps2) = prunedRead(dir, col("k").between(300, 399))
     assert(ps2.filesSkipped >= 1)
-    assert(pruned.filter(col("k") >= 300).count() == 100)
+    assert(pruned.count() == 100)
     // bloom-decided delete: an equality predicate on the unclustered
     // column rewrites only bloom-admitting files
     val (v3, d2) = Snapshots.deleteWhere(spark, dir,
@@ -692,13 +689,11 @@ class SnapshotsSpec extends SparkSpec {
     assert(after.filter(col("uid") === "u-10").count() == 0,
       "matched row must be replaced, not duplicated")
     // spliced manifests keep the new version pruning AND point-probing
-    val (pr, psr) = Snapshots.readPruned(spark, dir, "k",
-      BigDecimal(300), BigDecimal(399))
+    val (pr, psr) = prunedRead(dir, col("k").between(300, 399))
     assert(psr.filesSkipped >= 1)
-    assert(pr.filter(col("k").between(300, 399)).count() == 100)
-    val (pl, plStats) = Snapshots.readPointLookup(spark, dir,
-      "k", "350")
-    assert(pl.filter(col("k") === 350).count() == 1)
+    assert(pr.count() == 100)
+    val (pl, plStats) = prunedRead(dir, col("k") === 350)
+    assert(pl.count() == 1)
     assert(plStats.filesRead + plStats.filesSkipped >= 4)
     // routing bound: a batch over maxRoutedKeys rewrites everything
     val (v3, m2) = Snapshots.mergeInto(spark, dir,

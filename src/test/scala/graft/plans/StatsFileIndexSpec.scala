@@ -1,10 +1,8 @@
 package graft.plans
 
 import graft.SparkSpec
-import graft.operators.{FileStats, Snapshots}
+import graft.operators.{BloomStats, FileStats, Snapshots}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.FileSourceScanExec
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 
 /** Planner-integrated file skipping: a PLAIN `spark.read.parquet`
@@ -31,16 +29,6 @@ class StatsFileIndexSpec extends SparkSpec {
     Snapshots.commitWithStats(spark, df, dir,
       statsCols = Seq("k", "d"), partitionByCols = Seq("bucket"))
     dir
-  }
-
-  /** numFiles of the (possibly AQE-wrapped) executed scan, after an
-    * action has run. */
-  private def scanOf(df: DataFrame): FileSourceScanExec = {
-    val plan = df.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }
-    plan.collectFirst { case s: FileSourceScanExec => s }.get
   }
 
   /** Materialize `df` through ITS OWN QueryExecution (count()/select()
@@ -110,7 +98,7 @@ class StatsFileIndexSpec extends SparkSpec {
       (i, s"u-${(i * 7919) % 400}", i / 100)
     }.toDF("k", "uid", "bucket").repartition(col("bucket"))
     // uid deliberately NOT in statsCols: min/max must have no lever
-    // here, so census parity with the bloom-only side API holds
+    // here, so the census equals the bloom-only decision
     Snapshots.commitWithStats(spark, df, dir,
       statsCols = Seq("k"), partitionByCols = Seq("bucket"),
       bloomCols = Seq("uid"))
@@ -121,10 +109,13 @@ class StatsFileIndexSpec extends SparkSpec {
       .filter(col("uid") === probe).count()
     assert(n == want && n >= 1, s"bloom path lost rows: $n vs $want")
     assert(files < 4, s"bloom must skip some file, scanned $files")
-    // census agrees with the side-API bloom decision
-    val (_, side) = Snapshots.readPointLookup(spark, dir, "uid", probe)
+    // census agrees with the pure bloom decision over the sidecar
+    val (kept, skipped) = BloomStats.pruneEquals(
+      BloomStats.readManifest(spark, s"$dir/v=1", "uid"), probe)
+    val pure = FileStats.PruneStats(kept.size.toLong,
+      skipped.size.toLong, kept.map(_.rows).sum, skipped.map(_.rows).sum)
     val planner = StatsFileIndex.indexOf(q).get.lastPrune.get
-    assert(planner == side, s"planner=$planner side=$side")
+    assert(planner == pure, s"planner=$planner pure=$pure")
     // IN probes: keep any file admitting ANY candidate
     val (nI, fI) = run(Snapshots.table(spark, dir)
       .filter(col("uid").isin(probe, s"u-${(10L * 7919) % 400}")))
@@ -173,15 +164,18 @@ class StatsFileIndexSpec extends SparkSpec {
   }
 
   test("xq22-shape census through the PLANNER path matches the " +
-    "side-API readPruned decision exactly") {
+    "pure FileStats.prune decision over the manifest exactly") {
     val dir = buildStore()
-    val (_, side) = Snapshots.readPruned(spark, dir, "k",
-      BigDecimal(150), BigDecimal(249))
+    val (kept, skipped) = FileStats.prune(
+      FileStats.readManifest(spark, s"$dir/v=1"),
+      Seq(FileStats.NumRange("k", Some(150), Some(249))))
+    val pure = FileStats.PruneStats(kept.size.toLong,
+      skipped.size.toLong, kept.map(_.rows).sum, skipped.map(_.rows).sum)
     val q = Snapshots.table(spark, dir)
       .filter(col("k").between(150, 249))
     q.count()
     val planner = StatsFileIndex.indexOf(q).get.lastPrune.get
-    assert(planner == side, s"planner=$planner side=$side")
+    assert(planner == pure, s"planner=$planner pure=$pure")
   }
 
   test("NESTED stats prune through the planner: a struct-field range " +

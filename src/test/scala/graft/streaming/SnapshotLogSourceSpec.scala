@@ -81,6 +81,23 @@ class SnapshotLogSourceSpec extends SparkSpec {
     assert(ks.toSeq == (0L until 23L), "duplicate or lost rows")
   }
 
+  test("a branch commit between two main commits is not streamed") {
+    val src = freshDir("graft-slbranch")
+    Snapshots.commit(spark, batch(0, 5), src)                // v1 main
+    Snapshots.createBranch(spark, src, "wap")
+    Snapshots.commitToBranch(spark, batch(100, 103), src, "wap") // v2
+    Snapshots.commit(spark, batch(5, 9), src)                // v3 main
+    val q = spark.readStream.format("snapshot-log")
+      .option("path", src).load()
+      .writeStream.format("memory").queryName("snaplogb").start()
+    try {
+      q.processAllAvailable()
+      val got = spark.table("snaplogb").select("k", "_version")
+        .as[(Long, Long)].collect().sorted.toSeq
+      assert(got == (0L until 9L).map(k => (k, if (k < 5) 1L else 3L)))
+    } finally q.stop()
+  }
+
   test("a vacuumed gap fails the stream loudly, never silently") {
     val src = freshDir("graft-slvac")
     Snapshots.commit(spark, batch(0, 5), src)
