@@ -36,6 +36,14 @@ import org.apache.spark.sql.functions._
   * covered — that table loses its history (see `ParquetMerge`; ROADMAP
   * direction 3). Fetching is pluggable
   * (`Ingest.Fetcher`) and throttled (S1).
+  *
+  * Silver tables have declared schemas (`NormalizeTables.schemas`,
+  * derived from the shred code, as the reference declares its tables
+  * in DDL), so reading them — `readTable`, and so `registerViews` —
+  * runs no Spark job; a merge reads the old table with its batch's
+  * schema. A table's write takes a lineage-cutting checkpoint only
+  * when the merged plan scans that table's own files: a first-run
+  * bootstrap is a single write job.
   */
 class Integrator(spark: SparkSession, fetcher: Fetcher, statePath: String,
     minIntervalMs: Long = 0L,
@@ -71,8 +79,17 @@ class Integrator(spark: SparkSession, fetcher: Fetcher, statePath: String,
   private val silverDir = s"$statePath/silver"
   private def tablePath(name: String) = s"$silverDir/$name"
 
+  /** The silver tables' declared schemas, derived once from the
+    * shred code (`NormalizeTables.schemas`, analysis only). */
+  private lazy val declared = graft.normalize.NormalizeTables.schemas(spark)
+
+  /** A table of the state, or None before its first write. Silver
+    * tables read with their declared schema — no inference job, and a
+    * column the files lack (a table written by an older shred) reads
+    * as null; the `_`-prefixed bookkeeping tables are inferred. */
   def readTable(name: String): Option[DataFrame] =
-    graft.operators.ParquetMerge.read(spark, tablePath(name))
+    graft.operators.ParquetMerge.read(spark, tablePath(name),
+      declared.get(name))
 
   private def writeTable(name: String, df: DataFrame): Unit =
     graft.operators.ParquetMerge.write(spark, tablePath(name), df)
@@ -89,8 +106,7 @@ class Integrator(spark: SparkSession, fetcher: Fetcher, statePath: String,
     */
   def updateBasicData(): Unit = {
     import spark.implicits._
-    val endpoints = Seq("users", "groups", "positions", "projects",
-      "companies", "fix_journals", "forms")
+    val endpoints = Normalize.masterEndpoints.map(_._1)
     val nPart = endpoints.size
     // parallelize with explicit slices — round-robin repartition can
     // co-locate two endpoints in one partition (they'd then paginate
@@ -108,30 +124,16 @@ class Integrator(spark: SparkSession, fetcher: Fetcher, statePath: String,
         "basic-data fetch failed (set ignoreBasicDataError to " +
           s"proceed with stale masters): ${errors.toSeq.mkString(", ")}")
     val failedApis = errors.map(_.getString(0)).toSet
-    def docsOf(api: String, schema:
-        org.apache.spark.sql.types.StructType): DataFrame =
-      spark.read.schema(schema).json(
-        fetched.filter(col("api_type") === api && col("error").isNull)
-          .select("doc").as[String])
     // a partially-fetched endpoint must not merge: its diff-deletes
     // (K4) would drop rows that still exist upstream
-    val shreds: Seq[(String, Map[String, DataFrame])] = Seq(
-      "users" -> Normalize.users(docsOf("users", JobcanSchemas.userSchema)),
-      "groups" -> Map("groups" ->
-        Normalize.groups(docsOf("groups", JobcanSchemas.groupSchema))),
-      "positions" -> Map("positions" -> Normalize.positions(
-        docsOf("positions", JobcanSchemas.positionSchema))),
-      "projects" -> Map("projects" -> Normalize.projects(
-        docsOf("projects", JobcanSchemas.projectSchema))),
-      "companies" -> Map("companies" -> Normalize.companies(
-        docsOf("companies", JobcanSchemas.companySchema))),
-      "fix_journals" -> Normalize.fixJournals(
-        docsOf("fix_journals", JobcanSchemas.fixJournalSchema)),
-      "forms" -> Map("forms" ->
-        Normalize.forms(docsOf("forms", JobcanSchemas.formSchema))))
+    val shreds = Normalize.masterEndpoints.collect {
+      case (api, schema, shred) if !failedApis(api) =>
+        shred(spark.read.schema(schema).json(
+          fetched.filter(col("api_type") === api && col("error").isNull)
+            .select("doc").as[String]))
+    }
     graft.operators.ParquetMerge.mergeTables(spark, silverDir,
-      shreds.collect { case (api, tables) if !failedApis(api) => tables }
-        .flatten)
+      shreds.flatten)
     report(Progress.BasicData,
       if (failedApis.isEmpty) "master endpoints merged"
       else s"master endpoints merged (stale: ${failedApis.mkString(",")})",

@@ -1,7 +1,9 @@
 package graft.normalize
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.model.JobcanSchemas
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Bronze JSON documents → the reference's ~40 silver tables
   * (SURVEY §1.3), as pure DataFrame transforms.
@@ -87,6 +89,21 @@ object Normalize {
         col("i.generic_master_record_code").as("generic_master_record_code"))
     Map("fix_journals" -> flat, "custom_journal_items" -> items)
   }
+
+  /** The 7 master endpoints in fetch order: (API name, payload schema,
+    * shred into its silver tables). */
+  val masterEndpoints: Seq[(String, StructType,
+      DataFrame => Map[String, DataFrame])] = Seq(
+    ("users", JobcanSchemas.userSchema, users),
+    ("groups", JobcanSchemas.groupSchema, d => Map("groups" -> groups(d))),
+    ("positions", JobcanSchemas.positionSchema,
+      d => Map("positions" -> positions(d))),
+    ("projects", JobcanSchemas.projectSchema,
+      d => Map("projects" -> projects(d))),
+    ("companies", JobcanSchemas.companySchema,
+      d => Map("companies" -> companies(d))),
+    ("fix_journals", JobcanSchemas.fixJournalSchema, fixJournals),
+    ("forms", JobcanSchemas.formSchema, d => Map("forms" -> forms(d))))
 
   // ---- request detail: the 30-table shred ------------------------------
 
@@ -440,6 +457,20 @@ object NormalizeTables {
     "viewers", "modify_logs", "modify_log_details",
     "modify_log_detail_specifics", "files", "file_associations")
   val all: Seq[String] = masters ++ requestTables
+
+  /** Each silver table's declared schema — the analog of the
+    * reference's `CREATE TABLE` DDL, derived from the shred code itself
+    * (no second, hand-written catalog): `Normalize` runs over an empty
+    * frame of each `JobcanSchemas` input. That is plan analysis only;
+    * no Spark job runs. */
+  def schemas(spark: SparkSession): Map[String, StructType] = {
+    def empty(s: StructType) =
+      spark.createDataFrame(java.util.List.of[Row](), s)
+    (Normalize.masterEndpoints.flatMap { case (_, s, shred) =>
+      shred(empty(s)) } ++
+      Normalize.requests(empty(JobcanSchemas.requestDetailSchema)))
+      .map { case (name, df) => name -> df.schema }.toMap
+  }
 
   /** Canonical merge semantics per silver table:
     * Left(pk)       = K1 full-row upsert by primary key;

@@ -15,8 +15,10 @@ import org.apache.spark.sql.{Column, DataFrame}
   * idles (guide §2.5 "input skew: one huge unsplittable file …
   * repartition immediately after the read").
   *
-  * [[fanOut]] inserts that repartition ONLY when the plan would
-  * otherwise run narrower than the session's parallelism — at scale,
+  * [[fanOut]] inserts that repartition ONLY when the plan is a scan
+  * (see [[scanShaped]]) that would otherwise run narrower than the
+  * session's parallelism — any other plan passes through untouched,
+  * without a job to probe its width. At scale,
   * where the table is many files wide, it is an exact no-op and costs
   * nothing; on a narrow input it pays one small exchange to unlock
   * every core for the expensive stage above it. The partition count
@@ -42,31 +44,37 @@ object Parallelism {
     * physical plan via the unboxed internal RDD (`df.rdd` would plan a
     * deserialize-to-Row projection on top; `toRdd` is the sanctioned
     * bridge). No job runs for scan-shaped input: FileScanRDD partitions
-    * come from the driver-side file listing. Callers must keep this on
-    * RAW scans — on a plan with exchanges, materializing the RDD under
-    * AQE executes the upstream stages ([[scanShaped]] is the guard). */
-  def planParts(df: DataFrame): Int =
+    * come from the driver-side file listing. On a plan with exchanges,
+    * materializing the RDD under AQE executes the upstream stages, so
+    * it is only called behind the [[scanShaped]] guard of
+    * [[isNarrow]]. */
+  private[graft] def planParts(df: DataFrame): Int =
     df.queryExecution.toRdd.getNumPartitions
 
   /** True when the analyzed plan is scan-shaped — leaves plus
-    * Project/Filter/SubqueryAlias only. The narrowness probe and
-    * fan-out are only safe (and only meaningful) on such plans:
-    * anything with joins/aggregates/exchanges would execute its
-    * upstream stages just to be *counted* (see [[planParts]]). */
-  def scanShaped(df: DataFrame): Boolean = {
+    * Project/Filter/SubqueryAlias and non-shuffling coalesces only.
+    * The narrowness probe and fan-out are only safe (and only
+    * meaningful) on such plans: anything with joins/aggregates/
+    * exchanges would execute its upstream stages just to be *counted*
+    * (see [[planParts]]), and exits its last exchange at session
+    * parallelism already. */
+  private[graft] def scanShaped(df: DataFrame): Boolean = {
     import org.apache.spark.sql.catalyst.plans.logical._
-    df.queryExecution.analyzed.collectFirst {
-      case n if !n.isInstanceOf[LeafNode] && !n.isInstanceOf[Project] &&
-        !n.isInstanceOf[Filter] && !n.isInstanceOf[SubqueryAlias] => n
-    }.isEmpty
+    !df.queryExecution.analyzed.exists {
+      case _: LeafNode | _: Project | _: Filter | _: SubqueryAlias => false
+      case r: Repartition => r.shuffle
+      case _ => true
+    }
   }
 
-  /** True when `df` plans narrower than the session's parallelism —
-    * the condition under which [[fanOut]] repartitions and
-    * [[broadcastIfNarrow]] hints. Evaluate it on the RAW scan (before
-    * joins) so the probe itself triggers no subquery/broadcast jobs. */
+  /** True when `df` is scan-shaped and plans narrower than the
+    * session's parallelism — the condition under which [[fanOut]]
+    * repartitions and [[broadcastIfNarrow]] hints. False, without
+    * probing, for any other plan, so the probe itself never runs a
+    * job. */
   def isNarrow(df: DataFrame): Boolean =
-    planParts(df) < df.sparkSession.sparkContext.defaultParallelism
+    scanShaped(df) &&
+      planParts(df) < df.sparkSession.sparkContext.defaultParallelism
 
   /** Broadcast hint gated on input narrowness AND estimated size. A
     * self-join whose one side was fanned out ties the planner's size
@@ -100,9 +108,11 @@ object Parallelism {
         BigInt(thresholdBytes)
   }
 
+  /** `df` repartitioned to `defaultParallelism` when it
+    * [[isNarrow]]; otherwise `df` itself. */
   def fanOut(df: DataFrame, by: Column*): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
-    if (planParts(df) >= target) df
+    if (!isNarrow(df)) df
     // the partition count must be EXPLICIT: a keyed repartition that
     // lets the planner pick defers to AQE partition coalescing, which
     // sizes partitions by shuffle BYTES (advisory 64 MB / min 1 MB) —

@@ -56,15 +56,9 @@ object Profile {
     // (measured: one 6.1 s task carrying a 4-column lineitem profile
     // at sf0.1/local[32]). Fan out first — projected to the profiled
     // columns so the exchange carries only what the census needs —
-    // a no-op at scale where the scan is already wide. Only when the
-    // caller's frame IS a scan: probing the width of a joined/
-    // aggregated frame would execute its upstream stages just to be
-    // counted (and such frames exit their last exchange at session
-    // parallelism already).
-    val projected = df.select(cols.map(col): _*)
-    val fanned =
-      if (Parallelism.scanShaped(projected)) Parallelism.fanOut(projected)
-      else projected
+    // a no-op at scale where the scan is already wide, and on a
+    // joined/aggregated frame (fanOut's scan-shape guard).
+    val fanned = Parallelism.fanOut(df.select(cols.map(col): _*))
     val row = fanned.agg(plainAggs.head, plainAggs.tail: _*)
       .crossJoin(fanned.agg(distinctAggs.head, distinctAggs.tail: _*))
       .collect()(0)

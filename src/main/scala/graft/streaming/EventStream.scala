@@ -448,8 +448,10 @@ object EventStream {
         // cache() is a soft barrier whose evicted blocks recompute
         // through the deleted files — and refreshByPath so the next
         // micro-batch's read can't resolve stale listings), plus the
-        // bootstrap-only-on-PATH_NOT_FOUND read
-        val target = graft.operators.ParquetMerge.read(spark, targetDir)
+        // bootstrap-only-on-PATH_NOT_FOUND read; the target reads with
+        // the batch's schema, which the union needs anyway
+        val target = graft.operators.ParquetMerge.read(spark, targetDir,
+          Some(batch.schema))
         val merged = target match {
           case Some(existing) => graft.operators.Upsert.lastWriteWins(
             existing.unionByName(batch.toDF()), keys, orderCol)

@@ -38,6 +38,33 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
+  /** Runs `body` under a fresh job group and returns the call site of
+    * every Spark job it started, in start order — also jobs from
+    * threads `body` creates, which inherit the group. */
+  def jobSites(spark: SparkSession)(body: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val group = s"graft-jobs-${java.util.UUID.randomUUID()}"
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties)
+            .exists(_.getProperty("spark.jobGroup.id") == group))
+          sites.add(e.stageInfos.maxByOption(_.stageId)
+            .fold("(no stage)")(_.name))
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, group)
+    try body
+    finally {
+      sc.clearJobGroup()
+      org.apache.spark.GraftTestBridge.drainListenerBus(sc)
+      sc.removeSparkListener(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    sites.asScala.toSeq
+  }
+
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")

@@ -371,6 +371,47 @@ class IntegratorSpec extends SparkSpec {
     assert(rebuilt.size == 2 && rebuilt == docs(clean))
   }
 
+  /** One cold run shared by the schema and job-budget cases below. */
+  private lazy val cold: (String, Integrator) = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-cold").toString
+    val integ = new Integrator(spark, new SyntheticApi, dir)
+    integ.run()
+    (dir, integ)
+  }
+
+  test("every silver table's declared schema is the schema its " +
+    "written files carry") {
+    import graft.normalize.NormalizeTables
+    import org.apache.spark.sql.types._
+    def nullable(t: DataType): DataType = t match {
+      case s: StructType => StructType(s.fields.map(f =>
+        f.copy(dataType = nullable(f.dataType), nullable = true)))
+      case a: ArrayType => ArrayType(nullable(a.elementType), true)
+      case m: MapType =>
+        MapType(nullable(m.keyType), nullable(m.valueType), true)
+      case other => other
+    }
+    val (dir, _) = cold
+    val declared = NormalizeTables.schemas(spark)
+    assert(declared.keySet == NormalizeTables.all.toSet)
+    NormalizeTables.all.foreach { n =>
+      val inferred = spark.read.parquet(s"$dir/silver/$n").schema
+      assert(nullable(declared(n)) == nullable(inferred),
+        s"$n: declared ${declared(n).simpleString} but the files " +
+          s"carry ${inferred.simpleString}")
+    }
+  }
+
+  test("registerViews runs no Spark job") {
+    val (dir, _) = cold
+    // a fresh integrator: its declared schemas are derived inside the
+    // counted call
+    val integ = new Integrator(spark, new SyntheticApi, dir)
+    val sites = graft.SparkSpec.jobSites(spark)(integ.registerViews())
+    assert(sites.isEmpty, s"registerViews ran jobs: $sites")
+    assert(integ.readTable("requests").get.count() == 2)
+  }
+
   test("token preflight (api_client.py:240-249): an invalid " +
     "credential aborts BEFORE any data fetch — one probe call, zero " +
     "endpoint scans, zero detail fetches, no retry-ladder churn") {

@@ -38,6 +38,20 @@ class ParallelismSpec extends AnyFunSuite {
     assert(Parallelism.fanOut(wide) eq wide)
   }
 
+  test("fanOut passes a plan with an exchange through without " +
+      "running a job to probe its width") {
+    val agg = spark.range(0L, 1000L, 1L, 1)
+      .groupBy((col("id") % 7).as("k")).count()
+    var out: org.apache.spark.sql.DataFrame = null
+    val sites = graft.SparkSpec.jobSites(spark) {
+      out = Parallelism.fanOut(agg)
+    }
+    assert(sites.isEmpty, s"fanOut executed upstream stages: $sites")
+    assert(out eq agg)
+    assert(!Parallelism.isNarrow(agg.coalesce(1)))
+    assert(Parallelism.isNarrow(spark.range(0L, 10L, 1L, 1).toDF().coalesce(1)))
+  }
+
   test("concurrently runs jobs under the caller's job group, rethrows " +
       "a failure's own exception after every thunk finished, and " +
       "leaves no thread behind") {
