@@ -17,9 +17,14 @@ pairs the change won, which is what a claimed gain is judged by: a win
 on at least 9 of 10 pairs, and a change median better than the base's by
 more than the base's interquartile range. Lower is better, as for every
 end-to-end metric in BENCHMARK.json. Every run must also report
-correct, with no failed operations. The last line of standard output is
-one JSON summary; it also keeps every metric of every run, so the other
-metrics can be checked for regressions.
+correct, with no failed operations.
+
+It then prints, for every end-to-end metric that the base checkout's
+BENCHMARK.json lists, each side's median and the relative change, and
+flags a metric whose change median is worse than the base median by
+more than that metric's bound (a share of the base median). The file is
+only read. The last line of standard output is one JSON summary; it
+also keeps every metric of every run.
 """
 import argparse
 import json
@@ -89,7 +94,33 @@ def main():
     summary["median_gain_exceeds_base_iqr"] = gain > iqr
     print(f"change won {wins}/{args.pairs} pairs; median gain {gain:.3f} "
           f"vs base IQR {iqr:.3f}")
+    summary["end_to_end"] = end_to_end(sides["base"] / "BENCHMARK.json", runs)
+    summary["worse_than_bound"] = [m for m, e in summary["end_to_end"].items()
+                                   if e["worse_than_bound"]]
     print(json.dumps(summary))
+
+
+def end_to_end(benchmark, runs):
+    """Each side's median of every end-to-end metric in `benchmark`, the
+    change relative to the base median, and whether it is worse by more
+    than the metric's bound; prints one line per metric."""
+    spec = json.loads(benchmark.read_text())
+    out = {}
+    for m in spec["end_to_end"]:
+        name, bound = m["name"], m["bound"]
+        med = {side: statistics.median(r[name] for r in runs[side])
+               for side in ("base", "change")}
+        sign = 1 if m.get("better", "lower") == "lower" else -1
+        worse = sign * (med["change"] - med["base"])
+        rel = worse / abs(med["base"]) if med["base"] else (
+            0.0 if worse == 0 else float("inf") if worse > 0 else float("-inf"))
+        flag = rel > bound
+        out[name] = {"base_median": med["base"], "change_median": med["change"],
+                     "worse_by": rel, "bound": bound, "worse_than_bound": flag}
+        print(f"{name:14s} base {med['base']:10.4f}  change {med['change']:10.4f}  "
+              f"worse by {rel:+.1%} (bound {bound:.0%})"
+              + ("  WORSE THAN BOUND" if flag else ""))
+    return out
 
 
 if __name__ == "__main__":

@@ -3,6 +3,7 @@ package graft.ingest
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.LongAccumulator
 
 /** Ingestion layer (SURVEY §2.1 S1–S6): pluggable fetcher behind the
   * plan, throttling, pagination, error classification, and the bronze
@@ -115,17 +116,23 @@ object Ingest {
   /** Fan the per-key detail fetches out over executors (S4 at scale):
     * ids are distributed, each partition runs a throttled fetch loop,
     * results come back as an Either-style DataFrame (S5) — no
-    * driver-side loop over ids.
+    * driver-side loop over ids. `docBytes`, when given, adds up the
+    * UTF-8 size of every fetched document as the fetch runs, so a
+    * caller learns the batch's size without a job of its own.
     */
   def fetchDetails(spark: SparkSession, fetcher: Fetcher, apiType: String,
-      ids: Dataset[String], minIntervalMs: Long = 0L): DataFrame = {
+      ids: Dataset[String], minIntervalMs: Long = 0L,
+      docBytes: Option[LongAccumulator] = None): DataFrame = {
     import spark.implicits._
     ids.mapPartitions { it =>
       val throttle = staggeredThrottle(minIntervalMs)
       it.map { id =>
         throttle.acquire()
         fetcher.fetchDetail(apiType, id) match {
-          case Right(doc) => (id, doc, null: String)
+          case Right(doc) =>
+            docBytes.foreach(_.add(
+              doc.getBytes(java.nio.charset.StandardCharsets.UTF_8).length))
+            (id, doc, null: String)
           case Left(err) => (id, null: String, err)
         }
       }

@@ -5,6 +5,7 @@ import graft.ingest.Ingest
 import graft.ingest.Ingest.{Fetcher, Page, Throttle}
 import graft.model.JobcanSchemas
 import graft.normalize.Normalize
+import graft.operators.Parallelism
 
 import graft.views.Views
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -44,6 +45,14 @@ import org.apache.spark.sql.functions._
   * schema. A table's write takes a lineage-cutting checkpoint only
   * when the merged plan scans that table's own files: a first-run
   * bootstrap is a single write job.
+  *
+  * A batch is partitioned by its bytes, not by its fetch layout: the
+  * detail documents are gathered into one partition per
+  * `spark.sql.files.maxPartitionBytes` they fill
+  * (`Parallelism.partitionsFor`), and a master endpoint's documents
+  * into the one partition its fetch task filled. A silver table
+  * written from a batch so is one task and about one file per split
+  * — one at 1,000 requests — and splits again as the batch grows.
   */
 class Integrator(spark: SparkSession, fetcher: Fetcher, statePath: String,
     minIntervalMs: Long = 0L,
@@ -125,12 +134,15 @@ class Integrator(spark: SparkSession, fetcher: Fetcher, statePath: String,
           s"proceed with stale masters): ${errors.toSeq.mkString(", ")}")
     val failedApis = errors.map(_.getString(0)).toSet
     // a partially-fetched endpoint must not merge: its diff-deletes
-    // (K4) would drop rows that still exist upstream
+    // (K4) would drop rows that still exist upstream. One task fetched
+    // each endpoint's pages, so its documents already sit in one
+    // partition: gathering them there is exact at any size, and each
+    // master table is one task and one file.
     val shreds = Normalize.masterEndpoints.collect {
       case (api, schema, shred) if !failedApis(api) =>
         shred(spark.read.schema(schema).json(
           fetched.filter(col("api_type") === api && col("error").isNull)
-            .select("doc").as[String]))
+            .select("doc").as[String].coalesce(1)))
     }
     graft.operators.ParquetMerge.mergeTables(spark, silverDir,
       shreds.flatten)
@@ -281,11 +293,13 @@ class Integrator(spark: SparkSession, fetcher: Fetcher, statePath: String,
     // two sequential eager batches (the reference processes failure
     // records before new outlines; a row ordering would not survive
     // the joins/partitioning, separate jobs actually guarantee it).
-    // localCheckpoint IMMEDIATELY: every derived action (DLQ probe,
-    // DLQ write, parse) would otherwise re-execute the mapPartitions
-    // fetch — duplicate HTTP calls against a 5000 req/h budget. The
-    // per-partition throttle interval scales by the fan-out so the
-    // aggregate rate stays within the configured total budget.
+    // localCheckpoint IMMEDIATELY: the parse below would otherwise
+    // re-execute the mapPartitions fetch — duplicate HTTP calls
+    // against a 5000 req/h budget. The per-partition throttle interval
+    // scales by the fan-out so the aggregate rate stays within the
+    // configured total budget. The fetch also adds up the documents'
+    // bytes, which size the parse checkpoint without a job of its own.
+    val docBytes = spark.sparkContext.longAccumulator("request_detail bytes")
     val fetchedParts = Seq(true, false).map { pri =>
       // repartition to a KNOWN fan-out and scale the interval by it —
       // the joined plan's own partition count (often
@@ -295,46 +309,50 @@ class Integrator(spark: SparkSession, fetcher: Fetcher, statePath: String,
       val ids = targets.filter(col("retry_priority") === pri)
         .select("id").as[String].repartition(fetchFanout)
       Ingest.fetchDetails(spark, fetcher, "request_detail", ids,
-        minIntervalMs * fetchFanout).localCheckpoint(true)
+        minIntervalMs * fetchFanout, Some(docBytes)).localCheckpoint(true)
     }
-    val fetched = fetchedParts.reduce(_ unionByName _)
     // parse here (not after the DLQ block) so parse failures can be
     // recorded alongside fetch failures; the eager checkpoint also
     // stops the 30 child-table merges below from re-reading the OLD
     // requests parquet (overwritten first) through the parse plan.
-    // Every one of those merges scans this checkpoint, so it keeps
-    // only what they and the DLQ need (not the raw bodies) in at most
-    // one partition per slot: each scan is a few small partitions,
-    // and each table lands in as few files
-    val parsedAll = Ingest.parseDocs(
-      fetched.filter(col("error").isNull), "doc",
-      JobcanSchemas.requestDetailSchema)
-      .select("id", "parsed", "parse_ok")
-      .coalesce(spark.sparkContext.defaultParallelism)
+    // Every later consumer — the probe, the DLQ, the 30 merges and the
+    // watermark hold-back — reads this checkpoint, so it keeps every
+    // fetched row but not the raw bodies. The parse runs at the
+    // fetch's fan-out; its output is gathered into one partition per
+    // `spark.sql.files.maxPartitionBytes` of fetched documents, so
+    // each merge is one task per split and each table lands in about
+    // that many files (one at 1,000 requests), splitting again at
+    // scale.
+    val batch = Ingest.parseDocs(fetchedParts.reduce(_ unionByName _),
+        "doc", JobcanSchemas.requestDetailSchema)
+      .select("id", "error", "parsed", "parse_ok")
+      .repartition(Parallelism.partitionsFor(spark, docBytes.value))
       .localCheckpoint(true)
+    fetchedParts.foreach(_.unpersist())
+    val fetchFailed = col("error").isNotNull
     // T5: fetch AND parse failures → DLQ (S5: a 200 response whose
     // body doesn't parse is a failure record in the reference too,
     // api_client.py:390-453 JSON-decode warnings)
-    val failures = fetched.filter(col("error").isNotNull)
+    val failures = batch.filter(fetchFailed || !col("parse_ok"))
       .select(lit("request_detail").as("api_type"),
         lit("").as("scope_key"), col("id").as("item_id"),
-        lit("fetch").as("phase"), col("error"),
+        when(fetchFailed, "fetch").otherwise("parse").as("phase"),
+        coalesce(col("error"), lit("detail document failed to parse"))
+          .as("error"),
         lit(System.currentTimeMillis()).as("ts"))
-      .unionByName(parsedAll.filter(!col("parse_ok"))
-        .select(lit("request_detail").as("api_type"),
-          lit("").as("scope_key"), col("id").as("item_id"),
-          lit("parse").as("phase"),
-          lit("detail document failed to parse").as("error"),
-          lit(System.currentTimeMillis()).as("ts")))
-    val anyFailures = failures.limit(1).count() > 0
-    if (dlq0.isDefined || anyFailures) {
+    // the one probe of the batch: how many rows failed, how many parsed
+    val probe = batch.agg(
+      count(when(fetchFailed || !col("parse_ok"), 1)),
+      count(when(col("parse_ok"), 1))).head()
+    val (nFailed, nParsed) = (probe.getLong(0), probe.getLong(1))
+    if (dlq0.isDefined || nFailed > 0) {
       // resolve DLQ entries whose retry succeeded this run (otherwise a
       // healed item would be replayed into every future run), then fold
       // in this run's failures (attempt counter accumulates). Fetch-
       // and parse-phase entries resolve on their own success signal.
-      val okFetch = fetched.filter(col("error").isNull)
+      val okFetch = batch.filter(!fetchFailed)
         .select(col("id").as("item_id")).withColumn("__okf", lit(1))
-      val okParse = parsedAll.filter(col("parse_ok"))
+      val okParse = batch.filter(col("parse_ok"))
         .select(col("id").as("item_id")).withColumn("__okp", lit(1))
       val dlqKept = dlq0.getOrElse(failures.limit(0))
         .join(okFetch, Seq("item_id"), "left")
@@ -385,10 +403,9 @@ class Integrator(spark: SparkSession, fetcher: Fetcher, statePath: String,
     // derive the clean documents from the already-checkpointed parse
     // result (the checkpoint above is the lineage cut that keeps the
     // 30 child-table merges from re-reading the OLD requests parquet)
-    val parsed = parsedAll.filter(col("parse_ok")).select("parsed.*")
-    if (parsed.limit(1).count() > 0)
+    if (nParsed > 0)
       graft.operators.ParquetMerge.mergeTables(spark, silverDir,
-        Normalize.requests(parsed))
+        Normalize.requests(batch.filter(col("parse_ok")).select("parsed.*")))
     // T1: commit watermarks only after the batch landed, and only for
     // forms whose detail fetches ALL succeeded — the reference writes
     // a form's watermark only once every request of that form is
@@ -402,9 +419,8 @@ class Integrator(spark: SparkSession, fetcher: Fetcher, statePath: String,
     writeTable("_watermarks",
       Incremental.commitWatermarks(watermarks, commitable))
     // all consumers (DLQ, merges, watermarks) are done — release the
-    // checkpointed page/doc blocks instead of pinning them until GC
-    fetchedParts.foreach(_.unpersist())
-    parsedAll.unpersist()
+    // checkpointed batch instead of pinning it until GC
+    batch.unpersist()
     report(Progress.FormDetail, "detail batch merged", 1, Some(1))
   }
 

@@ -108,6 +108,22 @@ object Parallelism {
         BigInt(thresholdBytes)
   }
 
+  /** Partitions for a batch of `bytes`: one per
+    * `spark.sql.files.maxPartitionBytes` (the session's scan-split
+    * size), and at least one — the task count a file scan of the same
+    * bytes would plan. A table written from a batch partitioned so
+    * lands in about that many files, at any batch size. */
+  def partitionsFor(spark: org.apache.spark.sql.SparkSession,
+      bytes: Long): Int =
+    partitionsFor(bytes, org.apache.spark.network.util.JavaUtils
+      .byteStringAsBytes(
+        spark.conf.get("spark.sql.files.maxPartitionBytes")))
+
+  /** `max(1, ceil(bytes / target))`. */
+  private[graft] def partitionsFor(bytes: Long, target: Long): Int =
+    if (bytes <= 0L) 1
+    else math.min((bytes - 1) / target + 1, Int.MaxValue.toLong).toInt
+
   /** `df` repartitioned to `defaultParallelism` when it
     * [[isNarrow]]; otherwise `df` itself. */
   def fanOut(df: DataFrame, by: Column*): DataFrame = {

@@ -412,6 +412,56 @@ class IntegratorSpec extends SparkSpec {
     assert(integ.readTable("requests").get.count() == 2)
   }
 
+  /** The parquet part files of silver table `name` under `dir`. */
+  private def partFiles(dir: String, name: String): Seq[String] =
+    Option(new java.io.File(s"$dir/silver/$name").list()).toSeq.flatten
+      .filter(f => f.startsWith("part-") && f.endsWith(".parquet"))
+
+  test("a cold run writes every master table, and every request table " +
+    "that projects or explodes the batch, as one part file") {
+    import graft.normalize.NormalizeTables
+    val (dir, _) = cold
+    // these shreds union, group or deduplicate the batch: their file
+    // count follows the plan, not the batch's partitioning
+    val planned = Set("generic_masters", "generic_master_additional_items",
+      "comments", "comment_associations", "files", "file_associations")
+    val wide = (NormalizeTables.masters ++
+        NormalizeTables.requestTables.filterNot(planned))
+      .map(n => n -> partFiles(dir, n).size).filter(_._2 != 1)
+    assert(wide.isEmpty, s"tables not in exactly one part file: $wide")
+  }
+
+  test("a tiny spark.sql.files.maxPartitionBytes splits the detail " +
+    "batch over several files and changes no row count, watermark or " +
+    "document") {
+    import graft.normalize.NormalizeTables
+    val (_, clean) = cold
+    val dir = java.nio.file.Files.createTempDirectory("graft-split").toString
+    val integ = new Integrator(spark, new SyntheticApi, dir)
+    val key = "spark.sql.files.maxPartitionBytes"
+    val before = spark.conf.get(key)
+    // the two fixture documents come to about 5.7 KB
+    try {
+      spark.conf.set(key, "1k")
+      integ.run()
+    } finally spark.conf.set(key, before)
+    val holding = integ.readTable("requests").get
+      .select(input_file_name()).distinct().count()
+    assert(holding >= 2,
+      s"requests rows sit in $holding file(s) of ${partFiles(dir, "requests")}")
+    def counts(i: Integrator) = NormalizeTables.all
+      .map(n => n -> i.readTable(n).map(_.count())).toMap
+    assert(counts(integ) == counts(clean))
+    assert(integ.readTable("_watermarks").get.collect().toSeq ==
+      clean.readTable("_watermarks").get.collect().toSeq)
+    def docs(i: Integrator) = graft.docs.Reassembly.toJsonDocs(
+        NormalizeTables.requestTables.map(n => n -> i.readTable(n).get)
+          .toMap)
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val rebuilt = docs(integ)
+    assert(rebuilt.size == 2 && rebuilt == docs(clean))
+  }
+
   test("token preflight (api_client.py:240-249): an invalid " +
     "credential aborts BEFORE any data fetch — one probe call, zero " +
     "endpoint scans, zero detail fetches, no retry-ladder churn") {

@@ -52,6 +52,23 @@ class ParallelismSpec extends AnyFunSuite {
     assert(Parallelism.isNarrow(spark.range(0L, 10L, 1L, 1).toDF().coalesce(1)))
   }
 
+  test("partitionsFor gives one partition per maxPartitionBytes, and " +
+      "at least one") {
+    val t = 128L * 1024 * 1024
+    assert(Parallelism.partitionsFor(0L, t) == 1)
+    assert(Parallelism.partitionsFor(t, t) == 1)
+    assert(Parallelism.partitionsFor(t + 1, t) == 2)
+    assert(Parallelism.partitionsFor(Long.MaxValue, 1L) == Int.MaxValue)
+    // the session form reads the scan-split size
+    val key = "spark.sql.files.maxPartitionBytes"
+    val before = spark.conf.get(key)
+    try {
+      spark.conf.set(key, "1k")
+      assert(Parallelism.partitionsFor(spark, 1024L) == 1)
+      assert(Parallelism.partitionsFor(spark, 1025L) == 2)
+    } finally spark.conf.set(key, before)
+  }
+
   test("concurrently runs jobs under the caller's job group, rethrows " +
       "a failure's own exception after every thunk finished, and " +
       "leaves no thread behind") {
