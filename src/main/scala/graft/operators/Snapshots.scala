@@ -10,8 +10,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * resolve the pointer first, so they only ever see fully-written
   * versions (a crashed writer leaves an orphan directory the vacuum
   * reclaims — never a torn table), and a published version is
-  * immutable, which is exactly what makes time travel and rollback
-  * trivial: both are pointer moves.
+  * immutable, which is exactly what makes time travel trivial: an
+  * older version is just another directory to read.
   *
   * This complements the Upsert family (which computes WHAT the next
   * version contains) and Compaction (which can rewrite a version's
@@ -66,12 +66,12 @@ object Snapshots {
 
   /** First unoccupied version slot — the Replace policy's claim
     * target: above the pointer, above every existing `v=` directory,
-    * AND above every live `_claim.N` marker — a crashed orphan, a
-    * branch head, or a committer that has claimed-but-not-yet-renamed
-    * may own slots past the pointer, and `latest+1` would silently
-    * overwrite them (on the local FS a rename onto an occupied slot
-    * MERGES instead of failing). Retired markers (`.stale-` suffix)
-    * do not occupy a slot. */
+    * AND above every live `_claim.N` marker — a crashed orphan or a
+    * committer that has claimed-but-not-yet-renamed may own slots
+    * past the pointer, and `latest+1` would silently overwrite them
+    * (on the local FS a rename onto an occupied slot MERGES instead
+    * of failing). Retired markers (`.stale-` suffix) do not occupy a
+    * slot. */
   private def nextFreeVersion(spark: SparkSession, dir: String): Long = {
     val f = fs(spark, dir)
     val d = new Path(dir)
@@ -167,18 +167,15 @@ object Snapshots {
     *
     * Claim-and-publish ([[commitStaged]]) runs one of three POLICIES
     * for a head that moved while the statement staged:
-    *  - [[Replace]] — plain, epoch, WAP, restore and branch commits:
-    *    claim the next FREE slot and publish whatever happened
-    *    meanwhile (a branch commit moves its ref instead, and retires
-    *    its claim — the version is settled, and a live claim on a
-    *    slot main never publishes would wedge every head-bound writer).
+    *  - [[Replace]] — plain and epoch commits: claim the next FREE
+    *    slot and publish whatever happened meanwhile.
     *  - [[Rebase]] — every row-level statement (DELETE, UPDATE, MERGE,
     *    INSERT, OVERWRITE; copy-on-write and merge-on-read): claim the
     *    slot above the head it staged from; on a moved head withdraw,
     *    run the statement's validation against the new head (it throws
     *    to abort) and re-stage there, up to `maxRetries` times.
     *  - [[Abort]] — every maintenance rewrite (fold, purge, compact,
-    *    ZORDER) and commitCAS: like Rebase, but a moved head withdraws
+    *    ZORDER): like Rebase, but a moved head withdraws
     *    and throws ConcurrentModificationException — a rewrite built
     *    from an old head would silently revert the commit that moved
     *    it, and maintenance is always safe to re-run.
@@ -198,13 +195,10 @@ object Snapshots {
     * Layout: `dir/v=N/` versions, `dir/_latest` pointer,
     * `dir/_claim.N` slot claims, `dir/_staging/<uuid>` stages. */
   private sealed trait Policy
-  private final case class Replace(ref: Option[Long => Unit] = None,
-      maxAttempts: Int = 3) extends Policy
+  private case object Replace extends Policy
   private final case class Rebase(maxRetries: Int, waitMs: Long)
       extends Policy
-  /** `exact`: claim slot `base + 1` and never wait (commitCAS). */
-  private final case class Abort(op: String, base: Long,
-      exact: Boolean = false) extends Policy
+  private final case class Abort(op: String, base: Long) extends Policy
 
   /** A sealed stage, the statement's result, and (Rebase) the
     * validation run with the NEW head when another commit won. */
@@ -369,12 +363,12 @@ object Snapshots {
                     s"conflict: lost the commit race ${retries + 1} " +
                       s"times in $dir — retry budget exhausted")
                 attempt(retries + 1)
-              case Abort(op, base, _) =>
+              case Abort(op, base) =>
                 throw new java.util.ConcurrentModificationException(
                   s"conflict: the head moved past v=$base (now v=$h2) " +
                     s"while $op was staging — nothing was published; " +
                     s"re-run $op on the new head")
-              case _: Replace => // land always publishes a Replace
+              case Replace => // land always publishes a Replace
                 throw new IllegalStateException("unreachable")
             }
         }
@@ -385,7 +379,7 @@ object Snapshots {
 
   /** Commit one stage under a policy that never re-stages. */
   private def commitNew(spark: SparkSession, dir: String,
-      policy: Policy = Replace())(st: => Path): Long =
+      policy: Policy = Replace)(st: => Path): Long =
     commitStaged(spark, dir, policy)(_ => Right(Staged(st, ())))._1
 
   /** Claim, occupy and publish `stage` under `policy`, `h` being the
@@ -415,9 +409,10 @@ object Snapshots {
       occupied
     }
     try policy match {
-      case Replace(ref, maxAttempts) =>
+      case Replace =>
         // squatted slots (pre-claim-era leftovers, local-FS claim
         // races) retry with the SAME stage — the Spark write ran once
+        val maxAttempts = 3
         var attempt = 0
         while (!occupied) {
           if (attempt == maxAttempts)
@@ -430,21 +425,15 @@ object Snapshots {
           occupy()
           attempt += 1
         }
-        ref match {
-          case Some(move) =>
-            retireClaim(f, dir, slot)
-            claimed = false
-            move(slot)
-          case None => publish(spark, dir, slot)
-        }
+        publish(spark, dir, slot)
         Some(slot)
       case _ =>
-        val (expected, waitMs, exact) = policy match {
-          case Abort(_, base, e) => (base, if (e) 0L else 30000L, e)
-          case Rebase(_, w) => (h, w, false)
-          case _: Replace => throw new IllegalStateException("unreachable")
+        val (expected, waitMs) = policy match {
+          case Abort(_, base) => (base, 30000L)
+          case Rebase(_, w) => (h, w)
+          case Replace => throw new IllegalStateException("unreachable")
         }
-        slot = if (exact) expected + 1 else slotAbove(f, dir, expected)
+        slot = slotAbove(f, dir, expected)
         if (!tryClaimSlot(f, dir, slot)) {
           // lost the claim — wait for the winner to publish
           if (waitMs <= 0)
@@ -457,8 +446,8 @@ object Snapshots {
           if (latestVersion(spark, dir) == expected)
             throw new IllegalStateException(
               s"conflict: v=$slot claimed but never published within " +
-                s"${waitMs}ms — crashed committer? recover with " +
-                "commitCAS claimGraceMs / vacuum")
+                s"${waitMs}ms — crashed committer? reclaim it with " +
+                "vacuum(orphanGraceMs)")
           withdraw()
           None
         } else {
@@ -485,10 +474,11 @@ object Snapshots {
 
   /** The slot a head-bound (Rebase/Abort) commit claims: the lowest
     * above `h` that is not a SETTLED unpublished version — a `v=N`
-    * with no live claim (a branch commit, a rolled-back version): no
-    * writer will ever publish it, so waiting on it would wedge main.
-    * A slot under a live claim is contested, never skipped — that is
-    * what serializes head-bound writers on the same head. */
+    * with no live claim (a leftover of a store written before slots
+    * were claimed): no writer will ever publish it, so waiting on it
+    * would wedge main. A slot under a live claim is contested, never
+    * skipped — that is what serializes head-bound writers on the same
+    * head. */
   private def slotAbove(f: org.apache.hadoop.fs.FileSystem, dir: String,
       h: Long): Long = {
     val d = new Path(dir)
@@ -534,12 +524,13 @@ object Snapshots {
   /** Main-line history in `(since, to]`, ascending: the versions
     * main's pointer published. A version is main when it carries a
     * publication record (`_pubtime.N`, written by [[publish]]); a
-    * branch commit or a crashed orphan has none, so the ranged
-    * readers ([[readAppendsSince]], [[mirrorAppends]], the
-    * snapshot-log stream) never serve one as main history. A store
-    * with no record at all predates them: every version counts. A
-    * version DIRECTORY missing from the range throws — a silent hole
-    * would be data loss. */
+    * crashed Replace committer's orphan (killed between its slot
+    * rename and its publish) has none, so the ranged readers
+    * ([[readAppendsSince]], [[mirrorAppends]], the snapshot-log
+    * stream) never serve one as main history. A store with no record
+    * at all predates them: every version counts. A version DIRECTORY
+    * missing from the range throws — a silent hole would be data
+    * loss. */
   private[graft] def mainHistory(spark: SparkSession, dir: String,
       since: Long, to: Long): Seq[Long] = {
     val f = fs(spark, dir)
@@ -592,9 +583,9 @@ object Snapshots {
     * epoch marker — not just the head. The head probe alone was
     * broken by the store's own maintenance ops: `compactVersion`
     * publishes a new head, and although it now carries the source's
-    * markers forward, a plain `commit`/`commitChecked` interleaved on
-    * the same table does not — the fence must scan back to the
-    * newest marked version rather than trust `v=head` specifically.
+    * markers forward, a plain `commit` interleaved on the same table
+    * does not — the fence must scan back to the newest marked
+    * version rather than trust `v=head` specifically.
     * For a pure `versionedSink` table the newest marked version IS
     * the head (compaction preserves markers), so the scan is one
     * directory listing in the steady state.
@@ -669,7 +660,8 @@ object Snapshots {
     * offset: for an epoch-fenced table the fence IS the progress
     * marker, no separate offsets file to keep transactional with the
     * data. */
-  def lastEpoch(spark: SparkSession, dir: String): Option[Long] = {
+  private def lastEpoch(spark: SparkSession, dir: String)
+      : Option[Long] = {
     val f = fs(spark, dir)
     val head = latestVersion(spark, dir)
     newestMarked(f, dir, existingVersions(f, dir), head).map(_._2.max)
@@ -689,8 +681,8 @@ object Snapshots {
     *    carrying the epoch marker and ROLLS IT FORWARD;
     *  - die after publish → the fence refuses the replayed epoch
     *    (`Left`) and the loop moves to the next version.
-    * Only main-line source versions mirror ([[mainHistory]]: a branch
-    * commit inside the range is not main's history), and they must
+    * Only main-line source versions mirror ([[mainHistory]]: a crashed
+    * orphan inside the range is not main's history), and they must
     * still exist — a vacuumed gap throws loudly (the
     * [[readAppendsSince]] contract: a silent hole is data loss).
     * Batches are conformed to the source's LATEST schema before
@@ -1286,8 +1278,8 @@ object Snapshots {
     *    exactly like Delta's ConcurrentDeleteDelete / ConcurrentWrite
     *    conflicts.
     * A lost claim whose winner never publishes within `publishWaitMs`
-    * aborts with a crashed-committer diagnosis (the commitCAS
-    * `claimGraceMs` recovery is the unblocking tool). */
+    * aborts with a crashed-committer diagnosis (a graced `vacuum`
+    * with `orphanGraceMs` reclaims the dead claim). */
   def deleteWhere(spark: SparkSession, dir: String,
       pred: org.apache.spark.sql.Column, maxRetries: Int = 3,
       publishWaitMs: Long = 30000L): (Long, RewriteStats) =
@@ -1568,8 +1560,8 @@ object Snapshots {
   /** Intervening-commit validation every copy-on-write statement runs
     * when another writer moved the head from `h` to `h2` first: the
     * versions main published in between are the new head's
-    * `_dml.json` base chain back to `h` (a branch commit or a
-    * rolled-back version sitting in (h, h2] was never main's history).
+    * `_dml.json` base chain back to `h` (a crashed Replace committer's
+    * orphan sitting in (h, h2] was never main's history).
     * Aborts loudly on any overlap or non-DML link; returns normally
     * when every link is DML over DISJOINT files (safe retry —
     * predicate/keyed DML re-executes serializably against the new
@@ -3206,8 +3198,8 @@ object Snapshots {
         tmp.toUri, conf)
       fc.rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
     }
-    // record the FIRST publication instant (create-exclusive: a
-    // rollback's re-publish never rewrites history) — the lineage
+    // record the FIRST publication instant (create-exclusive: an
+    // existing record is never rewritten) — the lineage
     // fact [[versionAt]] answers timestamp time travel from. Best
     // effort: a failure here degrades timestamp travel, never the
     // publish itself.
@@ -3219,108 +3211,21 @@ object Snapshots {
     } catch { case _: java.io.IOException => () }
   }
 
-  /** Compare-and-swap commit for MULTI-writer tables: publishes
-    * `df` as version `expectedParent + 1` only if the table is still
-    * at `expectedParent`. Data is staged in a writer-unique temp
-    * directory (racers never clobber each other's bytes), then the
-    * version number is claimed by creating a `_claim.N` marker with
-    * create-exclusive semantics (atomic on HDFS/posix; object stores
-    * substitute an if-none-match put) — exactly one of N racing
-    * committers wins the claim; losers get a `Left(conflict…)` and
-    * their staged bytes are deleted. Claim markers persist with
-    * their versions (a version number is never silently reused under
-    * CAS — after a rollback, vacuum the reclaimed versions first),
-    * and vacuum() removes markers alongside the versions it reclaims.
-    *
-    * CRASHED-WINNER RECOVERY (`claimGraceMs > 0`): a committer that
-    * died after claiming leaves `_claim.N` behind and would block
-    * every successor forever. When the blocking claim is older than
-    * the grace period and v=N never published, the next committer
-    * recovers instead of failing permanently:
-    *  - `v=N` directory EXISTS (death between rename and publish —
-    *    the data is complete, renames are all-or-nothing): ROLL
-    *    FORWARD by publishing v=N, then report a conflict so the
-    *    caller re-reads and retries on top of the recovered commit;
-    *  - no `v=N` (death between claim and rename): STEAL the claim
-    *    by atomically renaming the stale marker aside — exactly one
-    *    of N racing recoverers wins the rename — then re-claim and
-    *    proceed normally.
-    * The grace period must exceed the longest real commit's
-    * claim-to-publish latency (that window is two metadata renames —
-    * milliseconds — but clock skew across writers bounds how low it
-    * can safely go); with the default 0 no recovery is attempted.
-    */
-  def commitCAS(spark: SparkSession, df: DataFrame, dir: String,
-      expectedParent: Long, claimGraceMs: Long = 0L)
-      : Either[String, Long] = {
-    val f = fs(spark, dir)
-    val cur = latestVersion(spark, dir)
-    if (cur != expectedParent)
-      return Left(
-        s"conflict: expected parent v=$expectedParent, table is at v=$cur")
-    val v = expectedParent + 1
-    val claim = new Path(dir, s"_claim.$v")
-    val stale = claimGraceMs > 0 &&
-      (try Option(f.getFileStatus(claim))
-       catch { case _: java.io.FileNotFoundException => None })
-        .exists(_.getModificationTime <
-          System.currentTimeMillis() - claimGraceMs)
-    if (stale) {
-      if (f.exists(new Path(dir, s"v=$v"))) {
-        // complete but unpublished: roll the dead commit forward.
-        // Retire the dead winner's claim marker (rename aside to the
-        // vacuumable .stale- form) — once v=N is the published head
-        // it is slot-protection enough, and a lingering live marker
-        // would only be pointlessly grace-stolen by a later
-        // same-slot probe.
-        publish(spark, dir, v)
-        retireClaim(f, dir, v)
-        return Left(s"conflict: crashed commit v=$v rolled forward; " +
-          s"table now at v=$v — retry on top")
-      }
-      // atomic claim-steal; the loser of the rename fails its claim
-      f.rename(claim, new Path(dir,
-        s"_claim.$v.stale-${java.util.UUID.randomUUID()}"))
-    }
-    // the Abort policy at the fixed slot v, never waiting: a lost
-    // claim, an occupied slot or a moved head is a conflict
-    try Right(commitNew(spark, dir,
-      Abort("commitCAS", expectedParent, exact = true))(
-      stageFrame(spark, dir, df)))
-    catch {
-      case e: java.util.ConcurrentModificationException =>
-        Left(e.getMessage)
-    }
-  }
-
   /** One version-log row for [[history]]. */
   final case class VersionInfo(version: Long, published: Boolean,
       nDataFiles: Long, bytes: Long, rows: Option[Long],
-      epochs: Seq[Long], hasStats: Boolean, bloomCols: Seq[String],
-      tags: Seq[String], branches: Seq[String])
+      epochs: Seq[Long], hasStats: Boolean, bloomCols: Seq[String])
 
   /** DESCRIBE HISTORY: the version log as driver-side metadata — one
     * row per existing `v=` directory (`published` marks main's
-    * history up to the head, [[mainHistory]]'s rule; branch commits
-    * and orphans stay visible for forensics), row counts from the
-    * stats manifest when one exists (never a data scan), epoch
-    * markers, sidecar presence, and the tags/branches pinning each
-    * version. Pure metadata reads: O(versions) directory listings. */
+    * history up to the head, [[mainHistory]]'s rule; crashed orphans
+    * stay visible for forensics), row counts from the stats manifest
+    * when one exists (never a data scan), epoch markers and sidecar
+    * presence. Pure metadata reads: O(versions) directory listings. */
   def history(spark: SparkSession, dir: String): Seq[VersionInfo] = {
     val f = fs(spark, dir)
     val head = latestVersion(spark, dir)
     val main = onMain(f, dir)
-    val entries = f.listStatus(new Path(dir)).toSeq
-    val refs: Seq[(String, Long, Boolean)] = entries.collect {
-      case s if s.isFile && !s.getPath.getName.contains(".tmp.") &&
-          (s.getPath.getName.startsWith("_tag.") ||
-            s.getPath.getName.startsWith("_branch.")) =>
-        val n = s.getPath.getName
-        val isTag = n.startsWith("_tag.")
-        val name = n.stripPrefix("_tag.").stripPrefix("_branch.")
-        scala.util.Try(readRefFile(f, s.getPath)._1).toOption
-          .map(v => (name, v, isTag))
-    }.flatten
     existingVersions(f, dir).sorted.map { v =>
       val vPath = new Path(dir, s"v=$v")
       val files = f.listStatus(vPath).toSeq
@@ -3336,9 +3241,7 @@ object Snapshots {
         data.size.toLong, data.map(_.getLen).sum, rows,
         epochMarkers(f, dir, v).toSeq.sorted,
         f.exists(new Path(vPath, FileStats.ManifestName)),
-        bloomColsOf(f, s"$dir/v=$v"),
-        refs.collect { case (n, rv, true) if rv == v => n }.sorted,
-        refs.collect { case (n, rv, false) if rv == v => n }.sorted)
+        bloomColsOf(f, s"$dir/v=$v"))
     }
   }
 
@@ -3412,11 +3315,10 @@ object Snapshots {
     * or before `epochMillis` — "the table as the training run saw it
     * at 09:00". Publication times are EXPLICIT records
     * (`_pubtime.$v`, written by [[publish]] with create-exclusive
-    * semantics, so a re-publish — rollback — never rewrites
-    * history): branch-only commits, crashed orphans, and WAP stages
-    * never receive one and can never be served as main-table
-    * history, and the recorded instant is the pointer move itself —
-    * not a directory mtime, which is set at STAGE time and can
+    * semantics, so a record is never rewritten): crashed orphans and
+    * abandoned stages never receive one and can never be served as
+    * main-table history, and the recorded instant is the pointer move
+    * itself — not a directory mtime, which is set at STAGE time and can
     * predate publication by however long the committer stalled.
     * Vacuumed history narrows the window loudly: a timestamp older
     * than the oldest retained publication throws rather than
@@ -3454,152 +3356,16 @@ object Snapshots {
     eligible.maxBy { case (v, t) => (t, v) }._1
   }
 
-  /** One-shot backfill of `_pubtime.N` records for stores created
-    * BEFORE timestamp travel existed (such stores refuse
-    * [[versionAt]] with "no publication records"). Each PUBLISHED
-    * main-line version (v ≤ head) that lacks a record is stamped
-    * with its version directory's mtime — an APPROXIMATION: mtime is
-    * set at stage time and can predate the actual pointer move by
-    * however long the committer stalled, which is exactly why real
-    * records come from [[publish]]. Create-exclusive per version, so
-    * genuine publication records are never overwritten and the
-    * backfill is idempotent; versions above the head (branch
-    * commits, crashed orphans) stay structurally invisible. Returns
-    * the versions stamped. */
-  def backfillPubtimes(spark: SparkSession, dir: String): Seq[Long] = {
-    val f = fs(spark, dir)
-    val head = latestVersion(spark, dir)
-    require(head > 0, s"$dir has no committed version")
-    existingVersions(f, dir).filter(_ <= head).sorted.flatMap { v =>
-      val marker = new Path(dir, s"_pubtime.$v")
-      if (f.exists(marker)) None
-      else {
-        val mtime = f.getFileStatus(new Path(dir, s"v=$v"))
-          .getModificationTime
-        try {
-          val out = f.create(marker, false)
-          try out.write(mtime.toString.getBytes("US-ASCII"))
-          finally out.close()
-          Some(v)
-        } catch { case _: java.io.IOException => None }
-      }
-    }
-  }
-
-  /** Roll the table back to an earlier committed version — a pointer
-    * move; later versions stay on disk (forensics) until vacuumed. */
-  def rollback(spark: SparkSession, dir: String, v: Long): Unit = {
-    val head = latestVersion(spark, dir)
-    require(v > 0 && v <= head, s"cannot roll back to unpublished v=$v")
-    publish(spark, dir, v)
-    // the abandoned versions are settled: retire their claims, or
-    // every head-bound writer would wait on a slot nobody publishes
-    val f = fs(spark, dir)
-    ((v + 1) to head)
-      .filter(x => f.exists(new Path(dir, s"_claim.$x")))
-      .foreach(retireClaim(f, dir, _))
-  }
-
-  /** RESTORE: reinstate an earlier committed version's content as a
-    * brand-new version — history stays LINEAR (unlike [[rollback]],
-    * which moves the pointer backwards and leaves the abandoned
-    * versions as forward history until vacuumed). Data files and the
-    * stats/bloom sidecars are byte-copied verbatim (their stats are
-    * layout-dependent and the layout is exactly the restored one);
-    * `_epoch.*` markers are deliberately NOT carried — a restore is a
-    * new administrative commit, not a replay of the old epoch, and
-    * re-marking it would teach the fence that the old epoch is the
-    * newest (epoch-fenced log tables should prefer [[rollback]]).
-    * The standard lakehouse undo: "yesterday's table, as today's
-    * commit", with the bad versions still time-travelable for
-    * forensics. Cost is a byte copy of one version (an object store
-    * serves it as server-side copies); at 100 TB prefer rollback when
-    * pointer semantics suffice.
-    */
-  def restore(spark: SparkSession, dir: String, version: Long): Long = {
-    val f = fs(spark, dir)
-    require(version > 0 && version <= latestVersion(spark, dir),
-      s"cannot restore unpublished v=$version")
-    val srcPath = f.makeQualified(new Path(dir, s"v=$version"))
-    require(f.exists(srcPath), s"v=$version was vacuumed")
-    val conf = spark.sparkContext.hadoopConfiguration
-    def copyTree(stage: Path, p: Path): Unit =
-      f.listStatus(p).toSeq.foreach { s =>
-      val n = s.getPath.getName
-      // sidecars that ARE the version's content travel with it:
-      // stats/bloom manifests, the managed-cluster marker, and — for
-      // a merge-on-read version — the reference list and deletion
-      // vectors (both version-absolute, so a restored copy serves
-      // the identical assembly; without them a restore of an MoR
-      // version would silently drop every referenced row). Only
-      // `_epoch.*` is deliberately left behind (a restore is an
-      // administrative commit, not an epoch replay).
-      val keepFile = s.isFile && (!n.startsWith("_") ||
-        n == FileStats.ManifestName ||
-        n == RefsName ||
-        n == DvRefsName ||
-        n.startsWith("_zcluster.") ||
-        (n.startsWith("_bloom_") && n.endsWith(".json")))
-      val rel = srcPath.toUri.relativize(s.getPath.toUri).getPath
-      if (keepFile && !n.startsWith("."))
-        FileUtil.copy(f, s.getPath, f, new Path(stage, rel), false, conf)
-      else if (s.isDirectory && !n.startsWith(".") &&
-          (!n.startsWith("_") || n == TombstoneName || n == DvDirName))
-        copyTree(stage, s.getPath)
-    }
-    commitNew(spark, dir)(seal(spark, dir,
-      stage(spark, dir)(copyTree(_, srcPath)), Seal()))
-  }
-
-  /** Write-audit-publish: stage `df` in a writer-unique temp
-    * directory, run the quality suite AGAINST THE STAGED FILES (what
-    * readers would see, not the in-memory plan), and only then rename
-    * the stage into its claimed version slot and publish. On
-    * violations the claim is retired, the staged bytes are deleted,
-    * and the table stays at its previous version — the WAP pattern
-    * lakehouse pipelines run on every batch. A REJECTED batch must
-    * never materialize as a `v=N` directory: CAS crashed-winner
-    * recovery publishes any unpublished v=N it finds under a stale
-    * claim (it cannot tell a crashed winner from an audit reject), so
-    * quality-rejected data reaching a version slot would be
-    * resurrectable as the table head. Returns Right(version) or
-    * Left(violation census rows).
-    */
-  def commitChecked(spark: SparkSession, df: DataFrame, dir: String,
-      checks: DataFrame => Seq[DataFrame],
-      statsCols: Seq[String] = Nil,
-      bloomCols: Seq[String] = Nil)
-      : Either[Seq[(String, Long)], Long] = {
-    val st = stage(spark, dir)(writeFrame(df, _))
-    val bad = DataQuality.suite(checks(spark.read.parquet(st.toString)))
-      .filter(org.apache.spark.sql.functions.col("n_violations") > 0)
-      .collect()
-      .map(r => (r.getString(0), r.getLong(2))).toSeq
-    if (bad.nonEmpty) {
-      // no claim exists yet (claims are taken only after sealing),
-      // so a rejected batch leaves NOTHING behind
-      fs(spark, dir).delete(st, true)
-      Left(bad)
-    } else {
-      // audit passed: the stage is publish-worthy — the audit never
-      // re-runs. Sidecars are computed only for ACCEPTED batches (a
-      // rejected batch never pays the stats scan) and seal with the
-      // data
-      Right(commitNew(spark, dir)(
-        seal(spark, dir, st, Seal(statsCols, bloomCols))))
-    }
-  }
-
   /** Delete version directories that are (a) orphans ABOVE the
-    * committed pointer (failed/rolled-back writes) or (b) older than
-    * the `keepLast` most recent committed versions, plus any CAS
-    * claim markers and abandoned stage directories covered by
-    * the same rule. Never touches the pointer or the versions it
-    * protects. Returns deleted versions.
+    * committed pointer (failed writes) or (b) older than the
+    * `keepLast` most recent committed versions, plus any claim
+    * markers and abandoned stage directories covered by the same
+    * rule. Never touches the pointer or the versions it protects.
+    * Returns deleted versions.
     *
-    * CONCURRENCY: an in-flight `commit`/`commitChecked` stages
-    * `v=latest+1` BEFORE publishing, which is indistinguishable from
-    * a crashed orphan. With the default `orphanGraceMs = 0` vacuum
+    * CONCURRENCY: an in-flight `commit` stages `v=latest+1` BEFORE
+    * publishing, which is indistinguishable from a crashed orphan.
+    * With the default `orphanGraceMs = 0` vacuum
     * must therefore not run concurrently with a committer (the
     * single-maintenance-job scheduling every lake compactor already
     * needs). To run vacuum alongside writers, pass a grace period —
@@ -3620,19 +3386,9 @@ object Snapshots {
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("v="))
       .map(s => (s.getPath.getName.stripPrefix("v=").toLong, s))
       .sortBy(_._1)
-    // named refs PIN their versions: a tagged version never ages out
-    // of keepLast, and a branch head above the main pointer is a LIVE
-    // line of development, not a crashed orphan
-    val pinned: Set[Long] = entries.collect {
-      case s if s.isFile &&
-          (s.getPath.getName.startsWith("_tag.") ||
-            s.getPath.getName.startsWith("_branch.")) &&
-          !s.getPath.getName.contains(".tmp.") =>
-        scala.util.Try(readRefFile(f, s.getPath)._1).toOption.toSeq
-    }.flatten.toSet
     val candidates = versions.collect {
-      case (v, _) if v <= latest - keepLast && !pinned(v) => v
-      case (v, s) if v > latest && aged(s) && !pinned(v) => v
+      case (v, _) if v <= latest - keepLast => v
+      case (v, s) if v > latest && aged(s) => v
     }
     // merge-on-read versions serve files that PHYSICALLY live in
     // older version directories (`_refs.json`) — deleting a
@@ -3663,10 +3419,9 @@ object Snapshots {
       f.delete(new Path(dir, s"_pubtime.$v"), false)
     }
     // stages abandoned by crashed writers (and the `_stage-*`
-    // siblings of stores written before `_staging/`), plus claim
-    // markers moved aside by crashed-winner recovery (dead by
-    // construction once renamed — kept only through the grace window
-    // for forensics)
+    // siblings of stores written before `_staging/`), plus retired
+    // claim markers (dead by construction once renamed — kept only
+    // through the grace window for forensics)
     val staging = new Path(dir, StagingDir)
     val stages =
       if (f.exists(staging)) f.listStatus(staging).toSeq else Nil
@@ -3676,11 +3431,11 @@ object Snapshots {
             s.getPath.getName.contains(".stale-"))))
       .filter(aged).foreach(s => f.delete(s.getPath, s.isDirectory))
     // LIVE claim markers with no corresponding v=N directory: a
-    // committer that died between claim and data write (and, with
-    // claimGraceMs=0, no CAS steal will ever run). nextFreeVersion
-    // honors live markers, so an unreclaimed corpse burns its slot
-    // forever. Same grace rule as stage directories — an in-flight
-    // committer's fresh claim is never swept by a graced vacuum.
+    // committer that died between claim and slot rename.
+    // nextFreeVersion honors live markers, so an unreclaimed corpse
+    // burns its slot forever. Same grace rule as stage directories —
+    // an in-flight committer's fresh claim is never swept by a graced
+    // vacuum.
     val survivingVersions = versions.map(_._1).toSet -- doomed
     entries.filter { s =>
       s.isFile && s.getPath.getName.matches("_claim\\.\\d+") &&
@@ -3688,142 +3443,5 @@ object Snapshots {
         !survivingVersions(s.getPath.getName.stripPrefix("_claim.").toLong)
     }.foreach(s => f.delete(s.getPath, false))
     doomed
-  }
-
-  // ---- tags & branches: named refs over the same version log ------
-  // Iceberg/Nessie-style zero-copy refs: a ref is a tiny file naming
-  // a version — no data is ever copied. Tags are IMMUTABLE (audit
-  // marks: "the training run read exactly this"); branches are
-  // movable heads for write-audit-merge workflows: stage commits on a
-  // branch, validate, then fast-forward main only if it hasn't moved
-  // since the branch was cut. vacuum() pins every ref'd version.
-
-  private def refName(name: String): String = {
-    require(name.nonEmpty && name.forall(c =>
-      c.isLetterOrDigit || c == '-' || c == '_'),
-      s"ref names are [A-Za-z0-9_-]+: '$name'")
-    name
-  }
-
-  /** ref file = "<version> <base>" (base meaningful for branches). */
-  private def readRefFile(f: org.apache.hadoop.fs.FileSystem,
-      p: Path): (Long, Long) = {
-    val in = f.open(p)
-    val parts =
-      try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-        "US-ASCII").trim.split(" ")
-      finally in.close()
-    (parts(0).toLong, if (parts.length > 1) parts(1).toLong else 0L)
-  }
-
-  private def writeRefAtomic(spark: SparkSession, dir: String,
-      p: Path, head: Long, base: Long): Unit = {
-    val f = fs(spark, dir)
-    val tmp = f.makeQualified(new Path(dir,
-      s"${p.getName}.tmp.${java.util.UUID.randomUUID()}"))
-    val out = f.create(tmp, true)
-    try out.write(s"$head $base".getBytes("US-ASCII"))
-    finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      tmp.toUri, spark.sparkContext.hadoopConfiguration)
-    fc.rename(tmp, f.makeQualified(p),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
-
-  /** Tag a committed version (default: latest) under an immutable
-    * name — create-exclusive, so re-tagging an existing name throws
-    * instead of silently moving an audit mark. Returns the tagged
-    * version. */
-  def tag(spark: SparkSession, dir: String, name: String,
-      version: Long = -1L): Long = {
-    val f = fs(spark, dir)
-    val v = if (version > 0) version else latestVersion(spark, dir)
-    require(v > 0 && f.exists(new Path(dir, s"v=$v")),
-      s"cannot tag nonexistent v=$v")
-    val p = new Path(dir, s"_tag.${refName(name)}")
-    val out = f.create(p, false) // exclusive: tags are immutable
-    try out.write(s"$v 0".getBytes("US-ASCII")) finally out.close()
-    v
-  }
-
-  def tagVersion(spark: SparkSession, dir: String, name: String): Long =
-    readRefFile(fs(spark, dir),
-      new Path(dir, s"_tag.${refName(name)}"))._1
-
-  def readTag(spark: SparkSession, dir: String, name: String): DataFrame =
-    read(spark, dir, tagVersion(spark, dir, name))
-
-  def dropTag(spark: SparkSession, dir: String, name: String): Unit = {
-    fs(spark, dir).delete(new Path(dir, s"_tag.${refName(name)}"), false)
-    ()
-  }
-
-  /** Cut a branch at `from` (default: latest). head = base = from
-    * until the first branch commit. */
-  def createBranch(spark: SparkSession, dir: String, name: String,
-      from: Long = -1L): Long = {
-    val v = if (from > 0) from else latestVersion(spark, dir)
-    require(v > 0, s"$dir has no committed version to branch from")
-    val p = new Path(dir, s"_branch.${refName(name)}")
-    require(!fs(spark, dir).exists(p), s"branch '$name' already exists")
-    writeRefAtomic(spark, dir, p, v, v)
-    v
-  }
-
-  /** (head, base) of a branch. */
-  def branchHead(spark: SparkSession, dir: String, name: String)
-      : (Long, Long) =
-    readRefFile(fs(spark, dir),
-      new Path(dir, s"_branch.${refName(name)}"))
-
-  def readBranch(spark: SparkSession, dir: String, name: String)
-      : DataFrame =
-    read(spark, dir, branchHead(spark, dir, name)._1)
-
-  /** Commit `df` onto a branch: the data lands in the shared version
-    * log through the pipeline's Replace policy (next free `v=` slot,
-    * claimed by an EXCLUSIVE-CREATE `_claim.N` marker and occupied by
-    * an all-or-nothing rename with the nested-merge backstop — so
-    * concurrent main or sibling-branch committers can never take the
-    * same slot) and only the branch ref moves; main's pointer is
-    * untouched. The claim is RETIRED once the slot is occupied: the
-    * branch version is settled, and a live claim on a slot main never
-    * publishes would make every head-bound writer on main (every SQL
-    * statement) wait for a publish that never comes. Single writer PER
-    * BRANCH (like main's plain commit); cross-branch concurrency is
-    * safe via the claim marker. */
-  def commitToBranch(spark: SparkSession, df: DataFrame, dir: String,
-      name: String, maxAttempts: Int = 5): Long = {
-    val (_, base) = branchHead(spark, dir, name)
-    val ref = new Path(dir, s"_branch.${refName(name)}")
-    commitNew(spark, dir, Replace(
-      Some((v: Long) => writeRefAtomic(spark, dir, ref, v, base)),
-      maxAttempts))(stageFrame(spark, dir, df))
-  }
-
-  /** Fast-forward main to the branch head, ONLY if main still sits
-    * where the branch was cut (the merge precondition — anything else
-    * needs a real merge, which is the caller's data-level decision).
-    * On success the branch's base advances to its head (in sync);
-    * returns Right(head). */
-  def publishBranch(spark: SparkSession, dir: String, name: String)
-      : Either[String, Long] = {
-    val (head, base) = branchHead(spark, dir, name)
-    val cur = latestVersion(spark, dir)
-    if (cur != base)
-      Left(s"conflict: branch '$name' was cut at v=$base but main is " +
-        s"at v=$cur — rebase or merge before publishing")
-    else {
-      publish(spark, dir, head)
-      writeRefAtomic(spark, dir,
-        new Path(dir, s"_branch.${refName(name)}"), head, head)
-      Right(head)
-    }
-  }
-
-  def dropBranch(spark: SparkSession, dir: String, name: String): Unit = {
-    fs(spark, dir).delete(
-      new Path(dir, s"_branch.${refName(name)}"), false)
-    ()
   }
 }

@@ -65,16 +65,14 @@ import graft.operators.Snapshots
   * on staleness drops the cache entry and rebuilds the relation at
   * the current head, keeping the statement's resolved output
   * attributes. Explicitly pinned tables (versionAsOf / timestampAsOf
-  * / tag / branch / endingVersion options) are never stale by
-  * definition. If the head's SCHEMA evolved, the in-flight statement
-  * keeps its resolved shape (this query runs at its old version) and
-  * only the cache is invalidated — the next statement re-resolves
-  * with the new schema. */
+  * / endingVersion options) are never stale by definition. If the
+  * head's SCHEMA evolved, the in-flight statement keeps its resolved
+  * shape (this query runs at its old version) and only the cache is
+  * invalidated — the next statement re-resolves with the new schema. */
 case class SnapshotFreshnessRule(spark: SparkSession)
     extends Rule[LogicalPlan] {
 
-  private val pins = Seq("versionasof", "timestampasof", "tag",
-    "branch", "endingversion")
+  private val pins = Seq("versionasof", "timestampasof", "endingversion")
 
   private def servedVersion(lr: LogicalRelation): Long =
     lr.relation match {

@@ -98,7 +98,7 @@ object SnapshotSqlParser {
 
   /** `VERSION AS OF` / `TIMESTAMP AS OF` on a snapshot table: the
     * parser resolves the PINNED relation itself (through the
-    * connector, so tag semantics / MoR assembly / pruning all apply)
+    * connector, so pin semantics / MoR assembly / pruning all apply)
     * — by the time ResolveRelations would throw UNSUPPORTED_FEATURE,
     * the node is already a resolved subtree it leaves alone. */
   private def rewriteTimeTravel(spark: SparkSession,
@@ -280,14 +280,11 @@ case class DescribeHistoryCommand(dir: String)
     AttributeReference("rows", LongType, nullable = true)(),
     AttributeReference("epochs", StringType, nullable = false)(),
     AttributeReference("stats_manifest", BooleanType,
-      nullable = false)(),
-    AttributeReference("tags", StringType, nullable = false)(),
-    AttributeReference("branches", StringType, nullable = false)())
+      nullable = false)())
   override def run(spark: SparkSession): Seq[Row] =
     Snapshots.history(spark, dir).map { v =>
       Row(v.version, v.published, v.nDataFiles, v.bytes,
         v.rows.map(Long.box).orNull, v.epochs.mkString(","),
-        v.hasStats, v.tags.mkString(","),
-        v.branches.mkString(","))
+        v.hasStats)
     }
 }

@@ -26,8 +26,6 @@ import graft.operators.Snapshots
   *   - `timestampAsOf` — time travel by commit time
   *     ([[Snapshots.versionAt]]; epoch millis, ISO-8601, or
   *     `yyyy-MM-dd HH:mm:ss` UTC)
-  *   - `tag`           — an immutable [[Snapshots.tag]] name
-  *   - `branch`        — a [[Snapshots.createBranch]] head
   * plus `readChangeFeed=true` (+ `startingVersion`/`endingVersion`)
   * for the version-ranged append replay as a batch DataFrame (rows
   * tagged `_version` — [[Snapshots.readAppendsSince]] semantics), and
@@ -145,7 +143,7 @@ class SnapshotDataSource extends RelationProvider
     if (parameters.get("readChangeFeed").exists(_.toBoolean)) {
       // a head pin makes no sense on a version-RANGED feed — refuse
       // rather than silently ignore it (endingVersion is the bound)
-      val pinned = Seq("versionAsOf", "timestampAsOf", "tag", "branch")
+      val pinned = Seq("versionAsOf", "timestampAsOf")
         .filter(parameters.contains)
       require(pinned.isEmpty,
         s"snapshot: ${pinned.mkString("/")} cannot combine with " +
@@ -187,9 +185,7 @@ class SnapshotDataSource extends RelationProvider
     }
     val pins = Seq(
       parameters.get("versionAsOf").map(_ => "versionAsOf"),
-      parameters.get("timestampAsOf").map(_ => "timestampAsOf"),
-      parameters.get("tag").map(_ => "tag"),
-      parameters.get("branch").map(_ => "branch")).flatten
+      parameters.get("timestampAsOf").map(_ => "timestampAsOf")).flatten
     require(pins.size <= 1,
       s"snapshot: ${pins.mkString(" and ")} are mutually exclusive")
     val version: Long = parameters.get("versionAsOf") match {
@@ -209,13 +205,7 @@ class SnapshotDataSource extends RelationProvider
       case None => parameters.get("timestampAsOf") match {
         case Some(ts) =>
           Snapshots.versionAt(spark, dir, parseTimestamp(ts))
-        case None => parameters.get("tag") match {
-          case Some(t) => Snapshots.tagVersion(spark, dir, t)
-          case None => parameters.get("branch") match {
-            case Some(b) => Snapshots.branchHead(spark, dir, b)._1
-            case None => -1L
-          }
-        }
+        case None => -1L
       }
     }
     // merge-on-read versions are an assembly (reference union +
@@ -296,7 +286,7 @@ class SnapshotDataSource extends RelationProvider
     createRelation(sqlContext,
       // the post-write relation is the NEW head, whatever pin the
       // caller had set for a preceding read
-      parameters - "versionAsOf" - "timestampAsOf" - "tag" - "branch")
+      parameters - "versionAsOf" - "timestampAsOf")
   }
 }
 

@@ -35,12 +35,11 @@ import graft.operators.Snapshots
   * one batch of new rows, the `versionedSink`/`commitWithEpoch`
   * discipline): for a full-snapshot table each version would replay
   * whole-table states, which is a different query (use k9's diff).
-  * Only main-line versions are delivered (a branch commit is not the
-  * table's history). A vacuumed gap inside a requested range throws
-  * loudly — a silent hole in a replayed stream is data loss; size
-  * vacuum `keepLast` to the slowest consumer. Rolling a streamed
-  * table BACK breaks offset monotonicity (offsets are versions) —
-  * prefer RESTORE, which moves history forward.
+  * Only main-line versions are delivered (a crashed committer's
+  * unpublished orphan is not the table's history). A vacuumed gap
+  * inside a requested range throws loudly — a silent hole in a
+  * replayed stream is data loss; size vacuum `keepLast` to the
+  * slowest consumer.
   *
   * `maxVersionsPerTrigger` paces a BACKFILL: without it, a stream
   * started against a long version history delivers the whole log as

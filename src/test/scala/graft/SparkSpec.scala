@@ -35,6 +35,16 @@ trait SparkSpec extends AnyFunSuite {
     (q, StatsFileIndex.indexOf(q).flatMap(_.lastPrune)
       .getOrElse(fail(s"no stats index census in the read of $dir")))
   }
+
+  /** Plants what a plain (Replace) committer killed between its slot
+    * rename and its publish leaves in `dir`: a complete `v=$v` holding
+    * `df` and its live `_claim.$v`, but no `_pubtime.$v` publication
+    * record. The next plain commit lands above it, so it sits below
+    * the head without ever having been main's history. */
+  def plantCrashOrphan(dir: String, v: Long, df: DataFrame): Unit = {
+    df.write.parquet(s"$dir/v=$v")
+    assert(new java.io.File(dir, s"_claim.$v").createNewFile())
+  }
 }
 
 object SparkSpec {

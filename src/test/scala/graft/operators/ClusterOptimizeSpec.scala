@@ -153,21 +153,4 @@ class ClusterOptimizeSpec extends SparkSpec {
     assert(after.columns.contains("z_bucket"))
     assert(after.select("z_bucket").distinct().count() == 3L)
   }
-
-  test("RESTORE carries the managed-bucket marker: a restored " +
-    "clustered version stays re-optimizable") {
-    val dir = freshDir("graft-zrest")
-    val df = (0L until 100L).map(k => (k, k % 10, k % 7))
-      .toDF("k", "x", "y")
-    Snapshots.commit(spark, df, dir)
-    Snapshots.optimizeClustered(spark, dir, "x", "y",
-      bits = 4, bucketWidth = 16L, quantizeCols = false) // v2 + marker
-    Snapshots.commit(spark, df, dir)                      // v3 decoy
-    val v4 = Snapshots.restore(spark, dir, 2L)
-    // the restored head owns z_bucket AND the provenance marker, so
-    // a re-run recognizes its own column instead of refusing
-    val (v5, cs) = Snapshots.optimizeClustered(spark, dir, "x", "y",
-      bits = 4, bucketWidth = 16L, quantizeCols = false)
-    assert(v4 == 4L && v5 == 5L && cs.rows == 100L)
-  }
 }

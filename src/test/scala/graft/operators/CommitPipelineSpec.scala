@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** The commit pipeline (stage → seal → claim → publish) as one
   * mechanism: maintenance rewrites abort on a moved head instead of
-  * reverting a statement, a branch commit never wedges main, a fault
+  * reverting a statement, a settled unpublished version never wedges
+  * main, a fault
   * at any step leaves the table at its old version, and stages are
   * readable without Spark's hidden-path warnings. */
 class CommitPipelineSpec extends SparkSpec {
@@ -77,47 +78,47 @@ class CommitPipelineSpec extends SparkSpec {
     assert(leftovers(dir).isEmpty, leftovers(dir))
   }
 
-  test("a branch commit never wedges main: SQL DML on main completes " +
-    "after it, a race across the branch version validates, and the " +
-    "branch still reads its own rows") {
-    val dir = freshDir("graft-branch-main")
+  test("a settled unpublished version never wedges main: SQL DML on " +
+    "main completes after it, a race across it validates, and its " +
+    "rows stay untouched") {
+    val dir = freshDir("graft-settled-main")
     Snapshots.commitWithStats(spark,
       (0L until 400L).map(i => (i, i / 100)).toDF("k", "b")
         .repartition(col("b")),
       dir, statsCols = Seq("k"), partitionByCols = Seq("b"))
-    spark.sql(s"CREATE TABLE pipeline_branch USING snapshot " +
+    spark.sql(s"CREATE TABLE pipeline_settled USING snapshot " +
       s"OPTIONS (path '$dir')")
-    Snapshots.createBranch(spark, dir, "wap")
-    val bv = Snapshots.commitToBranch(spark,
-      Seq((7000L, 70L)).toDF("k", "b"), dir, "wap")
-    assert(bv == 2L)
-    assert(spark.sql("DELETE FROM pipeline_branch WHERE k < 10")
+    // a complete v=N above the head with no live claim: no writer will
+    // ever publish it (a leftover of a store written before slots were
+    // claimed)
+    def settle(v: Long, k: Long): Unit =
+      Seq((k, k / 100)).toDF("k", "b").write.parquet(s"$dir/v=$v")
+    settle(2L, 7000L)
+    assert(spark.sql("DELETE FROM pipeline_settled WHERE k < 10")
       .head.getLong(0) == 10L)
-    assert(spark.sql("INSERT INTO pipeline_branch VALUES (9000, 90)")
+    assert(spark.sql("INSERT INTO pipeline_settled VALUES (9000, 90)")
       .head.getLong(0) == 1L)
-    assert(spark.sql("SELECT count(*) FROM pipeline_branch")
+    assert(spark.sql("SELECT count(*) FROM pipeline_settled")
       .head.getLong(0) == 391L)
-    // two statements race from the same head while the branch version
+    // two statements race from the same head while a settled version
     // sits inside the range the winner's head descends through:
     // validation follows main's `_dml.json` chain, not every v=N
     val h = Snapshots.latestVersion(spark, dir)
-    Snapshots.createBranch(spark, dir, "wap2")
-    Snapshots.commitToBranch(spark, Seq((8000L, 80L)).toDF("k", "b"),
-      dir, "wap2")
+    settle(h + 1, 8000L)
     val (v, rs) = PipelineHook.raceAt(dir, "seal") {
       Snapshots.deleteWhere(spark, dir, col("k") >= 390L); ()
     }(Snapshots.deleteWhere(spark, dir, col("k") === 150L))
     assert(rs.rowsChanged == 1L)
     assert(v == h + 3, s"landed at $v over head $h")
     // 391 - (390..399 and the inserted 9000) - 150
-    assert(spark.sql("SELECT count(*) FROM pipeline_branch")
+    assert(spark.sql("SELECT count(*) FROM pipeline_settled")
       .head.getLong(0) == 379L)
-    // both branches still read exactly their own heads
-    assert(Snapshots.readBranch(spark, dir, "wap").collect()
-      .map(_.getLong(0)).toSeq == Seq(7000L))
-    assert(Snapshots.readBranch(spark, dir, "wap2").collect()
-      .map(_.getLong(0)).toSeq == Seq(8000L))
-    spark.sql("DROP TABLE pipeline_branch")
+    // both settled versions still hold exactly their own rows
+    Seq(2L -> 7000L, h + 1 -> 8000L).foreach { case (sv, k) =>
+      assert(spark.read.parquet(s"$dir/v=$sv").select("k").as[Long]
+        .collect().toSeq == Seq(k))
+    }
+    spark.sql("DROP TABLE pipeline_settled")
   }
 
   test("a fault after any pipeline step leaves the old version, a " +

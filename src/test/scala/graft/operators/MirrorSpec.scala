@@ -19,6 +19,12 @@ class MirrorSpec extends SparkSpec {
   private def batch(lo: Long, hi: Long): DataFrame =
     (lo until hi).map(k => (k, s"s$k")).toDF("k", "s")
 
+  /** The newest epoch the destination's published versions carry —
+    * the consumer offset its fence resumes from. */
+  private def lastEpoch(dir: String): Option[Long] =
+    Snapshots.history(spark, dir).filter(_.published)
+      .flatMap(_.epochs).maxOption
+
   test("mirror catches up version by version, is idempotent when " +
     "caught up, and picks up only new versions after") {
     val src = freshDir("graft-msrc")
@@ -28,7 +34,7 @@ class MirrorSpec extends SparkSpec {
     val done = Snapshots.mirrorAppends(spark, src, dst,
       _.filter(col("k") % 2 === 0))
     assert(done == Seq(1L, 2L))
-    assert(Snapshots.lastEpoch(spark, dst).contains(2L))
+    assert(lastEpoch(dst).contains(2L))
     // the destination is an append LOG — totals via the ranged replay
     assert(Snapshots.readAppendsSince(spark, dst, 0L).count() == 13,
       "evens in [0,25)")
@@ -62,7 +68,7 @@ class MirrorSpec extends SparkSpec {
       })
     }
     assert(boom.getMessage == "consumer crash")
-    assert(Snapshots.lastEpoch(spark, dst).contains(1L))
+    assert(lastEpoch(dst).contains(1L))
     // retry: v1 is fenced (not re-applied), v2 and v3 commit once
     val resumed = Snapshots.mirrorAppends(spark, src, dst)
     assert(resumed == Seq(2L, 3L))
@@ -84,13 +90,12 @@ class MirrorSpec extends SparkSpec {
     assert(e.getMessage.contains("vacuumed"))
   }
 
-  test("ranged readers follow main's publication records: a branch " +
-    "commit that main skipped is never replayed, mirrored or listed " +
+  test("ranged readers follow main's publication records: a crash " +
+    "orphan that main skipped is never replayed, mirrored or listed " +
     "as published") {
     val src = freshDir("graft-mainline")
     Snapshots.commit(spark, batch(0, 5), src)                // v1 main
-    Snapshots.createBranch(spark, src, "audit")
-    Snapshots.commitToBranch(spark, batch(100, 103), src, "audit") // v2
+    plantCrashOrphan(src, 2L, batch(100, 103))               // v2 orphan
     Snapshots.commit(spark, batch(5, 9), src)                // v3 main
     assert(Snapshots.latestVersion(spark, src) == 3L)
     val replay = Snapshots.readAppendsSince(spark, src, 0L)
@@ -105,33 +110,8 @@ class MirrorSpec extends SparkSpec {
     assert(Snapshots.history(spark, src)
       .map(h => (h.version, h.published)) ==
       Seq((1L, true), (2L, false), (3L, true)))
-    // the branch still reads as the branch
-    assert(Snapshots.readBranch(spark, src, "audit").count() == 3L)
-  }
-
-  test("restore reinstates an old version as a NEW commit: linear " +
-    "history, sidecars carried, epoch markers dropped") {
-    val dir = freshDir("graft-restore")
-    Snapshots.commitWithStats(spark, batch(0, 10), dir,
-      statsCols = Seq("k"), bloomCols = Seq("k"))
-    Snapshots.commit(spark, batch(0, 3), dir)    // the "bad" overwrite
-    val nv = Snapshots.restore(spark, dir, 1L)
-    assert(nv == 3L && Snapshots.latestVersion(spark, dir) == 3L)
-    assert(Snapshots.read(spark, dir).count() == 10L)
-    // the bad version stays time-travelable
-    assert(Snapshots.read(spark, dir, 2L).count() == 3L)
-    // sidecars came along: pruning + point lookup work on v3
-    val (_, ps) = prunedRead(dir, col("k") === 0, 3L)
-    assert(ps.filesRead + ps.filesSkipped > 0)
-    val (_, bl) = prunedRead(dir, col("k") === 5, 3L)
-    assert(bl.filesRead >= 1)
-    // restoring an epoch-marked version drops the marker: the fence
-    // must not see the restored commit as that epoch
-    val d2 = freshDir("graft-restep")
-    assert(Snapshots.commitWithEpoch(spark, batch(0, 4), d2, 1L).isRight)
-    assert(Snapshots.commitWithEpoch(spark, batch(4, 8), d2, 2L).isRight)
-    Snapshots.restore(spark, d2, 1L)
-    assert(Snapshots.lastEpoch(spark, d2).contains(2L))
+    // the orphan's bytes are left for vacuum, not rewritten
+    assert(Snapshots.read(spark, src, 2L).count() == 3L)
   }
 
   test("batches conform to the source's latest schema before the " +

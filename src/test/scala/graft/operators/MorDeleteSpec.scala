@@ -236,27 +236,6 @@ class MorDeleteSpec extends SparkSpec {
       .filter(col("b") === 9L).count() == 12L)
   }
 
-  test("RESTORE of an MoR version carries the reference list and " +
-    "deletion vectors — the restored head serves the identical " +
-    "assembly, never just the local files") {
-    val dir = freshDir("graft-morR")
-    build(dir)
-    Snapshots.deleteWhereMor(spark, dir, col("k") < 100L) // v2 (MoR)
-    // move the head past it, then restore the MoR state
-    Snapshots.appendVersion(spark,
-      (2000L until 2010L).map(i => (i, 0L, s"d$i"))
-        .toDF("k", "b", "payload").coalesce(1), dir)      // v3 (MoR)
-    val v4 = Snapshots.restore(spark, dir, 2L)
-    assert(v4 == 4L && Snapshots.isMorVersion(spark, dir, 4L))
-    val t = Snapshots.read(spark, dir)
-    assert(t.count() == 300L) // v2's exact content: 400 - 100 deleted
-    assert(t.filter(col("k") >= 2000L).count() == 0L)
-    assert(t.agg(min("k")).head().getLong(0) == 100L)
-    // a pure-delete MoR version has no local files; restore must not
-    // die on an empty stage either
-    assert(Snapshots.read(spark, dir, 4L).count() == 300L)
-  }
-
   test("compactVersion on an MoR head INHERITS the homes' sidecar " +
     "columns by default — the folded version prunes and answers " +
     "metadata-only without the caller naming the schema") {

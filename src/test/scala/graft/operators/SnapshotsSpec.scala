@@ -34,180 +34,6 @@ class SnapshotsSpec extends SparkSpec {
       .map(_.getString(1)).toSeq == Seq("a2", "c"))
   }
 
-  test("commitChecked (write-audit-publish): a dirty batch stages " +
-    "but never publishes; the table stays at the prior version") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-wap").toString + "/t"
-    val checks = (staged: org.apache.spark.sql.DataFrame) => Seq(
-      DataQuality.uniqueKey(staged, Seq("id"), "pk"),
-      DataQuality.nonNull(staged, "s", "nn"))
-    val r1 = Snapshots.commitChecked(spark,
-      Seq((1, Some("a")), (2, Some("b"))).toDF("id", "s"), dir, checks)
-    assert(r1 == Right(1L))
-    // dirty: duplicate key AND a null — both checks must report
-    val r2 = Snapshots.commitChecked(spark,
-      Seq((3, Some("c")), (3, Some("d")), (4, None))
-        .toDF("id", "s"), dir, checks)
-    assert(r2.isLeft)
-    assert(r2.swap.toOption.get.toMap == Map("pk" -> 1L, "nn" -> 1L))
-    // readers still see v1 — and the REJECTED batch must leave no
-    // v=2 directory and no live claim: CAS crashed-winner recovery
-    // publishes any unpublished v=N it finds under a stale claim, so
-    // rejected bytes in a version slot would be resurrectable as the
-    // table head (they live only in a deleted stage)
-    assert(Snapshots.latestVersion(spark, dir) == 1L)
-    assert(Snapshots.read(spark, dir).orderBy("id").collect()
-      .map(_.getInt(0)).toSeq == Seq(1, 2))
-    val f = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    assert(!f.exists(new org.apache.hadoop.fs.Path(dir, "v=2")),
-      "rejected WAP batch materialized a version directory")
-    assert(!f.exists(new org.apache.hadoop.fs.Path(dir, "_claim.2")),
-      "rejected WAP batch left a live claim")
-    // nothing for vacuum to reclaim; the slot is immediately reusable
-    assert(Snapshots.vacuum(spark, dir, keepLast = 1) == Seq())
-    // a clean retry publishes as v2
-    val r3 = Snapshots.commitChecked(spark,
-      Seq((3, Some("c")), (4, Some("d"))).toDF("id", "s"), dir, checks)
-    assert(r3 == Right(2L))
-    assert(Snapshots.read(spark, dir).count() == 2)
-  }
-
-  test("a rejected WAP batch can never be resurrected by CAS " +
-    "crashed-winner roll-forward") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-wap-cas").toString + "/t"
-    val checks = (staged: org.apache.spark.sql.DataFrame) => Seq(
-      DataQuality.nonNull(staged, "s", "nn"))
-    assert(Snapshots.commitChecked(spark,
-      Seq((1, Some("a"))).toDF("id", "s"), dir, checks) == Right(1L))
-    // audit reject: dirty v2 candidate
-    assert(Snapshots.commitChecked(spark,
-      Seq((2, None: Option[String])).toDF("id", "s"), dir,
-      checks).isLeft)
-    // a CAS committer arriving after any grace period must commit its
-    // OWN data as v2 — never publish the rejected batch
-    val r = Snapshots.commitCAS(spark,
-      Seq((3, "clean")).toDF("id", "s"), dir, expectedParent = 1L,
-      claimGraceMs = 1L)
-    assert(r == Right(2L), r.toString)
-    assert(Snapshots.read(spark, dir).collect().map(_.getInt(0)).toSeq
-      == Seq(3), "rejected WAP data reached the table head")
-  }
-
-  test("commitCAS: two committers racing from the same parent — " +
-    "exactly one wins; the loser gets an explicit conflict and " +
-    "leaves no staged bytes behind") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-cas").toString + "/t"
-    assert(Snapshots.commitCAS(spark,
-      Seq((0, "base")).toDF("id", "s"), dir, expectedParent = 0L)
-      == Right(1L))
-    // stale parent is rejected up front
-    assert(Snapshots.commitCAS(spark,
-      Seq((9, "stale")).toDF("id", "s"), dir, expectedParent = 0L).isLeft)
-    // race: both writers observed parent v1 before either committed
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    try {
-      val gate = new java.util.concurrent.CountDownLatch(1)
-      def racer(tag: String) = pool.submit(
-        new java.util.concurrent.Callable[Either[String, Long]] {
-          def call(): Either[String, Long] = {
-            gate.await()
-            Snapshots.commitCAS(spark,
-              Seq((1, tag)).toDF("id", "s"), dir, expectedParent = 1L)
-          }
-        })
-      val (fa, fb) = (racer("A"), racer("B"))
-      gate.countDown()
-      val rs = Seq(fa.get(), fb.get())
-      assert(rs.count(_.isRight) == 1, rs.toString)
-      assert(rs.find(_.isRight).get == Right(2L))
-      assert(rs.find(_.isLeft).get.swap.toOption.get.contains("conflict"))
-      assert(Snapshots.latestVersion(spark, dir) == 2L)
-      // the published v2 is the WINNER's frame, intact
-      assert(Set("A", "B").contains(Snapshots.read(spark, dir)
-        .collect().head.getString(1)))
-      // loser's staging was cleaned up
-      val leftovers = stages(dir)
-      assert(leftovers.isEmpty, leftovers.mkString(","))
-    } finally pool.shutdown()
-    // version numbers are not silently reused under CAS: after a
-    // rollback the old claim still guards v2 until vacuumed
-    Snapshots.rollback(spark, dir, 1)
-    assert(Snapshots.commitCAS(spark,
-      Seq((2, "re")).toDF("id", "s"), dir, expectedParent = 1L).isLeft)
-    Snapshots.vacuum(spark, dir, keepLast = 1)
-    assert(Snapshots.commitCAS(spark,
-      Seq((2, "re")).toDF("id", "s"), dir, expectedParent = 1L)
-      == Right(2L))
-    assert(Snapshots.read(spark, dir).collect().head.getString(1) == "re")
-  }
-
-  test("commitCAS crashed-winner recovery: a dead claim with complete " +
-    "data rolls forward; a claim-only corpse is stolen; a FRESH claim " +
-    "is never touched") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-cas-crash").toString + "/t"
-    assert(Snapshots.commitCAS(spark,
-      Seq((0, "base")).toDF("id", "s"), dir, 0L) == Right(1L))
-    val d = new java.io.File(dir)
-    def ageFile(name: String): Unit = {
-      val file = new java.io.File(d, name)
-      assert(file.setLastModified(System.currentTimeMillis() - 60000L))
-    }
-    // CASE 1: winner died between rename and publish — claim + v=2
-    // exist, pointer still at 1
-    Seq((2, "dead-but-complete")).toDF("id", "s")
-      .write.parquet(s"$dir/v=2")
-    assert(new java.io.File(d, "_claim.2").createNewFile())
-    ageFile("_claim.2")
-    val r1 = Snapshots.commitCAS(spark,
-      Seq((2, "mine")).toDF("id", "s"), dir, 1L, claimGraceMs = 1000L)
-    assert(r1.isLeft && r1.swap.toOption.get.contains("rolled forward"),
-      r1.toString)
-    // the dead commit's data is now the published v2
-    assert(Snapshots.latestVersion(spark, dir) == 2L)
-    assert(Snapshots.read(spark, dir).collect().head.getString(1)
-      == "dead-but-complete")
-    // roll-forward retires the dead winner's claim marker (renamed to
-    // the vacuumable .stale- form) — it must not linger live to be
-    // pointlessly grace-stolen by a later same-slot probe
-    assert(!new java.io.File(d, "_claim.2").exists())
-    assert(d.listFiles().exists(
-      _.getName.startsWith("_claim.2.stale-")))
-    // and the conflicted caller retries cleanly on top
-    assert(Snapshots.commitCAS(spark,
-      Seq((3, "retry")).toDF("id", "s"), dir, 2L, claimGraceMs = 1000L)
-      == Right(3L))
-    // CASE 2: winner died between claim and rename — claim only
-    assert(new java.io.File(d, "_claim.4").createNewFile())
-    ageFile("_claim.4")
-    assert(Snapshots.commitCAS(spark,
-      Seq((4, "stolen")).toDF("id", "s"), dir, 3L, claimGraceMs = 1000L)
-      == Right(4L))
-    assert(Snapshots.read(spark, dir).collect().head.getString(1)
-      == "stolen")
-    // the stale marker was moved aside, a fresh _claim.4 now guards v4
-    assert(d.listFiles().exists(f =>
-      f.getName.startsWith("_claim.4.stale-")))
-    // CASE 3: a FRESH claim (live committer inside its grace window)
-    // still conflicts — recovery must not steal it
-    assert(new java.io.File(d, "_claim.5").createNewFile())
-    val r3 = Snapshots.commitCAS(spark,
-      Seq((5, "impatient")).toDF("id", "s"), dir, 4L,
-      claimGraceMs = 3600000L)
-    assert(r3.isLeft && !r3.swap.toOption.get.contains("rolled"),
-      r3.toString)
-    assert(Snapshots.latestVersion(spark, dir) == 4L)
-    // graced vacuum sweeps the aged stale markers, keeps live claims
-    ageFile(d.listFiles().map(_.getName)
-      .find(_.startsWith("_claim.4.stale-")).get)
-    Snapshots.vacuum(spark, dir, keepLast = 10, orphanGraceMs = 1000L)
-    assert(!d.listFiles().exists(_.getName.contains(".stale-")))
-    assert(new java.io.File(d, "_claim.5").exists())
-  }
-
   test("vacuum orphanGraceMs: a fresh above-pointer directory (an " +
     "in-flight commit's staging) survives a graced vacuum") {
     val dir = java.nio.file.Files
@@ -223,178 +49,97 @@ class SnapshotsSpec extends SparkSpec {
     assert(Snapshots.vacuum(spark, dir, keepLast = 1) == Seq(2L))
   }
 
-  test("rollback is a pointer move; vacuum reclaims orphans and " +
-    "pre-horizon versions but never the protected window") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-snap2").toString + "/t"
-    (1 to 4).foreach(i =>
-      Snapshots.commit(spark, Seq((i, s"v$i")).toDF("id", "s"), dir))
-    assert(Snapshots.latestVersion(spark, dir) == 4L)
-    Snapshots.rollback(spark, dir, 3)
-    assert(Snapshots.latestVersion(spark, dir) == 3L)
-    assert(Snapshots.read(spark, dir).collect()
-      .head.getString(1) == "v3")
-    intercept[IllegalArgumentException] {
-      Snapshots.rollback(spark, dir, 9)
-    }
-    // vacuum keepLast=2 from latest=3: v4 is an orphan ABOVE the
-    // pointer, v1 is below the horizon; v2+v3 survive
-    val gone = Snapshots.vacuum(spark, dir, keepLast = 2)
-    assert(gone.sorted == Seq(1L, 4L), gone.toString)
-    assert(Snapshots.read(spark, dir, 2).collect()
-      .head.getString(1) == "v2")
-    assert(Snapshots.read(spark, dir, 3).collect()
-      .head.getString(1) == "v3")
-    // committing after a rollback continues from the pointer
-    val v = Snapshots.commit(spark,
-      Seq((5, "v4b")).toDF("id", "s"), dir)
-    assert(v == 4L)
-    assert(Snapshots.read(spark, dir).collect()
-      .head.getString(1) == "v4b")
-  }
-
-  test("tags are immutable named refs: read-by-tag time-travels, " +
-    "re-tagging throws, vacuum never reclaims a tagged version") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-tags").toString + "/t"
-    Snapshots.commit(spark, Seq((1, "v1")).toDF("id", "s"), dir)
-    Snapshots.commit(spark, Seq((1, "v2")).toDF("id", "s"), dir)
-    assert(Snapshots.tag(spark, dir, "train-2024q3", 1L) == 1L)
-    Snapshots.commit(spark, Seq((1, "v3")).toDF("id", "s"), dir)
-    Snapshots.commit(spark, Seq((1, "v4")).toDF("id", "s"), dir)
-    assert(Snapshots.readTag(spark, dir, "train-2024q3")
-      .collect().head.getString(1) == "v1")
-    intercept[Exception] { Snapshots.tag(spark, dir, "train-2024q3", 2L) }
-    // keepLast=1 would normally doom v1..v3; the tag pins v1
-    val gone = Snapshots.vacuum(spark, dir, keepLast = 1)
-    assert(gone.sorted == Seq(2L, 3L), gone.toString)
-    assert(Snapshots.readTag(spark, dir, "train-2024q3")
-      .collect().head.getString(1) == "v1")
-    Snapshots.dropTag(spark, dir, "train-2024q3")
-    assert(Snapshots.vacuum(spark, dir, keepLast = 1) == Seq(1L))
-  }
-
-  test("branches: zero-copy cut, commits move only the branch ref, " +
-    "fast-forward publish requires an unmoved main, vacuum keeps " +
-    "live branch heads") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-br").toString + "/t"
-    Snapshots.commit(spark, Seq((1, "main1")).toDF("id", "s"), dir)
-    assert(Snapshots.createBranch(spark, dir, "wap") == 1L)
-    val bv = Snapshots.commitToBranch(spark,
-      Seq((1, "staged")).toDF("id", "s"), dir, "wap")
-    assert(bv == 2L)
-    // main untouched; branch readable at its head
-    assert(Snapshots.read(spark, dir).collect().head.getString(1)
-      == "main1")
-    assert(Snapshots.readBranch(spark, dir, "wap")
-      .collect().head.getString(1) == "staged")
-    // a branch-head version above the pointer survives vacuum even
-    // with zero grace (it is a live ref, not a crashed orphan)
-    assert(Snapshots.vacuum(spark, dir, keepLast = 1).isEmpty)
-    // fast-forward: main still at the branch base -> publishes
-    assert(Snapshots.publishBranch(spark, dir, "wap") == Right(2L))
-    assert(Snapshots.read(spark, dir).collect().head.getString(1)
-      == "staged")
-    // a second branch cut at v2, then main moves -> publish conflicts
-    Snapshots.createBranch(spark, dir, "late")
-    Snapshots.commitToBranch(spark,
-      Seq((1, "late-work")).toDF("id", "s"), dir, "late")
-    Snapshots.commit(spark, Seq((1, "main-moved")).toDF("id", "s"), dir)
-    val r = Snapshots.publishBranch(spark, dir, "late")
-    assert(r.isLeft && r.left.exists(_.contains("conflict")), r.toString)
-    // the branch head is still intact for a rebase
-    assert(Snapshots.readBranch(spark, dir, "late")
-      .collect().head.getString(1) == "late-work")
-    Snapshots.dropBranch(spark, dir, "late")
-  }
-
-  test("version allocator honors live _claim markers: a CAS writer " +
-    "that claimed-but-not-yet-renamed never loses its slot to a " +
-    "plain or branch commit") {
+  test("version allocator honors live _claim markers: a writer that " +
+    "claimed-but-not-yet-renamed never loses its slot to a plain " +
+    "commit; a retired .stale- marker frees its slot") {
     val dir = java.nio.file.Files
       .createTempDirectory("graft-claim-alloc").toString + "/t"
     Snapshots.commit(spark, Seq((1, "main1")).toDF("id", "s"), dir)
-    Snapshots.createBranch(spark, dir, "b")
-    // simulate an in-flight commitCAS: _claim.2 exists, v=2 does not
+    // simulate an in-flight committer: _claim.2 exists, v=2 does not
     assert(new java.io.File(new java.io.File(dir), "_claim.2")
       .createNewFile())
-    // both allocator-driven paths must skip the claimed slot
-    assert(Snapshots.commitToBranch(spark,
-      Seq((2, "branch")).toDF("id", "s"), dir, "b") == 3L)
+    // every later plain commit skips the claimed slot
     assert(Snapshots.commit(spark,
-      Seq((3, "main2")).toDF("id", "s"), dir) == 4L)
+      Seq((2, "main2")).toDF("id", "s"), dir) == 3L)
+    assert(Snapshots.commit(spark,
+      Seq((3, "main3")).toDF("id", "s"), dir) == 4L)
     // the claimed slot is still free for its owner's rename
     assert(!new java.io.File(s"$dir/v=2").exists())
     // a retired (.stale-) marker does NOT occupy a slot
     val d2 = java.nio.file.Files
       .createTempDirectory("graft-claim-stale").toString + "/t"
     Snapshots.commit(spark, Seq((1, "x")).toDF("id", "s"), d2)
-    assert(new java.io.File(new java.io.File(d2),
-      "_claim.2.stale-dead").createNewFile())
+    val stale = new java.io.File(new java.io.File(d2), "_claim.2.stale-dead")
+    assert(stale.createNewFile())
     assert(Snapshots.commit(spark,
       Seq((2, "y")).toDF("id", "s"), d2) == 2L)
+    // a graced vacuum sweeps the aged retired marker, keeps live claims
+    assert(stale.setLastModified(System.currentTimeMillis() - 60000L))
+    Snapshots.vacuum(spark, d2, keepLast = 10, orphanGraceMs = 1000L)
+    assert(!stale.exists())
+    assert(new java.io.File(new java.io.File(d2), "_claim.2").exists())
   }
 
-  test("commitCAS nested-merge backstop: an occupied slot with NO " +
-    "claim marker (pre-claim-era rollback leftover) conflicts instead " +
-    "of corrupting — the old data stays intact, the stage is removed") {
+  test("nested-merge backstop: a slot occupied under a plain " +
+    "commit's claim is never merged into — the old data stays " +
+    "intact and the commit lands in the next free slot") {
     val dir = java.nio.file.Files
-      .createTempDirectory("graft-cas-nested").toString + "/t"
-    assert(Snapshots.commitCAS(spark,
-      Seq((0, "base")).toDF("id", "s"), dir, 0L) == Right(1L))
-    // plant an occupied v=2 with no claim marker: the state a plain
-    // commit + rollback left behind before commit() claimed slots
-    Seq((2, "old-v2")).toDF("id", "s").write.parquet(s"$dir/v=2")
-    val r = Snapshots.commitCAS(spark,
-      Seq((2, "clobber")).toDF("id", "s"), dir, 1L)
-    assert(r.isLeft && r.swap.toOption.get.contains("already exists"),
-      r.toString)
+      .createTempDirectory("graft-nested").toString + "/t"
+    assert(Snapshots.commit(spark,
+      Seq((0, "base")).toDF("id", "s"), dir) == 1L)
+    // once the commit holds _claim.2, plant an occupied v=2 with no
+    // claim of its own: a pre-claim-era leftover, or a local-FS claim
+    // race the exclusive create did not serialize
+    val v = PipelineHook.raceAt(dir, "claim") {
+      Seq((2, "old-v2")).toDF("id", "s").write.parquet(s"$dir/v=2")
+    }(Snapshots.commit(spark, Seq((2, "mine")).toDF("id", "s"), dir))
+    assert(v == 3L)
     // v=2 was NOT merged-into: exactly the old rows, no nested stage
     val inside = new java.io.File(s"$dir/v=2").listFiles()
       .filter(_.isDirectory)
     assert(inside.isEmpty, inside.mkString(","))
     assert(spark.read.parquet(s"$dir/v=2").collect()
       .map(_.getString(1)).toSeq == Seq("old-v2"))
-    // the loser's staging is gone and its claim was retired
+    // the first attempt's claim was retired and its stage reused
     val d = new java.io.File(dir)
     assert(stages(dir).isEmpty)
     assert(!new java.io.File(d, "_claim.2").exists())
     assert(d.listFiles().exists(_.getName.startsWith("_claim.2.stale-")))
-    // table head is untouched
-    assert(Snapshots.latestVersion(spark, dir) == 1L)
+    assert(Snapshots.latestVersion(spark, dir) == 3L)
+    assert(Snapshots.read(spark, dir).collect()
+      .map(_.getString(1)).toSeq == Seq("mine"))
   }
 
-  test("plain commit claims its slot: a racing main committer and " +
-    "branch committer always take distinct versions") {
+  test("plain commit claims its slot: two racing committers always " +
+    "take distinct versions and neither clobbers the other") {
     val dir = java.nio.file.Files
-      .createTempDirectory("graft-main-br-race").toString + "/t"
+      .createTempDirectory("graft-main-race").toString + "/t"
     Snapshots.commit(spark, Seq((1, "main1")).toDF("id", "s"), dir)
     // the marker persists alongside its version
     assert(new java.io.File(new java.io.File(dir), "_claim.1").exists())
-    Snapshots.createBranch(spark, dir, "b")
     val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
     try {
       val gate = new java.util.concurrent.CountDownLatch(1)
-      val fm = pool.submit(new java.util.concurrent.Callable[Long] {
-        def call(): Long = { gate.await()
-          Snapshots.commit(spark,
-            Seq((1, "main2")).toDF("id", "s"), dir) }
-      })
-      val fb = pool.submit(new java.util.concurrent.Callable[Long] {
-        def call(): Long = { gate.await()
-          Snapshots.commitToBranch(spark,
-            Seq((1, "branch")).toDF("id", "s"), dir, "b") }
-      })
+      def racer(tag: String) = pool.submit(
+        new java.util.concurrent.Callable[Long] {
+          def call(): Long = { gate.await()
+            Snapshots.commit(spark, Seq((1, tag)).toDF("id", "s"), dir) }
+        })
+      val (fa, fb) = (racer("a"), racer("b"))
       gate.countDown()
-      val (vm, vb) = (fm.get(), fb.get())
-      assert(vm != vb, s"main and branch both took v=$vm")
-      assert(Set(vm, vb) == Set(2L, 3L), s"$vm/$vb")
-      // neither clobbered the other: each slot holds exactly its own
-      assert(Snapshots.read(spark, dir).collect()
-        .map(_.getString(1)).toSeq == Seq("main2"))
-      assert(Snapshots.readBranch(spark, dir, "b").collect()
-        .map(_.getString(1)).toSeq == Seq("branch"))
+      val (va, vb) = (fa.get(), fb.get())
+      assert(va != vb, s"both committers took v=$va")
+      assert(Set(va, vb) == Set(2L, 3L), s"$va/$vb")
+      // each slot holds exactly its own committer's rows, with no
+      // nested stage (the local-FS rename-merge failure mode the claim
+      // marker exists to prevent)
+      Seq(va -> "a", vb -> "b").foreach { case (v, tag) =>
+        assert(Snapshots.read(spark, dir, v).collect()
+          .map(_.getString(1)).toSeq == Seq(tag))
+        val nested = new java.io.File(s"$dir/v=$v").listFiles()
+          .filter(_.isDirectory)
+        assert(nested.isEmpty, nested.mkString(","))
+      }
     } finally pool.shutdown()
   }
 
@@ -416,43 +161,6 @@ class SnapshotsSpec extends SparkSpec {
     assert(new java.io.File(d, "_claim.9").exists(), "fresh claim swept")
     // _claim.1 guards a surviving version — never an orphan
     assert(new java.io.File(d, "_claim.1").exists())
-  }
-
-  test("concurrent commits to two branches claim distinct slots and " +
-    "each branch reads exactly its own data") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-br-race").toString + "/t"
-    Snapshots.commit(spark, Seq((1, "main1")).toDF("id", "s"), dir)
-    Snapshots.createBranch(spark, dir, "ba")
-    Snapshots.createBranch(spark, dir, "bb")
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    try {
-      val gate = new java.util.concurrent.CountDownLatch(1)
-      def racer(branch: String) = pool.submit(
-        new java.util.concurrent.Callable[Long] {
-          def call(): Long = {
-            gate.await()
-            Snapshots.commitToBranch(spark,
-              Seq((1, branch)).toDF("id", "s"), dir, branch)
-          }
-        })
-      val (fa, fb) = (racer("ba"), racer("bb"))
-      gate.countDown()
-      val (va, vb) = (fa.get(), fb.get())
-      assert(va != vb, s"both branches claimed v=$va")
-      assert(Set(va, vb) == Set(2L, 3L), s"$va/$vb")
-      assert(Snapshots.readBranch(spark, dir, "ba")
-        .collect().map(_.getString(1)).toSeq == Seq("ba"))
-      assert(Snapshots.readBranch(spark, dir, "bb")
-        .collect().map(_.getString(1)).toSeq == Seq("bb"))
-      // no version directory contains a nested stage (the local-FS
-      // rename-merge failure mode the claim marker exists to prevent)
-      Seq(va, vb).foreach { v =>
-        val nested = new java.io.File(s"$dir/v=$v").listFiles()
-          .filter(_.isDirectory)
-        assert(nested.isEmpty, nested.mkString(","))
-      }
-    } finally pool.shutdown()
   }
 
   test("compaction preserves the exactly-once epoch fence: a " +
@@ -575,8 +283,8 @@ class SnapshotsSpec extends SparkSpec {
     assert(pruned.count() == 1)
   }
 
-  test("epoch-fenced and quality-gated commits seal stats/bloom " +
-    "sidecars — streaming and WAP tables stay pruning-capable") {
+  test("epoch-fenced commits seal stats/bloom sidecars — streaming " +
+    "tables stay pruning-capable") {
     import org.apache.spark.sql.functions.col
     val dir = java.nio.file.Files
       .createTempDirectory("graft-epoch-stats").toString + "/t"
@@ -594,21 +302,6 @@ class SnapshotsSpec extends SparkSpec {
     assert(ps.filesSkipped >= 1, ps.toString)
     val (pl, _) = prunedRead(dir, col("uid") === "u-150")
     assert(pl.count() == 1)
-    // WAP: an accepted batch seals sidecars; a rejected one leaves
-    // nothing (and pays no stats scan)
-    val dir2 = java.nio.file.Files
-      .createTempDirectory("graft-wap-stats").toString + "/t"
-    val ok = Snapshots.commitChecked(spark, df, dir2,
-      staged => Seq(DataQuality.uniqueKey(staged, Seq("k"), "pk")),
-      statsCols = Seq("k"))
-    assert(ok == Right(1L))
-    assert(new java.io.File(s"$dir2/v=1/_stats.json").exists())
-    val bad = Snapshots.commitChecked(spark,
-      df.unionAll(df), dir2,
-      staged => Seq(DataQuality.uniqueKey(staged, Seq("k"), "pk")),
-      statsCols = Seq("k"))
-    assert(bad.isLeft)
-    assert(Snapshots.latestVersion(spark, dir2) == 1L)
   }
 
   test("copy-on-write deleteWhere/updateWhere: only sidecar-affected " +
@@ -703,13 +396,11 @@ class SnapshotsSpec extends SparkSpec {
     assert(Snapshots.read(spark, dir).count() == 401)
     // DESCRIBE HISTORY: metadata-only version log — rows from the
     // manifest (never a scan), sidecar presence, publish status
-    Snapshots.tag(spark, dir, "audit", 2L)
     val h = Snapshots.history(spark, dir)
     assert(h.map(_.version) == Seq(1L, 2L, 3L))
     assert(h.forall(_.published))
     assert(h.map(_.rows) == Seq(Some(400L), Some(401L), Some(401L)))
     assert(h.forall(v => v.hasStats && v.bloomCols == Seq("k")))
-    assert(h.find(_.version == 2L).get.tags == Seq("audit"))
     assert(h.forall(_.nDataFiles >= 1))
   }
 

@@ -28,22 +28,16 @@ class SnapshotSourceSpec extends SparkSpec {
     dir
   }
 
-  test("load() reads the latest head; versionAsOf/tag/branch pin " +
-    "history; the pins are mutually exclusive") {
+  test("load() reads the latest head; versionAsOf pins history; " +
+    "the pins are mutually exclusive") {
     val dir = store()
     assert(spark.read.format("snapshot").load(dir).count() == 1L)
     val v1 = spark.read.format("snapshot")
       .option("versionAsOf", "1").load(dir)
     assert(v1.count() == 400L)
-    Snapshots.tag(spark, dir, "audit", 1L)
-    assert(spark.read.format("snapshot").option("tag", "audit")
-      .load(dir).count() == 400L)
-    Snapshots.createBranch(spark, dir, "dev", 1L)
-    assert(spark.read.format("snapshot").option("branch", "dev")
-      .load(dir).count() == 400L)
     val e = intercept[IllegalArgumentException] {
       spark.read.format("snapshot").option("versionAsOf", "1")
-        .option("tag", "audit").load(dir)
+        .option("timestampAsOf", "2099-01-01T00:00:00Z").load(dir)
     }
     assert(e.getMessage.contains("mutually exclusive"))
     // a v=N subdirectory would bypass versioning as a bare parquet
@@ -88,49 +82,41 @@ class SnapshotSourceSpec extends SparkSpec {
         .option("versionAsOf", "1").load(dir)
     }
     assert(e2.getMessage.contains("mutually exclusive"))
-  }
-
-  test("backfillPubtimes makes a pre-timestamp-travel store " +
-    "versionAt-able (mtime-approximate, create-exclusive, " +
-    "idempotent; genuine records never overwritten)") {
-    val dir = freshDir("graft-srcbf")
-    Snapshots.commit(spark, Seq((1L, 1L)).toDF("v", "b"), dir)
-    Thread.sleep(30)
-    Snapshots.commit(spark, Seq((1L, 1L), (2L, 2L)).toDF("v", "b"), dir)
-    // simulate a pre-r16 store: strip the publication records
+    // a store whose publication records are gone has no timestamp
+    // history at all — refused loudly, never served as the head
     val f = new org.apache.hadoop.fs.Path(dir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     Seq(1L, 2L).foreach(v => f.delete(
       new org.apache.hadoop.fs.Path(dir, s"_pubtime.$v"), false))
-    val e = intercept[IllegalArgumentException] {
+    val e3 = intercept[IllegalArgumentException] {
       Snapshots.versionAt(spark, dir, System.currentTimeMillis())
     }
-    assert(e.getMessage.contains("no publication records"), e.getMessage)
-    // backfill stamps both from directory mtimes; travel works again
-    assert(Snapshots.backfillPubtimes(spark, dir) == Seq(1L, 2L))
-    assert(Snapshots.versionAt(spark, dir,
-      System.currentTimeMillis()) == 2L)
-    // idempotent: a second run stamps nothing and overwrites nothing
-    assert(Snapshots.backfillPubtimes(spark, dir).isEmpty)
+    assert(e3.getMessage.contains("no publication records"),
+      e3.getMessage)
   }
 
   test("timestamp travel serves PUBLISHED main-line history only: a " +
-    "branch-only commit in the middle is never surfaced") {
-    val dir = freshDir("graft-srcb")
+    "crash orphan in the middle is never surfaced") {
+    val dir = freshDir("graft-srco")
     Snapshots.commit(spark, Seq((1L, 1L)).toDF("v", "b"), dir) // v1
-    Snapshots.createBranch(spark, dir, "dev")
-    // occupies v2 WITHOUT touching the main pointer
-    Snapshots.commitToBranch(spark,
-      (0L until 9L).map(i => (i, 0L)).toDF("v", "b"), dir, "dev")
+    // a v2 that was renamed into its slot but never published
+    plantCrashOrphan(dir, 2L, (0L until 9L).map(i => (i, 0L))
+      .toDF("v", "b"))
     Thread.sleep(30)
-    val afterBranch = System.currentTimeMillis()
+    val afterOrphan = System.currentTimeMillis()
     Thread.sleep(30)
     Snapshots.commit(spark, Seq((1L, 1L), (2L, 2L)).toDF("v", "b"),
       dir) // v3, main head
-    // between the branch commit and the main commit, main WAS v1
-    assert(Snapshots.versionAt(spark, dir, afterBranch) == 1L)
+    // between the orphan and the main commit, main WAS v1
+    assert(Snapshots.versionAt(spark, dir, afterOrphan) == 1L)
     assert(Snapshots.versionAt(spark, dir,
       System.currentTimeMillis()) == 3L)
+    // the connector's change feed replays main's history only
+    val feed = spark.read.format("snapshot")
+      .option("readChangeFeed", "true").load(dir)
+    assert(feed.select("_version").distinct().as[Long].collect()
+      .sorted.toSeq == Seq(1L, 3L))
+    assert(feed.count() == 3L)
   }
 
   test("readChangeFeed: a caught-up consumer gets an EMPTY frame, " +

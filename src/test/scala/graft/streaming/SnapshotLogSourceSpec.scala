@@ -81,11 +81,10 @@ class SnapshotLogSourceSpec extends SparkSpec {
     assert(ks.toSeq == (0L until 23L), "duplicate or lost rows")
   }
 
-  test("a branch commit between two main commits is not streamed") {
-    val src = freshDir("graft-slbranch")
+  test("a crash orphan between two main commits is not streamed") {
+    val src = freshDir("graft-slorphan")
     Snapshots.commit(spark, batch(0, 5), src)                // v1 main
-    Snapshots.createBranch(spark, src, "wap")
-    Snapshots.commitToBranch(spark, batch(100, 103), src, "wap") // v2
+    plantCrashOrphan(src, 2L, batch(100, 103))               // v2 orphan
     Snapshots.commit(spark, batch(5, 9), src)                // v3 main
     val q = spark.readStream.format("snapshot-log")
       .option("path", src).load()
