@@ -38,9 +38,13 @@ def run_once(checkout, args):
     cmd = [sys.executable, "perfbench/run.py", "--workload", args.workload,
            "--seed", str(args.seed), "--seconds", str(args.seconds), "--trace", "0"]
     r = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE,
-                       stderr=subprocess.DEVNULL, text=True)
+                       stderr=subprocess.PIPE, text=True)
     lines = r.stdout.strip().splitlines()
     if r.returncode != 0 or not lines:
+        # the run's own stderr is the only record of why it failed
+        tail = r.stderr.splitlines()[-40:]
+        print(f"--- last {len(tail)} stderr lines of the failed run ---",
+              *tail, sep="\n", file=sys.stderr)
         raise SystemExit(f"run failed in {checkout} (exit {r.returncode})")
     return json.loads(lines[-1])
 

@@ -14,7 +14,7 @@ import org.apache.spark.sql.execution.datasources.{
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.LongType
 
-import graft.operators.Snapshots
+import graft.operators.{CopyOnWrite, MergeOnRead, Snapshots}
 
 /** SQL DML for `USING snapshot` tables — the write half of the
   * zero-code SQL story (the read half is the registered
@@ -331,12 +331,12 @@ object SnapshotDml {
   /** Maps a resolved MERGE onto the library merge engines. The
     * canonical CDC upsert — equi-join on SAME-named columns, single
     * unconditional `WHEN MATCHED THEN UPDATE SET *` + `WHEN NOT
-    * MATCHED THEN INSERT *` — takes the [[Snapshots.mergeInto]] fast
+    * MATCHED THEN INSERT *` — takes the [[CopyOnWrite.mergeInto]] fast
     * path (anti-join, no wide outer join). Everything else in the
     * full Delta clause surface — conditional and multiple matched
     * actions, `WHEN MATCHED THEN DELETE`, partial SET lists,
     * conditional INSERT, `WHEN NOT MATCHED BY SOURCE` — lowers onto
-    * [[Snapshots.mergeApply]]. Only a non-equi ON clause and
+    * [[CopyOnWrite.mergeApply]]. Only a non-equi ON clause and
     * subqueries inside clause expressions are refused. */
   private[plans] def toMergeCommand(dir: String,
       m: MergeIntoTable): LeafRunnableCommand = {
@@ -429,7 +429,7 @@ object SnapshotDml {
 
 /** A lowered MERGE clause carried inside
   * [[SnapshotMergeApplyCommand]] — expressions already rebound to
-  * the `__t`/`__s` aliases of [[Snapshots.mergeApply]]'s joined
+  * the `__t`/`__s` aliases of [[CopyOnWrite.mergeApply]]'s joined
   * frame. */
 sealed trait SqlMergeClause
 final case class SqlMergeUpdate(cond: Option[Expression],
@@ -451,9 +451,9 @@ case class SnapshotDeleteCommand(dir: String, mor: Boolean,
   override def run(spark: SparkSession): Seq[Row] = {
     val pred = cond.map(SnapshotDml.rebind).getOrElse(lit(true))
     val n =
-      if (mor) Snapshots.deleteWhereMor(spark, dir, pred)._2
+      if (mor) MergeOnRead.deleteWhere(spark, dir, pred)._2
         .tombstonesAdded
-      else Snapshots.deleteWhere(spark, dir, pred)._2.rowsChanged
+      else CopyOnWrite.deleteWhere(spark, dir, pred)._2.rowsChanged
     Seq(Row(n))
   }
 }
@@ -473,15 +473,15 @@ case class SnapshotUpdateCommand(dir: String, mor: Boolean,
       k -> SnapshotDml.rebind(v)
     }.toMap
     val n =
-      if (mor) Snapshots.updateWhereMor(spark, dir, pred, sets)._2
+      if (mor) MergeOnRead.updateWhere(spark, dir, pred, sets)._2
         .tombstonesAdded
-      else Snapshots.updateWhere(spark, dir, pred, sets)._2.rowsChanged
+      else CopyOnWrite.updateWhere(spark, dir, pred, sets)._2.rowsChanged
     Seq(Row(n))
   }
 }
 
 /** `MERGE INTO t USING src ON … WHEN MATCHED THEN UPDATE SET * WHEN
-  * NOT MATCHED THEN INSERT *` → [[Snapshots.mergeInto]] (stats/bloom
+  * NOT MATCHED THEN INSERT *` → [[CopyOnWrite.mergeInto]] (stats/bloom
   * file routing: only key-admitting files rewrite). Returns the
   * source row count (every source row either replaced or inserted —
   * the upsert contract). */
@@ -504,7 +504,7 @@ case class SnapshotMergeCommand(dir: String, source: LogicalPlan,
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val n = src.count()
-      Snapshots.mergeInto(spark, dir, src, keys)
+      CopyOnWrite.mergeInto(spark, dir, src, keys)
       Seq(Row(n))
     } finally { src.unpersist(); () }
   }
@@ -513,7 +513,7 @@ case class SnapshotMergeCommand(dir: String, source: LogicalPlan,
 /** The general MERGE (beyond the canonical upsert): conditional /
   * multiple matched actions, `WHEN MATCHED THEN DELETE`, partial SET
   * lists, conditional INSERT, `WHEN NOT MATCHED BY SOURCE` — lowered
-  * onto [[Snapshots.mergeApply]] (key-routed full-outer join with
+  * onto [[CopyOnWrite.mergeApply]] (key-routed full-outer join with
   * per-clause CASE routing, Rebase commit). Returns the Delta
   * num_affected_rows (updated + deleted + inserted). */
 case class SnapshotMergeApplyCommand(dir: String, source: LogicalPlan,
@@ -527,13 +527,13 @@ case class SnapshotMergeApplyCommand(dir: String, source: LogicalPlan,
 
   override def innerChildren: Seq[LogicalPlan] = Seq(source)
 
-  private def toLib(cl: SqlMergeClause): Snapshots.MergeClause = {
+  private def toLib(cl: SqlMergeClause): CopyOnWrite.MergeClause = {
     def c(e: Expression) = GraftColumnBridge.column(e)
     cl match {
-      case SqlMergeUpdate(cond, sets) => Snapshots.MergeUpdate(
+      case SqlMergeUpdate(cond, sets) => CopyOnWrite.MergeUpdate(
         cond.map(c), sets.map { case (k, v) => k -> c(v) }.toMap)
-      case SqlMergeDelete(cond) => Snapshots.MergeDelete(cond.map(c))
-      case SqlMergeInsert(cond, values) => Snapshots.MergeInsert(
+      case SqlMergeDelete(cond) => CopyOnWrite.MergeDelete(cond.map(c))
+      case SqlMergeInsert(cond, values) => CopyOnWrite.MergeInsert(
         cond.map(c), values.map { case (k, v) => k -> c(v) }.toMap)
     }
   }
@@ -544,7 +544,7 @@ case class SnapshotMergeApplyCommand(dir: String, source: LogicalPlan,
     val src = GraftColumnBridge.ofRows(spark, source)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val (_, st) = Snapshots.mergeApply(spark, dir, src, on,
+      val (_, st) = CopyOnWrite.mergeApply(spark, dir, src, on,
         matched.map(toLib), notMatched.map(toLib),
         notMatchedBySource.map(toLib))
       Seq(Row(st.rowsAffected))

@@ -12,7 +12,7 @@ import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.types.{BooleanType, DataType, LongType,
   StringType, StructType}
 
-import graft.operators.Snapshots
+import graft.operators.{MergeOnRead, SnapshotMaintenance, Snapshots}
 
 /** The delegating SQL parser (seventh `SparkSessionExtensions`
   * surface — the `injectParser` rung, Delta's `DeltaSqlParser`
@@ -217,24 +217,23 @@ object SnapshotSqlParser {
   }
 }
 
-/** `VACUUM t [RETAIN n VERSIONS]` → [[Snapshots.vacuum]]; one row per
-  * reclaimed version (ref-pinned / dv-pinned versions never appear —
-  * the library's fixpoint applies unchanged). */
+/** `VACUUM t [RETAIN n VERSIONS]` → [[SnapshotMaintenance.vacuum]];
+  * one row per reclaimed version (ref-pinned / dv-pinned versions
+  * never appear — the library's fixpoint applies unchanged). */
 case class VacuumSnapshotCommand(dir: String, keepLast: Int)
     extends LeafRunnableCommand {
   override val output: Seq[Attribute] = Seq(
     AttributeReference("reclaimed_version", LongType,
       nullable = false)())
   override def run(spark: SparkSession): Seq[Row] =
-    Snapshots.vacuum(spark, dir, keepLast).map(Row(_))
+    SnapshotMaintenance.vacuum(spark, dir, keepLast).map(Row(_))
 }
 
-/** `OPTIMIZE t [PURGE | ZORDER BY (x, y[, z])]`: plain = bin-pack
-  * compaction via [[Snapshots.compactAuto]] (folds an MoR head,
-  * bins a partitioned layout per partition directory);
-  * PURGE = apply deletion vectors only ([[Snapshots.purgeMor]]);
-  * ZORDER BY = Morton clustering, 2-D or 3-D
-  * ([[Snapshots.optimizeClusteredCols]]). */
+/** `OPTIMIZE t [PURGE | ZORDER BY (x, y[, z])]`: plain = compaction
+  * via [[SnapshotMaintenance.compact]] (folds an MoR head, bins every
+  * data directory of any other layout); PURGE = apply deletion
+  * vectors only ([[MergeOnRead.purge]]); ZORDER BY = Morton
+  * clustering, 2-D or 3-D ([[SnapshotMaintenance.optimizeClustered]]). */
 case class OptimizeSnapshotCommand(dir: String, purge: Boolean,
     zorderCols: Seq[String], targetBytes: Long = 128L << 20,
     ident: Seq[String] = Nil)
@@ -246,13 +245,13 @@ case class OptimizeSnapshotCommand(dir: String, purge: Boolean,
     require(!(purge && zorderCols.nonEmpty),
       "OPTIMIZE: PURGE and ZORDER BY are mutually exclusive")
     if (purge) {
-      val (v, _) = Snapshots.purgeMor(spark, dir)
+      val (v, _) = MergeOnRead.purge(spark, dir)
       Seq(Row(v, "purge"))
     } else if (zorderCols.nonEmpty) {
       require(zorderCols.size == 2 || zorderCols.size == 3,
         "OPTIMIZE ZORDER BY takes two or three columns " +
           s"(got ${zorderCols.mkString(", ")})")
-      val (v, _) = Snapshots.optimizeClusteredCols(spark, dir,
+      val (v, _) = SnapshotMaintenance.optimizeClustered(spark, dir,
         zorderCols)
       // the cluster id MATERIALIZES as a table column — keep the
       // catalog's stored schema in sync, or the table's next
@@ -260,10 +259,7 @@ case class OptimizeSnapshotCommand(dir: String, purge: Boolean,
       SnapshotSqlParser.syncCatalogSchema(spark, ident, dir)
       Seq(Row(v, "zorder"))
     } else {
-      // layout-dispatching: MoR head folds, flat layout bin-packs,
-      // partitioned layout bins per partition directory — SQL users
-      // must never hit compactVersion's partitioned-tree refusal
-      val (v, _) = Snapshots.compactAuto(spark, dir, targetBytes)
+      val (v, _) = SnapshotMaintenance.compact(spark, dir, targetBytes)
       Seq(Row(v, "compact"))
     }
   }

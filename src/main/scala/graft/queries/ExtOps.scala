@@ -999,17 +999,18 @@ object ExtOps {
     }),
 
     // Merge-on-read DELETE end-to-end, against the copy-on-write
-    // twin: the same predicate runs as deleteWhereMor on one store
-    // (tombstone sidecar + references, ZERO data files written — the
-    // census pins mor_local_files = 0) and as deleteWhere on an
-    // identical store; both must serve the identical surviving rows
-    // (row counts + key checksums), and foldMor must materialize the
-    // same content again. DuckDB replays the survivors closed-form
-    // (DELETE is just NOT(pred)); files_referenced is the
-    // deterministic bucket count. At 100 TB this is the GDPR-delete
-    // path: O(tombstones) per statement instead of O(table).
+    // twin: the same predicate runs as MergeOnRead.deleteWhere on one
+    // store (tombstone sidecar + references, ZERO data files written —
+    // the census pins mor_local_files = 0) and as
+    // CopyOnWrite.deleteWhere on an identical store; both must serve
+    // the identical surviving rows (row counts + key checksums), and
+    // the fold must materialize the same content again. DuckDB
+    // replays the survivors closed-form (DELETE is just NOT(pred));
+    // files_referenced is the deterministic bucket count. At 100 TB
+    // this is the GDPR-delete path: O(tombstones) per statement
+    // instead of O(table).
     "xq39_mor_delete" -> ((s, dir) => {
-      import graft.operators.Snapshots
+      import graft.operators.{CopyOnWrite, MergeOnRead, Snapshots}
       val base = t(s, dir, "lineitem")
         .select(col("l_orderkey").cast("long").as("k"),
           pmod(col("l_orderkey"), lit(8)).cast("long").as("bucket"))
@@ -1023,13 +1024,13 @@ object ExtOps {
               statsCols = Seq("k"), partitionByCols = Seq("bucket"))))
         val pred = pmod(col("k"), lit(7)) === 2
         val n1 = Snapshots.read(s, storeM).count()
-        val (v2, m) = Snapshots.deleteWhereMor(s, storeM, pred)
+        val (v2, m) = MergeOnRead.deleteWhere(s, storeM, pred)
         val mor = Snapshots.table(s, storeM)
           .agg(count(lit(1)).as("n"), sum(col("k")).as("ck")).head()
-        Snapshots.deleteWhere(s, storeC, pred)
+        CopyOnWrite.deleteWhere(s, storeC, pred)
         val cow = Snapshots.read(s, storeC)
           .agg(count(lit(1)).as("n"), sum(col("k")).as("ck")).head()
-        Snapshots.foldMor(s, storeM, statsCols = Seq("k"))
+        MergeOnRead.fold(s, storeM, statsCols = Seq("k"))
         val fold = Snapshots.read(s, storeM)
           .agg(count(lit(1)).as("n"), sum(col("k")).as("ck")).head()
         // the MoR version directory must hold zero data files
@@ -1087,13 +1088,14 @@ object ExtOps {
     }),
 
     // Merge-on-read UPDATE against the copy-on-write twin: the same
-    // SET runs as updateWhereMor (tombstone + updated images as the
-    // new version's own files — bytes moved = updated rows only) and
-    // as updateWhere on an identical store; both must serve identical
-    // content, and the fold must materialize it again. DuckDB replays
-    // the update closed-form (CASE WHEN pred THEN new ELSE old).
+    // SET runs as MergeOnRead.updateWhere (tombstone + updated images
+    // as the new version's own files — bytes moved = updated rows
+    // only) and as CopyOnWrite.updateWhere on an identical store; both
+    // must serve identical content, and the fold must materialize it
+    // again. DuckDB replays the update closed-form (CASE WHEN pred
+    // THEN new ELSE old).
     "xq41_mor_update" -> ((s, dir) => {
-      import graft.operators.Snapshots
+      import graft.operators.{CopyOnWrite, MergeOnRead, Snapshots}
       val base = t(s, dir, "lineitem")
         .select(col("l_orderkey").cast("long").as("k"),
           (col("l_orderkey").cast("long") * 3L).as("v"),
@@ -1111,13 +1113,13 @@ object ExtOps {
               statsCols = Seq("k"), partitionByCols = Seq("bucket"))))
         val pred = pmod(col("k"), lit(6)) === 1
         val sets = Map("v" -> (col("v") + 1000L))
-        val (_, m) = Snapshots.updateWhereMor(s, storeM, pred, sets)
+        val (_, m) = MergeOnRead.updateWhere(s, storeM, pred, sets)
         val mor = Snapshots.table(s, storeM)
           .agg(count(lit(1)).as("n"), sum(col("v")).as("cv")).head()
-        Snapshots.updateWhere(s, storeC, pred, sets)
+        CopyOnWrite.updateWhere(s, storeC, pred, sets)
         val cow = Snapshots.read(s, storeC)
           .agg(count(lit(1)).as("n"), sum(col("v")).as("cv")).head()
-        Snapshots.foldMor(s, storeM, statsCols = Seq("k"))
+        MergeOnRead.fold(s, storeM, statsCols = Seq("k"))
         val fold = Snapshots.read(s, storeM)
           .agg(count(lit(1)).as("n"), sum(col("v")).as("cv")).head()
         import s.implicits._
@@ -1140,7 +1142,7 @@ object ExtOps {
     // tombstone-sidecar head. The DuckDB twin replays the statement
     // chain as set algebra over the same lineitem projection.
     "xq42_sql_dml" -> ((s, dir) => {
-      import graft.operators.Snapshots
+      import graft.operators.{MergeOnRead, Snapshots}
       val base = t(s, dir, "lineitem")
         .select(col("l_orderkey").cast("long").as("k"),
           pmod(col("l_orderkey"), lit(8)).cast("long").as("bucket"),
@@ -1185,7 +1187,7 @@ object ExtOps {
             .head.getLong(0)
           val nM = s.sql(s"SELECT count(*) AS n FROM $tblM")
             .head.getLong(0)
-          val morHead = if (Snapshots.isMorVersion(s, storeM,
+          val morHead = if (MergeOnRead.isMorVersion(s, storeM,
             Snapshots.latestVersion(s, storeM))) 1L else 0L
           import s.implicits._
           Seq((delRows, updRows, mrgRows, fin.getLong(0), fin.getLong(1),
@@ -1211,7 +1213,7 @@ object ExtOps {
     // The flatness invariant is pinned as cost_flat=1; every count
     // is replayed closed-form by the DuckDB twin.
     "xq43_dv_census" -> ((s, dir) => {
-      import graft.operators.Snapshots
+      import graft.operators.{MergeOnRead, Snapshots}
       val base = t(s, dir, "lineitem")
         .select(col("l_orderkey").cast("long").as("k"),
           pmod(col("l_orderkey"), lit(8)).cast("long").as("bucket"),
@@ -1220,14 +1222,14 @@ object ExtOps {
       withStores(s, "xq43") { case Seq(store) =>
         Snapshots.commitWithStats(s, base, store,
           statsCols = Seq("k"), partitionByCols = Seq("bucket"))
-        val (_, big) = Snapshots.deleteWhereMor(s, store,
+        val (_, big) = MergeOnRead.deleteWhere(s, store,
           pmod(col("k"), lit(3)) === 0)
         // partition-qualified point deletes (the natural shape on a
         // bucketed table): bucket admission prunes to ONE partition,
         // and the k-range refutes most of the rest — the sidecar-
         // routed matching scan (round 18) must admit < all files
         val smalls = Seq(1L, 2L, 5L, 7L, 11L).map { kv =>
-          Snapshots.deleteWhereMor(s, store,
+          MergeOnRead.deleteWhere(s, store,
             col("k") === kv && col("bucket") === kv % 8)._2
         }
         val maxSmall = smalls.map(_.bytesWritten).max
@@ -1446,7 +1448,7 @@ object ExtOps {
     // some value in it shares the probe's bit. rows_matched +
     // y_checksum from the pruned scan pin the superset guarantee.
     "xq26_bloom_lookup" -> ((s, dir) => {
-      import graft.operators.Snapshots
+      import graft.operators.{CopyOnWrite, Snapshots}
       val base = zBuckets(s, dir)
       withStores(s, "xq26") { case Seq(store) =>
         // stats on y, NOT x: x keeps only its bloom, so the index's
@@ -1465,7 +1467,7 @@ object ExtOps {
     }),
 
     // Copy-on-write row-level DML end-to-end: DELETE then UPDATE as
-    // new snapshot versions (Snapshots.deleteWhere/updateWhere) —
+    // new snapshot versions (CopyOnWrite.deleteWhere/updateWhere) —
     // the stats manifest decides which files can contain matching
     // rows, ONLY those are decoded and rewritten, the rest byte-copy
     // through with their manifest entries spliced (never re-scanned).
@@ -1475,7 +1477,7 @@ object ExtOps {
     // DuckDB as plain WHERE/CASE algebra — the file-level accounting
     // is pinned by SnapshotsSpec, the ROW semantics by this oracle.
     "xq27_cow_dml" -> ((s, dir) => {
-      import graft.operators.Snapshots
+      import graft.operators.{CopyOnWrite, Snapshots}
       val o = t(s, dir, "orders").select(
         col("o_orderkey").cast("long").as("k"),
         col("o_orderstatus").as("status"))
@@ -1483,9 +1485,9 @@ object ExtOps {
       withStores(s, "xq27") { case Seq(store) =>
         Snapshots.commitWithStats(s, o, store, statsCols = Seq("k"))
         val before = Snapshots.read(s, store).count()
-        val (_, del) = Snapshots.deleteWhere(s, store,
+        val (_, del) = CopyOnWrite.deleteWhere(s, store,
           col("k") <= 1000)
-        val (_, upd) = Snapshots.updateWhere(s, store,
+        val (_, upd) = CopyOnWrite.updateWhere(s, store,
           col("k") <= 2000, Map("status" -> lit("X")))
         val after = Snapshots.read(s, store)
         val m = after.agg(count(lit(1)).as("n"),
@@ -1501,7 +1503,7 @@ object ExtOps {
     }),
 
     // Copy-on-write MERGE INTO — K1's full-row upsert at FILE
-    // granularity (Snapshots.mergeInto): the source's distinct keys
+    // granularity (CopyOnWrite.mergeInto): the source's distinct keys
     // route through the key column's min/max (and bloom, when
     // present) so only hit files are decoded and rewritten; matched
     // table rows are replaced, unmatched source keys insert, every
@@ -1512,7 +1514,7 @@ object ExtOps {
     // against a 100 TB clustered table rewrites the files its keys
     // hit, not the table.
     "xq28_cow_merge" -> ((s, dir) => {
-      import graft.operators.Snapshots
+      import graft.operators.{CopyOnWrite, Snapshots}
       val o = t(s, dir, "orders").select(
         col("o_orderkey").cast("long").as("k"),
         col("o_orderstatus").as("status"))
@@ -1525,7 +1527,7 @@ object ExtOps {
           .unionByName(o.filter(col("k") <= 500)
             .select((col("k") + 10000000L).as("k"),
               lit("N").as("status")))
-        val (_, m) = Snapshots.mergeInto(s, store, src, Seq("k"))
+        val (_, m) = CopyOnWrite.mergeInto(s, store, src, Seq("k"))
         val after = Snapshots.read(s, store)
         val agg = after.agg(count(lit(1)).as("n"),
           coalesce(sum(col("k")), lit(0L)).as("sk"),
@@ -1552,7 +1554,7 @@ object ExtOps {
     // covering) diverges the oracle hash loudly; the values pin the
     // ANSWER against DuckDB's brute-force count/min/max.
     "xq29_stats_agg" -> ((s, dir) => {
-      import graft.operators.Snapshots
+      import graft.operators.{SnapshotMaintenance, Snapshots}
       val o = t(s, dir, "orders").select(
         col("o_orderkey").cast("long").as("k"),
         col("o_custkey").cast("long").as("c"),
@@ -1581,7 +1583,7 @@ object ExtOps {
     }),
 
     // OPTIMIZE ZORDER end-to-end — the write-side half of the
-    // file-skipping story (Snapshots.optimizeClustered): v1 commits
+    // file-skipping story (SnapshotMaintenance.optimizeClustered): v1 commits
     // the same xy frame SCATTERED (hash-partitioned on a key
     // uncorrelated with x, so every file spans the whole x domain and
     // a range read prunes NOTHING), then one maintenance rewrite
@@ -1595,7 +1597,7 @@ object ExtOps {
     // is the amortization argument for OPTIMIZE: one table shuffle,
     // run rarely, against every selective scan after it.
     "xq30_optimize_cluster" -> ((s, dir) => {
-      import graft.operators.Snapshots
+      import graft.operators.{SnapshotMaintenance, Snapshots}
       val base = t(s, dir, "lineitem")
         .select(pmod(col("l_partkey"), lit(1024)).as("x"),
           pmod(col("l_suppkey"), lit(1024)).as("y"),
@@ -1615,8 +1617,8 @@ object ExtOps {
           (ps, m.getLong(0), m.getLong(1))
         }
         val (psB, matchedB, _) = census(v1)
-        val (v2, cs) = Snapshots.optimizeClustered(s, store, "x", "y",
-          bits = 10, bucketWidth = 16384L, quantizeCols = false)
+        val (v2, cs) = SnapshotMaintenance.optimizeClustered(s, store,
+          Seq("x", "y"), bits = 10, bucketWidth = 16384L, quantizeCols = false)
         val (psA, matchedA, cksum) = census(v2)
         import s.implicits._
         Seq((psB.filesRead + psB.filesSkipped, psB.filesRead,
@@ -1638,7 +1640,7 @@ object ExtOps {
     // from the stats sidecar). The per-partition census of a 100 TB
     // table becomes one driver-side manifest pass.
     "xq32_partition_stats_agg" -> ((s, dir) => {
-      import graft.operators.Snapshots
+      import graft.operators.{PrunedReads, Snapshots}
       val o = t(s, dir, "orders").select(
         col("o_orderkey").cast("long").as("k"),
         pmod(col("o_orderkey"), lit(5)).as("h"))
@@ -1669,13 +1671,13 @@ object ExtOps {
     // NULL file skipping through the planner (an all-null file never
     // enters the scan; constraint propagation injects isnotnull on
     // virtually every filter, so this fires constantly for free),
-    // (c) top-k pruning (Snapshots.readTopK): a file is skipped only
+    // (c) top-k pruning (PrunedReads.readTopK): a file is skipped only
     // when ≥ k NON-NULL values provably beat its max — row counts
     // alone cannot promise that when nulls hide among them. The store
     // is quartile-bucketed on k with the lowest quartile's v ALL NULL;
     // every census and the top-100 sum replay in DuckDB closed-form.
     "xq33_null_stats" -> ((s, dir) => {
-      import graft.operators.Snapshots
+      import graft.operators.{PrunedReads, Snapshots}
       val o0 = t(s, dir, "orders")
         .select(col("o_orderkey").cast("long").as("k"))
       val total = o0.count()
@@ -1699,7 +1701,7 @@ object ExtOps {
         val psN = graft.plans.StatsFileIndex.indexOf(qn)
           .flatMap(_.lastPrune)
           .getOrElse(sys.error("planner index recorded no census"))
-        val (tdf, psT) = Snapshots.readTopK(s, store, "v", 100)
+        val (tdf, psT) = PrunedReads.readTopK(s, store, "v", 100)
         val tsum = tdf.orderBy(col("v").desc_nulls_last).limit(100)
           .agg(coalesce(sum(col("v")), lit(0L))).head().getLong(0)
         import s.implicits._
@@ -1748,7 +1750,7 @@ object ExtOps {
     // partition-column expressions qualify; one data-column reference
     // refuses. metadata_only pins the mechanism as in xq29.
     "xq35_filtered_meta" -> ((s, dir) => {
-      import graft.operators.Snapshots
+      import graft.operators.{PrunedReads, Snapshots}
       val o = t(s, dir, "orders").select(
         col("o_orderkey").cast("long").as("k"),
         pmod(col("o_orderkey"), lit(5)).as("h"))
@@ -1772,7 +1774,7 @@ object ExtOps {
       }
     }),
 
-    // Dynamic file pruning for a star join (Snapshots.readJoinPruned
+    // Dynamic file pruning for a star join (PrunedReads.readJoinPruned
     // — Delta-DFP's shape at the API level): the dimension side's
     // distinct keys route the FACT scan through the stats bounds AND
     // the bloom sidecars, so a selective dimension filter reads a
@@ -1783,7 +1785,7 @@ object ExtOps {
     // admit (false positives included), kept iff ANY key passes both;
     // the joined census pins superset-correctness.
     "xq34_join_pruning" -> ((s, dir) => {
-      import graft.operators.Snapshots
+      import graft.operators.{PrunedReads, Snapshots}
       val base = zBuckets(s, dir)
       val dim = t(s, dir, "part")
         .filter(pmod(col("p_partkey"), lit(389)) === 0)
@@ -1793,7 +1795,7 @@ object ExtOps {
         Snapshots.commitWithStats(s, base, store,
           statsCols = Seq("x"), partitionByCols = Seq("z_bucket"),
           bloomCols = Seq("x"))
-        val (pruned, ps) = Snapshots.readJoinPruned(s, store, "x", dim)
+        val (pruned, ps) = PrunedReads.readJoinPruned(s, store, "x", dim)
         val m = pruned.join(broadcast(dim), Seq("x"))
           .agg(count(lit(1)).as("n"),
             coalesce(sum(col("y")), lit(0L)).as("sy")).head()

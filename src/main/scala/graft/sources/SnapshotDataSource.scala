@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
 import org.apache.spark.sql.sources.{BaseRelation,
   CreatableRelationProvider, DataSourceRegister, RelationProvider}
 
-import graft.operators.Snapshots
+import graft.operators.{MergeOnRead, Snapshots}
 
 /** `spark.read.format("snapshot").load(dir)` — the snapshot store as
   * a REGISTERED Spark data source, so SQL / pyspark / BI users get
@@ -210,11 +210,11 @@ class SnapshotDataSource extends RelationProvider
     }
     // merge-on-read versions are an assembly (reference union +
     // tombstone anti-join), not a single file relation — serve them
-    // through a column-pruning scan; folding (foldMor) restores the
+    // through a column-pruning scan; folding (MergeOnRead.fold) restores the
     // full pruning-capable relation below
     val resolved =
       if (version > 0) version else Snapshots.latestVersion(spark, dir)
-    if (Snapshots.isMorVersion(spark, dir, resolved))
+    if (MergeOnRead.isMorVersion(spark, dir, resolved))
       return new SnapshotPlanRelation(spark,
         () => Snapshots.read(spark, dir, resolved),
         servedVersion = if (version > 0) -1L else resolved)

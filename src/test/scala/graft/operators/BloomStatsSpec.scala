@@ -71,7 +71,7 @@ class BloomStatsSpec extends SparkSpec {
     Snapshots.commitWithStats(spark, df, dir,
       statsCols = Seq("k"), partitionByCols = Seq("bucket"),
       bloomCols = Seq("uid"))
-    val (nv, _) = Snapshots.compactPartitionedVersion(spark, dir,
+    val (nv, _) = SnapshotMaintenance.compact(spark, dir,
       targetBytes = 1L << 30)
     assert(new java.io.File(s"$dir/v=$nv/_bloom_uid.json").exists(),
       "compaction must recompute the bloom sidecar")

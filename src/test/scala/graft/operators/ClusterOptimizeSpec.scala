@@ -4,7 +4,7 @@ import graft.SparkSpec
 import graft.operators.FileStats.NumRange
 import org.apache.spark.sql.functions._
 
-/** OPTIMIZE ZORDER (Snapshots.optimizeClustered): reclustering the
+/** OPTIMIZE ZORDER (SnapshotMaintenance.optimizeClustered): reclustering the
   * latest version must move FILE BOUNDARIES only — same row multiset,
   * strictly better pruning on the clustered columns, old versions
   * still served, sidecars recomputed, and the exactly-once epoch
@@ -43,8 +43,8 @@ class ClusterOptimizeSpec extends SparkSpec {
     val dir = scatteredStore()
     // scattered: every file spans x=[0,19] — the range keeps all 4
     assert(pruneCount(dir, 1, 0, 4) == ((4L, 0L)))
-    val (v2, cs) = Snapshots.optimizeClustered(spark, dir, "x", "y",
-      bits = 5, bucketWidth = 32L, quantizeCols = false)
+    val (v2, cs) = SnapshotMaintenance.optimizeClustered(spark, dir,
+      Seq("x", "y"), bits = 5, bucketWidth = 32L, quantizeCols = false)
     assert(v2 == 2L && cs.rows == 400L)
     assert(cs.filesBefore == 4L && cs.filesAfter > 4L)
     // clustered: x in [0,4] lives in a corner of the Morton grid
@@ -71,8 +71,8 @@ class ClusterOptimizeSpec extends SparkSpec {
       .toDF("k", "x", "y")
     Snapshots.commitWithStats(spark, df.repartition(4), dir,
       statsCols = Seq("x"))
-    val (v2, cs) = Snapshots.optimizeClustered(spark, dir, "x", "y",
-      bits = 6, bucketWidth = 256L)
+    val (v2, cs) = SnapshotMaintenance.optimizeClustered(spark, dir,
+      Seq("x", "y"), bits = 6, bucketWidth = 256L)
     assert(v2 == 2L && cs.rows == 300L)
     val ks = Snapshots.read(spark, dir, v2)
       .select("k").collect().map(_.getLong(0)).sorted
@@ -86,8 +86,8 @@ class ClusterOptimizeSpec extends SparkSpec {
       .toDF("k", "x", "y")
     assert(Snapshots.commitWithEpoch(spark, df, dir, epochId = 7L,
       statsCols = Seq("x")).isRight)
-    Snapshots.optimizeClustered(spark, dir, "x", "y",
-      bits = 4, bucketWidth = 16L, quantizeCols = false)
+    SnapshotMaintenance.optimizeClustered(spark, dir,
+      Seq("x", "y"), bits = 4, bucketWidth = 16L, quantizeCols = false)
     val replay = Snapshots.commitWithEpoch(spark, df, dir, epochId = 7L)
     assert(replay.isLeft, s"replayed epoch republished: $replay")
   }
@@ -100,10 +100,10 @@ class ClusterOptimizeSpec extends SparkSpec {
       .toDF("k", "x", "y", "h").repartition(col("h"))
     Snapshots.commitWithStats(spark, df, dir, statsCols = Seq("x"),
       partitionByCols = Seq("h"))
-    Snapshots.optimizeClustered(spark, dir, "x", "y",
-      bits = 5, bucketWidth = 64L, quantizeCols = false)
-    val (v3, cs) = Snapshots.optimizeClustered(spark, dir, "x", "y",
-      bits = 5, bucketWidth = 64L, quantizeCols = false)
+    SnapshotMaintenance.optimizeClustered(spark, dir,
+      Seq("x", "y"), bits = 5, bucketWidth = 64L, quantizeCols = false)
+    val (v3, cs) = SnapshotMaintenance.optimizeClustered(spark, dir,
+      Seq("x", "y"), bits = 5, bucketWidth = 64L, quantizeCols = false)
     assert(v3 == 3L && cs.rows == 200L)
     val after = Snapshots.read(spark, dir)
     assert(after.columns.count(_ == "z_bucket") == 1,
@@ -111,8 +111,8 @@ class ClusterOptimizeSpec extends SparkSpec {
     assert(after.select("k").collect().map(_.getLong(0)).sorted.toSeq
       == (0L until 200L))
     val e = intercept[IllegalArgumentException] {
-      Snapshots.optimizeClustered(spark, dir, "x", "y",
-        bits = 5, bucketWidth = 64L, bucketCol = "x",
+      SnapshotMaintenance.optimizeClustered(spark, dir,
+        Seq("x", "y"), bits = 5, bucketWidth = 64L, bucketCol = "x",
         quantizeCols = false)
     }
     assert(e.getMessage.contains("cluster column"))
@@ -127,8 +127,8 @@ class ClusterOptimizeSpec extends SparkSpec {
       .toDF("k", "x", "y", "z_bucket")
     Snapshots.commit(spark, df, dir)
     val e = intercept[IllegalArgumentException] {
-      Snapshots.optimizeClustered(spark, dir, "x", "y",
-        bits = 4, bucketWidth = 16L, quantizeCols = false)
+      SnapshotMaintenance.optimizeClustered(spark, dir,
+        Seq("x", "y"), bits = 4, bucketWidth = 16L, quantizeCols = false)
     }
     assert(e.getMessage.contains("user data"), e.getMessage)
     // nothing was published, nothing destroyed
@@ -136,16 +136,16 @@ class ClusterOptimizeSpec extends SparkSpec {
     val intact = Snapshots.read(spark, dir)
     assert(intact.columns.contains("z_bucket") && intact.count() == 100L)
     // a non-colliding bucket name proceeds and writes its marker
-    val (v2, _) = Snapshots.optimizeClustered(spark, dir, "x", "y",
-      bits = 4, bucketWidth = 16L, bucketCol = "zb",
+    val (v2, _) = SnapshotMaintenance.optimizeClustered(spark, dir,
+      Seq("x", "y"), bits = 4, bucketWidth = 16L, bucketCol = "zb",
       quantizeCols = false)
     assert(v2 == 2L)
     // DML between OPTIMIZE runs must carry the marker forward...
-    Snapshots.deleteWhere(spark, dir, col("k") < 10L)
+    CopyOnWrite.deleteWhere(spark, dir, col("k") < 10L)
     // ...so the re-run drops/recomputes ITS column (zb) and keeps the
     // user's z_bucket untouched
-    val (v4, cs) = Snapshots.optimizeClustered(spark, dir, "x", "y",
-      bits = 4, bucketWidth = 16L, bucketCol = "zb",
+    val (v4, cs) = SnapshotMaintenance.optimizeClustered(spark, dir,
+      Seq("x", "y"), bits = 4, bucketWidth = 16L, bucketCol = "zb",
       quantizeCols = false)
     assert(cs.rows == 90L, cs)
     val after = Snapshots.read(spark, dir, v4)

@@ -49,7 +49,7 @@ class CommitPipelineSpec extends SparkSpec {
     }
     @volatile var optimize: Option[Throwable] = None
     val worker = new Thread(() =>
-      try { Snapshots.compactVersion(spark, dir, 1L << 30); () }
+      try { SnapshotMaintenance.compact(spark, dir, 1L << 30); () }
       catch { case e: Throwable => optimize = Some(e) })
     spark.sparkContext.addSparkListener(listener)
     try {
@@ -57,10 +57,10 @@ class CommitPipelineSpec extends SparkSpec {
       assert(started.await(60, java.util.concurrent.TimeUnit.SECONDS))
       // if the compaction published first, the delete aborts on the
       // non-DML commit and its re-run lands on top
-      try Snapshots.deleteWhere(spark, dir, col("k") === 5L)
+      try CopyOnWrite.deleteWhere(spark, dir, col("k") === 5L)
       catch {
         case _: java.util.ConcurrentModificationException =>
-          Snapshots.deleteWhere(spark, dir, col("k") === 5L)
+          CopyOnWrite.deleteWhere(spark, dir, col("k") === 5L)
       }
       worker.join()
     } finally spark.sparkContext.removeSparkListener(listener)
@@ -73,8 +73,41 @@ class CommitPipelineSpec extends SparkSpec {
       "OPTIMIZE published a rewrite of the pre-delete head")
     assert(t.count() == n - 1)
     // a re-run of the aborted maintenance lands on the new head
-    Snapshots.compactVersion(spark, dir, 1L << 30)
+    SnapshotMaintenance.compact(spark, dir, 1L << 30)
     assert(Snapshots.read(spark, dir).count() == n - 1)
+    assert(leftovers(dir).isEmpty, leftovers(dir))
+  }
+
+  test("a plain commit never moves the pointer backwards: a commit " +
+    "whose slot the head passed re-lands above it, and main stays " +
+    "readable and writable") {
+    val dir = freshDir("graft-replace-race")
+    Snapshots.commit(spark, Seq(1L).toDF("k"), dir)
+    val heads = scala.collection.mutable.ArrayBuffer(
+      Snapshots.latestVersion(spark, dir))
+    val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
+    // once the outer commit occupies v=2, an inner commit takes v=3
+    // and publishes it first
+    val outer = Snapshots.withHook(dir, { s =>
+      heads += Snapshots.latestVersion(spark, dir)
+      if (s == "occupy" && fired.compareAndSet(false, true)) {
+        assert(Snapshots.commit(spark, Seq(2L).toDF("k"), dir) == 3L)
+        heads += Snapshots.latestVersion(spark, dir)
+      }
+    })(Snapshots.commit(spark, Seq(3L).toDF("k"), dir))
+    heads += Snapshots.latestVersion(spark, dir)
+    assert(heads == heads.sorted, s"the pointer moved backwards: $heads")
+    assert(outer == 4L && heads.last == 4L, heads)
+    // both commits' rows are readable from the final head: the change
+    // feed serves v=3 and v=4 and skips the passed, unpublished v=2
+    assert(Snapshots.readAppendsSince(spark, dir, 0L)
+      .select("k", "_version").as[(Long, Long)].collect().toSeq
+      .sorted == Seq((1L, 1L), (2L, 3L), (3L, 4L)))
+    assert(keys(dir) == Seq(3L))
+    // the next head-bound statement neither waits nor fails
+    val (v, rs) = CopyOnWrite.deleteWhere(spark, dir, col("k") === 3L,
+      publishWaitMs = 2000L)
+    assert(v == 5L && rs.rowsChanged == 1L)
     assert(leftovers(dir).isEmpty, leftovers(dir))
   }
 
@@ -106,8 +139,8 @@ class CommitPipelineSpec extends SparkSpec {
     val h = Snapshots.latestVersion(spark, dir)
     settle(h + 1, 8000L)
     val (v, rs) = PipelineHook.raceAt(dir, "seal") {
-      Snapshots.deleteWhere(spark, dir, col("k") >= 390L); ()
-    }(Snapshots.deleteWhere(spark, dir, col("k") === 150L))
+      CopyOnWrite.deleteWhere(spark, dir, col("k") >= 390L); ()
+    }(CopyOnWrite.deleteWhere(spark, dir, col("k") === 150L))
     assert(rs.rowsChanged == 1L)
     assert(v == h + 3, s"landed at $v over head $h")
     // 391 - (390..399 and the inserted 9000) - 150
@@ -134,11 +167,11 @@ class CommitPipelineSpec extends SparkSpec {
       "commit" -> ((dir, i) => { Snapshots.commit(spark,
         spark.range(0L, 200L - i, 1L, 4).toDF("k"), dir); () }),
       "delete" -> ((dir, i) => {
-        Snapshots.deleteWhere(spark, dir, col("k") === i.toLong); () }),
+        CopyOnWrite.deleteWhere(spark, dir, col("k") === i.toLong); () }),
       "mor delete" -> ((dir, i) => {
-        Snapshots.deleteWhereMor(spark, dir, col("k") === i.toLong); () }),
+        MergeOnRead.deleteWhere(spark, dir, col("k") === i.toLong); () }),
       "optimize" -> ((dir, _) => {
-        Snapshots.compactVersion(spark, dir, 1L << 30); () }))
+        SnapshotMaintenance.compact(spark, dir, 1L << 30); () }))
     ops.foreach { case (name, op) =>
       val dir = table(s"graft-fault-${name.replace(' ', '-')}")
       steps.zipWithIndex.foreach { case (s, i) =>
@@ -153,14 +186,14 @@ class CommitPipelineSpec extends SparkSpec {
         op(dir, i)
         assert(Snapshots.latestVersion(spark, dir) == head + 1,
           s"$name/$s: the re-run did not land")
-        assert(Snapshots.vacuum(spark, dir, keepLast = 100).isEmpty)
+        assert(SnapshotMaintenance.vacuum(spark, dir, keepLast = 100).isEmpty)
         assert(leftovers(dir).isEmpty, s"$name/$s: ${leftovers(dir)}")
       }
       // a writer killed mid-stage cannot clean up after itself: vacuum
       // reclaims its stage (and a pre-`_staging/` store's `_stage-*`)
       Seq("_staging/dead-writer", "_stage-dead-writer").foreach(d =>
         spark.range(3L).write.parquet(s"$dir/$d"))
-      Snapshots.vacuum(spark, dir, keepLast = 100)
+      SnapshotMaintenance.vacuum(spark, dir, keepLast = 100)
       assert(leftovers(dir).isEmpty, s"$name: ${leftovers(dir)}")
       assert(!new java.io.File(dir, "_stage-dead-writer").exists())
     }
@@ -189,7 +222,7 @@ class CommitPipelineSpec extends SparkSpec {
         dir, statsCols = Seq("k"))
       Snapshots.appendVersion(spark, spark.range(100L, 110L).toDF("k"),
         dir)
-      Snapshots.deleteWhere(spark, dir, col("k") < 5L)
+      CopyOnWrite.deleteWhere(spark, dir, col("k") < 5L)
     } finally {
       logger.removeAppender(capture)
       capture.stop()

@@ -42,12 +42,12 @@ class DmlConflictSpec extends SparkSpec {
     "and exactly the files it rewrote") {
     val dir = freshDir("graft-txp")
     build(dir)
-    Snapshots.deleteWhere(spark, dir, col("k") <= 99L)
+    CopyOnWrite.deleteWhere(spark, dir, col("k") <= 99L)
     val dml = Snapshots.readDml(hfs, s"$dir/v=2")
       .getOrElse(fail("no _dml.json on a DML version"))
     assert(dml._1 == 1L && dml._2 == "delete")
     assert(dml._3.size == 1 && dml._3.head.startsWith("b=0/"), dml._3)
-    Snapshots.updateWhere(spark, dir, col("k") === 399L,
+    CopyOnWrite.updateWhere(spark, dir, col("k") === 399L,
       Map("k" -> lit(9999L)))
     val up = Snapshots.readDml(hfs, s"$dir/v=3").get
     assert(up._1 == 2L && up._2 == "update" &&
@@ -64,8 +64,8 @@ class DmlConflictSpec extends SparkSpec {
     // reads head v1, stages; the worker publishes v2; the statement
     // loses its claim of v2, validates disjointness, re-executes
     val (vB, rsB) = PipelineHook.raceAt(dir, "seal") {
-      workerV = Snapshots.deleteWhere(spark, dir, col("k") >= 350L)._1
-    }(Snapshots.deleteWhere(spark, dir, col("k") < 50L))
+      workerV = CopyOnWrite.deleteWhere(spark, dir, col("k") >= 350L)._1
+    }(CopyOnWrite.deleteWhere(spark, dir, col("k") < 50L))
     assert(workerV == 2L, s"worker landed at $workerV")
     assert(vB == 3L, s"the re-executed statement landed at $vB")
     assert(rsB.rowsChanged == 50L)
@@ -81,8 +81,8 @@ class DmlConflictSpec extends SparkSpec {
     val e = intercept[java.util.ConcurrentModificationException] {
       // same bucket file (k<100 lives in b=0) as the worker's delete
       PipelineHook.raceAt(dir, "stage") {
-        Snapshots.deleteWhere(spark, dir, col("k") === 10L); ()
-      }(Snapshots.deleteWhere(spark, dir, col("k") < 50L))
+        CopyOnWrite.deleteWhere(spark, dir, col("k") === 10L); ()
+      }(CopyOnWrite.deleteWhere(spark, dir, col("k") < 50L))
     }
     assert(e.getMessage.contains("conflict"), e.getMessage)
     // the worker's statement alone is in effect
@@ -100,7 +100,7 @@ class DmlConflictSpec extends SparkSpec {
       PipelineHook.raceAt(dir, "claim") {
         Snapshots.commit(spark,
           (0L until 10L).map(i => (i, 0L)).toDF("k", "b"), dir); ()
-      }(Snapshots.deleteWhere(spark, dir, col("k") < 50L))
+      }(CopyOnWrite.deleteWhere(spark, dir, col("k") < 50L))
     }
     assert(e.getMessage.contains("NON-DML"), e.getMessage)
     assert(Snapshots.read(spark, dir).count() == 10L)
@@ -112,7 +112,7 @@ class DmlConflictSpec extends SparkSpec {
     build(dir)
     squatNextSlot(dir)
     val e = intercept[IllegalStateException] {
-      Snapshots.deleteWhere(spark, dir, col("k") < 50L,
+      CopyOnWrite.deleteWhere(spark, dir, col("k") < 50L,
         publishWaitMs = 400L)
     }
     assert(e.getMessage.contains("never published"), e.getMessage)
@@ -126,7 +126,7 @@ class DmlConflictSpec extends SparkSpec {
     "not published over the newer commit") {
     val dir = freshDir("graft-txw")
     build(dir)
-    Snapshots.deleteWhere(spark, dir, col("k") <= 99L) // head -> v2
+    CopyOnWrite.deleteWhere(spark, dir, col("k") <= 99L) // head -> v2
     // a committer that staged against v1 must NOT publish v? over v2
     assert(!Snapshots.publishIfHead(spark, dir, expected = 1L, v = 3L))
     assert(Snapshots.latestVersion(spark, dir) == 2L)
@@ -141,13 +141,13 @@ class DmlConflictSpec extends SparkSpec {
     "tombstoned") {
     val dir = freshDir("graft-txmp")
     build(dir)
-    Snapshots.deleteWhereMor(spark, dir, col("k") <= 99L)
+    MergeOnRead.deleteWhere(spark, dir, col("k") <= 99L)
     val dml = Snapshots.readDml(hfs, s"$dir/v=2")
       .getOrElse(fail("no _dml.json on a MoR DML version"))
     assert(dml._1 == 1L && dml._2 == "mor_delete")
     assert(dml._3.size == 1 && dml._3.head.startsWith("v=1/b=0/"),
       dml._3)
-    Snapshots.updateWhereMor(spark, dir, col("k") === 399L,
+    MergeOnRead.updateWhere(spark, dir, col("k") === 399L,
       Map("k" -> lit(9999L)))
     val up = Snapshots.readDml(hfs, s"$dir/v=3").get
     assert(up._2 == "mor_update" && up._3.head.startsWith("v=1/b=3/"))
@@ -162,8 +162,8 @@ class DmlConflictSpec extends SparkSpec {
     // the statement loses its claim and re-stages on v2 — the
     // re-staged version carries the WORKER's tombstones too
     val (vB, msB) = PipelineHook.raceAt(dir, "seal") {
-      workerV = Snapshots.deleteWhereMor(spark, dir, col("k") >= 350L)._1
-    }(Snapshots.deleteWhereMor(spark, dir, col("k") < 50L))
+      workerV = MergeOnRead.deleteWhere(spark, dir, col("k") >= 350L)._1
+    }(MergeOnRead.deleteWhere(spark, dir, col("k") < 50L))
     assert(workerV == 2L, s"worker landed at $workerV")
     assert(vB == 3L, s"the re-executed statement landed at $vB")
     assert(msB.tombstonesAdded == 50L && msB.tombstonesTotal == 100L,
@@ -178,8 +178,8 @@ class DmlConflictSpec extends SparkSpec {
     val dir = freshDir("graft-txmx")
     build(dir)
     val (vB, msB) = PipelineHook.raceAt(dir, "stage") {
-      Snapshots.deleteWhere(spark, dir, col("k") >= 390L); ()
-    }(Snapshots.deleteWhereMor(spark, dir, col("k") < 10L))
+      CopyOnWrite.deleteWhere(spark, dir, col("k") >= 390L); ()
+    }(MergeOnRead.deleteWhere(spark, dir, col("k") < 10L))
     assert(vB == 3L && msB.tombstonesAdded == 10L)
     assert(Snapshots.read(spark, dir).count() == 380L)
     // crashed-committer diagnosis on a never-published claim
@@ -187,7 +187,7 @@ class DmlConflictSpec extends SparkSpec {
     build(dir2)
     squatNextSlot(dir2)
     val e = intercept[IllegalStateException] {
-      Snapshots.deleteWhereMor(spark, dir2, col("k") < 50L,
+      MergeOnRead.deleteWhere(spark, dir2, col("k") < 50L,
         publishWaitMs = 400L)
     }
     assert(e.getMessage.contains("never published"), e.getMessage)
@@ -198,13 +198,13 @@ class DmlConflictSpec extends SparkSpec {
     "lands at head+1, provenance recorded, no-ops publish nothing") {
     val dir = freshDir("graft-txq")
     build(dir)
-    val (v2, rs) = Snapshots.updateWhere(spark, dir,
+    val (v2, rs) = CopyOnWrite.updateWhere(spark, dir,
       col("k") === 5L, Map("k" -> lit(-5L)))
     assert(v2 == 2L && rs.filesRewritten == 1L)
     assert(Snapshots.read(spark, dir).filter(col("k") === -5L)
       .count() == 1L)
     // provably-no-op delete: nothing published
-    val (v2b, rs2) = Snapshots.deleteWhere(spark, dir,
+    val (v2b, rs2) = CopyOnWrite.deleteWhere(spark, dir,
       col("k") === 777777L)
     assert(v2b == 2L && rs2.filesRewritten == 0L)
   }
@@ -216,7 +216,7 @@ class DmlConflictSpec extends SparkSpec {
     build(dir)
     // provenance: merge on keys 0..4 routes to b=0's file only
     val src = (0L to 4L).map(i => (i, 0L)).toDF("k", "b")
-    val (v2, _) = Snapshots.mergeInto(spark, dir, src, Seq("k"))
+    val (v2, _) = CopyOnWrite.mergeInto(spark, dir, src, Seq("k"))
     assert(v2 == 2L)
     val dml = Snapshots.readDml(hfs, s"$dir/v=2")
       .getOrElse(fail("merge published no _dml.json"))
@@ -228,8 +228,8 @@ class DmlConflictSpec extends SparkSpec {
     var workerV = -1L
     val upd = (0L to 4L).map(i => (i, 0L)).toDF("k", "b")
     val (vM, rsM) = PipelineHook.raceAt(dir, "seal") {
-      workerV = Snapshots.deleteWhere(spark, dir, col("k") >= 350L)._1
-    }(Snapshots.mergeInto(spark, dir,
+      workerV = CopyOnWrite.deleteWhere(spark, dir, col("k") >= 350L)._1
+    }(CopyOnWrite.mergeInto(spark, dir,
       upd.withColumn("k", col("k") + 1000L), Seq("k")))
     assert(workerV == 3L && vM == 4L, s"worker=$workerV merge=$vM")
     assert(rsM.rowsChanged == 5L)
@@ -240,8 +240,8 @@ class DmlConflictSpec extends SparkSpec {
     build(dir2)
     val e = intercept[java.util.ConcurrentModificationException] {
       PipelineHook.raceAt(dir2, "seal") {
-        Snapshots.deleteWhere(spark, dir2, col("k") === 10L); ()
-      }(Snapshots.mergeInto(spark, dir2,
+        CopyOnWrite.deleteWhere(spark, dir2, col("k") === 10L); ()
+      }(CopyOnWrite.mergeInto(spark, dir2,
         (0L to 4L).map(i => (i, 0L)).toDF("k", "b"), Seq("k")))
     }
     assert(e.getMessage.contains("conflict"), e.getMessage)

@@ -128,7 +128,7 @@ class FileStatsSpec extends SparkSpec {
     val v1 = Snapshots.commitWithStats(spark, df, dir, Seq("k"))
     val v1Files = Snapshots.read(spark, dir).inputFiles.length
     assert(v1Files > 1, "fixture needs multiple files")
-    val (v2, cs) = Snapshots.compactVersion(spark, dir,
+    val (v2, cs) = SnapshotMaintenance.compact(spark, dir,
       targetBytes = 1L << 30) // everything fits one bin
     assert(v2 == v1 + 1 && Snapshots.latestVersion(spark, dir) == v2)
     assert(cs.nInputFiles == v1Files)
@@ -145,18 +145,13 @@ class FileStatsSpec extends SparkSpec {
     // the OLD version is untouched until vacuum — maintenance never
     // breaks an in-flight reader
     assert(Snapshots.read(spark, dir, v1).count() == 400)
-    // partitioned layouts are refused loudly, never emptied silently
+    // a partitioned layout compacts through the same entry point
     val pdir = freshDir("graft-fstats-compact-part")
     Snapshots.commitWithStats(spark,
       Seq((1L, 0), (2L, 1)).toDF("k", "bucket")
         .repartition(col("bucket")),
       pdir, Seq("k"), partitionByCols = Seq("bucket"))
-    intercept[IllegalArgumentException] {
-      Snapshots.compactVersion(spark, pdir, 1L << 30)
-    }
-    // compactAuto dispatches the partitioned layout that
-    // compactVersion just refused (what SQL OPTIMIZE runs)
-    val (av, _) = Snapshots.compactAuto(spark, pdir, 1L << 30)
+    val (av, _) = SnapshotMaintenance.compact(spark, pdir, 1L << 30)
     assert(av == 2L)
     assert(Snapshots.read(spark, pdir).count() == 2L)
   }
@@ -173,7 +168,7 @@ class FileStatsSpec extends SparkSpec {
       partitionByCols = Seq("bucket"))
     val before = Snapshots.read(spark, dir).inputFiles.length
     assert(before == 4, s"fixture expected 4 files, got $before")
-    val (v2, cs) = Snapshots.compactPartitionedVersion(spark, dir,
+    val (v2, cs) = SnapshotMaintenance.compact(spark, dir,
       targetBytes = 1L << 30)
     assert(v2 == v1 + 1 && cs.nInputFiles == 4)
     val after = Snapshots.read(spark, dir)
@@ -228,7 +223,7 @@ class FileStatsSpec extends SparkSpec {
     val dir = freshDir("graft-fstats-esc")
     // adversarial min/max per file: the old raw interpolation wrote a
     // manifest readManifest could not parse, breaking pruned reads
-    // AND compactVersion on a validly published table
+    // AND compaction on a validly published table
     val df = Seq(
       ("\"quoted\" start", 0), ("zz\\backslash", 0),
       ("line\nbreak", 1), ("tab\there ctl", 1))
@@ -246,7 +241,7 @@ class FileStatsSpec extends SparkSpec {
     val (pruned, ps) = prunedRead(dir, col("s").between("a", "z"))
     assert(ps.filesRead + ps.filesSkipped == 2)
     assert(pruned.count() >= 1)
-    Snapshots.compactPartitionedVersion(spark, dir,
+    SnapshotMaintenance.compact(spark, dir,
       targetBytes = 1L << 30)
     assert(Snapshots.latestVersion(spark, dir) == 2L)
   }

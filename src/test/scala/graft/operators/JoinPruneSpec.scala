@@ -3,7 +3,7 @@ package graft.operators
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** Dynamic file pruning for key joins (Snapshots.readJoinPruned):
+/** Dynamic file pruning for key joins (PrunedReads.readJoinPruned):
   * the dimension side's distinct keys route the fact scan through
   * stats bounds and bloom sidecars — superset guarantee, join still
   * row-level.
@@ -22,7 +22,7 @@ class JoinPruneSpec extends SparkSpec {
     Snapshots.commitWithStats(spark, fact, dir, statsCols = Seq("k"),
       partitionByCols = Seq("b"), bloomCols = Seq("k"))
     val dim = Seq(5L, 17L, 93L, 350L).toDF("k")
-    val (pruned, ps) = Snapshots.readJoinPruned(spark, dir, "k", dim)
+    val (pruned, ps) = PrunedReads.readJoinPruned(spark, dir, "k", dim)
     // keys live in files b=0 and b=3 only
     assert(ps.filesRead == 2L && ps.filesSkipped == 2L, ps)
     val got = pruned.join(dim, "k").select("k", "payload")
@@ -30,12 +30,12 @@ class JoinPruneSpec extends SparkSpec {
     assert(got.toSeq ==
       Seq(5L, 17L, 93L, 350L).map(k => (k, k * 7)))
     // empty dim: everything provably skips, the join matches nothing
-    val (prunedE, psE) = Snapshots.readJoinPruned(spark, dir, "k",
+    val (prunedE, psE) = PrunedReads.readJoinPruned(spark, dir, "k",
       Seq.empty[Long].toDF("k"))
     assert(psE.filesRead == 0L && psE.filesSkipped == 4L)
     assert(prunedE.count() == 0L)
     // above the key bound: read everything (plain join)
-    val (_, psBig) = Snapshots.readJoinPruned(spark, dir, "k", dim,
+    val (_, psBig) = PrunedReads.readJoinPruned(spark, dir, "k", dim,
       maxKeys = 2)
     assert(psBig.filesSkipped == 0L)
   }
@@ -50,7 +50,7 @@ class JoinPruneSpec extends SparkSpec {
     Snapshots.commitWithStats(spark, fact, dir, statsCols = Seq("k"),
       partitionByCols = Seq("b"), bloomCols = Seq("k"))
     val dim = Seq(8L).toDF("k") // 8 % 4 == 0: lives in file b=0 only
-    val (pruned, ps) = Snapshots.readJoinPruned(spark, dir, "k", dim)
+    val (pruned, ps) = PrunedReads.readJoinPruned(spark, dir, "k", dim)
     assert(ps.filesRead < 4L,
       s"blooms excluded nothing: $ps")
     val got = pruned.join(dim, "k").count()

@@ -83,7 +83,7 @@ class MirrorSpec extends SparkSpec {
     Snapshots.commit(spark, batch(0, 5), src)
     Snapshots.commit(spark, batch(5, 9), src)
     Snapshots.commit(spark, batch(9, 14), src)
-    Snapshots.vacuum(spark, src, keepLast = 1)
+    SnapshotMaintenance.vacuum(spark, src, keepLast = 1)
     val e = intercept[IllegalStateException] {
       Snapshots.mirrorAppends(spark, src, dst)
     }

@@ -3,7 +3,7 @@ package graft.operators
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** Merge-on-read deletes (Snapshots.deleteWhereMor): a DELETE must
+/** Merge-on-read deletes (MergeOnRead.deleteWhere): a DELETE must
   * move ZERO data bytes — only a deletion-vector sidecar and a
   * reference list — while every reader (read/table/connector/stream
   * replay) serves exactly the copy-on-write answer; folding restores
@@ -45,8 +45,8 @@ class MorDeleteSpec extends SparkSpec {
     val morDir = freshDir("graft-morB")
     build(cowDir); build(morDir)
     val pred = col("k") % 10 === 3 && col("k") < 200
-    val (_, cow) = Snapshots.deleteWhere(spark, cowDir, pred)
-    val (v2, mor) = Snapshots.deleteWhereMor(spark, morDir, pred)
+    val (_, cow) = CopyOnWrite.deleteWhere(spark, cowDir, pred)
+    val (v2, mor) = MergeOnRead.deleteWhere(spark, morDir, pred)
     assert(v2 == 2L)
     assert(cow.rowsChanged == 20L && mor.tombstonesAdded == 20L)
     // the MoR version directory holds NO data files at all
@@ -74,8 +74,8 @@ class MorDeleteSpec extends SparkSpec {
     "delete publishes nothing; NULL predicates keep rows") {
     val dir = freshDir("graft-morC")
     build(dir)
-    val (_, m1) = Snapshots.deleteWhereMor(spark, dir, col("k") < 50L)
-    val (v3, m2) = Snapshots.deleteWhereMor(spark, dir,
+    val (_, m1) = MergeOnRead.deleteWhere(spark, dir, col("k") < 50L)
+    val (v3, m2) = MergeOnRead.deleteWhere(spark, dir,
       col("k").between(350, 500))
     assert(m1.tombstonesAdded == 50L && m1.tombstonesTotal == 50L)
     assert(m2.tombstonesAdded == 50L && m2.tombstonesTotal == 100L)
@@ -85,11 +85,11 @@ class MorDeleteSpec extends SparkSpec {
       .toSeq == Seq(50L, 349L))
     // re-deleting the same range: already-tombstoned rows are gone
     // from the scan, so this is a no-op and publishes NOTHING
-    val (v3b, m3) = Snapshots.deleteWhereMor(spark, dir, col("k") < 50L)
+    val (v3b, m3) = MergeOnRead.deleteWhere(spark, dir, col("k") < 50L)
     assert(v3b == 3L && m3.tombstonesAdded == 0L &&
       m3.tombstonesTotal == 100L)
     // NULL predicate keeps (SQL DELETE): no payload is null here
-    val (v3c, m4) = Snapshots.deleteWhereMor(spark, dir,
+    val (v3c, m4) = MergeOnRead.deleteWhere(spark, dir,
       when(col("payload").isNull, lit(true)))
     assert(v3c == 3L && m4.tombstonesAdded == 0L)
   }
@@ -98,7 +98,7 @@ class MorDeleteSpec extends SparkSpec {
     "counts stay exact after deletes, never a stale-manifest answer") {
     val dir = freshDir("graft-morM")
     build(dir)
-    Snapshots.deleteWhereMor(spark, dir, col("k") < 25L)
+    MergeOnRead.deleteWhere(spark, dir, col("k") < 25L)
     val q = Snapshots.table(spark, dir)
       .agg(count(lit(1)).as("n"), min(col("k")).as("mn"))
     val r = q.head()
@@ -110,9 +110,9 @@ class MorDeleteSpec extends SparkSpec {
     "compactVersion delegates to the fold") {
     val dir = freshDir("graft-morF")
     build(dir)
-    Snapshots.deleteWhereMor(spark, dir, col("k").between(100, 149))
-    val v3 = Snapshots.foldMor(spark, dir, statsCols = Seq("k"))
-    assert(v3 == 3L && !Snapshots.isMorVersion(spark, dir, 3L))
+    MergeOnRead.deleteWhere(spark, dir, col("k").between(100, 149))
+    val v3 = MergeOnRead.fold(spark, dir, statsCols = Seq("k"))
+    assert(v3 == 3L && !MergeOnRead.isMorVersion(spark, dir, 3L))
     val folded = Snapshots.read(spark, dir)
     assert(folded.count() == 350L)
     assert(folded.filter(col("k").between(100, 149)).count() == 0L)
@@ -124,13 +124,13 @@ class MorDeleteSpec extends SparkSpec {
     val ps = graft.plans.StatsFileIndex.indexOf(tbl)
       .flatMap(_.lastPrune).getOrElse(fail("no stats index after fold"))
     assert(ps.filesSkipped > 0L, ps)
-    // compactVersion on a fresh MoR head folds it
+    // compaction on a fresh MoR head folds it
     val dir2 = freshDir("graft-morF2")
     build(dir2)
-    Snapshots.deleteWhereMor(spark, dir2, col("k") < 10L)
-    val (nv, cs) = Snapshots.compactVersion(spark, dir2, 1L << 20,
+    MergeOnRead.deleteWhere(spark, dir2, col("k") < 10L)
+    val (nv, cs) = SnapshotMaintenance.compact(spark, dir2, 1L << 20,
       statsCols = Seq("k"))
-    assert(nv == 3L && !Snapshots.isMorVersion(spark, dir2, nv))
+    assert(nv == 3L && !MergeOnRead.isMorVersion(spark, dir2, nv))
     assert(cs.nInputFiles == 4 && cs.nRewrittenFiles > 0)
     assert(Snapshots.read(spark, dir2).count() == 390L)
   }
@@ -139,11 +139,11 @@ class MorDeleteSpec extends SparkSpec {
     "rows land locally, references and tombstones carry forward") {
     val dir = freshDir("graft-morP")
     build(dir)
-    Snapshots.deleteWhereMor(spark, dir, col("k") < 100L)
+    MergeOnRead.deleteWhere(spark, dir, col("k") < 100L)
     val nv = Snapshots.appendVersion(spark,
       (1000L until 1050L).map(i => (i, 0L, s"d$i"))
         .toDF("k", "b", "payload").coalesce(1), dir)
-    assert(nv == 3L && Snapshots.isMorVersion(spark, dir, 3L))
+    assert(nv == 3L && MergeOnRead.isMorVersion(spark, dir, 3L))
     val t = Snapshots.read(spark, dir)
     assert(t.count() == 350L)
     assert(t.filter(col("k") >= 1000L).count() == 50L)
@@ -154,7 +154,7 @@ class MorDeleteSpec extends SparkSpec {
     assert(spark.read.option("basePath", s"$dir/v=3")
       .parquet(local: _*).count() == 50L)
     // a further MoR delete spanning old and new rows works on the mix
-    val (_, m) = Snapshots.deleteWhereMor(spark, dir,
+    val (_, m) = MergeOnRead.deleteWhere(spark, dir,
       col("k").isin(150L, 1001L))
     assert(m.tombstonesAdded == 2L)
     assert(Snapshots.read(spark, dir).count() == 348L)
@@ -164,22 +164,22 @@ class MorDeleteSpec extends SparkSpec {
     "reclaims a version that physically serves a survivor") {
     val dir = freshDir("graft-morV")
     build(dir)
-    Snapshots.deleteWhereMor(spark, dir, col("k") < 10L)
+    MergeOnRead.deleteWhere(spark, dir, col("k") < 10L)
     val e = intercept[IllegalArgumentException] {
-      Snapshots.deleteWhere(spark, dir, col("k") < 20L)
+      CopyOnWrite.deleteWhere(spark, dir, col("k") < 20L)
     }
-    assert(e.getMessage.contains("foldMor"))
+    assert(e.getMessage.contains("MergeOnRead.fold"))
     // keepLast=1 would doom v=1, but v=2 serves v=1's files
-    assert(Snapshots.vacuum(spark, dir, keepLast = 1).isEmpty)
+    assert(SnapshotMaintenance.vacuum(spark, dir, keepLast = 1).isEmpty)
     assert(Snapshots.read(spark, dir).count() == 390L)
     // after folding, nothing pins v1/v2 and both reclaim
-    Snapshots.foldMor(spark, dir, statsCols = Seq("k"))
-    assert(Snapshots.vacuum(spark, dir, keepLast = 1) == Seq(1L, 2L))
+    MergeOnRead.fold(spark, dir, statsCols = Seq("k"))
+    assert(SnapshotMaintenance.vacuum(spark, dir, keepLast = 1) == Seq(1L, 2L))
     assert(Snapshots.read(spark, dir).count() == 390L)
     // a failed delete (bad predicate) leaves the head untouched
     val before = Snapshots.latestVersion(spark, dir)
     intercept[Exception] {
-      Snapshots.deleteWhereMor(spark, dir, col("no_such_col") === 1L)
+      MergeOnRead.deleteWhere(spark, dir, col("no_such_col") === 1L)
     }
     assert(Snapshots.latestVersion(spark, dir) == before)
   }
@@ -189,7 +189,7 @@ class MorDeleteSpec extends SparkSpec {
     "vector is sidecar-sized, and never a cartesian") {
     val dir = freshDir("graft-morPlan")
     build(dir)
-    Snapshots.deleteWhereMor(spark, dir, col("k") % 100 === 3L)
+    MergeOnRead.deleteWhere(spark, dir, col("k") % 100 === 3L)
     val q = Snapshots.read(spark, dir).filter(col("k") < 200L)
     q.count() // finalize any AQE decisions
     val plan = q.queryExecution.executedPlan.toString
@@ -209,8 +209,8 @@ class MorDeleteSpec extends SparkSpec {
     val pred = col("k") % 25 === 7
     val sets = Map("payload" -> concat(lit("upd:"), col("payload")),
       "b" -> lit(9L)) // moves rows to a NEW partition directory
-    Snapshots.updateWhere(spark, cowDir, pred, sets)
-    val (v2, m) = Snapshots.updateWhereMor(spark, morDir, pred, sets)
+    CopyOnWrite.updateWhere(spark, cowDir, pred, sets)
+    val (v2, m) = MergeOnRead.updateWhere(spark, morDir, pred, sets)
     assert(v2 == 2L && m.tombstonesAdded == 16L)
     val a = Snapshots.read(spark, cowDir).orderBy("k", "payload")
       .collect().toSeq
@@ -225,12 +225,12 @@ class MorDeleteSpec extends SparkSpec {
     assert(spark.read.option("basePath", s"$morDir/v=2")
       .parquet(local: _*).count() == 16L)
     // composes with MoR delete on the mixed (refs+local) head
-    val (_, d) = Snapshots.deleteWhereMor(spark, morDir,
+    val (_, d) = MergeOnRead.deleteWhere(spark, morDir,
       col("payload").startsWith("upd:") && col("k") < 100L)
     assert(d.tombstonesAdded == 4L)
     assert(Snapshots.read(spark, morDir).count() == 396L)
     // and folds back clean
-    Snapshots.foldMor(spark, morDir, statsCols = Seq("k"))
+    MergeOnRead.fold(spark, morDir, statsCols = Seq("k"))
     assert(Snapshots.read(spark, morDir).count() == 396L)
     assert(Snapshots.read(spark, morDir)
       .filter(col("b") === 9L).count() == 12L)
@@ -244,10 +244,10 @@ class MorDeleteSpec extends SparkSpec {
       .toDF("k", "b", "payload").repartition(col("b"))
     Snapshots.commitWithStats(spark, df, dir, statsCols = Seq("k"),
       partitionByCols = Seq("b"), bloomCols = Seq("payload"))
-    Snapshots.deleteWhereMor(spark, dir, col("k") < 50L)
+    MergeOnRead.deleteWhere(spark, dir, col("k") < 50L)
     // the common maintenance call: NO statsCols argument
-    val (nv, _) = Snapshots.compactVersion(spark, dir, 1L << 20)
-    assert(!Snapshots.isMorVersion(spark, dir, nv))
+    val (nv, _) = SnapshotMaintenance.compact(spark, dir, 1L << 20)
+    assert(!MergeOnRead.isMorVersion(spark, dir, nv))
     val vDir = s"$dir/v=$nv"
     assert(hfs.exists(new org.apache.hadoop.fs.Path(vDir,
       FileStats.ManifestName)), "stats manifest dropped by the fold")
@@ -274,7 +274,7 @@ class MorDeleteSpec extends SparkSpec {
     val df = (0L until 100L).map(i => (i % 10, "dup")).toDF("k", "p")
       .coalesce(1)
     Snapshots.commit(spark, df, dir)
-    val (_, m) = Snapshots.deleteWhereMor(spark, dir, col("k") === 3L)
+    val (_, m) = MergeOnRead.deleteWhere(spark, dir, col("k") === 3L)
     assert(m.tombstonesAdded == 10L)
     val viaConnector = spark.read.format("snapshot").load(dir)
     assert(viaConnector.count() == 90L)
@@ -290,16 +290,16 @@ class MorDeleteSpec extends SparkSpec {
     build(dir) // stats on k, partitioned by b
     // pure-delete MoR head: v=2 has ZERO local data files — the old
     // code path either misread (readTopK on an update head) or threw
-    Snapshots.deleteWhereMor(spark, dir, col("k") < 100L)
-    assert(Snapshots.isMorVersion(spark, dir, 2L))
+    MergeOnRead.deleteWhere(spark, dir, col("k") < 100L)
+    assert(MergeOnRead.isMorVersion(spark, dir, 2L))
     // readTopK: must see the whole live table, not v=2's (empty)
     // local files, and must NOT resurrect tombstoned rows
-    val (top, psT) = Snapshots.readTopK(spark, dir, "k", 5)
+    val (top, psT) = PrunedReads.readTopK(spark, dir, "k", 5)
     val topK = top.orderBy(col("k").desc).limit(5)
       .collect().map(_.getAs[Long]("k")).toSeq
     assert(topK == Seq(399L, 398L, 397L, 396L, 395L))
     assert(psT.filesSkipped == 0L && psT.filesRead == 4L, psT)
-    val (bot, _) = Snapshots.readTopK(spark, dir, "k", 3,
+    val (bot, _) = PrunedReads.readTopK(spark, dir, "k", 3,
       desc = false, nullsFirst = true)
     assert(bot.orderBy(col("k")).limit(3)
       .collect().map(_.getAs[Long]("k")).toSeq == Seq(100L, 101L, 102L))
@@ -312,18 +312,18 @@ class MorDeleteSpec extends SparkSpec {
       .count() == 0L) // all tombstoned
     // readJoinPruned: full assembly, join still row-level correct
     val dim = Seq(50L, 150L, 250L).toDF("k")
-    val (jp, psJ) = Snapshots.readJoinPruned(spark, dir, "k", dim)
+    val (jp, psJ) = PrunedReads.readJoinPruned(spark, dir, "k", dim)
     assert(jp.join(dim, "k").count() == 2L) // 50 deleted; 150/250 live
     assert(psJ.filesSkipped == 0L, psJ)
     // an UPDATE head (has local files too) through readTopK: the old
     // no-manifest branch would read ONLY the local updated images
-    Snapshots.updateWhereMor(spark, dir, col("k") === 399L,
+    MergeOnRead.updateWhere(spark, dir, col("k") === 399L,
       Map("k" -> lit(1000L)))
-    val (top2, _) = Snapshots.readTopK(spark, dir, "k", 2)
+    val (top2, _) = PrunedReads.readTopK(spark, dir, "k", 2)
     assert(top2.orderBy(col("k").desc).limit(2)
       .collect().map(_.getAs[Long]("k")).toSeq == Seq(1000L, 398L))
     // time travel through the guard: version pin still works
-    val (tv, _) = Snapshots.readTopK(spark, dir, "k", 1, version = 1L)
+    val (tv, _) = PrunedReads.readTopK(spark, dir, "k", 1, version = 1L)
     assert(tv.agg(max(col("k"))).head().getLong(0) == 399L)
   }
 
@@ -338,10 +338,10 @@ class MorDeleteSpec extends SparkSpec {
       .toDF("k", "b", "payload").repartition(col("b"))
     Snapshots.commitWithStats(spark, df, dir, statsCols = Seq("k"),
       partitionByCols = Seq("b"))
-    val (_, big) = Snapshots.deleteWhereMor(spark, dir,
+    val (_, big) = MergeOnRead.deleteWhere(spark, dir,
       col("k") < 30000L)
     assert(big.tombstonesAdded == 30000L)
-    val (_, tiny) = Snapshots.deleteWhereMor(spark, dir,
+    val (_, tiny) = MergeOnRead.deleteWhere(spark, dir,
       col("k") === 35000L)
     assert(tiny.tombstonesAdded == 1L && tiny.tombstonesTotal == 30001L)
     // the old union-rewrite made every statement pay for ALL prior
@@ -352,14 +352,14 @@ class MorDeleteSpec extends SparkSpec {
     assert(Snapshots.read(spark, dir).count() == 9999L)
     // dv metadata: v3 carries v2's dv by reference + its own locally
     val head = Snapshots.latestVersion(spark, dir)
-    val entries = Snapshots.dvEntries(spark, dir, head)
+    val entries = MergeOnRead.dvEntries(spark, dir, head)
     assert(entries.size == 2, entries)
     assert(entries.map(_.rows).sorted == Seq(1L, 30000L))
-    assert(entries.forall(_.keys.isDefined))
+    assert(entries.forall(_.keys.nonEmpty))
     // fold clears them all
-    Snapshots.foldMor(spark, dir, statsCols = Seq("k"))
+    MergeOnRead.fold(spark, dir, statsCols = Seq("k"))
     assert(Snapshots.read(spark, dir).count() == 9999L)
-    assert(Snapshots.dvEntries(spark, dir,
+    assert(MergeOnRead.dvEntries(spark, dir,
       Snapshots.latestVersion(spark, dir)).isEmpty)
   }
 
@@ -369,10 +369,10 @@ class MorDeleteSpec extends SparkSpec {
     val dir = freshDir("graft-morDS")
     build(dir)
     // delete rows living ONLY in bucket 0's file
-    Snapshots.deleteWhereMor(spark, dir, col("k") < 10L)
+    MergeOnRead.deleteWhere(spark, dir, col("k") < 10L)
     val head = Snapshots.latestVersion(spark, dir)
-    val keys = Snapshots.dvEntries(spark, dir, head)
-      .flatMap(_.keys.get)
+    val keys = MergeOnRead.dvEntries(spark, dir, head)
+      .flatMap(_.keys)
     assert(keys.size == 1 && keys.head.contains("b=0"), keys)
     val q = Snapshots.read(spark, dir)
     assert(q.count() == 390L)
@@ -389,20 +389,20 @@ class MorDeleteSpec extends SparkSpec {
     "references — a carried deletion vector is content, not cleanup") {
     val dir = freshDir("graft-morDVp")
     build(dir)
-    Snapshots.deleteWhereMor(spark, dir, col("k") < 25L) // v2: dv here
+    MergeOnRead.deleteWhere(spark, dir, col("k") < 25L) // v2: dv here
     Snapshots.appendVersion(spark,
       (500L until 510L).map(i => (i, 0L, s"d$i"))
         .toDF("k", "b", "payload").coalesce(1), dir) // v3: carries dv ref
     assert(Snapshots.read(spark, dir).count() == 385L)
     // keepLast=1 dooms v1,v2 — but v3 references v1's data files AND
     // v2's deletion vector: nothing may be reclaimed
-    assert(Snapshots.vacuum(spark, dir, keepLast = 1).isEmpty)
+    assert(SnapshotMaintenance.vacuum(spark, dir, keepLast = 1).isEmpty)
     assert(Snapshots.read(spark, dir).count() == 385L)
     assert(Snapshots.read(spark, dir).filter(col("k") < 25L)
       .count() == 0L, "tombstones lost after vacuum")
     // fold → self-contained head → everything older reclaims
-    Snapshots.foldMor(spark, dir, statsCols = Seq("k"))
-    assert(Snapshots.vacuum(spark, dir, keepLast = 1)
+    MergeOnRead.fold(spark, dir, statsCols = Seq("k"))
+    assert(SnapshotMaintenance.vacuum(spark, dir, keepLast = 1)
       == Seq(1L, 2L, 3L))
     assert(Snapshots.read(spark, dir).count() == 385L)
   }
@@ -418,7 +418,7 @@ class MorDeleteSpec extends SparkSpec {
       .map(i => (i, if (i < 50) "New York" else "Sao Paulo"))
       .toDF("k", "city").repartition(col("city"))
     Snapshots.commit(spark, df, dir)
-    val (_, m) = Snapshots.deleteWhereMor(spark, dir,
+    val (_, m) = MergeOnRead.deleteWhere(spark, dir,
       col("city") === "New York" && col("k") < 10L)
     assert(m.tombstonesAdded == 10L)
     val t = Snapshots.read(spark, dir)
@@ -442,15 +442,15 @@ class MorDeleteSpec extends SparkSpec {
     val dir = freshDir("graft-morPurge")
     build(dir) // 400 rows, 4 files, b=0..3
     // dirty exactly bucket 0's file
-    Snapshots.deleteWhereMor(spark, dir, col("k") < 10L)
-    val (nv, ps) = Snapshots.purgeMor(spark, dir)
+    MergeOnRead.deleteWhere(spark, dir, col("k") < 10L)
+    val (nv, ps) = MergeOnRead.purge(spark, dir)
     assert(ps.filesRewritten == 1L && ps.filesReferenced == 3L, ps)
     assert(ps.tombstonesApplied == 10L)
     assert(ps.bytesRewritten < ps.bytesSkipped,
       s"purge cost not proportional to dirty bytes: $ps")
     // still reference-assembled, but dv-free: NO anti-join in the plan
-    assert(Snapshots.isMorVersion(spark, dir, nv))
-    assert(Snapshots.dvEntries(spark, dir, nv).isEmpty)
+    assert(MergeOnRead.isMorVersion(spark, dir, nv))
+    assert(MergeOnRead.dvEntries(spark, dir, nv).isEmpty)
     val q = Snapshots.read(spark, dir)
     assert(q.count() == 390L)
     assert(q.filter(col("k") < 10L).count() == 0L)
@@ -459,52 +459,25 @@ class MorDeleteSpec extends SparkSpec {
     // partition layout preserved for the rewritten file's rows
     assert(q.filter(col("b") === 0L).count() == 90L)
     // a further MoR delete on the purged head composes
-    val (_, m2) = Snapshots.deleteWhereMor(spark, dir, col("k") === 200L)
+    val (_, m2) = MergeOnRead.deleteWhere(spark, dir, col("k") === 200L)
     assert(m2.tombstonesAdded == 1L && m2.tombstonesTotal == 1L,
       "purge did not reset the tombstone count")
     assert(Snapshots.read(spark, dir).count() == 389L)
     // no-op purges are refused loudly
-    Snapshots.foldMor(spark, dir, statsCols = Seq("k"))
+    MergeOnRead.fold(spark, dir, statsCols = Seq("k"))
     val e = intercept[IllegalArgumentException] {
-      Snapshots.purgeMor(spark, dir)
+      MergeOnRead.purge(spark, dir)
     }
-    assert(e.getMessage.contains("purgeMor"), e.getMessage)
+    assert(e.getMessage.contains("MergeOnRead.purge"), e.getMessage)
     // vacuum keeps the homes a purged version references
     val dir2 = freshDir("graft-morPurge2")
     build(dir2)
-    Snapshots.deleteWhereMor(spark, dir2, col("k") < 10L)
-    Snapshots.purgeMor(spark, dir2) // v3 references v1's clean files
+    MergeOnRead.deleteWhere(spark, dir2, col("k") < 10L)
+    MergeOnRead.purge(spark, dir2) // v3 references v1's clean files
     // v1 is pinned by v3's refs; v2 (which held only the now-dropped
     // deletion vector) is legitimately reclaimable
-    assert(Snapshots.vacuum(spark, dir2, keepLast = 1) == Seq(2L))
+    assert(SnapshotMaintenance.vacuum(spark, dir2, keepLast = 1) == Seq(2L))
     assert(Snapshots.read(spark, dir2).count() == 390L)
-  }
-
-  test("legacy monolithic _deletes.parquet stores still read, count, " +
-    "and accept further DML (carried by reference, all-dirty " +
-    "conservative scan)") {
-    val dir = freshDir("graft-morLeg")
-    build(dir)
-    Snapshots.deleteWhereMor(spark, dir, col("k") < 30L)
-    // surgically convert v2 to the pre-r17 layout: one monolithic
-    // _deletes.parquet, no _dv, no _dvrefs
-    val v2 = s"$dir/v=2"
-    val dv = Snapshots.dvEntries(spark, dir, 2L)
-    assert(dv.size == 1)
-    spark.read.parquet(dv.head.path).coalesce(1).write
-      .parquet(s"$v2/_deletes.parquet")
-    hfs.delete(new org.apache.hadoop.fs.Path(s"$v2/_dv"), true)
-    assert(Snapshots.read(spark, dir).count() == 370L)
-    val legacy = Snapshots.dvEntries(spark, dir, 2L)
-    assert(legacy.size == 1 && legacy.head.keys.isEmpty &&
-      legacy.head.rows == 30L, legacy)
-    // a NEW statement on the legacy head carries the monolithic set
-    // by reference and adds its own incremental dv
-    val (_, m) = Snapshots.deleteWhereMor(spark, dir, col("k") === 100L)
-    assert(m.tombstonesAdded == 1L && m.tombstonesTotal == 31L)
-    assert(Snapshots.read(spark, dir).count() == 369L)
-    Snapshots.foldMor(spark, dir, statsCols = Seq("k"))
-    assert(Snapshots.read(spark, dir).count() == 369L)
   }
 
   test("MoR DML's matching scan is sidecar-routed: a point delete " +
@@ -512,24 +485,24 @@ class MorDeleteSpec extends SparkSpec {
     "— and a predicate with no route still reads everything") {
     val dir = freshDir("graft-morRoute")
     build(dir) // 4 files (b=0..3, k-quartiles), stats on k
-    val (_, st) = Snapshots.deleteWhereMor(spark, dir, col("k") === 55L)
+    val (_, st) = MergeOnRead.deleteWhere(spark, dir, col("k") === 55L)
     assert(st.tombstonesAdded == 1L)
     assert(st.filesScanned == 1L && st.filesReferenced == 4L,
       st.toString)
     assert(Snapshots.read(spark, dir).count() == 399L)
     // second statement routes through the HOME version's sidecars
     // (the MoR head's refs point at v1's files)
-    val (_, st2) = Snapshots.deleteWhereMor(spark, dir,
+    val (_, st2) = MergeOnRead.deleteWhere(spark, dir,
       col("k") === 250L)
     assert(st2.filesScanned == 1L, st2.toString)
     assert(Snapshots.read(spark, dir).count() == 398L)
     // no sidecar decides a payload predicate — conservative full scan
-    val (_, st3) = Snapshots.deleteWhereMor(spark, dir,
+    val (_, st3) = MergeOnRead.deleteWhere(spark, dir,
       col("payload") === "d300")
     assert(st3.filesScanned == 4L, st3.toString)
     assert(Snapshots.read(spark, dir).count() == 397L)
     // MoR UPDATE routes the same way and its images stay correct
-    val (_, st4) = Snapshots.updateWhereMor(spark, dir,
+    val (_, st4) = MergeOnRead.updateWhere(spark, dir,
       col("k") === 10L, Map("payload" -> lit("u10")))
     assert(st4.filesScanned == 1L, st4.toString)
     val t = Snapshots.read(spark, dir)
@@ -543,12 +516,12 @@ class MorDeleteSpec extends SparkSpec {
     val dir = freshDir("graft-morPurgeAll")
     build(dir) // 400 rows, 4 files, b = k/100 → k-ranges are disjoint
     // k % 4 == 0 hits every bucket: all 4 files dirty
-    Snapshots.deleteWhereMor(spark, dir, pmod(col("k"), lit(4L)) === 0L)
-    val (nv, ps) = Snapshots.purgeMor(spark, dir)
+    MergeOnRead.deleteWhere(spark, dir, pmod(col("k"), lit(4L)) === 0L)
+    val (nv, ps) = MergeOnRead.purge(spark, dir)
     assert(ps.filesRewritten == 4L && ps.filesReferenced == 0L, ps)
-    assert(!Snapshots.isMorVersion(spark, dir, nv),
+    assert(!MergeOnRead.isMorVersion(spark, dir, nv),
       "all-dirty purge should be self-contained")
-    // the manifest was recomputed foldMor-style from the homes
+    // the manifest was recomputed fold-style from the homes
     val ms = FileStats.readManifest(spark, s"$dir/v=$nv")
     assert(ms.nonEmpty && ms.forall(_.cols.contains("k")),
       s"purge lost the stats manifest: $ms")
@@ -556,9 +529,9 @@ class MorDeleteSpec extends SparkSpec {
     val (pr, pst) = prunedRead(dir, col("k").between(0, 50))
     assert(pst.filesSkipped == 3L && pst.filesRead == 1L, pst.toString)
     assert(pr.count() == 38L) // 51 - 13 purged
-    // SQL OPTIMIZE's dispatcher routes the partitioned layout where
-    // compactVersion would refuse, and keeps the manifest again
-    val (cv, _) = Snapshots.compactAuto(spark, dir, 1L << 30)
+    // compaction (what SQL OPTIMIZE runs) bins the partitioned
+    // layout, and keeps the manifest again
+    val (cv, _) = SnapshotMaintenance.compact(spark, dir, 1L << 30)
     assert(cv == nv + 1)
     assert(FileStats.readManifest(spark, s"$dir/v=$cv").nonEmpty)
     val (_, pst2) = prunedRead(dir, col("k").between(0, 50))

@@ -98,7 +98,7 @@ class NullStatsSpec extends SparkSpec {
   test("readTopK prunes provably-beaten files, keeps unparseable " +
     "ones conservatively, and loses no top-k row") {
     val dir = store()
-    val (df, ps) = Snapshots.readTopK(spark, dir, "v", 10, desc = true)
+    val (df, ps) = PrunedReads.readTopK(spark, dir, "v", 10, desc = true)
     // b3 survives (the tail), b0 survives (all-null: no proof), b1/b2
     // are beaten by b3's 100 guaranteed non-null values
     assert(ps.filesRead == 2L && ps.filesSkipped == 2L, ps)
@@ -109,14 +109,14 @@ class NullStatsSpec extends SparkSpec {
       .select("v").collect().map(_.getLong(0)).toSeq
     assert(got == want && got.head == 299L && got.last == 290L)
     // ascending mirror: b1 is the tail, b2/b3 beaten, b0 kept
-    val (dfA, psA) = Snapshots.readTopK(spark, dir, "v", 10,
+    val (dfA, psA) = PrunedReads.readTopK(spark, dir, "v", 10,
       desc = false)
     assert(psA.filesRead == 2L && psA.filesSkipped == 2L, psA)
     assert(dfA.orderBy(col("v").asc_nulls_last).limit(10)
       .select("v").collect().map(_.getLong(0)).toSeq ==
       (0L until 10L))
     // k larger than any guarantee: nothing prunes
-    val (_, psBig) = Snapshots.readTopK(spark, dir, "v", 250)
+    val (_, psBig) = PrunedReads.readTopK(spark, dir, "v", 250)
     assert(psBig.filesSkipped == 0L, psBig)
   }
 
@@ -125,7 +125,7 @@ class NullStatsSpec extends SparkSpec {
     val dir = store()
     // DESC NULLS FIRST, k=10: b0's 100 proven nulls head the result
     // and beat every null-free file — only b0 must be read
-    val (df, ps) = Snapshots.readTopK(spark, dir, "v", 10,
+    val (df, ps) = PrunedReads.readTopK(spark, dir, "v", 10,
       desc = true, nullsFirst = true)
     assert(ps.filesRead == 1L && ps.filesSkipped == 3L, ps)
     val got = df.orderBy(col("v").desc_nulls_first, col("k"))
@@ -136,7 +136,7 @@ class NullStatsSpec extends SparkSpec {
     assert(got == want)
     // k=150 spills past the nulls into the value tail: b3 (the top
     // value range) must also survive
-    val (df2, ps2) = Snapshots.readTopK(spark, dir, "v", 150,
+    val (df2, ps2) = PrunedReads.readTopK(spark, dir, "v", 150,
       desc = true, nullsFirst = true)
     assert(ps2.filesRead == 2L && ps2.filesSkipped == 2L, ps2)
     val got2 = df2.orderBy(col("v").desc_nulls_first, col("k"))
@@ -147,7 +147,7 @@ class NullStatsSpec extends SparkSpec {
     assert(got2 == want2)
     // plain ASC in Spark is NULLS FIRST — the mode this flag exists
     // for: only the null-bearing file survives at k=10
-    val (dfA, psA) = Snapshots.readTopK(spark, dir, "v", 10,
+    val (dfA, psA) = PrunedReads.readTopK(spark, dir, "v", 10,
       desc = false, nullsFirst = true)
     assert(psA.filesRead == 1L && psA.filesSkipped == 3L, psA)
     assert(dfA.orderBy(col("v").asc_nulls_first, col("k")).limit(10)

@@ -29,7 +29,7 @@ class PartitionedDmlSpec extends SparkSpec {
   test("delete routed by a stats column rewrites one partition's " +
     "file; the rest byte-copy and the manifest splices") {
     val dir = store()
-    val (v2, st) = Snapshots.deleteWhere(spark, dir, col("k") < 50)
+    val (v2, st) = CopyOnWrite.deleteWhere(spark, dir, col("k") < 50)
     assert(v2 == 2L)
     assert(st.filesRewritten == 1L && st.filesCopied == 3L)
     assert(st.rowsChanged == 50L && st.rowsKeptInRewritten == 50L)
@@ -45,7 +45,7 @@ class PartitionedDmlSpec extends SparkSpec {
   test("delete routed by the PARTITION column rewrites only that " +
     "directory — partition values are point stats") {
     val dir = store()
-    val (v2, st) = Snapshots.deleteWhere(spark, dir, col("h") === 2)
+    val (v2, st) = CopyOnWrite.deleteWhere(spark, dir, col("h") === 2)
     assert(v2 == 2L)
     assert(st.filesRewritten == 1L && st.filesCopied == 3L, st)
     assert(st.rowsChanged == 100L && st.rowsKeptInRewritten == 0L)
@@ -57,7 +57,7 @@ class PartitionedDmlSpec extends SparkSpec {
   test("an update that CHANGES the partition column re-routes rows " +
     "to the new directory") {
     val dir = store()
-    val (v2, st) = Snapshots.updateWhere(spark, dir,
+    val (v2, st) = CopyOnWrite.updateWhere(spark, dir,
       col("k").between(100, 149), Map("h" -> lit(9L)))
     assert(v2 == 2L && st.filesRewritten == 1L && st.filesCopied == 3L)
     val after = Snapshots.read(spark, dir)
@@ -75,7 +75,7 @@ class PartitionedDmlSpec extends SparkSpec {
     val dir = store()
     val src = Seq((120L, "updated", 1L), (777L, "inserted", 7L))
       .toDF("k", "s", "h")
-    val (v2, st) = Snapshots.mergeInto(spark, dir, src, Seq("k"))
+    val (v2, st) = CopyOnWrite.mergeInto(spark, dir, src, Seq("k"))
     assert(v2 == 2L)
     assert(st.filesRewritten == 1L && st.filesCopied == 3L, st)
     val after = Snapshots.read(spark, dir)
@@ -85,7 +85,7 @@ class PartitionedDmlSpec extends SparkSpec {
     assert(after.filter(col("h") === 7).count() == 1L)
     // provably-no-op merge: empty source publishes nothing
     val empty = Seq.empty[(Long, String, Long)].toDF("k", "s", "h")
-    val (v3, st3) = Snapshots.mergeInto(spark, dir, empty, Seq("k"))
+    val (v3, st3) = CopyOnWrite.mergeInto(spark, dir, empty, Seq("k"))
     assert(v3 == v2 && st3.rowsChanged == 0L)
   }
 
@@ -99,7 +99,7 @@ class PartitionedDmlSpec extends SparkSpec {
         .repartition(col("h")),
       dir2, statsCols = Seq("h2"), partitionByCols = Seq("h"))
     val src = Seq((1000L, 3L)).toDF("h2", "h")
-    val (_, st) = Snapshots.mergeInto(spark, dir2, src, Seq("h"))
+    val (_, st) = CopyOnWrite.mergeInto(spark, dir2, src, Seq("h"))
     // route column h is partition-encoded: only h=3 rewrites
     assert(st.filesRewritten == 1L && st.filesCopied == 3L, st)
     assert(Snapshots.read(spark, dir2).count() == 151L)

@@ -41,12 +41,12 @@ class SnapshotsSpec extends SparkSpec {
     Snapshots.commit(spark, Seq((1, "a")).toDF("id", "s"), dir)
     // simulate an in-flight commit: v=2 staged, pointer still at 1
     Seq((2, "staged")).toDF("id", "s").write.parquet(s"$dir/v=2")
-    assert(Snapshots.vacuum(spark, dir, keepLast = 1,
+    assert(SnapshotMaintenance.vacuum(spark, dir, keepLast = 1,
       orphanGraceMs = 3600000L).isEmpty)
     // the staged directory is untouched and can still publish
     assert(new java.io.File(s"$dir/v=2").exists())
     // an ungraced vacuum (maintenance window, no writers) reclaims it
-    assert(Snapshots.vacuum(spark, dir, keepLast = 1) == Seq(2L))
+    assert(SnapshotMaintenance.vacuum(spark, dir, keepLast = 1) == Seq(2L))
   }
 
   test("version allocator honors live _claim markers: a writer that " +
@@ -75,7 +75,7 @@ class SnapshotsSpec extends SparkSpec {
       Seq((2, "y")).toDF("id", "s"), d2) == 2L)
     // a graced vacuum sweeps the aged retired marker, keeps live claims
     assert(stale.setLastModified(System.currentTimeMillis() - 60000L))
-    Snapshots.vacuum(spark, d2, keepLast = 10, orphanGraceMs = 1000L)
+    SnapshotMaintenance.vacuum(spark, d2, keepLast = 10, orphanGraceMs = 1000L)
     assert(!stale.exists())
     assert(new java.io.File(new java.io.File(d2), "_claim.2").exists())
   }
@@ -129,7 +129,11 @@ class SnapshotsSpec extends SparkSpec {
       gate.countDown()
       val (va, vb) = (fa.get(), fb.get())
       assert(va != vb, s"both committers took v=$va")
-      assert(Set(va, vb) == Set(2L, 3L), s"$va/$vb")
+      // when the higher slot publishes first, the lower one re-lands
+      // above it: the pointer never moves backwards
+      assert(Set(va, vb) == Set(2L, 3L) || Set(va, vb) == Set(3L, 4L),
+        s"$va/$vb")
+      assert(Snapshots.latestVersion(spark, dir) == math.max(va, vb))
       // each slot holds exactly its own committer's rows, with no
       // nested stage (the local-FS rename-merge failure mode the claim
       // marker exists to prevent)
@@ -156,7 +160,7 @@ class SnapshotsSpec extends SparkSpec {
       .setLastModified(System.currentTimeMillis() - 60000L))
     // fresh in-flight claim on another slot
     assert(new java.io.File(d, "_claim.9").createNewFile())
-    Snapshots.vacuum(spark, dir, keepLast = 5, orphanGraceMs = 1000L)
+    SnapshotMaintenance.vacuum(spark, dir, keepLast = 5, orphanGraceMs = 1000L)
     assert(!new java.io.File(d, "_claim.7").exists(), "corpse not swept")
     assert(new java.io.File(d, "_claim.9").exists(), "fresh claim swept")
     // _claim.1 guards a surviving version — never an orphan
@@ -176,11 +180,11 @@ class SnapshotsSpec extends SparkSpec {
           .repartition(2), dir, e.toLong)
       assert(r == Right(e + 1L), r.toString)
     }
-    val (nv, _) = Snapshots.compactVersion(spark, dir,
+    val (nv, _) = SnapshotMaintenance.compact(spark, dir,
       targetBytes = 1L << 30)
     assert(nv == 4L)
     // the compacted head must carry the source's _epoch.2 marker —
-    // Compaction.listDataFiles rightly skips _-prefixed files, so
+    // the data-file listing rightly skips _-prefixed files, so
     // without the explicit copy the fence silently vanished here
     assert(new java.io.File(s"$dir/v=4/_epoch.2").exists(),
       "compaction must carry the epoch marker forward")
@@ -317,7 +321,7 @@ class SnapshotsSpec extends SparkSpec {
     val oldManifest = FileStats.readManifest(spark, s"$dir/v=1")
     assert(oldManifest.size == 4)
     // range-decided delete: only files intersecting [0,50] rewrite
-    val (v2, d1) = Snapshots.deleteWhere(spark, dir,
+    val (v2, d1) = CopyOnWrite.deleteWhere(spark, dir,
       col("k").between(0, 50))
     assert(v2 == 2L)
     assert(d1.rowsChanged == 51, d1.toString)
@@ -336,13 +340,13 @@ class SnapshotsSpec extends SparkSpec {
     assert(pruned.count() == 100)
     // bloom-decided delete: an equality predicate on the unclustered
     // column rewrites only bloom-admitting files
-    val (v3, d2) = Snapshots.deleteWhere(spark, dir,
+    val (v3, d2) = CopyOnWrite.deleteWhere(spark, dir,
       col("uid") === "u-250")
     assert(v3 == 3L && d2.rowsChanged == 1, d2.toString)
     assert(d2.filesCopied >= 1, s"bloom must spare some file: $d2")
     assert(Snapshots.read(spark, dir).count() == 348)
     // update: one matching row changes in place, counts preserved
-    val (v4, u1) = Snapshots.updateWhere(spark, dir,
+    val (v4, u1) = CopyOnWrite.updateWhere(spark, dir,
       col("k") === 300, Map("uid" -> lit("CHANGED")))
     assert(v4 == 4L && u1.rowsChanged == 1, u1.toString)
     assert(u1.filesCopied >= 2, u1.toString)
@@ -351,9 +355,9 @@ class SnapshotsSpec extends SparkSpec {
     assert(after.filter(col("uid") === "CHANGED").collect()
       .map(_.getLong(0)).toSeq == Seq(300L))
     // provable no-op: every file range-skipped → nothing publishes
-    val (v5, d3) = Snapshots.deleteWhere(spark, dir,
+    val (v5, d3) = CopyOnWrite.deleteWhere(spark, dir,
       col("k").between(10000, 10001))
-    assert(v5 == 4L && d3 == Snapshots.RewriteStats(0, 0, 0, 0))
+    assert(v5 == 4L && d3 == CopyOnWrite.RewriteStats(0, 0, 0, 0))
     assert(Snapshots.latestVersion(spark, dir) == 4L)
   }
 
@@ -370,7 +374,7 @@ class SnapshotsSpec extends SparkSpec {
     // two updates inside the first quartile + one brand-new key
     val src = Seq((10L, "upd-10"), (20L, "upd-20"), (1000L, "new-1000"))
       .toDF("k", "uid")
-    val (v2, m1) = Snapshots.mergeInto(spark, dir, src, Seq("k"))
+    val (v2, m1) = CopyOnWrite.mergeInto(spark, dir, src, Seq("k"))
     assert(v2 == 2L)
     assert(m1.rowsChanged == 3, m1.toString)
     assert(m1.filesCopied == 3 && m1.filesRewritten == 1, m1.toString)
@@ -389,7 +393,7 @@ class SnapshotsSpec extends SparkSpec {
     assert(pl.count() == 1)
     assert(plStats.filesRead + plStats.filesSkipped >= 4)
     // routing bound: a batch over maxRoutedKeys rewrites everything
-    val (v3, m2) = Snapshots.mergeInto(spark, dir,
+    val (v3, m2) = CopyOnWrite.mergeInto(spark, dir,
       Seq((30L, "x"), (330L, "y")).toDF("k", "uid"), Seq("k"),
       maxRoutedKeys = 1)
     assert(v3 == 3L && m2.filesCopied == 0, m2.toString)
@@ -404,11 +408,34 @@ class SnapshotsSpec extends SparkSpec {
     assert(h.forall(_.nDataFiles >= 1))
   }
 
+  test("DESCRIBE HISTORY counts a partitioned version's data files " +
+    "and bytes inside its partition directories") {
+    import org.apache.spark.sql.functions.col
+    import scala.jdk.CollectionConverters._
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-history-part").toString + "/t"
+    Snapshots.commitWithStats(spark,
+      (0L until 400L).map(i => (i, i % 4)).toDF("k", "b")
+        .repartition(col("b")),
+      dir, statsCols = Seq("k"), partitionByCols = Seq("b"))
+    val parquet = {
+      val w = java.nio.file.Files.walk(java.nio.file.Paths.get(s"$dir/v=1"))
+      try w.iterator().asScala.map(_.toFile)
+        .filter(_.getName.endsWith(".parquet")).toList
+      finally w.close()
+    }
+    assert(parquet.size >= 4 &&
+      parquet.forall(_.getParentFile.getName.startsWith("b=")), parquet)
+    val Seq(h) = Snapshots.history(spark, dir)
+    assert(h.nDataFiles == parquet.size.toLong)
+    assert(h.bytes == parquet.map(_.length).sum)
+  }
+
   test("mergeApply: the full clause surface — matched delete before " +
     "conditional update (first match wins), conditional insert with " +
     "NULL fill, NOT MATCHED BY SOURCE sync — keyed routing intact") {
     import org.apache.spark.sql.functions.col
-    import Snapshots.{MergeDelete, MergeInsert, MergeUpdate, scol, tcol}
+    import CopyOnWrite.{MergeDelete, MergeInsert, MergeUpdate, scol, tcol}
     val dir = java.nio.file.Files
       .createTempDirectory("graft-mapply").toString + "/t"
     val base = (0L until 400L).map(i => (i, i, s"u-$i"))
@@ -417,7 +444,7 @@ class SnapshotsSpec extends SparkSpec {
     // source keys 10/20/30 match (quartile 1), 1000/2000 do not
     val src = Seq((10L, 5L), (20L, 5L), (30L, 999L), (1000L, 1L),
       (2000L, 999L)).toDF("id", "amt")
-    val (v2, st) = Snapshots.mergeApply(spark, dir, src,
+    val (v2, st) = CopyOnWrite.mergeApply(spark, dir, src,
       on = Seq(("k", "id")),
       matched = Seq(
         // delete listed FIRST: for k=20 both conditions hold — the
@@ -449,7 +476,7 @@ class SnapshotsSpec extends SparkSpec {
     // NOT MATCHED BY SOURCE: sync-to-source (update matched, delete
     // the rest) — admission must be EVERY file
     val src2 = (0L until 50L).map(i => (i, 7L)).toDF("id", "amt")
-    val (v3, st2) = Snapshots.mergeApply(spark, dir, src2,
+    val (v3, st2) = CopyOnWrite.mergeApply(spark, dir, src2,
       on = Seq(("k", "id")),
       matched = Seq(MergeUpdate(None, Map("qty" -> scol("amt")))),
       notMatchedBySource = Seq(MergeDelete(None)))
@@ -471,7 +498,7 @@ class SnapshotsSpec extends SparkSpec {
     // refuse with the SQL-standard error, never silent duplication
     val dupSrc = Seq((5L, 1L), (5L, 2L)).toDF("id", "amt")
     val e = intercept[IllegalStateException] {
-      Snapshots.mergeApply(spark, dir, dupSrc, on = Seq(("k", "id")),
+      CopyOnWrite.mergeApply(spark, dir, dupSrc, on = Seq(("k", "id")),
         matched = Seq(MergeUpdate(None, Map("qty" -> scol("amt")))))
     }
     assert(e.getMessage.contains("at most one source row"),
@@ -480,7 +507,7 @@ class SnapshotsSpec extends SparkSpec {
       "refused merge must publish nothing")
     // a typo'd SET column refuses instead of no-op'ing N rows
     val e2 = intercept[IllegalArgumentException] {
-      Snapshots.mergeApply(spark, dir,
+      CopyOnWrite.mergeApply(spark, dir,
         Seq((5L, 1L)).toDF("id", "amt"), on = Seq(("k", "id")),
         matched = Seq(MergeUpdate(None, Map("qtyy" -> scol("amt")))))
     }
@@ -532,14 +559,14 @@ class SnapshotsSpec extends SparkSpec {
       Seq((1L, Some("a")), (2L, None: Option[String]),
         (3L, Some("c"))).toDF("k", "s"), dir)
     // pred `s = 'a'` is NULL for k=2 — that row must be KEPT
-    val (v2, d) = Snapshots.deleteWhere(spark, dir, col("s") === "a")
+    val (v2, d) = CopyOnWrite.deleteWhere(spark, dir, col("s") === "a")
     assert(v2 == 2L && d.rowsChanged == 1, d.toString)
     assert(d.filesCopied == 0, "no manifest: everything rewrites")
     val left = Snapshots.read(spark, dir).orderBy("k").collect()
       .map(_.getLong(0)).toSeq
     assert(left == Seq(2L, 3L), s"null-pred row lost: $left")
     // merge on the same manifest-less table: full rewrite, correct rows
-    val (v3, m) = Snapshots.mergeInto(spark, dir,
+    val (v3, m) = CopyOnWrite.mergeInto(spark, dir,
       Seq((3L, Some("C")), (9L, Some("i"))).toDF("k", "s"), Seq("k"))
     assert(v3 == 3L && m.filesCopied == 0 && m.rowsChanged == 2,
       m.toString)

@@ -1,7 +1,7 @@
 package graft.plans
 
 import graft.SparkSpec
-import graft.operators.Snapshots
+import graft.operators.{CopyOnWrite, Snapshots}
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -193,7 +193,7 @@ class PruningPropertySpec extends SparkSpec {
       preds.take(1).foreach { case (desc, p) =>
         val before = Snapshots.read(spark, dir)
         val want = canon(before.filter(!p || p.isNull))
-        Snapshots.deleteWhere(spark, dir, p)
+        CopyOnWrite.deleteWhere(spark, dir, p)
         assert(canon(Snapshots.read(spark, dir)) == want,
           s"store $n ($sc), DELETE WHERE $desc")
       }

@@ -1,7 +1,7 @@
 package graft.plans
 
 import graft.SparkSpec
-import graft.operators.{PipelineHook, Snapshots}
+import graft.operators.{CopyOnWrite, MergeOnRead, PipelineHook, Snapshots}
 import org.apache.spark.sql.functions._
 
 /** SQL DML on `USING snapshot` tables (SnapshotDmlRule) and per-query
@@ -73,7 +73,7 @@ class SnapshotSqlDmlSpec extends SparkSpec {
     assert(spark.sql(s"DELETE FROM $t WHERE k < 50").head.getLong(0)
       == 50L)
     val head = Snapshots.latestVersion(spark, dir)
-    assert(Snapshots.isMorVersion(spark, dir, head))
+    assert(MergeOnRead.isMorVersion(spark, dir, head))
     // pure-delete MoR version: no data files of its own
     val f = new org.apache.hadoop.fs.Path(dir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
@@ -160,7 +160,7 @@ class SnapshotSqlDmlSpec extends SparkSpec {
     // determinism trick)
     var workerV = -1L
     val affected = PipelineHook.raceAt(dir, "seal") {
-      workerV = Snapshots.deleteWhere(spark, dir, col("k") >= 350L)._1
+      workerV = CopyOnWrite.deleteWhere(spark, dir, col("k") >= 350L)._1
     }(spark.sql(s"DELETE FROM $t WHERE k < 50").head.getLong(0))
     assert(workerV == 2L && affected == 50L)
     assert(spark.sql(s"SELECT count(*) AS n FROM $t").head.getLong(0)
@@ -256,7 +256,7 @@ class SnapshotSqlDmlSpec extends SparkSpec {
     // commutes)
     var workerV = -1L
     assert(PipelineHook.raceAt(dir, "seal") {
-      workerV = Snapshots.deleteWhere(spark, dir, col("k") < 10L)._1
+      workerV = CopyOnWrite.deleteWhere(spark, dir, col("k") < 10L)._1
     }(spark.sql(s"INSERT INTO $t (k, b, payload) " +
       "VALUES (9100, 9, 'race')").head.getLong(0)) == 1L)
     assert(workerV == head + 1, s"worker landed at $workerV")

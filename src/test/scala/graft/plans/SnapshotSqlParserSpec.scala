@@ -1,7 +1,7 @@
 package graft.plans
 
 import graft.SparkSpec
-import graft.operators.Snapshots
+import graft.operators.{MergeOnRead, Snapshots}
 import org.apache.spark.sql.functions._
 
 /** The delegating SQL parser (SnapshotSqlParser): time travel
@@ -77,7 +77,7 @@ class SnapshotSqlParserSpec extends SparkSpec {
     // plain OPTIMIZE folds the reference-assembled head self-contained
     val o = spark.sql(s"OPTIMIZE $t").head
     assert(o.getString(1) == "compact")
-    assert(!Snapshots.isMorVersion(spark, dir,
+    assert(!MergeOnRead.isMorVersion(spark, dir,
       Snapshots.latestVersion(spark, dir)))
     assert(spark.sql(s"SELECT count(*) AS n FROM $t").head.getLong(0)
       == 390L)

@@ -19,6 +19,19 @@ class PlanShapeSpec extends SparkSpec {
   private def count(plan: String, token: String): Int =
     token.r.findAllIn(plan).size
 
+  /** Every registered query built ONCE, by name: its formatted
+    * physical plan and its optimized logical plan — the two GLOBAL
+    * sweeps share it instead of each building the whole registry. */
+  private lazy val sweep: Seq[(String, String,
+      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)] =
+    graft.SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val qe = fn(spark, sf0001).queryExecution
+      val p = qe.explainString(ExplainMode.fromString("formatted"))
+      val optimized = qe.optimizedPlan
+      graft.operators.ManagedCache.releaseAll()
+      (name, p, optimized)
+    }
+
   test("xj4 range join plans a hash join on the bin key, never a nested loop") {
     val p = plan("xj4_range_join")
     assert(!p.contains("BroadcastNestedLoopJoin") &&
@@ -118,19 +131,15 @@ class PlanShapeSpec extends SparkSpec {
       // (hundreds at any data scale), never keys or fact rows
       // (SkewProbe.scala quantile step)
       "xq16_key_skew")
-    val offenders = graft.SparkEntry.queries.toSeq.sortBy(_._1)
-      .flatMap { case (name, fn) =>
-        val p = fn(spark, sf0001).queryExecution
-          .explainString(ExplainMode.fromString("formatted"))
-        graft.operators.ManagedCache.releaseAll()
-        val bad = Seq(
-          "CartesianProduct" -> p.contains("CartesianProduct"),
-          "SinglePartition" -> p.contains("Exchange SinglePartition"))
-          .collect { case (what, true) => what }
-        if (bad.nonEmpty && !whitelist(name))
-          Some(s"$name: ${bad.mkString(", ")}")
-        else None
-      }
+    val offenders = sweep.flatMap { case (name, p, _) =>
+      val bad = Seq(
+        "CartesianProduct" -> p.contains("CartesianProduct"),
+        "SinglePartition" -> p.contains("Exchange SinglePartition"))
+        .collect { case (what, true) => what }
+      if (bad.nonEmpty && !whitelist(name))
+        Some(s"$name: ${bad.mkString(", ")}")
+      else None
+    }
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
@@ -158,11 +167,10 @@ class PlanShapeSpec extends SparkSpec {
         "range l_orderkey < 200 — a bounded slice, not the open fact " +
         "stream; ntile/percent_rank/cume_dist are whole-partition by " +
         "definition (the at-scale alternative is the xs8 sketch)"))
-    val offenders = graft.SparkEntry.queries.toSeq.sortBy(_._1)
-      .filterNot { case (name, _) => whitelist.contains(name) }
-      .flatMap { case (name, fn) =>
-        val plan = fn(spark, sf0001).queryExecution.optimizedPlan
-        val found = plan.collect {
+    val offenders = sweep
+      .filterNot { case (name, _, _) => whitelist.contains(name) }
+      .flatMap { case (name, _, plan) =>
+        plan.collect {
           case w: LWindow
               if w.partitionSpec.nonEmpty &&
                 w.partitionSpec.forall(_.references.nonEmpty) &&
@@ -174,8 +182,6 @@ class PlanShapeSpec extends SparkSpec {
             s"$name: raw-fact window on [" +
               w.partitionSpec.map(_.sql).mkString(", ") + "]"
         }
-        graft.operators.ManagedCache.releaseAll()
-        found
       }
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }

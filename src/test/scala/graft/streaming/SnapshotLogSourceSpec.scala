@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.operators.Snapshots
+import graft.operators.{SnapshotMaintenance, Snapshots}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryException
@@ -102,7 +102,7 @@ class SnapshotLogSourceSpec extends SparkSpec {
     Snapshots.commit(spark, batch(0, 5), src)
     Snapshots.commit(spark, batch(5, 9), src)
     Snapshots.commit(spark, batch(9, 14), src)
-    Snapshots.vacuum(spark, src, keepLast = 1)
+    SnapshotMaintenance.vacuum(spark, src, keepLast = 1)
     val q = spark.readStream.format("snapshot-log")
       .option("path", src).load()
       .writeStream.format("memory").queryName("snaplogv").start()
