@@ -22,9 +22,13 @@ correct, with no failed operations.
 It then prints, for every end-to-end metric that the base checkout's
 BENCHMARK.json lists, each side's median and the relative change, and
 flags a metric whose change median is worse than the base median by
-more than that metric's bound (a share of the base median). The file is
-only read. The last line of standard output is one JSON summary; it
-also keeps every metric of every run.
+more than that metric's bound (a share of the base median). A metric
+is flagged UNRESOLVED when the base's own interquartile range is wider
+than that bound, as a share of the base median, unless every change run
+beats every base run: the pairs then cannot tell a change inside the
+bound from the base's noise. The file is only read. The last line of
+standard output is one JSON summary; it also keeps every metric of every
+run.
 """
 import argparse
 import json
@@ -101,29 +105,40 @@ def main():
     summary["end_to_end"] = end_to_end(sides["base"] / "BENCHMARK.json", runs)
     summary["worse_than_bound"] = [m for m, e in summary["end_to_end"].items()
                                    if e["worse_than_bound"]]
+    summary["unresolved"] = [m for m, e in summary["end_to_end"].items()
+                             if e["unresolved"]]
     print(json.dumps(summary))
 
 
 def end_to_end(benchmark, runs):
     """Each side's median of every end-to-end metric in `benchmark`, the
-    change relative to the base median, and whether it is worse by more
-    than the metric's bound; prints one line per metric."""
+    change relative to the base median, whether it is worse by more than
+    the metric's bound, and whether the base's spread leaves it
+    unresolved; prints one line per metric."""
     spec = json.loads(benchmark.read_text())
     out = {}
     for m in spec["end_to_end"]:
         name, bound = m["name"], m["bound"]
-        med = {side: statistics.median(r[name] for r in runs[side])
-               for side in ("base", "change")}
+        vals = {side: [r[name] for r in runs[side]] for side in ("base", "change")}
+        med = {side: statistics.median(vals[side]) for side in vals}
         sign = 1 if m.get("better", "lower") == "lower" else -1
         worse = sign * (med["change"] - med["base"])
         rel = worse / abs(med["base"]) if med["base"] else (
             0.0 if worse == 0 else float("inf") if worse > 0 else float("-inf"))
         flag = rel > bound
+        q1, _, q3 = quartiles(vals["base"])
+        spread = (q3 - q1) / abs(med["base"]) if med["base"] else 0.0
+        # every change run beats every base run: resolved however noisy
+        apart = max(sign * c for c in vals["change"]) < min(sign * b for b in vals["base"])
+        unresolved = spread > bound and not apart
         out[name] = {"base_median": med["base"], "change_median": med["change"],
-                     "worse_by": rel, "bound": bound, "worse_than_bound": flag}
+                     "worse_by": rel, "bound": bound, "worse_than_bound": flag,
+                     "base_iqr_share": spread, "unresolved": unresolved}
         print(f"{name:14s} base {med['base']:10.4f}  change {med['change']:10.4f}  "
               f"worse by {rel:+.1%} (bound {bound:.0%})"
-              + ("  WORSE THAN BOUND" if flag else ""))
+              + ("  WORSE THAN BOUND" if flag else "")
+              + (f"  UNRESOLVED (base IQR {spread:.0%} of median)"
+                 if unresolved else ""))
     return out
 
 

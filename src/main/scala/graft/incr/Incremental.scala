@@ -62,15 +62,6 @@ object Incremental {
         data(tsCol) > col("watermark_ts"))
       .drop("scope_key", "watermark_ts")
 
-  /** T2 — late-data sweep: the union of the normal incremental window
-    * and a targeted re-sweep predicate (canceled_after_completion,
-    * api_client.py:586-595), deduped on `idCols`.
-    */
-  def withLateSweep(normal: DataFrame, resweep: DataFrame,
-      idCols: Seq[String]): DataFrame =
-    normal.select(idCols.map(col): _*)
-      .union(resweep.select(idCols.map(col): _*)).distinct()
-
   /** T3 — open-status re-fetch set (gateway.py:495-507):
     * target = outline ids ∪ non-terminal silver ids − ignore ids.
     */

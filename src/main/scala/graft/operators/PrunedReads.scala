@@ -38,13 +38,9 @@ object PrunedReads {
     val vPath = f.makeQualified(new Path(vDir))
     val dataFiles = listDataRel(f, vPath).map(_._1)
     val pcols = pcolsOf(dataFiles)
-    val stats =
-      if (f.exists(new Path(vDir, FileStats.ManifestName)))
-        FileStats.readManifest(spark, vDir) else Seq.empty
+    val (stats, blooms) = sidecarsOf(spark, vDir)
     val statsByRel = stats.map(e => e.relPath -> e).toMap
-    val bloom = bloomColsOf(f, vDir).find(_ == column)
-      .map(c => BloomStats.readManifest(spark, vDir, c)
-        .map(b => b.relPath -> b).toMap)
+    val bloom = blooms.get(column).map(_.map(b => b.relPath -> b).toMap)
     val ks = dimKeys
       .select(col(dimKeys.columns.head).cast("string"))
       .na.drop().distinct().limit(maxKeys + 1)
@@ -52,16 +48,13 @@ object PrunedReads {
     // keys pre-sorted numerically once: each file then range-scans the
     // candidates inside its bounds instead of testing every key —
     // O(files × log keys + candidates) driver work, not files × keys
-    def numOf(s: String): Option[BigDecimal] =
-      try Some(BigDecimal(s))
-      catch { case _: NumberFormatException => None }
     val numKeys: Option[Array[(BigDecimal, String)]] = {
-      val parsed = ks.map(k => numOf(k).map(_ -> k))
+      val parsed = ks.map(k => num(k).map(_ -> k))
       if (parsed.exists(_.isEmpty)) None
       else Some(parsed.flatten.sortBy(_._1).toArray)
     }
     def candidates(mn: String, mx: String): Iterator[String] =
-      (numOf(mn), numOf(mx), numKeys) match {
+      (num(mn), num(mx), numKeys) match {
         case (Some(lo), Some(hi), Some(sorted)) =>
           // binary search the first key >= lo, scan to hi
           var i = 0; var j = sorted.length
@@ -148,18 +141,14 @@ object PrunedReads {
     if (MergeOnRead.isMorVersion(spark, dir, v))
       return MergeOnRead.unprunedRead(spark, dir, v)
     val vDir = s"$dir/v=$v"
-    val f = fs(spark, dir)
+    val manifest = sidecarsOf(spark, vDir)._1
     // no manifest: nothing is provable — keep everything, like the
     // other pruned readers (row counts unknown without a scan)
-    if (!f.exists(new Path(vDir, FileStats.ManifestName))) {
-      val n = listDataRel(f, new Path(vDir)).size
+    if (manifest.isEmpty) {
+      val n = listDataRel(fs(spark, dir), new Path(vDir)).size
       return (spark.read.parquet(vDir),
         FileStats.PruneStats(n.toLong, 0L, 0L, 0L))
     }
-    val manifest = FileStats.readManifest(spark, vDir)
-    def num(s: String): Option[BigDecimal] =
-      try Some(BigDecimal(s))
-      catch { case _: NumberFormatException => None }
     // (entry, Option[(lo, hi, guaranteedNonNull)])
     val typed = manifest.map { e =>
       val parsed = for {
@@ -221,4 +210,9 @@ object PrunedReads {
           .parquet(kept.map(e => s"$vDir/${e.relPath}"): _*)
     (df, stats)
   }
+
+  /** A sidecar bound or key as a number, None when it is not one. */
+  private def num(s: String): Option[BigDecimal] =
+    try Some(BigDecimal(s))
+    catch { case _: NumberFormatException => None }
 }

@@ -236,7 +236,8 @@ object SnapshotMaintenance {
     // refused loudly instead of silently destroyed: the require below
     // is the difference between "recompute my own column" and
     // "drop somebody's data because the default name collided".
-    val managed = f.exists(new Path(vDir, s"_zcluster.$bucketCol"))
+    val managed =
+      VersionDir.of(f, vPath).markers.contains(s"_zcluster.$bucketCol")
     val df = if (df0.columns.contains(bucketCol)) {
       require(managed,
         s"optimizeClustered: column '$bucketCol' exists but was not " +
@@ -312,13 +313,10 @@ object SnapshotMaintenance {
     val f = fs(spark, dir)
     val latest = latestVersion(spark, dir)
     val now = System.currentTimeMillis()
-    val entries = f.listStatus(new Path(dir)).toSeq
+    val root = Root.of(f, dir)
     def aged(s: org.apache.hadoop.fs.FileStatus): Boolean =
       orphanGraceMs <= 0 || s.getModificationTime < now - orphanGraceMs
-    val versions = entries
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("v="))
-      .map(s => (s.getPath.getName.stripPrefix("v=").toLong, s))
-      .sortBy(_._1)
+    val versions = root.versions.toSeq.sortBy(_._1)
     val candidates = versions.collect {
       case (v, _) if v <= latest - keepLast => v
       case (v, s) if v > latest && aged(s) => v
@@ -352,30 +350,21 @@ object SnapshotMaintenance {
       f.delete(new Path(dir, s"_claim.$v"), false)
       f.delete(new Path(dir, s"_pubtime.$v"), false)
     }
-    // stages abandoned by crashed writers (and the `_stage-*`
-    // siblings of stores written before `_staging/`), plus retired
-    // claim markers (dead by construction once renamed — kept only
-    // through the grace window for forensics)
-    val staging = new Path(dir, StagingDir)
-    val stages =
-      if (f.exists(staging)) f.listStatus(staging).toSeq else Nil
-    (stages ++ entries.filter(s =>
-        (s.isDirectory && s.getPath.getName.startsWith("_stage-")) ||
-          (s.isFile && s.getPath.getName.startsWith("_claim.") &&
-            s.getPath.getName.contains(".stale-"))))
-      .filter(aged).foreach(s => f.delete(s.getPath, s.isDirectory))
+    // stages abandoned by crashed writers, plus retired claim markers
+    // (dead by construction once renamed — kept only through the
+    // grace window for forensics)
+    (root.stages ++ root.retired).filter(aged)
+      .foreach(s => f.delete(s.getPath, s.isDirectory))
     // LIVE claim markers with no corresponding v=N directory: a
     // committer that died between claim and slot rename.
     // nextFreeVersion honors live markers, so an unreclaimed corpse
     // burns its slot forever. Same grace rule as stage directories —
     // an in-flight committer's fresh claim is never swept by a graced
     // vacuum.
-    val survivingVersions = versions.map(_._1).toSet -- doomed
-    entries.filter { s =>
-      s.isFile && s.getPath.getName.matches("_claim\\.\\d+") &&
-        aged(s) &&
-        !survivingVersions(s.getPath.getName.stripPrefix("_claim.").toLong)
-    }.foreach(s => f.delete(s.getPath, false))
+    val survivingVersions = root.versions.keySet -- doomed
+    root.claims.foreach { case (v, s) =>
+      if (aged(s) && !survivingVersions(v)) f.delete(s.getPath, false)
+    }
     doomed
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileUtil, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Versioned snapshot tables — the minimal transaction protocol a
@@ -67,6 +67,84 @@ object Snapshots {
     0L // unreachable
   }
 
+  // ---- the on-disk layout ---------------------------------------------
+
+  /** `N` of a version directory name `v=N`, None for any other name —
+    * the one parse of a version name. */
+  private[graft] def versionOf(name: String): Option[Long] =
+    numbered("v=", name)
+
+  /** `N` of a `<prefix>N` name, None for any other name. */
+  private def numbered(prefix: String, name: String): Option[Long] =
+    if (name.startsWith(prefix)) name.drop(prefix.length).toLongOption
+    else None
+
+  /** One parse of ONE listing of a table root — every decision that
+    * reads the root reads it through [[Root.of]], listed at the point
+    * of the decision (no listing outlives a pipeline step). A missing
+    * root reads as empty. */
+  private[operators] final class Root(f: FileSystem,
+      entries: Seq[FileStatus]) {
+    private def byNumber(ss: Seq[FileStatus], n: String => Option[Long]) =
+      ss.flatMap(s => n(s.getPath.getName).map(_ -> s)).toMap
+    private val (dirs, files) = entries.partition(_.isDirectory)
+    /** `v=N` version directories. */
+    val versions: Map[Long, FileStatus] = byNumber(dirs, versionOf)
+    /** Live slot claims `_claim.N`. */
+    val claims: Map[Long, FileStatus] =
+      byNumber(files, numbered("_claim.", _))
+    /** Retired claims `_claim.N.stale-<uuid>` — they occupy no slot. */
+    val retired: Seq[FileStatus] = files.filter { s =>
+      val n = s.getPath.getName
+      n.startsWith("_claim.") && n.contains(".stale-")
+    }
+    /** Publication records `_pubtime.N` ([[publish]]). */
+    val pubs: Map[Long, FileStatus] =
+      byNumber(files, numbered("_pubtime.", _))
+    /** The entries of `_staging/` — listed only when asked for. */
+    lazy val stages: Seq[FileStatus] =
+      dirs.filter(_.getPath.getName == StagingDir)
+        .flatMap(s => f.listStatus(s.getPath))
+    /** Main's history at or below `head` holds `v`: the version
+      * exists and carries a publication record — a crashed Replace
+      * committer's orphan has none. A store with no record at all
+      * predates them: every version counts. */
+    def published(v: Long, head: Long): Boolean =
+      v <= head && versions.contains(v) && (pubs.isEmpty || pubs.contains(v))
+  }
+
+  private[operators] object Root {
+    def of(f: FileSystem, dir: String): Root = new Root(f,
+      try f.listStatus(new Path(dir)).toSeq
+      catch { case _: java.io.FileNotFoundException => Nil })
+  }
+
+  /** One parse of ONE listing of a version directory (a missing one
+    * reads as empty): its `_epoch.*` / `_zcluster.*` marker names, the
+    * columns with `_bloom_<col>.json` sidecars, and whether it carries
+    * a stats manifest and DML provenance. */
+  private[operators] final case class VersionDir(markers: Seq[String],
+      bloomCols: Seq[String], hasStats: Boolean, hasDml: Boolean) {
+    /** Epoch ids of the `_epoch.N` markers. */
+    def epochs: Set[Long] = markers.flatMap(numbered("_epoch.", _)).toSet
+  }
+
+  private[operators] object VersionDir {
+    def of(f: FileSystem, vDir: Path): VersionDir = {
+      val names =
+        (try f.listStatus(vDir).toSeq
+         catch { case _: java.io.FileNotFoundException => Nil })
+          .filter(_.isFile).map(_.getPath.getName)
+      VersionDir(
+        names.filter(n => n.startsWith("_epoch.") ||
+          n.startsWith("_zcluster.")).sorted,
+        names.collect { case n if n.startsWith("_bloom_") &&
+          n.endsWith(".json") =>
+            n.stripPrefix("_bloom_").stripSuffix(".json") }.sorted,
+        names.contains(FileStats.ManifestName), names.contains(DmlName))
+    }
+  }
+
   /** First unoccupied version slot — the Replace policy's claim
     * target: above the pointer, above every existing `v=` directory,
     * AND above every live `_claim.N` marker — a crashed orphan or a
@@ -75,19 +153,11 @@ object Snapshots {
     * (on the local FS a rename onto an occupied slot MERGES instead
     * of failing). Retired markers (`.stale-` suffix) do not occupy a
     * slot. */
-  private def nextFreeVersion(spark: SparkSession, dir: String): Long = {
-    val f = fs(spark, dir)
-    val d = new Path(dir)
-    val occupied = if (!f.exists(d)) Seq.empty[Long]
-      else f.listStatus(d).toSeq.flatMap { s =>
-        val n = s.getPath.getName
-        if (s.isDirectory && n.startsWith("v="))
-          Some(n.stripPrefix("v=").toLong)
-        else if (s.isFile && n.matches("_claim\\.\\d+"))
-          Some(n.stripPrefix("_claim.").toLong)
-        else None
-      }
-    (latestVersion(spark, dir) +: occupied).max + 1
+  private[operators] def nextFreeVersion(spark: SparkSession,
+      dir: String): Long = {
+    val root = Root.of(fs(spark, dir), dir)
+    (latestVersion(spark, dir) +:
+      (root.versions.keys ++ root.claims.keys).toSeq).max + 1
   }
 
   /** Claim version slot `v` via an exclusive-create `_claim.$v`
@@ -99,8 +169,7 @@ object Snapshots {
     * post-rename nested-merge check backstops it, so claim
     * non-atomicity degrades to a retry/conflict — never to a corrupt
     * merged version directory. */
-  private def tryClaimSlot(f: org.apache.hadoop.fs.FileSystem,
-      dir: String, v: Long): Boolean =
+  private def tryClaimSlot(f: FileSystem, dir: String, v: Long): Boolean =
     try { f.create(new Path(dir, s"_claim.$v"), false).close(); true }
     catch { case _: java.io.IOException => false }
 
@@ -121,8 +190,7 @@ object Snapshots {
 
   /** Retire a claim marker to the vacuumable `.stale-` form (a
     * retired marker no longer occupies its slot for the allocator). */
-  private def retireClaim(f: org.apache.hadoop.fs.FileSystem,
-      dir: String, v: Long): Unit =
+  private def retireClaim(f: FileSystem, dir: String, v: Long): Unit =
     f.rename(new Path(dir, s"_claim.$v"), new Path(dir,
       s"_claim.$v.stale-${java.util.UUID.randomUUID()}"))
 
@@ -135,7 +203,7 @@ object Snapshots {
     * slot-independent, so a retry can reuse it against a fresh slot),
     * retires the claim, and returns false — never publish a corrupt
     * merged directory. */
-  private def occupySlot(f: org.apache.hadoop.fs.FileSystem,
+  private def occupySlot(f: FileSystem,
       dir: String, stage: Path, v: Long): Boolean = {
     val dst = new Path(dir, s"v=$v")
     val nested = new Path(dst, stage.getName)
@@ -329,8 +397,12 @@ object Snapshots {
       s.carry.foreach { case (src, rel) =>
         FileUtil.copy(f, src, f, new Path(stage, rel), false, conf)
       }
-      s.markersFrom.foreach(copyEpochMarkers(f, _, stage))
-      s.markers.foreach(m => f.create(new Path(stage, m), true).close())
+      // carried markers are empty files that no data scan copies:
+      // dropping `_epoch.*` would reopen the exactly-once fence, and
+      // dropping `_zcluster.*` the proof that OPTIMIZE ZORDER's bucket
+      // column is store-managed
+      (s.markersFrom.toSeq.flatMap(VersionDir.of(f, _).markers) ++
+        s.markers).foreach(m => f.create(new Path(stage, m), true).close())
       s.dml.foreach { case (base, op, touched) =>
         writeDml(f, stage, base, op, touched)
       }
@@ -505,14 +577,11 @@ object Snapshots {
     * would wedge main. A slot under a live claim is contested, never
     * skipped — that is what serializes head-bound writers on the same
     * head. */
-  private def slotAbove(f: org.apache.hadoop.fs.FileSystem, dir: String,
-      h: Long): Long = {
-    val d = new Path(dir)
-    val names =
-      if (!f.exists(d)) Set.empty[String]
-      else f.listStatus(d).map(_.getPath.getName).toSet
+  private[operators] def slotAbove(f: FileSystem, dir: String, h: Long)
+      : Long = {
+    val root = Root.of(f, dir)
     Iterator.iterate(h + 1)(_ + 1)
-      .find(s => !names(s"v=$s") || names(s"_claim.$s")).get
+      .find(s => !root.versions.contains(s) || root.claims.contains(s)).get
   }
 
   /** Observation result, or None when Spark's observation manager
@@ -536,17 +605,6 @@ object Snapshots {
   def commit(spark: SparkSession, df: DataFrame, dir: String): Long =
     commitWithStats(spark, df, dir, statsCols = Nil)
 
-  /** Version numbers of every existing `v=` directory. */
-  private def existingVersions(f: org.apache.hadoop.fs.FileSystem,
-      dir: String): Seq[Long] = {
-    val d = new Path(dir)
-    if (!f.exists(d)) Seq.empty
-    else f.listStatus(d).toSeq.collect {
-      case s if s.isDirectory && s.getPath.getName.startsWith("v=") =>
-        s.getPath.getName.stripPrefix("v=").toLong
-    }
-  }
-
   /** Main-line history in `(since, to]`, ascending: the versions
     * main's pointer published. A version is main when it carries a
     * publication record (`_pubtime.N`, written by [[publish]]); a
@@ -559,40 +617,27 @@ object Snapshots {
     * loss. */
   private[graft] def mainHistory(spark: SparkSession, dir: String,
       since: Long, to: Long): Seq[Long] = {
-    val f = fs(spark, dir)
+    val root = Root.of(fs(spark, dir), dir)
     val range = (since + 1) to to
-    val missing = range.filterNot(existingVersions(f, dir).toSet)
+    val missing = range.filterNot(root.versions.contains)
     if (missing.nonEmpty)
       throw new IllegalStateException(
         s"range ($since, $to] of $dir has vacuumed versions: " +
           s"${missing.mkString(",")} — a silent hole would be data " +
           "loss; raise vacuum keepLast for log consumers")
-    range.filter(onMain(f, dir))
+    range.filter(root.published(_, to))
   }
 
-  /** Membership in main's history — see [[mainHistory]]. */
-  private def onMain(f: org.apache.hadoop.fs.FileSystem,
-      dir: String): Long => Boolean = {
-    val pubs = f.listStatus(new Path(dir)).toSeq.flatMap { s =>
-      val n = s.getPath.getName
-      if (n.startsWith("_pubtime."))
-        scala.util.Try(n.stripPrefix("_pubtime.").toLong).toOption
-      else None
-    }.toSet
-    v => pubs.isEmpty || pubs(v)
-  }
+  /** Whether `v` is on main's history at or below `head` — the
+    * versions time travel by version may serve ([[mainHistory]]'s
+    * rule). */
+  private[graft] def isPublished(spark: SparkSession, dir: String,
+      v: Long, head: Long): Boolean =
+    Root.of(fs(spark, dir), dir).published(v, head)
 
-  /** Epoch ids of the `_epoch.N` markers inside `v=$v` (empty when
-    * the version directory is missing or unmarked). */
-  private def epochMarkers(f: org.apache.hadoop.fs.FileSystem,
-      dir: String, v: Long): Set[Long] = {
-    val d = new Path(dir, s"v=$v")
-    if (!f.exists(d)) Set.empty
-    else f.listStatus(d).toSeq.collect {
-      case s if s.isFile && s.getPath.getName.startsWith("_epoch.") =>
-        s.getPath.getName.stripPrefix("_epoch.").toLong
-    }.toSet
-  }
+  /** Epoch ids of the `_epoch.N` markers inside `v=$v`. */
+  private def epochsOf(f: FileSystem, dir: String, v: Long): Set[Long] =
+    VersionDir.of(f, new Path(dir, s"v=$v")).epochs
 
   /** Epoch-fenced commit — the exactly-once primitive a STREAMING
     * sink needs when batches are NOT idempotent merges (append logs,
@@ -650,13 +695,13 @@ object Snapshots {
     require(epochId >= 0, s"epoch ids are non-negative, got $epochId")
     val f = fs(spark, dir)
     val head = latestVersion(spark, dir)
-    val versions = existingVersions(f, dir)
+    val versions = Root.of(f, dir).versions.keys.toSeq
     newestMarked(f, dir, versions, head) match {
       case Some((v, ms)) if ms.contains(epochId) =>
         Left(s"epoch $epochId already published as v=$v")
       case _ =>
         versions.filter(v => v > head &&
-          epochMarkers(f, dir, v).contains(epochId)).sorted match {
+          epochsOf(f, dir, v).contains(epochId)).sorted match {
           case v +: rest =>
             rest.foreach { o =>
               f.delete(new Path(dir, s"v=$o"), true)
@@ -674,11 +719,10 @@ object Snapshots {
   /** The newest PUBLISHED version carrying any `_epoch.*` marker,
     * with its marker set — the fence [[commitWithEpoch]] checks and
     * the offset [[mirrorAppends]] resumes from. */
-  private def newestMarked(f: org.apache.hadoop.fs.FileSystem,
-      dir: String, versions: Seq[Long], head: Long)
-      : Option[(Long, Set[Long])] =
+  private def newestMarked(f: FileSystem, dir: String,
+      versions: Seq[Long], head: Long): Option[(Long, Set[Long])] =
     versions.filter(_ <= head).sorted.reverseIterator
-      .map(v => (v, epochMarkers(f, dir, v)))
+      .map(v => (v, epochsOf(f, dir, v)))
       .collectFirst { case (v, ms) if ms.nonEmpty => (v, ms) }
 
   /** The highest epoch id the table's fence records (None when no
@@ -690,7 +734,8 @@ object Snapshots {
       : Option[Long] = {
     val f = fs(spark, dir)
     val head = latestVersion(spark, dir)
-    newestMarked(f, dir, existingVersions(f, dir), head).map(_._2.max)
+    newestMarked(f, dir, Root.of(f, dir).versions.keys.toSeq, head)
+      .map(_._2.max)
   }
 
   /** Exactly-once change-feed consumption: mirror every source
@@ -743,29 +788,6 @@ object Snapshots {
       }
     }
   }
-
-  /** Recreate the source version's `_epoch.*` markers inside a
-    * compaction stage: markers are empty fence files, and
-    * [[listDataRel]] rightly skips `_`-prefixed entries when
-    * binning — without this copy, compacting a
-    * `versionedSink`-fed table silently DROPPED the exactly-once
-    * fence and a crash-replay of the last epoch published a
-    * duplicate version. `_zcluster.*` markers (the managed-bucket
-    * provenance [[SnapshotMaintenance.optimizeClustered]] writes)
-    * carry forward for the same reason: a DML or compaction between
-    * two OPTIMIZE runs must not erase the proof that the bucket
-    * column is store-managed, or the next OPTIMIZE would refuse (or
-    * worse, a marker-less design would silently drop user data that
-    * happens to share the name). */
-  private def copyEpochMarkers(f: org.apache.hadoop.fs.FileSystem,
-      srcVersionDir: Path, stage: Path): Unit =
-    f.listStatus(srcVersionDir).toSeq
-      .filter(s => s.isFile &&
-        (s.getPath.getName.startsWith("_epoch.") ||
-          s.getPath.getName.startsWith("_zcluster.")))
-      .foreach { s =>
-        f.create(new Path(stage, s.getPath.getName), true).close()
-      }
 
   /** [[commit]] + a per-file min/max stats manifest ([[FileStats]]):
     * the staged files are scanned once (stats columns only) and
@@ -871,12 +893,13 @@ object Snapshots {
     * UNION of the stats columns and the bloom columns those version
     * directories track. */
   private[operators] def inheritedSidecars(spark: SparkSession,
-      f: org.apache.hadoop.fs.FileSystem, homes: Seq[String])
-      : (Seq[String], Seq[String]) =
-    (homes.filter(h => f.exists(new Path(h, FileStats.ManifestName)))
-      .flatMap(h => FileStats.readManifest(spark, h).flatMap(_.cols.keys))
-      .distinct.sorted,
-      homes.flatMap(h => bloomColsOf(f, h)).distinct.sorted)
+      f: FileSystem, homes: Seq[String]): (Seq[String], Seq[String]) = {
+    val dirs = homes.map(h => h -> VersionDir.of(f, new Path(h)))
+    (dirs.collect { case (h, d) if d.hasStats =>
+        FileStats.readManifest(spark, h).flatMap(_.cols.keys) }
+      .flatten.distinct.sorted,
+      dirs.flatMap(_._2.bloomCols).distinct.sorted)
+  }
 
   /** The stats manifest and bloom sidecars of version directory
     * `vDir` (empty when it has none) — the one sidecar loader: table
@@ -884,12 +907,10 @@ object Snapshots {
     * once per statement. A sidecar that fails to parse throws. */
   private[graft] def sidecarsOf(spark: SparkSession, vDir: String)
       : FileStats.Sidecars = {
-    val f = fs(spark, vDir)
-    (if (f.exists(new Path(vDir, FileStats.ManifestName)))
-       FileStats.readManifest(spark, vDir)
-     else Seq.empty,
-     bloomColsOf(f, vDir)
-       .map(c => c -> BloomStats.readManifest(spark, vDir, c)).toMap)
+    val d = VersionDir.of(fs(spark, vDir), new Path(vDir))
+    (if (d.hasStats) FileStats.readManifest(spark, vDir) else Seq.empty,
+     d.bloomCols.map(c => c -> BloomStats.readManifest(spark, vDir, c))
+       .toMap)
   }
 
   /** The [[Seal]] of a copy-on-write statement on version `v` whose
@@ -925,7 +946,7 @@ object Snapshots {
     * sink O(batches) marker files per commit); a plain append carries
     * markers forward so the fence survives interleaved maintenance. */
   private def stageAppend(spark: SparkSession,
-      f: org.apache.hadoop.fs.FileSystem, dir: String, v: Long,
+      f: FileSystem, dir: String, v: Long,
       df: DataFrame, epoch: Option[Long]): Path = {
     val vDir = s"$dir/v=$v"
     val target = tableSchema(spark, dir)
@@ -965,20 +986,12 @@ object Snapshots {
     epochFenced(spark, dir, epochId)(appendEpoch(spark, df, dir,
       Some(epochId), Seal(statsCols, bloomCols), 3, 30000L))
 
-  /** Columns that have `_bloom_<col>.json` sidecars in a version. */
-  private[operators] def bloomColsOf(f: org.apache.hadoop.fs.FileSystem,
-      vDir: String): Seq[String] =
-    f.listStatus(new Path(vDir)).toSeq.map(_.getPath.getName).collect {
-      case n if n.startsWith("_bloom_") && n.endsWith(".json") =>
-        n.stripPrefix("_bloom_").stripSuffix(".json")
-    }.sorted
-
   /** The data files of a version directory, recursively, as
     * (relative path, bytes) — `_`-prefixed sidecars and hidden files
     * excluded. The one directory walk of the store: DML routing,
     * compaction, MoR accounting and the version log all list through
     * it. */
-  private[operators] def listDataRel(f: org.apache.hadoop.fs.FileSystem,
+  private[operators] def listDataRel(f: FileSystem,
       dir: Path): Seq[(String, Long)] = {
     val root = f.makeQualified(dir).toUri
     def walk(p: Path): Seq[(String, Long)] =
@@ -1019,7 +1032,7 @@ object Snapshots {
 
   private val DmlName = "_dml.json"
 
-  private def writeDml(f: org.apache.hadoop.fs.FileSystem, stage: Path,
+  private def writeDml(f: FileSystem, stage: Path,
       base: Long, op: String, touched: Seq[String]): Unit = {
     val files = touched.sorted
       .map(r => s""""${FileStats.jsonEscape(r)}"""").mkString(",")
@@ -1032,11 +1045,10 @@ object Snapshots {
 
   /** (base, op, touched files) of a version's DML provenance; None
     * when the version was not produced by a DML statement. */
-  private[operators] def readDml(f: org.apache.hadoop.fs.FileSystem,
+  private[operators] def readDml(f: FileSystem,
       vDir: String): Option[(Long, String, Seq[String])] = {
-    val p = new Path(vDir, DmlName)
-    if (!f.exists(p)) return None
-    val in = f.open(p)
+    if (!VersionDir.of(f, new Path(vDir)).hasDml) return None
+    val in = f.open(new Path(vDir, DmlName))
     val text =
       try new String(org.apache.commons.io.IOUtils.toByteArray(in),
         "UTF-8")
@@ -1223,21 +1235,19 @@ object Snapshots {
   def history(spark: SparkSession, dir: String): Seq[VersionInfo] = {
     val f = fs(spark, dir)
     val head = latestVersion(spark, dir)
-    val main = onMain(f, dir)
-    existingVersions(f, dir).sorted.map { v =>
+    val root = Root.of(f, dir)
+    root.versions.keys.toSeq.sorted.map { v =>
       val vPath = new Path(dir, s"v=$v")
+      val meta = VersionDir.of(f, vPath)
       // partitioned layouts keep their files in `col=value/` subdirs
       val data = listDataRel(f, vPath)
       val rows =
-        if (f.exists(new Path(vPath, FileStats.ManifestName)))
-          Some(FileStats.readManifest(spark, s"$dir/v=$v")
-            .map(_.rows).sum)
+        if (meta.hasStats)
+          Some(FileStats.readManifest(spark, s"$dir/v=$v").map(_.rows).sum)
         else None
-      VersionInfo(v, published = v <= head && main(v),
+      VersionInfo(v, published = root.published(v, head),
         data.size.toLong, data.map(_._2).sum, rows,
-        epochMarkers(f, dir, v).toSeq.sorted,
-        f.exists(new Path(vPath, FileStats.ManifestName)),
-        bloomColsOf(f, s"$dir/v=$v"))
+        meta.epochs.toSeq.sorted, meta.hasStats, meta.bloomCols)
     }
   }
 
@@ -1324,20 +1334,16 @@ object Snapshots {
     val f = fs(spark, dir)
     val head = latestVersion(spark, dir)
     require(head > 0, s"$dir has no committed version")
-    val live = existingVersions(f, dir).toSet
-    val stamped = f.listStatus(new Path(dir)).toSeq.flatMap { s =>
-      val n = s.getPath.getName
-      if (!s.isFile || !n.startsWith("_pubtime.")) None
+    val root = Root.of(f, dir)
+    val stamped = root.pubs.toSeq.flatMap { case (v, s) =>
+      if (v > head || !root.versions.contains(v)) None
       else scala.util.Try {
-        val v = n.stripPrefix("_pubtime.").toLong
         val in = f.open(s.getPath)
-        val t =
-          try new String(org.apache.commons.io.IOUtils
-            .toByteArray(in), "US-ASCII").trim.toLong
-          finally in.close()
-        (v, t)
+        try (v, new String(org.apache.commons.io.IOUtils
+          .toByteArray(in), "US-ASCII").trim.toLong)
+        finally in.close()
       }.toOption
-    }.filter { case (v, _) => live(v) && v <= head }
+    }
     val eligible = stamped.filter(_._2 <= epochMillis)
     if (eligible.isEmpty) {
       val oldest = stamped.sortBy(_._2).headOption

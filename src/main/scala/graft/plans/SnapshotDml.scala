@@ -78,11 +78,9 @@ case class SnapshotFreshnessRule(spark: SparkSession)
     lr.relation match {
       case h: org.apache.spark.sql.execution.datasources
           .HadoopFsRelation =>
-        h.location.rootPaths.map(_.getName).collectFirst {
-          case n if n.startsWith("v=") =>
-            try n.stripPrefix("v=").toLong
-            catch { case _: NumberFormatException => -1L }
-        }.getOrElse(-1L)
+        h.location.rootPaths
+          .flatMap(p => Snapshots.versionOf(p.getName))
+          .headOption.getOrElse(-1L)
       case p: graft.sources.SnapshotPlanRelation => p.servedVersion
       case _ => -1L
     }

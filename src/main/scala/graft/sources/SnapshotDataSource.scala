@@ -196,11 +196,12 @@ class SnapshotDataSource extends RelationProvider
               s"snapshot: versionAsOf must be a version number, got '$s'")
         }
         require(v > 0, s"snapshot: versionAsOf must be positive, got $v")
-        val vp = new Path(dir, s"v=$v")
-        require(vp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .exists(vp),
-          s"snapshot: versionAsOf $v does not exist in $dir (latest " +
-            s"committed: ${Snapshots.latestVersion(spark, dir)})")
+        // only main's published history: a crash orphan (below the
+        // head or above it) exists on disk but was never the table
+        val head = Snapshots.latestVersion(spark, dir)
+        require(Snapshots.isPublished(spark, dir, v, head),
+          s"snapshot: versionAsOf $v is not a published version of " +
+            s"$dir (latest committed: $head)")
         v
       case None => parameters.get("timestampAsOf") match {
         case Some(ts) =>
@@ -321,7 +322,7 @@ private[sources] class SnapshotVersionedSink(
   * connector takes. */
 object SnapshotDataSource {
   def isVersionDir(p: String): Boolean =
-    new Path(p).getName.startsWith("v=")
+    Snapshots.versionOf(new Path(p).getName).isDefined
 }
 
 /** A composite plan (merge-on-read assembly, change-feed replay)

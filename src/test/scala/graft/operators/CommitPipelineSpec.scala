@@ -190,12 +190,10 @@ class CommitPipelineSpec extends SparkSpec {
         assert(leftovers(dir).isEmpty, s"$name/$s: ${leftovers(dir)}")
       }
       // a writer killed mid-stage cannot clean up after itself: vacuum
-      // reclaims its stage (and a pre-`_staging/` store's `_stage-*`)
-      Seq("_staging/dead-writer", "_stage-dead-writer").foreach(d =>
-        spark.range(3L).write.parquet(s"$dir/$d"))
+      // reclaims its stage
+      spark.range(3L).write.parquet(s"$dir/_staging/dead-writer")
       SnapshotMaintenance.vacuum(spark, dir, keepLast = 100)
       assert(leftovers(dir).isEmpty, s"$name: ${leftovers(dir)}")
-      assert(!new java.io.File(dir, "_stage-dead-writer").exists())
     }
   }
 

@@ -408,6 +408,54 @@ class SnapshotsSpec extends SparkSpec {
     assert(h.forall(_.nDataFiles >= 1))
   }
 
+  test("one parse of the table root: the allocator, the head-bound " +
+    "slot, main's history, DESCRIBE HISTORY and vacuum read one " +
+    "planted layout") {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-layout").toString + "/t"
+    val f = Snapshots.fs(spark, dir)
+    // created through the checksummed FS, so each gets a `.crc` sibling
+    def touch(name: String): Unit =
+      f.create(new org.apache.hadoop.fs.Path(dir, name), false).close()
+    def names: Seq[String] = new java.io.File(dir).list().toSeq.sorted
+    Snapshots.commit(spark, Seq((1, "a")).toDF("id", "s"), dir) // v1
+    // a claim-less, never-published v=2 (a pre-claim-era leftover)
+    Seq((2, "b")).toDF("id", "s").write.parquet(s"$dir/v=2")
+    Snapshots.commitWithStats(spark, Seq((3, "c")).toDF("id", "s"), dir,
+      statsCols = Seq("id")) // v3, the head
+    touch("_claim.4") // a live claim whose committer never renamed
+    val stale = "_claim.2.stale-0b6c1a52-93c4-4e0e-9d7a-5f2e8c4d1a70"
+    touch(stale)
+    touch("_latest.tmp.9")
+    Seq(9).toDF("id").write.parquet(s"$dir/_staging/dead-writer")
+    assert(names == Seq(s".$stale.crc", "._claim.1.crc", "._claim.3.crc",
+      "._claim.4.crc", "._latest.tmp.9.crc", "._pubtime.1.crc",
+      "._pubtime.3.crc", stale, "_claim.1", "_claim.3", "_claim.4",
+      "_latest", "_latest.tmp.9", "_pubtime.1", "_pubtime.3",
+      "_staging", "v=1", "v=2", "v=3").sorted)
+    val cases: Seq[(String, Any, Any)] = Seq(
+      ("next free slot", Snapshots.nextFreeVersion(spark, dir), 5L),
+      ("slot above the head", Snapshots.slotAbove(f, dir, 3L), 4L),
+      ("slot above v1 (skips the settled v=2, contests the claimed v=3)",
+        Snapshots.slotAbove(f, dir, 1L), 3L),
+      ("main's history", Snapshots.mainHistory(spark, dir, 0L, 3L),
+        Seq(1L, 3L)),
+      ("history rows", Snapshots.history(spark, dir).map(h =>
+        (h.version, h.published, h.nDataFiles, h.rows, h.hasStats)),
+        Seq((1L, true, 1L, None, false), (2L, false, 1L, None, false),
+          (3L, true, 1L, Some(1L), true))))
+    cases.foreach { case (what, got, want) =>
+      assert(got == want, s"$what: $got") }
+    assert(SnapshotMaintenance.vacuum(spark, dir, keepLast = 1) ==
+      Seq(1L, 2L))
+    // gone: v1 and v2 with their records, the stage, the retired
+    // claim and the dead live claim; the pointer's temp is not vacuum's
+    assert(names == Seq("._claim.3.crc", "._latest.tmp.9.crc",
+      "._pubtime.3.crc", "_claim.3", "_latest", "_latest.tmp.9",
+      "_pubtime.3", "_staging", "v=3"))
+    assert(new java.io.File(dir, "_staging").list().isEmpty)
+  }
+
   test("DESCRIBE HISTORY counts a partitioned version's data files " +
     "and bytes inside its partition directories") {
     import org.apache.spark.sql.functions.col

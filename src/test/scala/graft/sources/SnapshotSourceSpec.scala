@@ -119,6 +119,39 @@ class SnapshotSourceSpec extends SparkSpec {
     assert(feed.count() == 3L)
   }
 
+  test("versionAsOf serves published main-line history only: a crash " +
+    "orphan below or above the head is refused, through the connector " +
+    "and SQL VERSION AS OF") {
+    val dir = freshDir("graft-srcv")
+    Snapshots.commit(spark, Seq((1L, 1L)).toDF("v", "b"), dir) // v1
+    plantCrashOrphan(dir, 2L, (0L until 9L).map(i => (i, 0L))
+      .toDF("v", "b"))
+    Snapshots.commit(spark, Seq((1L, 1L), (2L, 2L)).toDF("v", "b"),
+      dir) // v3, main head
+    plantCrashOrphan(dir, 4L, (0L until 7L).map(i => (i, 0L))
+      .toDF("v", "b"))
+    spark.sql("DROP TABLE IF EXISTS snap_spec_orphans")
+    spark.sql(
+      s"CREATE TABLE snap_spec_orphans USING snapshot OPTIONS (path '$dir')")
+    try {
+      def connector(v: Long): Long = spark.read.format("snapshot")
+        .option("versionAsOf", v.toString).load(dir).count()
+      def sql(v: Long): Long = spark.sql(
+        s"SELECT count(*) FROM snap_spec_orphans VERSION AS OF $v")
+        .head().getLong(0)
+      Seq(1L -> 1L, 3L -> 2L).foreach { case (v, n) =>
+        assert(connector(v) == n, s"connector v=$v")
+        assert(sql(v) == n, s"SQL v=$v")
+      }
+      for (v <- Seq(2L, 4L); (route, read) <- Seq(
+          "connector" -> (connector _), "SQL" -> (sql _))) {
+        val e = intercept[IllegalArgumentException](read(v))
+        assert(e.getMessage.contains("latest committed: 3"),
+          s"$route v=$v: ${e.getMessage}")
+      }
+    } finally spark.sql("DROP TABLE IF EXISTS snap_spec_orphans")
+  }
+
   test("readChangeFeed: a caught-up consumer gets an EMPTY frame, " +
     "not an error, and head pins are refused") {
     val dir = freshDir("graft-srcc")
