@@ -29,6 +29,13 @@ beats every base run: the pairs then cannot tell a change inside the
 bound from the base's noise. The file is only read. The last line of
 standard output is one JSON summary; it also keeps every metric of every
 run.
+
+With --trace-runs K it then runs the workload K more times per checkout
+with --trace 1, alternating like the pairs, and prints each per-layer
+metric that BENCHMARK.json lists whose medians differ between the two
+sides, for example `spark.merge.jobs 16 → 10`: the layer that moved.
+The summary then also carries a `per_layer` entry with both medians of
+every such metric.
 """
 import argparse
 import json
@@ -38,9 +45,9 @@ import sys
 from pathlib import Path
 
 
-def run_once(checkout, args):
+def run_once(checkout, args, trace="0"):
     cmd = [sys.executable, "perfbench/run.py", "--workload", args.workload,
-           "--seed", str(args.seed), "--seconds", str(args.seconds), "--trace", "0"]
+           "--seed", str(args.seed), "--seconds", str(args.seconds), "--trace", trace]
     r = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE,
                        stderr=subprocess.PIPE, text=True)
     lines = r.stdout.strip().splitlines()
@@ -65,11 +72,15 @@ def main():
     ap.add_argument("--seconds", type=int, default=5)
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--metric", default="run_s")
+    ap.add_argument("--trace-runs", type=int, default=0,
+                    help="traced runs per checkout after the pairs")
     ap.add_argument("--base-dir", required=True, help="checkout of the base")
     ap.add_argument("--change-dir", required=True, help="checkout of the change")
     args = ap.parse_args()
     if args.pairs < 2:
         ap.error("--pairs must be at least 2")
+    if args.trace_runs < 0:
+        ap.error("--trace-runs must not be negative")
 
     sides = {"base": Path(args.base_dir).resolve(),
              "change": Path(args.change_dir).resolve()}
@@ -107,6 +118,8 @@ def main():
                                    if e["worse_than_bound"]]
     summary["unresolved"] = [m for m, e in summary["end_to_end"].items()
                              if e["unresolved"]]
+    if args.trace_runs:
+        summary["per_layer"] = per_layer(sides, args)
     print(json.dumps(summary))
 
 
@@ -139,6 +152,31 @@ def end_to_end(benchmark, runs):
               + ("  WORSE THAN BOUND" if flag else "")
               + (f"  UNRESOLVED (base IQR {spread:.0%} of median)"
                  if unresolved else ""))
+    return out
+
+
+def per_layer(sides, args):
+    """`args.trace_runs` traced runs per checkout, base first on even
+    runs and change first on odd ones; each side's median of every
+    per-layer metric the base checkout's BENCHMARK.json lists. Prints one
+    line per metric whose medians differ."""
+    spec = json.loads((sides["base"] / "BENCHMARK.json").read_text())
+    runs = {"base": [], "change": []}
+    for i in range(args.trace_runs):
+        order = ("base", "change") if i % 2 == 0 else ("change", "base")
+        for side in order:
+            res = run_once(sides[side], args, trace="1")
+            runs[side].append({k: m["value"] for k, m in res["metrics"].items()})
+    out = {}
+    for m in spec.get("per_layer", []):
+        name = m["name"]
+        vals = {side: [r[name] for r in runs[side] if name in r] for side in runs}
+        if not vals["base"] or not vals["change"]:
+            continue
+        med = {side: statistics.median(v) for side, v in vals.items()}
+        if med["base"] != med["change"]:
+            out[name] = {"base_median": med["base"], "change_median": med["change"]}
+            print(f"{name} {med['base']:g} → {med['change']:g}")
     return out
 
 

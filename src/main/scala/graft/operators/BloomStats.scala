@@ -76,7 +76,7 @@ object BloomStats {
     val rootUri = fs(spark, dataDir)
       .makeQualified(new Path(dataDir)).toUri.getPath
     val v = col(column).cast("string")
-    val perFile = spark.read.parquet(dataDir)
+    val perFile = Snapshots.readFileSet(spark, dataDir)
       .select(input_file_name().as("__file"), v.as("__v"))
       .select(col("__file"),
         explode(array(

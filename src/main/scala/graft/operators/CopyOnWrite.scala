@@ -134,18 +134,13 @@ object CopyOnWrite {
     val dataFiles = listDataRel(f, vPath).map(_._1)
     // resolve the predicate against the version's schema and extract
     // the range/equality conjuncts the sidecars can decide on
-    // (readFileSet: the memoized-schema read — a DML chain re-reads
-    // the same version file set per statement, and the bare read's
-    // footer-inference job was a fixed per-statement tax)
-    val cond = dmlCond(spark,
-      readFileSet(spark, vDir, dataFiles.map(r => s"$vDir/$r")), pred)
+    val cond = dmlCond(spark, readFileSet(spark, vDir), pred)
     val sidecars = sidecarsOf(spark, vDir)
     val (affected, untouched) = dmlAdmission(dataFiles, cond, sidecars)
     if (affected.isEmpty) return None
     val hit = coalesce(pred, lit(false))
     // basePath keeps directory-encoded partition columns in the frame
-    val affectedDf = readFileSet(spark, vDir,
-      affected.map(r => s"$vDir/$r"))
+    val affectedDf = readFileSet(spark, vDir, affected)
     // row accounting rides the WRITE as an Observation instead of two
     // extra jobs (a predicate-filter count plus a full recount): the
     // affected files are scanned ONCE per statement — at 100 TB the
@@ -404,8 +399,7 @@ object CopyOnWrite {
     val (newData, observedKept) =
       if (affected.isEmpty) (conformed, false)
       else {
-        val base = readFileSet(spark, vDir,
-          affected.map(r => s"$vDir/$r"))
+        val base = readFileSet(spark, vDir, affected)
         val anti = base.join(conformed, keys, "left_anti")
           .observe(obs,
             org.apache.spark.sql.functions.count(
@@ -426,8 +420,7 @@ object CopyOnWrite {
           // written; surface both facts in the log
           log.warn("stageMerge: kept-count observation unavailable — " +
             "falling back to re-running the anti-join count")
-          readFileSet(spark, vDir,
-            affected.map(r => s"$vDir/$r"))
+          readFileSet(spark, vDir, affected)
             .join(conformed, keys, "left_anti").count()
         }
     Some((seal(spark, dir, st,
@@ -578,8 +571,8 @@ object CopyOnWrite {
     // source-only (null join keys never match — SQL semantics)
     val base =
       if (affected.isEmpty)
-        spark.read.option("basePath", vDir).parquet(vDir).limit(0)
-      else readFileSet(spark, vDir, affected.map(r => s"$vDir/$r"))
+        readFileSet(spark, vDir).limit(0)
+      else readFileSet(spark, vDir, affected)
     val tA = base.withColumn("__t_present", lit(true))
       .withColumn("__tid",
         org.apache.spark.sql.functions.monotonically_increasing_id())

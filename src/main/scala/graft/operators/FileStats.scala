@@ -226,7 +226,7 @@ object FileStats {
     require(maxStatLen > 0, "maxStatLen must be positive")
     val rootUri = fs(spark, dataDir)
       .makeQualified(new Path(dataDir)).toUri.getPath
-    val src = spark.read.parquet(dataDir)
+    val src = Snapshots.readFileSet(spark, dataDir)
     // A TOP-LEVEL column literally named "a.b" would share its
     // manifest key with the nested struct path a.b — and the filter
     // side (StatsFilters.pathOf renders GetStructField chains dotted)

@@ -376,8 +376,7 @@ object MergeOnRead {
     val groups = files.groupBy(_._1).toSeq.sortBy(_._1).map {
       case (src, fs0) =>
         val srcDir = s"$dir/v=$src"
-        val base = readFileSet(spark, srcDir,
-          fs0.map(x => s"$srcDir/${x._2}"))
+        val base = readFileSet(spark, srcDir, fs0.map(_._2))
         if (!withLineage) base
         else base
           .withColumn("__key",
@@ -496,16 +495,8 @@ object MergeOnRead {
     // O(admitted files). Deletion vectors still anti-join below, so
     // an already-deleted row never re-tombstones.
     val byHome = phys.groupBy(_._1).toSeq.sortBy(_._1)
-    val newestHome = s"$dir/v=${byHome.last._1}"
-    // ONE schema resolution per statement: the table schema (needed
-    // below for the NULL-fill anyway) also types the predicate-
-    // resolution frame — supplying it to the read skips the footer-
-    // inference job the bare parquet() read paid per statement
-    val tschema = tableSchema(spark, dir)
     val cond = CopyOnWrite.dmlCond(spark,
-      spark.read.schema(tschema).option("basePath", newestHome)
-        .parquet(newestHome),
-      pred)
+      readFileSet(spark, s"$dir/v=${byHome.last._1}"), pred)
     val admitted: Seq[(Long, String)] = byHome.flatMap {
       case (src, files) =>
         val hDir = s"$dir/v=$src"
@@ -533,7 +524,7 @@ object MergeOnRead {
     // file may predate a column the predicate references, and the
     // pruned union must still resolve it exactly like the full
     // assembly's allowMissingColumns union would
-    val lineage = tschema.fields.foldLeft(
+    val lineage = tableSchema(spark, dir).fields.foldLeft(
       if (dvs.nonEmpty) applyDvs(spark, scanned, dvs) else scanned) {
       (d, fd) =>
         if (d.columns.exists(_.equalsIgnoreCase(fd.name))) d

@@ -93,9 +93,8 @@ object PrunedReads {
     val ps = FileStats.PruneStats(kept.size.toLong, skipped.size.toLong,
       rowsOf(kept), rowsOf(skipped))
     val df =
-      if (kept.isEmpty) spark.read.parquet(vDir).filter(lit(false))
-      else spark.read.option("basePath", vDir)
-        .parquet(kept.map(r => s"$vDir/$r"): _*)
+      if (kept.isEmpty) readFileSet(spark, vDir).filter(lit(false))
+      else readFileSet(spark, vDir, kept)
     (df, ps)
   }
 
@@ -146,7 +145,7 @@ object PrunedReads {
     // other pruned readers (row counts unknown without a scan)
     if (manifest.isEmpty) {
       val n = listDataRel(fs(spark, dir), new Path(vDir)).size
-      return (spark.read.parquet(vDir),
+      return (readFileSet(spark, vDir),
         FileStats.PruneStats(n.toLong, 0L, 0L, 0L))
     }
     // (entry, Option[(lo, hi, guaranteedNonNull)])
@@ -203,11 +202,9 @@ object PrunedReads {
       skipped.size.toLong, kept.map(_.rows).sum, skipped.map(_.rows).sum)
     val df =
       if (kept.isEmpty)
-        spark.read.parquet(vDir)
+        readFileSet(spark, vDir)
           .filter(org.apache.spark.sql.functions.lit(false))
-      else
-        spark.read.option("basePath", vDir)
-          .parquet(kept.map(e => s"$vDir/${e.relPath}"): _*)
+      else readFileSet(spark, vDir, kept.map(_.relPath))
     (df, stats)
   }
 

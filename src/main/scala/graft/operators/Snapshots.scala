@@ -22,7 +22,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Every writer commits through ONE pipeline — stage → seal → claim →
   * publish — described (with its policies and invariants) at
   * [[commitStaged]]. Layout: `dir/v=N/…parquet` + `dir/_latest`
-  * (ASCII version number). The row-level statements live in
+  * (ASCII version number); each `v=N/_schema.json` records the
+  * version's read schema, so reading a version never infers it from
+  * parquet footers ([[readFileSet]]). The row-level statements live in
   * [[CopyOnWrite]] and [[MergeOnRead]], compaction, ZORDER and vacuum
   * in [[SnapshotMaintenance]]; all of them commit through this
   * object's pipeline.
@@ -226,7 +228,8 @@ object Snapshots {
     *     staging path this store ever names. Racing writers never
     *     share bytes; a crash leaves an orphan stage vacuum reclaims.
     *  2. SEAL ([[seal]]) — every sidecar the version needs lands
-    *     INSIDE the stage: the stats manifest, bloom sidecars (fresh,
+    *     INSIDE the stage: the `_schema.json` schema record, the stats
+    *     manifest, bloom sidecars (fresh,
     *     or spliced with the entries of byte-carried files), `_epoch.N`,
     *     `_dml.json` provenance, and the `_epoch.*` / `_zcluster.*`
     *     markers carried from the base version.
@@ -322,11 +325,12 @@ object Snapshots {
     * one file per (task × partition value) — measured 520 files /
     * 4.5 s where the clustered write stages 8 files in 0.6 s — and
     * every later statement pays the small files again at scan time.
-    * `keepSchema`: a version needs at least one data file (schema
-    * inference has nothing to open otherwise), so a write that
-    * produced none — a statement that emptied the table — adds one
-    * schema-carrying zero-row file, unpartitioned (a dynamic-partition
-    * write of an empty frame writes nothing). */
+    * `keepSchema`: a version needs at least one data file (a bare
+    * `spark.read.parquet` of it, and [[seal]]'s schema record, infer
+    * from one), so a write that produced none — a statement that
+    * emptied the table — adds one schema-carrying zero-row file,
+    * unpartitioned (a dynamic-partition write of an empty frame writes
+    * nothing). */
   private[operators] def writeFrame(df: DataFrame, stage: Path,
       pcols: Seq[String] = Nil, rebalance: Boolean = false,
       keepSchema: Boolean = false): Unit = {
@@ -367,7 +371,13 @@ object Snapshots {
   /** SEAL: write every sidecar of `s` into `stage` — the one place a
     * version's metadata is produced, sealed with its data by the slot
     * rename (a reader can never resolve a version whose manifest is
-    * missing or half-written). A failure deletes the stage. */
+    * missing or half-written). The first sidecar is `_schema.json`,
+    * the version's read schema ([[readFileSet]]), inferred from the
+    * stage's new data files — the stage scans below read through it —
+    * or, when the statement wrote none, from the files it carried. A
+    * stage with no data file at all (an MoR version of references and
+    * tombstones, read through its home versions' records) records
+    * none. A failure deletes the stage. */
   private[operators] def seal(spark: SparkSession, dir: String, stage: Path,
       s: Seal): Path = {
     val f = fs(spark, dir)
@@ -375,7 +385,10 @@ object Snapshots {
       val st = stage.toString
       // a statement that rewrote nothing new (every row deleted from
       // the rewritten files) keeps only the carried files' entries
-      lazy val empty = listDataRel(f, stage).isEmpty
+      val empty = listDataRel(f, stage).isEmpty
+      def record(): Unit =
+        inferSchema(spark, f, stage).foreach(writeSchema(f, stage, _))
+      if (!empty) record()
       if (s.statsCols.nonEmpty) {
         if (empty) FileStats.writeEntries(spark, st, s.keptStats)
         else {
@@ -397,6 +410,7 @@ object Snapshots {
       s.carry.foreach { case (src, rel) =>
         FileUtil.copy(f, src, f, new Path(stage, rel), false, conf)
       }
+      if (empty) record()
       // carried markers are empty files that no data scan copies:
       // dropping `_epoch.*` would reopen the exactly-once fence, and
       // dropping `_zcluster.*` the proof that OPTIMIZE ZORDER's bucket
@@ -595,7 +609,7 @@ object Snapshots {
     * order; the blocking get cannot hang because both events always
     * fire. (Row.empty also surfaces as a null schema inside get —
     * hence the Try.) */
-  private[operators] def observedOrNone(obs: org.apache.spark.sql.Observation)
+  private[graft] def observedOrNone(obs: org.apache.spark.sql.Observation)
       : Option[Map[String, Any]] =
     scala.util.Try(obs.get).toOption.filter(_.nonEmpty)
 
@@ -1080,32 +1094,64 @@ object Snapshots {
     else { publish(spark, dir, v); true }
   }
 
-  /** Memoized parquet schema per EXACT file set (newline-joined
-    * sorted absolute paths — Spark part-file names carry a write
-    * UUID, so an identical path list implies identical immutable
-    * files). A bare `spark.read.parquet(paths)` pays one footer-
-    * inference Spark job per construction; a multi-statement DML
-    * chain re-reads the same home-version file set once per
-    * statement (matching scan, table schema, final read), so the
-    * inference was the dominant per-statement job count. The cache
-    * holds schemas only — never data, never results — and is
-    * cleared wholesale when it grows past a bound. */
-  private val fileSetSchemas = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
+  // ---- the schema record ----------------------------------------------
 
-  /** Read an exact parquet file list with its (memoized) inferred
-    * schema supplied explicitly — same frame as the bare read, minus
-    * the per-construction footer-inference job. */
-  private[operators] def readFileSet(spark: SparkSession, basePath: String,
-      paths: Seq[String]): DataFrame = {
-    val key = paths.sorted.mkString("\n")
-    if (fileSetSchemas.size > 512) fileSetSchemas.clear()
-    val schema = fileSetSchemas.computeIfAbsent(key,
-      _ => spark.read.option("basePath", basePath)
-        .parquet(paths: _*).schema)
-    spark.read.schema(schema).option("basePath", basePath)
-      .parquet(paths: _*)
+  private val SchemaName = "_schema.json"
+
+  /** The read schema version directory `vDir` recorded in its
+    * `_schema.json` when it was sealed; None for a version with no
+    * record (a store written before records existed, or a version
+    * planted by hand). */
+  private[operators] def schemaOf(spark: SparkSession, vDir: String)
+      : Option[org.apache.spark.sql.types.StructType] = {
+    val in =
+      try fs(spark, vDir).open(new Path(vDir, SchemaName))
+      catch { case _: java.io.FileNotFoundException => return None }
+    val text =
+      try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
+      finally in.close()
+    Some(org.apache.spark.sql.types.DataType.fromJson(text)
+      .asInstanceOf[org.apache.spark.sql.types.StructType])
   }
+
+  /** The schema `spark.read.parquet(dir)` infers for the data files
+    * under `dir`, with no Spark job: the data columns from the footer
+    * of the file Spark's own inference opens (the first by path), read
+    * on the driver; the partition columns typed from the directory
+    * names by the file index. None when `dir` holds no data file. */
+  private def inferSchema(spark: SparkSession, f: FileSystem, dir: Path)
+      : Option[org.apache.spark.sql.types.StructType] =
+    listDataRel(f, dir).map(_._1).sorted.headOption.map { rel =>
+      val file = new Path(dir, rel)
+      val footer = org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+        spark.sparkContext.hadoopConfiguration, file,
+        org.apache.parquet.format.converter.ParquetMetadataConverter
+          .SKIP_ROW_GROUPS)
+      import org.apache.spark.sql.execution.datasources.parquet._
+      val data = ParquetFileFormat.readSchemaFromFooter(
+        new org.apache.parquet.hadoop.Footer(file, footer),
+        new ParquetToSparkSchemaConverter(
+          org.apache.spark.sql.internal.SQLConf.get))
+      spark.read.schema(data).parquet(dir.toString).schema
+    }
+
+  private def writeSchema(f: FileSystem, stage: Path,
+      schema: org.apache.spark.sql.types.StructType): Unit = {
+    val out = f.create(new Path(stage, SchemaName), true)
+    try out.write(schema.json.getBytes("UTF-8")) finally out.close()
+  }
+
+  /** THE reader of a version's files: the data files `rels` (paths
+    * relative to `vDir`; default: the whole version directory) under
+    * `basePath` `vDir`, typed by the version's `_schema.json` record —
+    * so no read of a recorded version starts a schema-inference Spark
+    * job. A version without a record is read by inference. */
+  private[operators] def readFileSet(spark: SparkSession, vDir: String,
+      rels: Seq[String] = Nil): DataFrame =
+    schemaOf(spark, vDir).fold(spark.read)(spark.read.schema(_))
+      .option("basePath", vDir)
+      .parquet((if (rels.isEmpty) Seq(vDir)
+        else rels.map(r => s"$vDir/$r")): _*)
 
   // ---- schema evolution ---------------------------------------------
   // Versions are whole-table snapshots, so each version carries its
@@ -1286,7 +1332,7 @@ object Snapshots {
     require(v > 0, s"$dir has no committed version")
     if (MergeOnRead.isMorVersion(spark, dir, v))
       MergeOnRead.readAssembled(spark, dir, v, lineage = false)
-    else spark.read.parquet(s"$dir/v=$v")
+    else readFileSet(spark, s"$dir/v=$v")
   }
 
   /** [[read]] with PLANNER-INTEGRATED file skipping: when the version
@@ -1310,7 +1356,7 @@ object Snapshots {
     // MergeOnRead.fold restores the stats-indexed path
     if (MergeOnRead.isMorVersion(spark, dir, v))
       return MergeOnRead.readAssembled(spark, dir, v, lineage = false)
-    val plain = spark.read.parquet(vDir)
+    val plain = readFileSet(spark, vDir)
     val (stats, blooms) = sidecarsOf(spark, vDir)
     if (stats.isEmpty) plain
     else graft.plans.StatsFileIndex.attach(spark, plain,

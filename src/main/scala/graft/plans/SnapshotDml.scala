@@ -494,17 +494,15 @@ case class SnapshotMergeCommand(dir: String, source: LogicalPlan,
   override def innerChildren: Seq[LogicalPlan] = Seq(source)
 
   override def run(spark: SparkSession): Seq[Row] = {
-    // persisted: the count here and mergeInto's key-routing +
-    // rewrite re-read the SAME materialized source — an expensive
-    // (or non-deterministic) source plan executes once, and the
-    // reported affected_rows always matches the rows merged
+    // persisted: mergeInto's count, key routing and rewrite re-read
+    // the SAME materialized source — an expensive (or
+    // non-deterministic) source plan executes once, and the reported
+    // affected_rows (mergeInto's count of it) always matches the rows
+    // merged
     val src = GraftColumnBridge.ofRows(spark, source)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = src.count()
-      CopyOnWrite.mergeInto(spark, dir, src, keys)
-      Seq(Row(n))
-    } finally { src.unpersist(); () }
+    try Seq(Row(CopyOnWrite.mergeInto(spark, dir, src, keys)._2.rowsChanged))
+    finally { src.unpersist(); () }
   }
 }
 
@@ -618,17 +616,23 @@ case class SnapshotInsertCommand(dir: String, query: LogicalPlan,
         case i => pick(i).cast(fd.dataType).as(fd.name)
       }
     }: _*)
-    // persisted: the count and the versioned write read ONE
-    // materialization — an expensive or non-deterministic source
-    // executes once, and affected_rows always matches what landed
+    // persisted: the versioned write (and a Rebase retry's re-stage)
+    // reads ONE materialization — an expensive or non-deterministic
+    // source executes once. affected_rows is observed below the
+    // persist, so the write that materializes it also counts it (the
+    // write always runs the observed plan, so the observation always
+    // completes); an empty observation (Snapshots.observedOrNone)
+    // recounts the persisted rows.
+    val obs = new org.apache.spark.sql.Observation()
     val src = mapped
+      .observe(obs, org.apache.spark.sql.functions.count(lit(1)).as("n"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val n = src.count()
       if (overwrite) Snapshots.overwriteVersion(spark, dir = dir,
         df = src)
       else Snapshots.appendVersion(spark, src, dir)
-      Seq(Row(n))
+      Seq(Row(Snapshots.observedOrNone(obs)
+        .map(_("n").asInstanceOf[Long]).getOrElse(src.count())))
     } finally { src.unpersist(); () }
   }
 }

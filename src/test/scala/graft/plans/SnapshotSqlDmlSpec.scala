@@ -290,6 +290,41 @@ class SnapshotSqlDmlSpec extends SparkSpec {
       .head.getLong(0) == 190L)
   }
 
+  test("INSERT affected_rows come from the write: an empty INSERT " +
+    "returns 0, a rand() source returns exactly the rows that landed, " +
+    "a lost race re-stages and counts its batch once") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    val (t, dir) = mkTable()
+    def count(where: String): Long =
+      spark.sql(s"SELECT count(*) FROM $t WHERE $where").head.getLong(0)
+    val empty = Future(spark.sql(s"INSERT INTO $t (k, b, payload) " +
+      "SELECT id AS k, " +
+      "1 AS b, 'none' AS payload FROM range(10) WHERE false")
+      .head.getLong(0))(scala.concurrent.ExecutionContext.global)
+    assert(Await.result(empty, 120.seconds) == 0L)
+    assert(count("true") == 400L)
+    // the source is evaluated once: the count is of the rows written
+    val drawn = spark.sql(s"INSERT INTO $t (k, b, payload) " +
+      "SELECT id + 1000 AS k, " +
+      "1 AS b, 'rand' AS payload FROM range(200) WHERE rand() < 0.5")
+      .head.getLong(0)
+    assert(drawn == count("payload = 'rand'"))
+    assert(drawn > 0L && drawn < 200L, drawn)
+    // a commit planted while the INSERT stages: the INSERT loses the
+    // claim, re-stages on the new head and publishes above it
+    val head = Snapshots.latestVersion(spark, dir)
+    val n = PipelineHook.raceAt(dir, "stage")(Snapshots.appendVersion(
+      spark, Seq((5000L, 2, "race")).toDF("k", "b", "payload"), dir))(
+      spark.sql(s"INSERT INTO $t (k, b, payload) " +
+        "SELECT id + 3000 AS k, 3 AS b, " +
+        "'batch' AS payload FROM range(7)").head.getLong(0))
+    assert(n == 7L)
+    assert(Snapshots.latestVersion(spark, dir) == head + 2)
+    assert(count("payload = 'batch'") == 7L &&
+      count("payload = 'race'") == 1L)
+  }
+
   test("MERGE beyond the upsert: conditional MATCHED DELETE/UPDATE " +
     "(first match wins), partial-column conditional INSERT, and " +
     "WHEN NOT MATCHED BY SOURCE lower onto the general engine") {
