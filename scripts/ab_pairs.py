@@ -35,7 +35,7 @@ with --trace 1, alternating like the pairs, and prints each per-layer
 metric that BENCHMARK.json lists whose medians differ between the two
 sides, for example `spark.merge.jobs 16 → 10`: the layer that moved.
 The summary then also carries a `per_layer` entry with both medians of
-every such metric.
+every such metric, and `all_correct` also covers the traced runs.
 """
 import argparse
 import json
@@ -119,7 +119,8 @@ def main():
     summary["unresolved"] = [m for m, e in summary["end_to_end"].items()
                              if e["unresolved"]]
     if args.trace_runs:
-        summary["per_layer"] = per_layer(sides, args)
+        summary["per_layer"], traced_ok = per_layer(sides, args)
+        summary["all_correct"] = all_ok and traced_ok
     print(json.dumps(summary))
 
 
@@ -158,14 +159,18 @@ def end_to_end(benchmark, runs):
 def per_layer(sides, args):
     """`args.trace_runs` traced runs per checkout, base first on even
     runs and change first on odd ones; each side's median of every
-    per-layer metric the base checkout's BENCHMARK.json lists. Prints one
-    line per metric whose medians differ."""
+    per-layer metric the base checkout's BENCHMARK.json lists, and whether
+    every traced run was correct with no failed operations. Prints one
+    line per metric whose medians differ, and a warning when a traced run
+    was not correct."""
     spec = json.loads((sides["base"] / "BENCHMARK.json").read_text())
     runs = {"base": [], "change": []}
+    all_ok = True
     for i in range(args.trace_runs):
         order = ("base", "change") if i % 2 == 0 else ("change", "base")
         for side in order:
             res = run_once(sides[side], args, trace="1")
+            all_ok = all_ok and bool(res.get("correct") and res.get("failed", 1) == 0)
             runs[side].append({k: m["value"] for k, m in res["metrics"].items()})
     out = {}
     for m in spec.get("per_layer", []):
@@ -177,7 +182,10 @@ def per_layer(sides, args):
         if med["base"] != med["change"]:
             out[name] = {"base_median": med["base"], "change_median": med["change"]}
             print(f"{name} {med['base']:g} → {med['change']:g}")
-    return out
+    if not all_ok:
+        print("WARNING: a traced run was not correct or had failed operations; "
+              "the per-layer lines above do not support a claim")
+    return out, all_ok
 
 
 if __name__ == "__main__":

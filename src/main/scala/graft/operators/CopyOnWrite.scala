@@ -134,7 +134,8 @@ object CopyOnWrite {
     val dataFiles = listDataRel(f, vPath).map(_._1)
     // resolve the predicate against the version's schema and extract
     // the range/equality conjuncts the sidecars can decide on
-    val cond = dmlCond(spark, readFileSet(spark, vDir), pred)
+    val head = readFileSet(spark, vDir)
+    val cond = dmlCond(spark, head, pred)
     val sidecars = sidecarsOf(spark, vDir)
     val (affected, untouched) = dmlAdmission(dataFiles, cond, sidecars)
     if (affected.isEmpty) return None
@@ -195,8 +196,9 @@ object CopyOnWrite {
     }
     // splice sidecars: scan ONLY the new files, byte-copy the
     // untouched ones through with their existing entries
-    Some((seal(spark, dir, st, cowSeal(dir, v, sidecars, untouched,
-      if (sets.isEmpty) "delete" else "update", affected)), affected,
+    Some((seal(spark, dir, st, cowSeal(dir, v, sidecars, head.schema,
+      untouched, if (sets.isEmpty) "delete" else "update", affected)),
+      affected,
       RewriteStats(affected.size.toLong, untouched.size.toLong,
         rowsChanged, rowsKept)))
   }
@@ -378,7 +380,8 @@ object CopyOnWrite {
     val f = fs(spark, dir)
     val vDir = s"$dir/v=$v"
     val vPath = f.makeQualified(new Path(vDir))
-    val conformed = conform(source, tableSchema(spark, dir))
+    val schema = readFileSet(spark, vDir).schema
+    val conformed = conform(source, schema)
     val dataFiles = listDataRel(f, vPath).map(_._1)
     val pcols = pcolsOf(dataFiles)
     val sidecars = sidecarsOf(spark, vDir)
@@ -424,7 +427,8 @@ object CopyOnWrite {
             .join(conformed, keys, "left_anti").count()
         }
     Some((seal(spark, dir, st,
-      cowSeal(dir, v, sidecars, untouched, "merge", affected)), affected,
+      cowSeal(dir, v, sidecars, schema, untouched, "merge", affected)),
+      affected,
       RewriteStats(affected.size.toLong, untouched.size.toLong,
         rowsChanged, rowsKept)))
   }
@@ -555,7 +559,7 @@ object CopyOnWrite {
     val f = fs(spark, dir)
     val vDir = s"$dir/v=$v"
     val vPath = f.makeQualified(new Path(vDir))
-    val schema = tableSchema(spark, dir)
+    val schema = readFileSet(spark, vDir).schema
     val dataFiles = listDataRel(f, vPath).map(_._1)
     val pcols = pcolsOf(dataFiles)
     // file admission: NOT-MATCHED-BY-SOURCE reads everything; else
@@ -677,7 +681,7 @@ object CopyOnWrite {
     val st = stage(spark, dir)(writeFrame(newData, _, pcols,
       rebalance = true, keepSchema = untouched.isEmpty))
     Some((seal(spark, dir, st,
-      cowSeal(dir, v, sidecars, untouched, "merge", affected)),
+      cowSeal(dir, v, sidecars, schema, untouched, "merge", affected)),
       affected, MergeApplyStats(affected.size.toLong,
       untouched.size.toLong, nUpd, nDel, nIns)))
   }

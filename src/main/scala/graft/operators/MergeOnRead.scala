@@ -524,7 +524,8 @@ object MergeOnRead {
     // file may predate a column the predicate references, and the
     // pruned union must still resolve it exactly like the full
     // assembly's allowMissingColumns union would
-    val lineage = tableSchema(spark, dir).fields.foldLeft(
+    val schema = tableSchema(spark, dir)
+    val lineage = schema.fields.foldLeft(
       if (dvs.nonEmpty) applyDvs(spark, scanned, dvs) else scanned) {
       (d, fd) =>
         if (d.columns.exists(_.equalsIgnoreCase(fd.name))) d
@@ -544,7 +545,8 @@ object MergeOnRead {
       writeDvLines(f, new Path(stage, DvRefsName), carried)
       writeRefs(f, stage, phys)
       seal(spark, dir, stage, Seal(markersFrom = Some(new Path(vDir)),
-        dml = Some((v, op, rawTouched.map(k => s"v=$k")))))
+        dml = Some((v, op, rawTouched.map(k => s"v=$k"))),
+        schema = Some(schema)))
       val sidecarBytes = f.getContentSummary(stage).getLength
       // accounting only: one directory walk per HOME version, never
       // a per-file getFileStatus RPC loop
@@ -726,7 +728,8 @@ object MergeOnRead {
       st, Seal(
       if (statsCols.nonEmpty) statsCols else sCols,
       if (bloomCols.nonEmpty) bloomCols else bCols,
-      markersFrom = Some(new Path(s"$dir/v=$v")))))
+      markersFrom = Some(new Path(s"$dir/v=$v")),
+      schema = Some(folded.schema))))
   }
 
   /** Accounting for a [[purge]]: dirty files rewritten, clean
@@ -797,7 +800,8 @@ object MergeOnRead {
       if (clean.nonEmpty) (Nil, Nil)
       else inheritedSidecars(spark, f,
         phys.map(_._1).distinct.sorted.map(h => s"$dir/v=$h"))
-    seal(spark, dir, st, Seal(sCols, bCols, markersFrom = Some(vPath)))
+    seal(spark, dir, st, Seal(sCols, bCols, markersFrom = Some(vPath),
+      schema = Some(tableSchema(spark, dir))))
     // accounting: one walk per home version, no per-file RPC loop
     val lens = physLengths(f, dir, phys)
     def bytesOf(files: Seq[(Long, String)]): Long =

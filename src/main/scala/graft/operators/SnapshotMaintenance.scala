@@ -78,7 +78,8 @@ object SnapshotMaintenance {
     val (carried, blooms) = inheritedSidecars(spark, f, Seq(vDir))
     (commitNew(spark, dir, Abort("compact", v))(seal(spark, dir, st,
       Seal(if (statsCols.nonEmpty) statsCols else carried, blooms,
-        markersFrom = Some(vPath)))), agg)
+        markersFrom = Some(vPath),
+        schema = Some(readFileSet(spark, vDir).schema)))), agg)
   }
 
   /** First-fit-decreasing packing of (file, size) into bins of

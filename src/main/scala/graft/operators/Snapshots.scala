@@ -358,7 +358,10 @@ object Snapshots {
     * files are never re-scanned). `markersFrom` is the base version
     * whose `_epoch.*`/`_zcluster.*` markers carry forward, `markers`
     * are fresh empty marker files, `dml` the statement's provenance
-    * (base version, op, touched files). */
+    * (base version, op, touched files). `schema` is the read schema
+    * of the version the statement read or conformed its rows to,
+    * which the new version keeps; None for a write that brings its
+    * own (a commit, an overwrite, a ZORDER layout). */
   private[operators] final case class Seal(statsCols: Seq[String] = Nil,
       bloomCols: Seq[String] = Nil,
       keptStats: Seq[FileStats.FileStat] = Nil,
@@ -366,29 +369,34 @@ object Snapshots {
       carry: Seq[(Path, String)] = Nil,
       markersFrom: Option[Path] = None,
       markers: Seq[String] = Nil,
-      dml: Option[(Long, String, Seq[String])] = None)
+      dml: Option[(Long, String, Seq[String])] = None,
+      schema: Option[org.apache.spark.sql.types.StructType] = None)
 
   /** SEAL: write every sidecar of `s` into `stage` — the one place a
     * version's metadata is produced, sealed with its data by the slot
     * rename (a reader can never resolve a version whose manifest is
     * missing or half-written). The first sidecar is `_schema.json`,
-    * the version's read schema ([[readFileSet]]), inferred from the
-    * stage's new data files — the stage scans below read through it —
-    * or, when the statement wrote none, from the files it carried. A
-    * stage with no data file at all (an MoR version of references and
-    * tombstones, read through its home versions' records) records
-    * none. A failure deletes the stage. */
+    * the version's read schema ([[readFileSet]]): `s.schema` when the
+    * statement has a base version, else inferred from the stage's
+    * data files. The stage scans below read through it. A base's
+    * schema is kept, not re-inferred, because the partition
+    * directories a statement writes or carries are a subset of the
+    * version's values and can type a column differently (`region=001`
+    * alone reads as an integer). A stage with no data file at all (an
+    * MoR version of references and tombstones, read through its home
+    * versions' records) records none. A failure deletes the stage. */
   private[operators] def seal(spark: SparkSession, dir: String, stage: Path,
       s: Seal): Path = {
     val f = fs(spark, dir)
     try {
       val st = stage.toString
+      val rels = listDataRel(f, stage).map(_._1)
       // a statement that rewrote nothing new (every row deleted from
       // the rewritten files) keeps only the carried files' entries
-      val empty = listDataRel(f, stage).isEmpty
-      def record(): Unit =
-        inferSchema(spark, f, stage).foreach(writeSchema(f, stage, _))
-      if (!empty) record()
+      val empty = rels.isEmpty
+      if (!empty || s.carry.nonEmpty)
+        s.schema.orElse(inferSchema(spark, stage, rels))
+          .foreach(writeSchema(f, stage, _))
       if (s.statsCols.nonEmpty) {
         if (empty) FileStats.writeEntries(spark, st, s.keptStats)
         else {
@@ -410,7 +418,6 @@ object Snapshots {
       s.carry.foreach { case (src, rel) =>
         FileUtil.copy(f, src, f, new Path(stage, rel), false, conf)
       }
-      if (empty) record()
       // carried markers are empty files that no data scan copies:
       // dropping `_epoch.*` would reopen the exactly-once fence, and
       // dropping `_zcluster.*` the proof that OPTIMIZE ZORDER's bucket
@@ -928,13 +935,15 @@ object Snapshots {
   }
 
   /** The [[Seal]] of a copy-on-write statement on version `v` whose
-    * base sidecars are `sidecars`: the new files are scanned for every
-    * column the base tracks, the `carried` files are byte-copied
-    * through (names preserved) with their entries spliced, markers
-    * carry forward, and the provenance records (v, op, touched). */
+    * base sidecars are `sidecars` and read schema `schema`: the new
+    * files are scanned for every column the base tracks, the `carried`
+    * files are byte-copied through (names preserved) with their
+    * entries spliced, markers carry forward, the schema is kept, and
+    * the provenance records (v, op, touched). */
   private[operators] def cowSeal(dir: String, v: Long,
-      sidecars: FileStats.Sidecars, carried: Seq[String], op: String,
-      touched: Seq[String]): Seal = {
+      sidecars: FileStats.Sidecars,
+      schema: org.apache.spark.sql.types.StructType, carried: Seq[String],
+      op: String, touched: Seq[String]): Seal = {
     val vDir = s"$dir/v=$v"
     val (stats, blooms) = sidecars
     val keep = carried.toSet
@@ -945,7 +954,8 @@ object Snapshots {
         c -> es.filter(e => keep(e.relPath)) },
       carry = carried.map(r => (new Path(s"$vDir/$r"), r)),
       markersFrom = Some(new Path(vDir)),
-      dml = Some((v, op, touched)))
+      dml = Some((v, op, touched)),
+      schema = Some(schema))
   }
 
   /** Stage (but do NOT commit) the append of `df` onto version `v`:
@@ -963,7 +973,7 @@ object Snapshots {
       f: FileSystem, dir: String, v: Long,
       df: DataFrame, epoch: Option[Long]): Path = {
     val vDir = s"$dir/v=$v"
-    val target = tableSchema(spark, dir)
+    val target = read(spark, dir, v).schema
     val extra = df.columns.toSet -- target.fieldNames.toSet
     require(extra.isEmpty,
       s"appendVersion: columns not in the table schema: " +
@@ -975,11 +985,11 @@ object Snapshots {
     if (MergeOnRead.isMorVersion(spark, dir, v))
       return MergeOnRead.stageAppend(spark, dir, v, conformed,
         Seal(markersFrom = markersFrom, markers = markers,
-          dml = Some((v, "append", Nil))))
+          dml = Some((v, "append", Nil)), schema = Some(target)))
     val dataFiles = listDataRel(f, new Path(vDir)).map(_._1)
     val st = stage(spark, dir)(writeFrame(conformed, _,
       pcolsOf(dataFiles), rebalance = true))
-    seal(spark, dir, st, cowSeal(dir, v, sidecarsOf(spark, vDir),
+    seal(spark, dir, st, cowSeal(dir, v, sidecarsOf(spark, vDir), target,
       dataFiles, "append", Nil)
       .copy(markersFrom = markersFrom, markers = markers))
   }
@@ -1114,14 +1124,15 @@ object Snapshots {
       .asInstanceOf[org.apache.spark.sql.types.StructType])
   }
 
-  /** The schema `spark.read.parquet(dir)` infers for the data files
-    * under `dir`, with no Spark job: the data columns from the footer
-    * of the file Spark's own inference opens (the first by path), read
-    * on the driver; the partition columns typed from the directory
-    * names by the file index. None when `dir` holds no data file. */
-  private def inferSchema(spark: SparkSession, f: FileSystem, dir: Path)
+  /** The schema `spark.read.parquet(dir)` infers when `dir` holds the
+    * data files `rels` (paths relative to `dir`), with no Spark job:
+    * the data columns from the footer of the file Spark's own
+    * inference opens (the first by path), read on the driver; the
+    * partition columns typed from the directory names by the file
+    * index. None when `rels` is empty. */
+  private def inferSchema(spark: SparkSession, dir: Path, rels: Seq[String])
       : Option[org.apache.spark.sql.types.StructType] =
-    listDataRel(f, dir).map(_._1).sorted.headOption.map { rel =>
+    rels.sorted.headOption.map { rel =>
       val file = new Path(dir, rel)
       val footer = org.apache.parquet.hadoop.ParquetFileReader.readFooter(
         spark.sparkContext.hadoopConfiguration, file,

@@ -5,8 +5,11 @@ import org.apache.spark.sql.functions._
 
 /** Each snapshot version records its read schema (`_schema.json`)
   * when it is sealed, and every read of a version's files takes it:
-  * the record must equal what `spark.read.parquet(vDir)` infers, for
-  * every writer, and reading a recorded version starts no Spark job. */
+  * the record equals what `spark.read.parquet(vDir)` infers, for
+  * every writer, except where the files a statement wrote or carried
+  * would type a partition column differently from its base version,
+  * whose type the record keeps; reading a recorded version starts no
+  * Spark job. */
 class SchemaRecordSpec extends SparkSpec {
   import spark.implicits._
 
@@ -104,6 +107,94 @@ class SchemaRecordSpec extends SparkSpec {
     assertRecorded(dir, 6)
     assert(Snapshots.read(spark, dir).count() == 0L)
     assert(Snapshots.read(spark, dir).schema == recordOf(dir, 6))
+  }
+
+  test("a statement keeps its base version's partition column types, " +
+    "whichever partition directories it writes or carries") {
+    import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
+    val dir = freshDir("graft-rec-carry")
+    val big = 1L << 40
+    Snapshots.commitWithStats(spark,
+      Seq((1L, "a", "EU", big, Some(1)), (2L, "b", "US", big, Some(2)),
+        (3L, "c", "EU", 1L, None), (4L, "d", "US", 1L, Some(1)))
+        .toDF("id", "v", "region", "big", "k"),
+      dir, statsCols = Seq("id"), partitionByCols = Seq("region", "big", "k"))
+    val rec = recordOf(dir, 1)
+    assert(Seq("region", "big", "k").map(rec(_).dataType) ==
+      Seq(StringType, LongType, IntegerType))
+    // an append whose only new directory is region=001, which alone
+    // would type `region` as an integer
+    assert(Snapshots.appendVersion(spark,
+      Seq((5L, "e", "001", 1L, Some(2))).toDF("id", "v", "region", "big",
+        "k"), dir) == 2L)
+    // a copy-on-write update that rewrites only the directory
+    // region=EU/big=1/k=__HIVE_DEFAULT_PARTITION__, which alone would
+    // type `big` as an integer and `k` as a string
+    assert(CopyOnWrite.updateWhere(spark, dir, col("id") === 3L,
+      Map("v" -> lit("u")))._1 == 3L)
+    // and one that rewrites only region=001
+    assert(CopyOnWrite.updateWhere(spark, dir, col("id") === 5L,
+      Map("v" -> lit("w")))._1 == 4L)
+    (2L to 4L).foreach { v =>
+      assertRecorded(dir, v)
+      assert(recordOf(dir, v) == rec, s"v=$v")
+    }
+    def rowsOf(v: Long) = Snapshots.read(spark, dir, v).orderBy("id")
+      .collect().toSeq.map(r => (r.getLong(0), r.getString(1),
+        r.getString(2), r.getLong(3), Option(r.get(4))))
+    assert(rowsOf(4) ==
+      Seq((1L, "a", "EU", big, Some(1)), (2L, "b", "US", big, Some(2)),
+        (3L, "u", "EU", 1L, None), (4L, "d", "US", 1L, Some(1)),
+        (5L, "w", "001", 1L, Some(2))))
+    // a delete that leaves only region=001: inference over the
+    // version's files would now read `region` as the integer 1
+    assert(CopyOnWrite.deleteWhere(spark, dir, col("id") =!= 5L)._1 == 5L)
+    assert(spark.read.parquet(s"$dir/v=5").schema("region").dataType ==
+      IntegerType)
+    assert(recordOf(dir, 5) == rec)
+    assert(rowsOf(5) == Seq((5L, "w", "001", 1L, Some(2))))
+    assert(SnapshotMaintenance.compact(spark, dir, 1L << 20)._1 == 6L)
+    assert(recordOf(dir, 6) == rec)
+    assert(rowsOf(6) == rowsOf(5))
+  }
+
+  test("stats over a partition column are typed like the table: a " +
+    "point delete on a value only an append wrote finds its row") {
+    val dir = freshDir("graft-rec-pstats")
+    Snapshots.commitWithStats(spark,
+      Seq((1L, "EU"), (2L, "US")).toDF("id", "region"), dir,
+      statsCols = Seq("id", "region"), partitionByCols = Seq("region"))
+    assert(Snapshots.appendVersion(spark,
+      Seq((5L, "001")).toDF("id", "region"), dir) == 2L)
+    val added = FileStats.readManifest(spark, s"$dir/v=2")
+      .filter(_.relPath.startsWith("region=001/"))
+    assert(added.map(_.cols("region")) == Seq(Some(("001", "001"))))
+    val (pruned, _) = prunedRead(dir, col("region") === "001")
+    assert(pruned.select("id").as[Long].collect().toSeq == Seq(5L))
+    val (v3, st) = CopyOnWrite.deleteWhere(spark, dir,
+      col("region") === "001")
+    assert(v3 == 3L && st.rowsChanged == 1L)
+    assert(Snapshots.read(spark, dir).select("id").as[Long].collect()
+      .sorted.toSeq == Seq(1L, 2L))
+  }
+
+  test("a merge-on-read append and update keep the base's partition " +
+    "column types for their own files") {
+    val dir = freshDir("graft-rec-morpart")
+    Snapshots.commitWithStats(spark,
+      Seq((1L, "a", "EU"), (2L, "b", "US")).toDF("id", "v", "region"),
+      dir, statsCols = Seq("id"), partitionByCols = Seq("region"))
+    val rec = recordOf(dir, 1)
+    assert(MergeOnRead.deleteWhere(spark, dir, col("id") === 1L)._1 == 2L)
+    assert(Snapshots.appendVersion(spark,
+      Seq((5L, "e", "001")).toDF("id", "v", "region"), dir) == 3L)
+    assert(MergeOnRead.isMorVersion(spark, dir, 3))
+    assert(recordOf(dir, 3) == rec)
+    assert(MergeOnRead.updateWhere(spark, dir, col("id") === 5L,
+      Map("v" -> lit("w")))._1 == 4L)
+    assert(recordOf(dir, 4) == rec)
+    assert(Snapshots.read(spark, dir).orderBy("id").as[(Long, String,
+      String)].collect().toSeq == Seq((2L, "b", "US"), (5L, "w", "001")))
   }
 
   test("merge-on-read update images, fold, compact and ZORDER record " +
