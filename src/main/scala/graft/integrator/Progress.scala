@@ -74,20 +74,6 @@ object Progress {
     }
   }
 
-  /** Full JSON string escape — backslash, quote, and every control
-    * char; a Windows-style path or stray control byte in `detail`
-    * must not produce an unparseable status file. */
-  private[integrator] def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
   /** Durable last-status sink — the `app_status.progress.set` +
     * `save_status` analog: one small JSON file an external observer
     * polls. Goes through the Hadoop FileSystem API, NOT java.nio: the
@@ -110,12 +96,14 @@ object Progress {
       val tmp = new org.apache.hadoop.fs.Path(
         Option(p.getParent).getOrElse(new org.apache.hadoop.fs.Path(".")),
         p.getName + ".tmp")
-      val json =
-        s"""{"phase":${jsonStr(u.phase.name)},"order":${u.phase.order},""" +
-          s""""detail":${jsonStr(u.detail)},""" +
-          s""""current":${u.current},""" +
-          s""""total":${u.total.map(_.toString).getOrElse("null")},""" +
-          s""""percent":${u.percent}}"""
+      // json4s escapes `detail` fully: a Windows-style path or a stray
+      // control byte must not produce an unparseable status file
+      import org.json4s._
+      val json = org.json4s.jackson.JsonMethods.compact(JObject(
+        "phase" -> JString(u.phase.name), "order" -> JLong(u.phase.order),
+        "detail" -> JString(u.detail), "current" -> JLong(u.current),
+        "total" -> u.total.fold[JValue](JNull)(JLong(_)),
+        "percent" -> JLong(u.percent)))
       val out = f.create(tmp, true)
       try out.write((json + "\n").getBytes("UTF-8")) finally out.close()
       val fc = org.apache.hadoop.fs.FileContext.getFileContext(

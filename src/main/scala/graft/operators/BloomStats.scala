@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
+import org.json4s.{JArray, JLong, JObject, JString, JValue}
 
 /** Per-file Bloom sidecars for POINT lookups — the equality
   * complement to [[FileStats]]' min/max ranges. Min/max pruning only
@@ -99,40 +100,34 @@ object BloomStats {
     writeEntries(spark, dataDir, column, entries)
   }
 
+  /** A sidecar line: `{"file":…,"rows":…,"m":…,"k":…,"bits":[…]}`,
+    * bits ascending. */
+  private[operators] def toJson(e: FileBloom): JValue =
+    JObject("file" -> JString(e.relPath), "rows" -> JLong(e.rows),
+      "m" -> JLong(e.m), "k" -> JLong(e.k),
+      "bits" -> JArray(e.bits.toList.sorted.map(JLong(_))))
+
+  /** The entry of one sidecar line ([[toJson]]'s format). */
+  private[operators] def fromJson(j: JValue): FileBloom = {
+    import StoreJson.formats
+    FileBloom((j \ "file").extract[String], (j \ "rows").extract[Long],
+      (j \ "m").extract[Int], (j \ "k").extract[Int],
+      (j \ "bits").extract[List[Int]].toSet)
+  }
+
   /** Write a bloom sidecar from pre-computed entries — the splice
     * path for copy-on-write rewrites (untouched files keep their old
     * filters; only new files were scanned). */
   def writeEntries(spark: SparkSession, dataDir: String,
-      column: String, entries: Seq[FileBloom]): Unit = {
-    val lines = entries.map { e =>
-      s"""{"file":"${FileStats.jsonEscape(e.relPath)}",""" +
-        s""""rows":${e.rows},"m":${e.m},"k":${e.k},""" +
-        s""""bits":[${e.bits.toSeq.sorted.mkString(",")}]}"""
-    }.sorted
-    val f = fs(spark, dataDir)
-    val out = f.create(new Path(dataDir, manifestName(column)), true)
-    try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
-  }
+      column: String, entries: Seq[FileBloom]): Unit =
+    StoreJson.write(fs(spark, dataDir),
+      new Path(dataDir, manifestName(column)), entries.map(toJson))
 
   /** Parse `_bloom_<column>.json` under `dataDir`. */
   def readManifest(spark: SparkSession, dataDir: String,
-      column: String): Seq[FileBloom] = {
-    val f = fs(spark, dataDir)
-    val in = f.open(new Path(dataDir, manifestName(column)))
-    val text =
-      try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-      finally in.close()
-    val R = (""""file":"((?:[^"\\]|\\.)*)","rows":(\d+),""" +
-      """"m":(\d+),"k":(\d+),"bits":\[([0-9,]*)\]""").r.unanchored
-    text.split("\n").toSeq.filter(_.nonEmpty).map {
-      case R(rel, rows, m, k, bits) =>
-        FileBloom(FileStats.jsonUnescape(rel), rows.toLong, m.toInt,
-          k.toInt,
-          if (bits.isEmpty) Set.empty
-          else bits.split(",").map(_.toInt).toSet)
-    }
-  }
+      column: String): Seq[FileBloom] =
+    StoreJson.read(fs(spark, dataDir),
+      new Path(dataDir, manifestName(column))).map(fromJson)
 
   /** Can `fb`'s file possibly contain `value`? True unless some
     * seed's probe bit is absent — absence is a proof (bits are only

@@ -9,7 +9,8 @@ import Snapshots._
   * hold affected rows, only those are rewritten, every other file is
   * byte-copied through with its manifest entries spliced. Each
   * statement commits through [[Snapshots]]' pipeline under the
-  * Rebase policy, with `_dml.json` provenance and commit-time conflict
+  * Rebase policy, with provenance in the version record and commit-time
+  * conflict
   * detection ([[validateIntervening]]). */
 object CopyOnWrite {
 
@@ -27,7 +28,7 @@ object CopyOnWrite {
     * clustered layout, deleting one key range rewrites that range's
     * files, not the table; the op this store's manifests exist to
     * make cheap. Rows where the predicate is NULL are KEPT (SQL
-    * DELETE semantics). Epoch markers carry forward (the deleted-from
+    * DELETE semantics). Epochs carry forward (the deleted-from
     * state still includes those epochs — the fence stays O(1)).
     * PARTITIONED layouts route additionally through the
     * directory-encoded partition values (a predicate on a partition
@@ -42,7 +43,7 @@ object CopyOnWrite {
     * stages against the head it read and publishes only onto that
     * head. If another writer committed first, it re-validates instead
     * of clobbering:
-    *  - every version the new head's `_dml.json` chain leads back
+    *  - every version the new head's provenance chain leads back
     *    through rewrote files DISJOINT from this statement's admitted
     *    set → RETRY: re-stage against the new head (predicate DML
     *    re-executes serializably), up to `maxRetries` times;
@@ -118,8 +119,8 @@ object CopyOnWrite {
 
   /** Build (but do NOT commit) a copy-on-write rewrite of version
     * `v`: sidecar-routed admission, rewritten + byte-copied files
-    * staged with spliced manifests, epoch markers carried, and the
-    * statement's provenance sealed into the stage as `_dml.json`
+    * staged with spliced manifests, epochs carried, and the
+    * statement's provenance sealed into the stage's record
     * (base version + the files it rewrote — what commit-time
     * conflict detection validates against). Returns None when every
     * file is provably unaffected (the caller publishes nothing). */
@@ -210,7 +211,7 @@ object CopyOnWrite {
   // else", so whichever publishes second silently reverts the first
   // statement's effect. The Rebase policy closes that hole the way
   // Delta's optimistic concurrency does: every DML version records its
-  // provenance (`_dml.json`: base version + the files it rewrote), a
+  // provenance (base version + the files it rewrote), a
   // statement publishes only onto the head it staged from, and on
   // losing the race it re-validates — intervening versions that are
   // all DML and touched DISJOINT files mean the statement simply
@@ -241,7 +242,7 @@ object CopyOnWrite {
   /** Intervening-commit validation every copy-on-write statement runs
     * when another writer moved the head from `h` to `h2` first: the
     * versions main published in between are the new head's
-    * `_dml.json` base chain back to `h` (a crashed Replace committer's
+    * provenance base chain back to `h` (a crashed Replace committer's
     * orphan sitting in (h, h2] was never main's history).
     * Aborts loudly on any overlap or non-DML link; returns normally
     * when every link is DML over DISJOINT files (safe retry —
@@ -254,14 +255,14 @@ object CopyOnWrite {
       new java.util.ConcurrentModificationException(
         s"conflict: $msg (base v=$h) — re-read and re-reason")
     val chain = scala.collection.mutable.ArrayBuffer.empty[
-      (Long, (Long, String, Seq[String]))]
+      (Long, Provenance)]
     var x = h2
     while (x > h) {
-      val dml = readDml(f, s"$dir/v=$x").getOrElse(throw conflict(
-        s"concurrent NON-DML commit v=$x replaced the table under " +
-          "this statement"))
+      val dml = VersionDir.of(f, new Path(s"$dir/v=$x")).record.dml
+        .getOrElse(throw conflict(s"concurrent NON-DML commit v=$x " +
+          "replaced the table under this statement"))
       chain += (x -> dml)
-      x = dml._1
+      x = dml.base
     }
     if (x != h) throw conflict(
       s"the head v=$h2 does not descend from this statement's base")
@@ -271,12 +272,12 @@ object CopyOnWrite {
     // intersect CoW rel paths, so the overlap check below would
     // misreport it as disjoint) — abort with the honest diagnosis
     // instead of retrying into the fold-first require
-    chain.find(_._2._2.startsWith("mor_")).foreach { case (v, _) =>
+    chain.find(_._2.op.startsWith("mor_")).foreach { case (v, _) =>
       throw conflict(s"concurrent merge-on-read DML v=$v under this " +
         "copy-on-write statement — fold the tombstones (MergeOnRead.fold), " +
         "then re-run")
     }
-    val touchedByOthers = chain.flatMap(_._2._3).toSet
+    val touchedByOthers = chain.flatMap(_._2.touched).toSet
     val overlap = affected.filter(touchedByOthers)
     if (overlap.nonEmpty) throw conflict(
       s"concurrent DML (v=${chain.map(_._1).reverse.mkString(",")}) " +
@@ -301,7 +302,7 @@ object CopyOnWrite {
     * key dedup (K5 last-write-wins upstream). PARTITIONED layouts
     * route through directory-encoded partition values when the
     * leading key IS a partition column, and rewritten+inserted rows
-    * re-route through `partitionBy`; epoch markers carry forward. */
+    * re-route through `partitionBy`; epochs carry forward. */
   def mergeInto(spark: SparkSession, dir: String, source: DataFrame,
       keys: Seq[String], maxRoutedKeys: Int = 100000,
       maxRetries: Int = 3, publishWaitMs: Long = 30000L)
@@ -312,7 +313,7 @@ object CopyOnWrite {
     // during the (potentially long) merge rewrite is never silently
     // reverted — the stage is withdrawn, intervening versions are
     // validated (disjoint DML → re-stage on the new head; overlap or
-    // non-DML → loud abort), and the version publishes with _dml.json
+    // non-DML → loud abort), and the version publishes with its
     // provenance so CONCURRENT statements validate against this merge
     commitStaged(spark, dir, Rebase(maxRetries, publishWaitMs)) { h =>
       require(h > 0, s"$dir has no committed version")
@@ -371,7 +372,7 @@ object CopyOnWrite {
   /** Build (but do NOT commit) the [[mergeInto]] rewrite of version
     * `v`: key-routed admission, anti-join + union of the affected
     * files, spliced sidecars, byte-copied untouched files, and
-    * `_dml.json` provenance sealed into the stage. Returns None for
+    * provenance sealed into the stage's record. Returns None for
     * an empty source (a no-op merge publishes nothing). */
   private def stageMerge(spark: SparkSession, dir: String, v: Long,
       source: DataFrame, keys: Seq[String], maxRoutedKeys: Int)

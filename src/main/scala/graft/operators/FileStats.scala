@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
+import org.json4s.{JArray, JLong, JNull, JObject, JString, JValue}
 
 /** Per-file min/max statistics manifests — the file-skipping layer a
   * parquet lake needs to make clustered layout (ZOrder/SilverLayout)
@@ -20,10 +21,9 @@ import org.apache.spark.sql.types.StringType
   * data file: relative path, row count, and per-column [min,max].
   * Numeric/temporal stats are DECIMAL/ISO STRINGS — exact for every
   * integral/decimal value (a double round-trip would corrupt longs
-  * above 2^53). STRING-typed stats are stored verbatim, JSON-escaped
-  * (quotes, backslashes, control characters — a raw interpolation
-  * corrupted the manifest on exactly the values string pruning
-  * exists for), and TRUNCATED to `maxStatLen` code points: the min
+  * above 2^53). STRING-typed stats are stored verbatim (the store's
+  * JSON codec, [[StoreJson]], escapes them) and TRUNCATED to
+  * `maxStatLen` code points: the min
   * truncates to a prefix (a prefix is ≤ the true min in binary
   * order, so it stays a sound lower bound) and the max truncates to
   * a prefix with its last code point incremented (strictly > the
@@ -93,46 +93,6 @@ object FileStats {
 
   private def fs(spark: SparkSession, dir: String) =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  // ---- JSON string escaping (hand-rolled like the rest of the
-  // manifest codec — no JSON library in the dependency set) ---------
-
-  private[operators] def jsonEscape(s: String): String = {
-    val sb = new StringBuilder(s.length + 8)
-    s.foreach {
-      case '"' => sb.append("\\\"")
-      case '\\' => sb.append("\\\\")
-      case '\n' => sb.append("\\n")
-      case '\r' => sb.append("\\r")
-      case '\t' => sb.append("\\t")
-      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
-    }
-    sb.toString
-  }
-
-  private[operators] def jsonUnescape(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case '"' => sb.append('"'); i += 2
-          case '\\' => sb.append('\\'); i += 2
-          case 'n' => sb.append('\n'); i += 2
-          case 'r' => sb.append('\r'); i += 2
-          case 't' => sb.append('\t'); i += 2
-          case 'u' if i + 6 <= s.length =>
-            sb.append(Integer.parseInt(s.substring(i + 2, i + 6), 16)
-              .toChar)
-            i += 6
-          case other => sb.append(other); i += 2
-        }
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
 
   // ---- string-stat ordering and truncation -------------------------
 
@@ -277,23 +237,35 @@ object FileStats {
     writeEntries(spark, dataDir, entries)
   }
 
-  private def render(e: FileStat): String = {
-    val colsJson = e.cols.toSeq.sortBy(_._1).map { case (c, bounds) =>
-      val v = bounds match {
-        case Some((mn, mx)) =>
-          s"""["${jsonEscape(mn)}","${jsonEscape(mx)}"]"""
-        case None => "null"
-      }
-      s""""${jsonEscape(c)}":$v"""
-    }.mkString(",")
-    // nn BEFORE cols so the cols-blob extraction in readManifest (the
-    // substring after "cols":{ ) keeps working unchanged
-    val nnJson = e.nonNull.toSeq.sortBy(_._1).map { case (c, n) =>
-      s""""${jsonEscape(c)}":$n"""
-    }.mkString(",")
-    val nnPart = if (e.nonNull.isEmpty) "" else s""""nn":{$nnJson},"""
-    s"""{"file":"${jsonEscape(e.relPath)}",""" +
-      s""""rows":${e.rows},$nnPart"cols":{$colsJson}}"""
+  /** A manifest line: `{"file":…,"rows":…,"nn":{col:count,…},
+    * "cols":{col:["min","max"] or null,…}}`, columns sorted by name,
+    * `nn` absent when no non-null count is known. Stats stay strings,
+    * so numbers keep every digit. */
+  private[operators] def toJson(e: FileStat): JValue = {
+    def obj[A](m: Map[String, A])(v: A => JValue) =
+      JObject(m.toList.sortBy(_._1).map { case (k, a) => k -> v(a) })
+    val nn =
+      if (e.nonNull.isEmpty) Nil else List("nn" -> obj(e.nonNull)(JLong(_)))
+    val cols = obj(e.cols)(_.fold[JValue](JNull) { case (mn, mx) =>
+      JArray(List(JString(mn), JString(mx))) })
+    JObject(List("file" -> JString(e.relPath), "rows" -> JLong(e.rows)) ++
+      nn :+ ("cols" -> cols))
+  }
+
+  /** The entry of one manifest line ([[toJson]]'s format). */
+  private[operators] def fromJson(j: JValue): FileStat = {
+    import StoreJson.formats
+    def fields(k: String) = j \ k match {
+      case JObject(fs) => fs
+      case _ => Nil
+    }
+    FileStat((j \ "file").extract[String], (j \ "rows").extract[Long],
+      fields("cols").map {
+        case (c, JArray(List(JString(mn), JString(mx)))) =>
+          c -> Some((mn, mx))
+        case (c, _) => c -> None
+      }.toMap,
+      fields("nn").map { case (c, n) => c -> n.extract[Long] }.toMap)
   }
 
   /** Write a manifest from pre-computed entries — the splice path for
@@ -301,11 +273,8 @@ object FileStats {
     * (already correct) stats and only new files were scanned. */
   def writeEntries(spark: SparkSession, dataDir: String,
       entries: Seq[FileStat]): Unit = {
-    val lines = entries.map(render).sorted
     val f = fs(spark, dataDir)
-    val out = f.create(new Path(dataDir, ManifestName), true)
-    try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
+    StoreJson.write(f, new Path(dataDir, ManifestName), entries.map(toJson))
     // a prior manifest-less read of this directory may have
     // negative-cached it in the planner rule — drop that entry
     graft.plans.StatsPruneRule.invalidate(
@@ -314,45 +283,10 @@ object FileStats {
       f.makeQualified(new Path(dataDir)).toString)
   }
 
-  // JSON string content with escapes intact: [^"\\] or a \-pair
-  private val Str = """((?:[^"\\]|\\.)*)"""
-
-  /** Parse `_stats.json` under `dataDir` — the exact format
-    * [[writeManifest]] emits, escape-aware in both the path and the
-    * stat values (string stats carry user data). */
-  def readManifest(spark: SparkSession, dataDir: String): Seq[FileStat] = {
-    val f = fs(spark, dataDir)
-    val in = f.open(new Path(dataDir, ManifestName))
-    val text =
-      try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-      finally in.close()
-    val FileR = ("\"file\":\"" + Str + "\"").r.unanchored
-    val RowsR = """"rows":(\d+)""".r.unanchored
-    val ColR = ("\"" + Str + "\":(?:null|\\[\"" + Str + "\",\"" +
-      Str + "\"\\])").r
-    val NnR = ("\"" + Str + "\":(\\d+)").r
-    text.split("\n").toSeq.filter(_.nonEmpty).map { line =>
-      val rel = line match { case FileR(p) => jsonUnescape(p) }
-      val rows = line match { case RowsR(n) => n.toLong }
-      val colsBlob = line.substring(line.indexOf("\"cols\":{") + 8)
-      val cols = ColR.findAllMatchIn(colsBlob).map { m =>
-        jsonUnescape(m.group(1)) -> Option(m.group(2))
-          .map(mn => (jsonUnescape(mn), jsonUnescape(m.group(3))))
-      }.toMap
-      // optional non-null counts (absent in pre-nn manifests = unknown)
-      val nnIdx = line.indexOf("\"nn\":{")
-      val nn =
-        if (nnIdx < 0) Map.empty[String, Long]
-        else {
-          val blob = line.substring(nnIdx + 6,
-            line.indexOf("},\"cols\"", nnIdx))
-          NnR.findAllMatchIn(blob).map { m =>
-            jsonUnescape(m.group(1)) -> m.group(2).toLong
-          }.toMap
-        }
-      FileStat(rel, rows, cols, nn)
-    }
-  }
+  /** Parse `_stats.json` under `dataDir` ([[toJson]]'s format). */
+  def readManifest(spark: SparkSession, dataDir: String): Seq[FileStat] =
+    StoreJson.read(fs(spark, dataDir), new Path(dataDir, ManifestName))
+      .map(fromJson)
 
   /** Split the manifest into (kept, skipped) for a CONJUNCTION of
     * typed range predicates: a file is skipped when ANY predicate's

@@ -17,47 +17,43 @@ import Snapshots._
   * rewrite. At 100 TB with routine GDPR-style point deletes this is
   * the difference between O(tombstones) and O(table) per statement.
   *
-  * Layout inside an MoR version directory:
-  *   _refs.json        — {"src":N,"file":"rel/path"} lines naming the
-  *                       PHYSICAL files (in their home version dirs)
-  *                       this version serves; depth-1 by
-  *                       construction (refs always point at the dir
-  *                       that physically holds the file, never at
-  *                       another ref)
-  *   _dv/dv-<uuid>     — THIS statement's (key, pos) tombstones,
-  *                       parquet; key = "srcVersion/relPath" AS
-  *                       RENDERED BY
-  *                       substring_index(input_file_name(),"/v=",-1)
-  *                       — both creation and read derive the key
-  *                       with the same expression over the same
-  *                       scan, so the match is exact by construction
-  *   _dv/index.json    — {"file","rows","keys"} describing the LOCAL
-  *                       dv above: row count + the distinct data-file
-  *                       keys it tombstones (known for free at stage
-  *                       time), so readers and successor statements
-  *                       never re-scan it for metadata
-  *   _dvrefs.json      — {"src","file","rows","keys"} lines carrying
-  *                       PRIOR statements' dv files BY REFERENCE
-  *                       (they physically live in their own home
-  *                       version dirs, like _refs.json data files).
-  *                       A DML statement writes ONLY its own new
-  *                       tombstones + these metadata lines — cost is
-  *                       O(statement), never O(accumulated deletes):
-  *                       the per-file incremental-deletion-vector
-  *                       representation (Delta DVs / Iceberg
-  *                       positional deletes), not a monolithic
-  *                       union-rewrite
-  *   (no _stats.json)  — deliberately: a stats manifest with stale
-  *                       row counts would let the metadata-aggregate
-  *                       rewrite overcount; with NO manifest the
-  *                       StatsAggRule/StatsPruneRule structurally
-  *                       refuse and every aggregate runs the real
-  *                       (tombstone-applying) plan. Exactness beats
-  *                       a shortcut here; folding restores both.
-  * All sidecars are sealed by the same atomic stage→slot rename as
+  * An MoR version is described by its record ([[Snapshots.VersionRecord]],
+  * `_version.json`), sealed with the version like every record:
+  *   refs        — (src, file) pairs naming the PHYSICAL files (in
+  *                 their home version dirs) this version serves;
+  *                 depth-1 by construction (refs always point at the
+  *                 dir that physically holds the file, never at
+  *                 another ref). A version is MoR when it has refs.
+  *   dvs         — (src, file, rows, keys) entries, one per deletion
+  *                 vector serving the version: its parquet file in
+  *                 the `_dv/` directory of its home version `src`
+  *                 (none: this version), its row count, and the
+  *                 distinct data-file keys it tombstones (known for free at
+  *                 stage time), so readers and successor statements
+  *                 never re-scan a dv for metadata. A DML statement
+  *                 writes ONLY its own new tombstones and carries
+  *                 prior statements' dvs BY REFERENCE — cost is
+  *                 O(statement), never O(accumulated deletes): the
+  *                 per-file incremental-deletion-vector
+  *                 representation (Delta DVs / Iceberg positional
+  *                 deletes), not a monolithic union-rewrite.
+  *   _dv/dv-<uuid> — THIS statement's (key, pos) tombstones, parquet;
+  *                 key = "srcVersion/relPath" AS RENDERED BY
+  *                 substring_index(input_file_name(),"/v=",-1) — both
+  *                 creation and read derive the key with the same
+  *                 expression over the same scan, so the match is
+  *                 exact by construction.
+  *   (no _stats.json) — deliberately: a stats manifest with stale row
+  *                 counts would let the metadata-aggregate rewrite
+  *                 overcount; with NO manifest the
+  *                 StatsAggRule/StatsPruneRule structurally refuse and
+  *                 every aggregate runs the real (tombstone-applying)
+  *                 plan. Exactness beats a shortcut here; folding
+  *                 restores both.
+  * Record and dvs are sealed by the same atomic stage→slot rename as
   * every commit: a crash mid-delete leaves only an orphan stage.
   *
-  * READ-PATH consequence of knowing each dv's touched keys: the
+  *   * READ-PATH consequence of knowing each dv's touched keys: the
   * assembly splits physical files into DIRTY (some dv touches them —
   * lineage scan + anti-join) and CLEAN (no dv entry — plain
   * vectorized scan, no input_file_name/row_index derivation, no join
@@ -65,10 +61,7 @@ import Snapshots._
   * scan stays whole-stage-codegen scan-only. */
 object MergeOnRead {
 
-  private val RefsName = "_refs.json"
   private val DvDirName = "_dv"
-  private val DvIndexName = "index.json"
-  private val DvRefsName = "_dvrefs.json"
 
   /** One deletion-vector sidecar serving a version: the parquet's
     * absolute path, its row count, and the data-file keys it
@@ -101,143 +94,32 @@ object MergeOnRead {
     new String(bytes.toByteArray, "UTF-8")
   }
 
-  private def renderDvLine(src: Option[Long], file: String, rows: Long,
-      keys: Seq[String]): String = {
-    val ks = keys.sorted.map(k => s""""${FileStats.jsonEscape(k)}"""")
-      .mkString("[", ",", "]")
-    val head = src.map(v => s""""src":$v,""").getOrElse("")
-    s"""{$head"file":"${FileStats.jsonEscape(file)}","rows":$rows,""" +
-      s""""keys":$ks}"""
-  }
+  private def recordOf(f: org.apache.hadoop.fs.FileSystem, dir: String,
+      v: Long): VersionRecord =
+    VersionDir.of(f, new Path(dir, s"v=$v")).record
 
-  private def parseDvLine(line: String)
-      : (Option[Long], String, Long, Seq[String]) = {
-    val R = ("""\{(?:"src":(\d+),)?"file":"((?:[^"\\]|\\.)*)",""" +
-      """"rows":(\d+),"keys":(\[.*\])\}""").r
-    line match {
-      case R(src, file, rows, ks) =>
-        val keys = ("\"((?:[^\"\\\\]|\\\\.)*)\"".r)
-          .findAllMatchIn(ks)
-          .map(m => FileStats.jsonUnescape(m.group(1))).toSeq
-        (Option(src).map(_.toLong), FileStats.jsonUnescape(file),
-          rows.toLong, keys)
-      case _ => throw new IllegalStateException(
-        s"corrupt deletion-vector metadata line: $line")
-    }
-  }
-
-  private def writeDvLines(f: org.apache.hadoop.fs.FileSystem,
-      target: Path, lines: Seq[String]): Unit = {
-    if (lines.isEmpty) return
-    val out = f.create(target, true)
-    try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  private def readLines(f: org.apache.hadoop.fs.FileSystem,
-      p: Path): Seq[String] = {
-    if (!f.exists(p)) return Seq.empty
-    val in = f.open(p)
-    val text =
-      try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-        "UTF-8")
-      finally in.close()
-    text.split("\n").toSeq.filter(_.nonEmpty)
-  }
-
-  /** (home version, sidecar-relative file, rows, keys) of the dv
-    * files a version carries BY REFERENCE. */
-  private[operators] def readDvRefs(f: org.apache.hadoop.fs.FileSystem,
-      vDir: String): Seq[(Long, String, Long, Seq[String])] =
-    readLines(f, new Path(vDir, DvRefsName)).map { l =>
-      val (src, file, rows, keys) = parseDvLine(l)
-      (src.getOrElse(throw new IllegalStateException(
-        s"$DvRefsName line missing src: $l")), file, rows, keys)
-    }
-
-  /** The LOCAL dv files of `vDir` (from `_dv/index.json`). */
-  private def readDvIndex(f: org.apache.hadoop.fs.FileSystem,
-      vDir: String): Seq[(String, Long, Seq[String])] =
-    readLines(f, new Path(s"$vDir/$DvDirName", DvIndexName)).map { l =>
-      val (_, file, rows, keys) = parseDvLine(l)
-      (file, rows, keys)
-    }
-
-  /** EVERY deletion-vector sidecar serving version `v`: carried refs
-    * and local dvs. */
+  /** EVERY deletion-vector sidecar serving version `v`, carried and
+    * local. */
   private[operators] def dvEntries(spark: SparkSession, dir: String,
-      v: Long): Seq[DvEntry] = {
-    val f = fs(spark, dir)
-    val vDir = s"$dir/v=$v"
-    val carried = readDvRefs(f, vDir).map { case (src, file, rows, ks) =>
-      DvEntry(s"$dir/v=$src/$file", rows, ks)
-    }
-    val local = readDvIndex(f, vDir).map { case (file, rows, ks) =>
-      DvEntry(s"$vDir/$DvDirName/$file", rows, ks)
-    }
-    carried ++ local
-  }
+      v: Long): Seq[DvEntry] =
+    recordOf(fs(spark, dir), dir, v).dvs.map(d =>
+      DvEntry(s"$dir/v=${d.src.getOrElse(v)}/$DvDirName/${d.file}", d.rows,
+        d.keys))
 
-  /** The dv lines a SUCCESSOR staging from head `v` must carry: the
-    * head's own carried refs verbatim, plus its local dvs promoted to
-    * src = `v`. */
-  private def carryDvLines(f: org.apache.hadoop.fs.FileSystem,
-      dir: String, v: Long): Seq[String] = {
-    val vDir = s"$dir/v=$v"
-    val carried = readDvRefs(f, vDir).map { case (src, file, rows, ks) =>
-      renderDvLine(Some(src), file, rows, ks)
-    }
-    val local = readDvIndex(f, vDir).map { case (file, rows, ks) =>
-      renderDvLine(Some(v), s"$DvDirName/$file", rows, ks)
-    }
-    carried ++ local
-  }
+  /** The [[Seal]] that carries MoR head `v`'s complete state BY
+    * REFERENCE into a successor: every physical file as a reference,
+    * every deletion vector with its home version. */
+  private[operators] def carrySeal(f: org.apache.hadoop.fs.FileSystem,
+      dir: String, v: Long): Seal =
+    Seal(refs = physicalFiles(f, dir, v), dvs = recordOf(f, dir, v).dvs
+      .map(d => d.copy(src = d.src.orElse(Some(v)))))
 
-  /** Does `v=$v` carry merge-on-read sidecars? Such a version is
-    * served by [[Snapshots.read]]/[[Snapshots.table]] via reference
-    * assembly — a bare
-    * `spark.read.parquet(versionDir)` would see no data files.
-    *
-    * Memoized per (qualified dir, version, dir mtime): a published
-    * version directory is immutable by design (sidecars land in the
-    * stage BEFORE the atomic slot rename), so MoR-ness never changes
-    * after publish — but on an object store every read was paying a
-    * metadata RPC per call. The mtime in the key
-    * keeps the memo honest under directory REUSE (a test deleting
-    * and recreating a store at the same path gets a fresh answer,
-    * because the recreated `v=N` has a new mtime). A missing version
-    * dir is not memoized and answers false. */
-  def isMorVersion(spark: SparkSession, dir: String, v: Long): Boolean = {
-    val f = fs(spark, dir)
-    val vp = f.makeQualified(new Path(dir, s"v=$v"))
-    val mtime =
-      try f.getFileStatus(vp).getModificationTime
-      catch { case _: java.io.FileNotFoundException => return false }
-    val key = (vp.toString, mtime)
-    val cached = memo.get(key)
-    if (cached != null) return cached.booleanValue()
-    val ans = f.exists(new Path(vp, RefsName))
-    if (memo.size > 8192) memo.clear() // unbounded-growth backstop
-    memo.put(key, java.lang.Boolean.valueOf(ans))
-    ans
-  }
-
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long),
-      java.lang.Boolean]()
-
-  /** Drop every memo entry for `v=$v` — called wherever THIS JVM
-    * deletes a version directory (commit withdrawals, epoch-orphan
-    * reclaim, vacuum), so a later re-occupant of the same slot can
-    * never be answered from the deleted incarnation's cache even if
-    * the two directories land in the same mtime tick. External
-    * deletes are covered by the mtime in the key. */
-  private[operators] def invalidate(f: org.apache.hadoop.fs.FileSystem,
-      dir: String, v: Long): Unit = {
-    val vp = f.makeQualified(new Path(dir, s"v=$v")).toString
-    memo.keySet.removeIf(_._1 == vp)
-    ()
-  }
+  /** Does `v=$v` serve files by reference? Such a version is served by
+    * [[Snapshots.read]]/[[Snapshots.table]] via reference assembly — a
+    * bare `spark.read.parquet(versionDir)` would miss the referenced
+    * files. A missing version answers false. */
+  def isMorVersion(spark: SparkSession, dir: String, v: Long): Boolean =
+    recordOf(fs(spark, dir), dir, v).isMor
 
   /** Classify version `v`'s physical files into DIRTY (some deletion
     * vector touches them) and CLEAN, plus the dv entries themselves.
@@ -271,41 +153,17 @@ object MergeOnRead {
   private[operators] def unprunedRead(spark: SparkSession, dir: String,
       v: Long): (DataFrame, FileStats.PruneStats) = {
     val f = fs(spark, dir)
-    val n = physicalFiles(spark, f, dir, v).size.toLong
+    val n = physicalFiles(f, dir, v).size.toLong
     (readAssembled(spark, dir, v, lineage = false),
       FileStats.PruneStats(n, 0L, 0L, 0L))
   }
 
-  private def writeRefs(f: org.apache.hadoop.fs.FileSystem,
-      stage: Path, refs: Seq[(Long, String)]): Unit = {
-    val lines = refs.map { case (src, rel) =>
-      s"""{"src":$src,"file":"${FileStats.jsonEscape(rel)}"}"""
-    }.sorted
-    val out = f.create(new Path(stage, RefsName), true)
-    try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  private[operators] def readRefs(f: org.apache.hadoop.fs.FileSystem,
-      vDir: String): Seq[(Long, String)] = {
-    val R = ("""\{"src":(\d+),"file":"((?:[^"\\]|\\.)*)"\}""").r
-    readLines(f, new Path(vDir, RefsName)).map {
-      case R(src, rel) => (src.toLong, FileStats.jsonUnescape(rel))
-      case line => throw new IllegalStateException(
-        s"corrupt $RefsName line: $line")
-    }
-  }
-
   /** The PHYSICAL data files serving version `v`: carried references
     * plus the version's own files, each as (home version, relPath). */
-  private[operators] def physicalFiles(spark: SparkSession,
-      f: org.apache.hadoop.fs.FileSystem, dir: String, v: Long)
-      : Seq[(Long, String)] = {
-    val vDir = s"$dir/v=$v"
-    val local = listDataRel(f, new Path(vDir))
-      .map(x => (v, x._1))
-    readRefs(f, vDir) ++ local
-  }
+  private[operators] def physicalFiles(f: org.apache.hadoop.fs.FileSystem,
+      dir: String, v: Long): Seq[(Long, String)] =
+    recordOf(f, dir, v).refs ++
+      listDataRel(f, new Path(s"$dir/v=$v")).map(x => (v, x._1))
 
   /** Byte lengths of a physical-file set, ONE directory walk per
     * home version — accounting helpers must never degenerate into a
@@ -338,7 +196,7 @@ object MergeOnRead {
     import org.apache.spark.sql.functions.{broadcast => _, col,
       input_file_name, substring_index}
     val f = fs(spark, dir)
-    val phys = physicalFiles(spark, f, dir, v)
+    val phys = physicalFiles(f, dir, v)
     require(phys.nonEmpty, s"MoR version v=$v references no files")
     val (dirty0, clean0, dvs) = splitDirty(spark, dir, v, phys)
     val (dirty, clean) =
@@ -440,7 +298,7 @@ object MergeOnRead {
     * self-contained version by [[fold]] (or
     * [[SnapshotMaintenance.compact]], which delegates). A provably-no-op delete
     * (no matching rows) publishes nothing and returns the current
-    * version with zero stats. Epoch markers carry forward.
+    * version with zero stats. Epochs carry forward.
     *
     * Refuses a layout with a partition column named `v` — the
     * tombstone key is derived from the path after the LAST `/v=`
@@ -464,10 +322,11 @@ object MergeOnRead {
   /** Stage one MoR DML statement (delete, or update when `sets` is
     * set) against head `v`. Returns None on a provably-no-op
     * statement; otherwise the READY stage directory — tombstone
-    * sidecar, reference list, updated images (update only), epoch
-    * markers, and `_dml.json` provenance (op `mor_delete`/
-    * `mor_update`, touched = the physical files whose rows this
-    * statement tombstoned) — plus the statement's accounting. */
+    * sidecar, updated images (update only), and the record —
+    * references, deletion vectors, epochs, and provenance (op
+    * `mor_delete`/`mor_update`, touched = the physical files whose
+    * rows this statement tombstoned) — plus the statement's
+    * accounting. */
   private def stageDml(spark: SparkSession, dir: String, v: Long,
       pred: org.apache.spark.sql.Column,
       sets: Option[Map[String, org.apache.spark.sql.Column]])
@@ -476,7 +335,7 @@ object MergeOnRead {
     val op = if (sets.isEmpty) "mor_delete" else "mor_update"
     val f = fs(spark, dir)
     val vDir = s"$dir/v=$v"
-    val phys = physicalFiles(spark, f, dir, v)
+    val phys = physicalFiles(f, dir, v)
     require(phys.forall(!_._2.split("/").dropRight(1)
         .exists(_.startsWith("v="))),
       s"$op: a partition column named 'v' shadows the store's " +
@@ -539,14 +398,11 @@ object MergeOnRead {
     // once the statement is known non-no-op
     def finishStage(stage: Path, added: Long, rawTouched: Seq[String])
         : Option[(Path, MorStats)] = {
-      writeDvLines(f, new Path(s"$stage/$DvDirName", DvIndexName),
-        Seq(renderDvLine(None, dvFile, added, rawTouched)))
-      val carried = carryDvLines(f, dir, v)
-      writeDvLines(f, new Path(stage, DvRefsName), carried)
-      writeRefs(f, stage, phys)
-      seal(spark, dir, stage, Seal(markersFrom = Some(new Path(vDir)),
-        dml = Some((v, op, rawTouched.map(k => s"v=$k"))),
-        schema = Some(schema)))
+      val carried = carrySeal(f, dir, v)
+      seal(spark, dir, stage, carried.copy(base = Some(new Path(vDir)),
+        dml = Some(Provenance(v, op, rawTouched.map(k => s"v=$k"))),
+        schema = Some(schema), dvs = carried.dvs :+
+          Dv(None, dvFile, added, rawTouched)))
       val sidecarBytes = f.getContentSummary(stage).getLength
       // accounting only: one directory walk per HOME version, never
       // a per-file getFileStatus RPC loop
@@ -578,7 +434,8 @@ object MergeOnRead {
             org.apache.spark.sql.functions.collect_set(col("key"))
               .as("__touched"))
         val st = stage(spark, dir)(p =>
-          tombsObs.coalesce(1).write.mode("overwrite").parquet(dvPath(p)))
+          tombsObs.coalesce(1).write.mode("overwrite")
+            .options(NoSuccessMarker).parquet(dvPath(p)))
         val (added, rawTouched) =
           (if (constPred) None else observedOrNone(obs)) match {
             case Some(m) =>
@@ -627,10 +484,10 @@ object MergeOnRead {
               rebalance = true)
             // incremental deletion vector: ONLY this statement's
             // tombstones are written; prior statements' dvs carry by
-            // reference in _dvrefs.json — statement cost is
+            // reference in the record — statement cost is
             // O(statement), independent of accumulated deletes
             newTombs.coalesce(1).write.mode("overwrite")
-              .parquet(dvPath(p))
+              .options(NoSuccessMarker).parquet(dvPath(p))
           }
           finishStage(st, added, rawTouched)
         } finally { matching.unpersist(); () }
@@ -647,30 +504,13 @@ object MergeOnRead {
       stageDml(spark, dir, h, pred, sets) match {
         case None =>
           Left(MorStats(0L, dvTotal(spark, dir, h),
-            physicalFiles(spark, f, dir, h).size.toLong, 0L, 0L))
+            physicalFiles(f, dir, h).size.toLong, 0L, 0L))
         // an MoR stage carries the head's COMPLETE reference +
         // tombstone state, so re-staging against any winner's head is
         // serializable re-execution — every retry is authorized
         case Some((stage, stats)) => Right(Staged(stage, stats))
       }
     }
-  }
-
-  /** Stage (but do NOT commit) the append of `df` onto MoR head `v`
-    * WITHOUT folding, sealed with `s`: new rows land as this version's
-    * local files, every existing file carries by reference, and the
-    * deletion vectors (keyed on physical homes, which do not move)
-    * carry by reference too — still zero data-byte movement. */
-  private[operators] def stageAppend(spark: SparkSession, dir: String,
-      v: Long, df: DataFrame, s: Seal): Path = {
-    val f = fs(spark, dir)
-    val phys = physicalFiles(spark, f, dir, v)
-    val st = stage(spark, dir) { p =>
-      writeFrame(df, p, pcolsOf(phys.map(_._2)), rebalance = true)
-      writeRefs(f, p, phys)
-      writeDvLines(f, new Path(p, DvRefsName), carryDvLines(f, dir, v))
-    }
-    seal(spark, dir, st, s)
   }
 
   /** Row-level UPDATE, merge-on-read: the matching rows are
@@ -716,7 +556,7 @@ object MergeOnRead {
     require(v > 0, s"$dir has no committed version")
     require(isMorVersion(spark, dir, v),
       s"MergeOnRead.fold: v=$v is already self-contained")
-    val phys = physicalFiles(spark, f, dir, v)
+    val phys = physicalFiles(f, dir, v)
     val (sCols, bCols) = inheritedSidecars(spark, f,
       phys.map(_._1).distinct.sorted.map(h => s"$dir/v=$h"))
     val folded = readAssembled(spark, dir, v, lineage = false)
@@ -728,7 +568,7 @@ object MergeOnRead {
       st, Seal(
       if (statsCols.nonEmpty) statsCols else sCols,
       if (bloomCols.nonEmpty) bloomCols else bCols,
-      markersFrom = Some(new Path(s"$dir/v=$v")),
+      base = Some(new Path(s"$dir/v=$v")),
       schema = Some(folded.schema))))
   }
 
@@ -766,7 +606,7 @@ object MergeOnRead {
     require(isMorVersion(spark, dir, v),
       s"MergeOnRead.purge: v=$v is not a merge-on-read version")
     val vPath = f.makeQualified(new Path(s"$dir/v=$v"))
-    val phys = physicalFiles(spark, f, dir, v)
+    val phys = physicalFiles(f, dir, v)
     val (dirty, clean, dvs) = splitDirty(spark, dir, v, phys)
     require(dvs.nonEmpty, s"MergeOnRead.purge: v=$v carries no " +
       "deletion vectors — nothing to purge")
@@ -786,11 +626,8 @@ object MergeOnRead {
     // row, nothing clean) still needs one schema-carrying file — the
     // same rule as a full-table delete; nothing left to reference →
     // the purge IS a self-contained version (a plain read)
-    val st = stage(spark, dir) { p =>
-      writeFrame(survivors, p, pcols, rebalance = true,
-        keepSchema = clean.isEmpty)
-      if (clean.nonEmpty) writeRefs(f, p, clean)
-    }
+    val st = stage(spark, dir)(writeFrame(survivors, _, pcols,
+      rebalance = true, keepSchema = clean.isEmpty))
     // fully-rewritten output: the head is no longer MoR, so the "a
     // later fold restores the stats-indexed form" contract can
     // never fire — restore it HERE (fold's home-manifest
@@ -800,7 +637,7 @@ object MergeOnRead {
       if (clean.nonEmpty) (Nil, Nil)
       else inheritedSidecars(spark, f,
         phys.map(_._1).distinct.sorted.map(h => s"$dir/v=$h"))
-    seal(spark, dir, st, Seal(sCols, bCols, markersFrom = Some(vPath),
+    seal(spark, dir, st, Seal(sCols, bCols, base = Some(vPath), refs = clean,
       schema = Some(tableSchema(spark, dir))))
     // accounting: one walk per home version, no per-file RPC loop
     val lens = physLengths(f, dir, phys)

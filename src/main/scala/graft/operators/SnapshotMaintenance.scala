@@ -29,7 +29,8 @@ object SnapshotMaintenance {
     * `key=value` structure, the stats manifest and bloom sidecars are
     * RECOMPUTED over the new file layout (per-file min/max are
     * layout-dependent — carrying the old manifest forward would pin
-    * stats to files that no longer exist), markers carry forward, and
+    * stats to files that no longer exist), epochs and ZORDER columns
+    * carry forward, and
     * the result publishes as the next version. Readers keep the old
     * version until the pointer moves; vacuum reclaims it later —
     * maintenance never breaks an in-flight read. `statsCols` default
@@ -45,7 +46,7 @@ object SnapshotMaintenance {
     val v = latestVersion(spark, dir)
     require(v > 0, s"$dir has no committed version to compact")
     if (MergeOnRead.isMorVersion(spark, dir, v)) {
-      val before = MergeOnRead.physicalFiles(spark, f, dir, v).size
+      val before = MergeOnRead.physicalFiles(f, dir, v).size
       val nv = MergeOnRead.fold(spark, dir, statsCols)
       val nvPath = f.makeQualified(new Path(s"$dir/v=$nv"))
       val rewritten = listDataRel(f, nvPath).size
@@ -78,7 +79,7 @@ object SnapshotMaintenance {
     val (carried, blooms) = inheritedSidecars(spark, f, Seq(vDir))
     (commitNew(spark, dir, Abort("compact", v))(seal(spark, dir, st,
       Seal(if (statsCols.nonEmpty) statsCols else carried, blooms,
-        markersFrom = Some(vPath),
+        base = Some(vPath),
         schema = Some(readFileSet(spark, vDir).schema)))), agg)
   }
 
@@ -150,7 +151,8 @@ object SnapshotMaintenance {
         spark.read.option("mergeSchema", "true")
           .parquet(bin.map(_._1): _*)
           .coalesce(1)
-          .write.mode("append").parquet(out.toString)
+          .write.mode("append").options(Snapshots.NoSuccessMarker)
+          .parquet(out.toString)
         rewritten += bin.length
         rewrittenBytes += bin.map(_._2).sum
       }
@@ -191,8 +193,8 @@ object SnapshotMaintenance {
     * 2^bits (exact integer arithmetic end to end, replayable in a
     * SQL twin). Stats manifest recomputed over the new layout
     * (always including the cluster columns — tight bounds are the
-    * point), bloom sidecars recomputed per file, `_epoch.*` markers
-    * carried forward (the exactly-once fence survives maintenance).
+    * point), bloom sidecars recomputed per file, epochs carried
+    * forward (the exactly-once fence survives maintenance).
     */
   def optimizeClustered(spark: SparkSession, dir: String,
       clusterCols: Seq[String], bits: Int = 10,
@@ -223,28 +225,27 @@ object SnapshotMaintenance {
     // CLUSTERING column, which is user data.
     require(!clusterCols.contains(bucketCol),
       s"optimizeClustered: bucketCol '$bucketCol' is a cluster column")
-    // marker-file names live in the version directory — keep them
+    // the bucket column names the partition directories — keep it
     // filesystem-safe
     require(bucketCol.nonEmpty && bucketCol.forall(c =>
         c.isLetterOrDigit || c == '_' || c == '-'),
       s"optimizeClustered: bucketCol '$bucketCol' must be " +
-        "[A-Za-z0-9_-]+ (it names a marker file)")
+        "[A-Za-z0-9_-]+ (it names the bucket directories)")
     val df0 = read(spark, dir, v)
     // managed-bucket provenance: the column is dropped ONLY when this
-    // version (or an ancestor, via marker carry-forward) proves a
-    // prior optimizeClustered produced it — `_zcluster.<bucketCol>`.
+    // version's record (carried forward from an ancestor) proves a
+    // prior optimizeClustered produced it — its `zorder` columns.
     // A user table that legitimately OWNS a column with this name is
     // refused loudly instead of silently destroyed: the require below
     // is the difference between "recompute my own column" and
     // "drop somebody's data because the default name collided".
-    val managed =
-      VersionDir.of(f, vPath).markers.contains(s"_zcluster.$bucketCol")
+    val managed = VersionDir.of(f, vPath).record.zorder.contains(bucketCol)
     val df = if (df0.columns.contains(bucketCol)) {
       require(managed,
         s"optimizeClustered: column '$bucketCol' exists but was not " +
-          s"produced by a prior optimizeClustered (no _zcluster" +
-          s".$bucketCol marker in v=$v) — it is user data; pass a " +
-          "different bucketCol")
+          s"produced by a prior optimizeClustered (v=$v's record names " +
+          "no such ZORDER column) — it is user data; pass a different " +
+          "bucketCol")
       df0.drop(bucketCol)
     } else df0
     def interleave(cs: Seq[Column]): Column = cs match {
@@ -278,13 +279,12 @@ object SnapshotMaintenance {
       clusterCols).distinct.sorted
     // the managed bucket column is recorded INSIDE the stage (sealed
     // by the same atomic slot rename as the data): the next OPTIMIZE
-    // run — and any DML/compaction in between, which carry markers
+    // run — and any DML/compaction in between, which carry it
     // forward — can prove the column is store-managed before dropping
     // it
     val st = seal(spark, dir,
       stage(spark, dir)(writeFrame(clustered, _, Seq(bucketCol))),
-      Seal(cols, blooms, markersFrom = Some(vPath),
-        markers = Seq(s"_zcluster.$bucketCol")))
+      Seal(cols, blooms, base = Some(vPath), zorder = Seq(bucketCol)))
     val stats = ClusterStats(listDataRel(f, vPath).size.toLong,
       listDataRel(f, st).size.toLong,
       FileStats.readManifest(spark, st.toString).map(_.rows).sum)
@@ -323,23 +323,22 @@ object SnapshotMaintenance {
       case (v, s) if v > latest && aged(s) => v
     }
     // merge-on-read versions serve files that PHYSICALLY live in
-    // older version directories (`_refs.json`) — deleting a
-    // referenced home is data loss, not cleanup. Shrink the doomed
-    // set to a fixpoint: every version referenced by any survivor
-    // survives too (a kept-alive home may itself carry refs, so one
-    // pass is not enough).
+    // older version directories (their records' refs) — deleting a
+    // referenced home is data loss, not cleanup. Data-file references
+    // AND deletion-vector homes both pin (a survivor's dv may
+    // physically live in a doomed version's _dv directory). Shrink the
+    // doomed set to a fixpoint: every version referenced by any
+    // survivor survives too (a kept-alive home may itself carry refs,
+    // so one pass is not enough); each record is read once.
+    val pins: Map[Long, Set[Long]] = versions.map { case (v, s) =>
+      val r = VersionDir.of(f, s.getPath).record
+      v -> (r.refs.map(_._1) ++ r.dvs.flatMap(_.src)).toSet
+    }.toMap
     val doomed = {
       var d = candidates.toSet
       var changed = true
       while (changed) {
-        // data-file references AND deletion-vector references both
-        // pin: a survivor's dv may physically live in a doomed
-        // version's _dv directory
-        val refPinned = versions.map(_._1).filterNot(d)
-          .flatMap(sv =>
-            MergeOnRead.readRefs(f, s"$dir/v=$sv").map(_._1) ++
-              MergeOnRead.readDvRefs(f, s"$dir/v=$sv").map(_._1)).toSet
-        val nd = d -- refPinned
+        val nd = d -- pins.filter(p => !d(p._1)).values.flatten
         changed = nd != d
         d = nd
       }
@@ -347,7 +346,6 @@ object SnapshotMaintenance {
     }
     doomed.foreach { v =>
       f.delete(new Path(dir, s"v=$v"), true)
-      MergeOnRead.invalidate(f, dir, v)
       f.delete(new Path(dir, s"_claim.$v"), false)
       f.delete(new Path(dir, s"_pubtime.$v"), false)
     }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
 
 /** Versioned snapshot tables — the minimal transaction protocol a
   * parquet lake needs before a real table format arrives: every
@@ -22,9 +23,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Every writer commits through ONE pipeline — stage → seal → claim →
   * publish — described (with its policies and invariants) at
   * [[commitStaged]]. Layout: `dir/v=N/…parquet` + `dir/_latest`
-  * (ASCII version number); each `v=N/_schema.json` records the
-  * version's read schema, so reading a version never infers it from
-  * parquet footers ([[readFileSet]]). The row-level statements live in
+  * (ASCII version number); each `v=N/_version.json` is the version's
+  * one metadata record ([[VersionRecord]]: read schema, provenance,
+  * epochs, ZORDER columns, merge-on-read references and deletion
+  * vectors), so reading a version never infers its schema from
+  * parquet footers ([[readFileSet]]). The per-file pruning manifests
+  * `_stats.json` and `_bloom_<col>.json` sit beside it. The row-level
+  * statements live in
   * [[CopyOnWrite]] and [[MergeOnRead]], compaction, ZORDER and vacuum
   * in [[SnapshotMaintenance]]; all of them commit through this
   * object's pipeline.
@@ -121,29 +126,121 @@ object Snapshots {
       catch { case _: java.io.FileNotFoundException => Nil })
   }
 
-  /** One parse of ONE listing of a version directory (a missing one
-    * reads as empty): its `_epoch.*` / `_zcluster.*` marker names, the
-    * columns with `_bloom_<col>.json` sidecars, and whether it carries
-    * a stats manifest and DML provenance. */
-  private[operators] final case class VersionDir(markers: Seq[String],
-      bloomCols: Seq[String], hasStats: Boolean, hasDml: Boolean) {
-    /** Epoch ids of the `_epoch.N` markers. */
-    def epochs: Set[Long] = markers.flatMap(numbered("_epoch.", _)).toSet
+  /** A row-level statement's provenance: the version it staged from,
+    * its op, and the files whose rows it rewrote or tombstoned — what
+    * commit-time conflict detection validates against. */
+  private[operators] final case class Provenance(base: Long, op: String,
+      touched: Seq[String])
+
+  /** A deletion vector serving a version: the parquet `file` in the
+    * `_dv/` directory of its home version `src` (None: the version
+    * itself), its row count and the data-file keys it tombstones. */
+  private[operators] final case class Dv(src: Option[Long], file: String,
+      rows: Long, keys: Seq[String])
+
+  /** One version's metadata — `v=N/_version.json`, sealed with its data
+    * by the slot rename ([[seal]]):
+    *  - `schema`: the read schema ([[readFileSet]]); None for a version
+    *    with no data file of its own;
+    *  - `dml`: a row-level statement's [[Provenance]];
+    *  - `epochs`: the exactly-once fence's epoch ids
+    *    ([[commitWithEpoch]]);
+    *  - `zorder`: the bucket columns OPTIMIZE ZORDER manages;
+    *  - `refs`: the (home version, file) data files a merge-on-read
+    *    version serves by reference — a version is MoR when it has any;
+    *  - `dvs`: the deletion vectors applied to them. */
+  private[graft] final case class VersionRecord(
+      schema: Option[org.apache.spark.sql.types.StructType] = None,
+      dml: Option[Provenance] = None, epochs: Seq[Long] = Nil,
+      zorder: Seq[String] = Nil, refs: Seq[(Long, String)] = Nil,
+      dvs: Seq[Dv] = Nil) {
+
+    def isMor: Boolean = refs.nonEmpty
+
+    /** One JSON document; empty fields are left out, and the
+      * provenance's `base`, `op` and `touched` sit at the top level. */
+    def toJson: org.json4s.JValue = {
+      import org.json4s.JsonDSL._
+      def some[A](as: Seq[A]) = Option(as).filter(_.nonEmpty)
+      ("schema" -> schema.map(s => StoreJson.parse(s.json))) ~
+        ("base" -> dml.map(_.base)) ~ ("op" -> dml.map(_.op)) ~
+        ("touched" -> dml.map(_.touched)) ~
+        ("epochs" -> some(epochs)) ~ ("zorder" -> some(zorder)) ~
+        ("refs" -> some(refs.map { case (src, file) =>
+          ("src" -> src) ~ ("file" -> file) })) ~
+        ("dvs" -> some(dvs.map(d => ("src" -> d.src) ~
+          ("file" -> d.file) ~ ("rows" -> d.rows) ~ ("keys" -> d.keys))))
+    }
   }
 
-  private[operators] object VersionDir {
+  private[graft] object VersionRecord {
+    val Name = "_version.json"
+
+    def fromJson(j: org.json4s.JValue): VersionRecord = {
+      import StoreJson.formats
+      VersionRecord(
+        (j \ "schema").toOption.map(s => org.apache.spark.sql.types.DataType
+          .fromJson(StoreJson.render(s))
+          .asInstanceOf[org.apache.spark.sql.types.StructType]),
+        (j \ "op").extractOpt[String].map(op => Provenance(
+          (j \ "base").extract[Long], op,
+          (j \ "touched").extract[Seq[String]])),
+        (j \ "epochs").extractOrElse[Seq[Long]](Nil),
+        (j \ "zorder").extractOrElse[Seq[String]](Nil),
+        (j \ "refs").children.map(r =>
+          ((r \ "src").extract[Long], (r \ "file").extract[String])),
+        (j \ "dvs").children.map(d => Dv((d \ "src").extractOpt[Long],
+          (d \ "file").extract[String], (d \ "rows").extract[Long],
+          (d \ "keys").extract[Seq[String]])))
+    }
+  }
+
+  /** One parse of ONE listing of a version directory (a missing one
+    * reads as empty): its [[VersionRecord]], the columns with
+    * `_bloom_<col>.json` sidecars, and whether it carries a stats
+    * manifest — the manifests stay files of their own, which specs
+    * also write outside [[seal]]. */
+  private[graft] final case class VersionDir(record: VersionRecord,
+      bloomCols: Seq[String], hasStats: Boolean)
+
+  private[graft] object VersionDir {
     def of(f: FileSystem, vDir: Path): VersionDir = {
-      val names =
-        (try f.listStatus(vDir).toSeq
-         catch { case _: java.io.FileNotFoundException => Nil })
-          .filter(_.isFile).map(_.getPath.getName)
-      VersionDir(
-        names.filter(n => n.startsWith("_epoch.") ||
-          n.startsWith("_zcluster.")).sorted,
+      val entries =
+        try f.listStatus(vDir).toSeq
+        catch { case _: java.io.FileNotFoundException => Nil }
+      val names = entries.filter(_.isFile).map(_.getPath.getName)
+      val record =
+        if (names.contains(VersionRecord.Name))
+          VersionRecord.fromJson(
+            StoreJson.read(f, new Path(vDir, VersionRecord.Name)).head)
+        else {
+          refuseOldLayout(vDir, entries.map(_.getPath.getName))
+          VersionRecord()
+        }
+      VersionDir(record,
         names.collect { case n if n.startsWith("_bloom_") &&
           n.endsWith(".json") =>
             n.stripPrefix("_bloom_").stripSuffix(".json") }.sorted,
-        names.contains(FileStats.ManifestName), names.contains(DmlName))
+        names.contains(FileStats.ManifestName))
+    }
+
+    /** A version directory with no record but a sidecar of the layout
+      * the record replaced was written by that layout: reading it
+      * without its references would silently lose a merge-on-read
+      * version's rows, so it is refused, never read. */
+    private def refuseOldLayout(vDir: Path, names: Seq[String]): Unit = {
+      val retired = names.filter(n => Set("_schema.json", "_dml.json",
+        "_refs.json", "_dvrefs.json", "_dv")(n) ||
+        n.startsWith("_epoch.") || n.startsWith("_zcluster."))
+      if (retired.nonEmpty)
+        throw new IllegalStateException(
+          s"$vDir holds ${retired.sorted.mkString(", ")} but no " +
+            s"${VersionRecord.Name}: it was written by the snapshot " +
+            "layout before one metadata record per version (the " +
+            "_schema.json, _dml.json, _refs.json, _dvrefs.json, " +
+            "_dv/index.json, _epoch.N and _zcluster.<col> sidecars), " +
+            "which this store no longer reads — read the table with a " +
+            "build of that layout and commit its rows to a fresh one")
     }
   }
 
@@ -228,11 +325,11 @@ object Snapshots {
     *     staging path this store ever names. Racing writers never
     *     share bytes; a crash leaves an orphan stage vacuum reclaims.
     *  2. SEAL ([[seal]]) — every sidecar the version needs lands
-    *     INSIDE the stage: the `_schema.json` schema record, the stats
-    *     manifest, bloom sidecars (fresh,
-    *     or spliced with the entries of byte-carried files), `_epoch.N`,
-    *     `_dml.json` provenance, and the `_epoch.*` / `_zcluster.*`
-    *     markers carried from the base version.
+    *     INSIDE the stage: the `_version.json` record (schema,
+    *     provenance, epochs and ZORDER columns carried from the base
+    *     version plus the statement's own, merge-on-read references
+    *     and deletion vectors), the stats manifest and bloom sidecars
+    *     (fresh, or spliced with the entries of byte-carried files).
     *  3. CLAIM — an exclusive-create `_claim.N` marker reserves slot N
     *     ([[tryClaimSlot]]), then the stage is renamed into `v=N`
     *     ([[occupySlot]]).
@@ -268,8 +365,11 @@ object Snapshots {
     *    stage is deleted, a won claim retired, an occupied slot
     *    withdrawn.
     *
-    * Layout: `dir/v=N/` versions, `dir/_latest` pointer,
-    * `dir/_claim.N` slot claims, `dir/_staging/<uuid>` stages. */
+    * Layout: `dir/v=N/` versions (data files, `_version.json`,
+    * `_stats.json`, `_bloom_<col>.json`, merge-on-read `_dv/`),
+    * `dir/_latest` pointer, `dir/_claim.N` slot claims,
+    * `dir/_pubtime.N` publication records, `dir/_staging/<uuid>`
+    * stages. */
   private[operators] sealed trait Policy
   private[operators] case object Replace extends Policy
   private[operators] final case class Rebase(maxRetries: Int, waitMs: Long)
@@ -339,7 +439,7 @@ object Snapshots {
       if (!rebalance) df
       else if (pcols.nonEmpty) df.hint("rebalance", pcols.map(col): _*)
       else df.hint("rebalance")
-    val w = balanced.write.mode("overwrite")
+    val w = balanced.write.mode("overwrite").options(NoSuccessMarker)
     (if (pcols.nonEmpty) w.partitionBy(pcols: _*) else w)
       .parquet(stage.toString)
     if (keepSchema) {
@@ -347,44 +447,55 @@ object Snapshots {
         df.sparkSession.sparkContext.hadoopConfiguration)
       if (listDataRel(f, stage).isEmpty)
         df.limit(0).coalesce(1).write.mode("overwrite")
-          .parquet(stage.toString)
+          .options(NoSuccessMarker).parquet(stage.toString)
     }
   }
+
+  /** The write option every store write passes: no `_SUCCESS` marker
+    * in a version directory — the slot rename, not a marker, is what
+    * publishes a version, and nothing reads one. */
+  private[operators] val NoSuccessMarker =
+    Map("mapreduce.fileoutputcommitter.marksuccessfuljobs" -> "false")
 
   /** What [[seal]] writes into a stage. `statsCols`/`bloomCols` are
     * computed over the stage's own data files; `carry` (source file,
     * stage-relative name) is byte-copied in AFTER that scan, and its
     * existing entries `keptStats`/`keptBlooms` are spliced in (carried
-    * files are never re-scanned). `markersFrom` is the base version
-    * whose `_epoch.*`/`_zcluster.*` markers carry forward, `markers`
-    * are fresh empty marker files, `dml` the statement's provenance
-    * (base version, op, touched files). `schema` is the read schema
-    * of the version the statement read or conformed its rows to,
-    * which the new version keeps; None for a write that brings its
+    * files are never re-scanned). The rest is the version's
+    * [[VersionRecord]]: `base` is the version whose record's epochs and
+    * ZORDER columns carry forward, plus `epochs` and `zorder`; `dml`
+    * the statement's provenance; `refs` and `dvs` a merge-on-read
+    * version's references and deletion vectors. `schema` is the read
+    * schema of the version the statement read or conformed its rows
+    * to, which the new version keeps; None for a write that brings its
     * own (a commit, an overwrite, a ZORDER layout). */
   private[operators] final case class Seal(statsCols: Seq[String] = Nil,
       bloomCols: Seq[String] = Nil,
       keptStats: Seq[FileStats.FileStat] = Nil,
       keptBlooms: Map[String, Seq[BloomStats.FileBloom]] = Map.empty,
       carry: Seq[(Path, String)] = Nil,
-      markersFrom: Option[Path] = None,
-      markers: Seq[String] = Nil,
-      dml: Option[(Long, String, Seq[String])] = None,
-      schema: Option[org.apache.spark.sql.types.StructType] = None)
+      base: Option[Path] = None,
+      epochs: Seq[Long] = Nil,
+      zorder: Seq[String] = Nil,
+      dml: Option[Provenance] = None,
+      schema: Option[org.apache.spark.sql.types.StructType] = None,
+      refs: Seq[(Long, String)] = Nil,
+      dvs: Seq[Dv] = Nil)
 
   /** SEAL: write every sidecar of `s` into `stage` — the one place a
     * version's metadata is produced, sealed with its data by the slot
-    * rename (a reader can never resolve a version whose manifest is
-    * missing or half-written). The first sidecar is `_schema.json`,
-    * the version's read schema ([[readFileSet]]): `s.schema` when the
-    * statement has a base version, else inferred from the stage's
-    * data files. The stage scans below read through it. A base's
+    * rename (a reader can never resolve a version whose record or
+    * manifest is missing or half-written). The first sidecar is the
+    * version's record, `_version.json`, so the stage scans below read
+    * through its schema: `s.schema` when the statement has a base
+    * version, else inferred from the stage's data files. A base's
     * schema is kept, not re-inferred, because the partition
     * directories a statement writes or carries are a subset of the
     * version's values and can type a column differently (`region=001`
     * alone reads as an integer). A stage with no data file at all (an
     * MoR version of references and tombstones, read through its home
-    * versions' records) records none. A failure deletes the stage. */
+    * versions' records) records no schema, and a stage with no
+    * metadata at all no record. A failure deletes the stage. */
   private[operators] def seal(spark: SparkSession, dir: String, stage: Path,
       s: Seal): Path = {
     val f = fs(spark, dir)
@@ -394,9 +505,18 @@ object Snapshots {
       // a statement that rewrote nothing new (every row deleted from
       // the rewritten files) keeps only the carried files' entries
       val empty = rels.isEmpty
-      if (!empty || s.carry.nonEmpty)
-        s.schema.orElse(inferSchema(spark, stage, rels))
-          .foreach(writeSchema(f, stage, _))
+      // dropping the base's epochs would reopen the exactly-once
+      // fence, dropping its ZORDER columns the proof that OPTIMIZE
+      // ZORDER's bucket column is store-managed
+      val base = s.base.fold(VersionRecord())(VersionDir.of(f, _).record)
+      val record = VersionRecord(
+        if (empty && s.carry.isEmpty) None
+        else s.schema.orElse(inferSchema(spark, stage, rels)),
+        s.dml, (base.epochs ++ s.epochs).distinct.sorted,
+        (base.zorder ++ s.zorder).distinct.sorted, s.refs, s.dvs)
+      if (record != VersionRecord())
+        StoreJson.write(f, new Path(stage, VersionRecord.Name),
+          Seq(record.toJson))
       if (s.statsCols.nonEmpty) {
         if (empty) FileStats.writeEntries(spark, st, s.keptStats)
         else {
@@ -417,15 +537,6 @@ object Snapshots {
       val conf = spark.sparkContext.hadoopConfiguration
       s.carry.foreach { case (src, rel) =>
         FileUtil.copy(f, src, f, new Path(stage, rel), false, conf)
-      }
-      // carried markers are empty files that no data scan copies:
-      // dropping `_epoch.*` would reopen the exactly-once fence, and
-      // dropping `_zcluster.*` the proof that OPTIMIZE ZORDER's bucket
-      // column is store-managed
-      (s.markersFrom.toSeq.flatMap(VersionDir.of(f, _).markers) ++
-        s.markers).foreach(m => f.create(new Path(stage, m), true).close())
-      s.dml.foreach { case (base, op, touched) =>
-        writeDml(f, stage, base, op, touched)
       }
       step(dir, "seal")
       stage
@@ -493,10 +604,8 @@ object Snapshots {
     var claimed = false
     var occupied = false
     def withdraw(): Unit = {
-      if (occupied) {
-        f.delete(new Path(dir, s"v=$slot"), true)
-        MergeOnRead.invalidate(f, dir, slot)
-      } else f.delete(stage, true)
+      if (occupied) f.delete(new Path(dir, s"v=$slot"), true)
+      else f.delete(stage, true)
       if (claimed) retireClaim(f, dir, slot)
       claimed = false
       occupied = false
@@ -656,55 +765,53 @@ object Snapshots {
       v: Long, head: Long): Boolean =
     Root.of(fs(spark, dir), dir).published(v, head)
 
-  /** Epoch ids of the `_epoch.N` markers inside `v=$v`. */
+  /** Epoch ids `v=$v`'s record carries. */
   private def epochsOf(f: FileSystem, dir: String, v: Long): Set[Long] =
-    VersionDir.of(f, new Path(dir, s"v=$v")).epochs
+    VersionDir.of(f, new Path(dir, s"v=$v")).record.epochs.toSet
 
   /** Epoch-fenced commit — the exactly-once primitive a STREAMING
     * sink needs when batches are NOT idempotent merges (append logs,
     * aggregation deltas): each committed version carries its epoch id
-    * as an `_epoch.N` marker INSIDE the version directory (sealed by
-    * the same atomic slot rename as the data, so marker and bytes are
-    * inseparable), and a re-delivered epoch — Structured Streaming
-    * re-executes the last uncommitted micro-batch after a crash — is
-    * detected and skipped with `Left`. Single writer per table
+    * in its record (sealed by the same atomic slot rename as the
+    * data, so epoch and bytes are inseparable), and a re-delivered
+    * epoch — Structured Streaming re-executes the last uncommitted
+    * micro-batch after a crash — is detected and skipped with `Left`. Single writer per table
     * (plain-commit discipline); sequential epochs mean the only
     * possible duplicate is the LAST epoch-marked version.
     *
     * THE FENCE reads the newest PUBLISHED version that carries any
-    * epoch marker — not just the head. The head probe alone was
-    * broken by the store's own maintenance ops: compaction
-    * publishes a new head, and although it now carries the source's
-    * markers forward, a plain `commit` interleaved on the same table
-    * does not — the fence must scan back to the newest marked
-    * version rather than trust `v=head` specifically.
-    * For a pure `versionedSink` table the newest marked version IS
-    * the head (compaction preserves markers), so the scan is one
-    * directory listing in the steady state.
+    * epoch — not just the head. The head probe alone was broken by
+    * the store's own maintenance ops: compaction publishes a new
+    * head, and although it carries the source's epochs forward, a
+    * plain `commit` interleaved on the same table does not — the
+    * fence must scan back to the newest marked version rather than
+    * trust `v=head` specifically. For a pure `versionedSink` table
+    * the newest marked version IS the head (compaction preserves
+    * epochs), so the scan is one record read in the steady state.
     *
     * Crash matrix: die before the slot rename → nothing published,
     * replay commits normally; die between rename and pointer publish
     * → the orphan `v=N` is COMPLETE (slot renames are all-or-nothing)
-    * and carries this epoch's marker, so the replay ROLLS IT FORWARD
+    * and carries this epoch, so the replay ROLLS IT FORWARD
     * (publishes the existing bytes instead of re-writing — the
     * previous behavior committed the replay into a fresh slot and
     * left the orphan as sub-head "history" that time travel served as
-    * a duplicated epoch); die after publish → replay sees the marker
+    * a duplicated epoch); die after publish → replay sees the epoch
     * and skips.
     */
   def commitWithEpoch(spark: SparkSession, df: DataFrame, dir: String,
       epochId: Long, statsCols: Seq[String] = Nil,
       bloomCols: Seq[String] = Nil): Either[String, Long] =
     // a streaming table should stay pruning-capable like any other:
-    // sidecars seal with the epoch marker in ONE rename
+    // sidecars seal with the epoch in ONE rename
     epochFenced(spark, dir, epochId)(commitNew(spark, dir)(
       stageFrame(spark, dir, df, Seal(statsCols, bloomCols,
-        markers = Seq(s"_epoch.$epochId")))))
+        epochs = Seq(epochId)))))
 
   /** The exactly-once fence shared by [[commitWithEpoch]] and
     * [[appendWithEpoch]]: `Left` when the epoch is already published;
     * otherwise crashed-attempt recovery — an unpublished v > head
-    * carrying THIS epoch's marker is our own prior attempt that died
+    * carrying THIS epoch is our own prior attempt that died
     * between slot rename and pointer publish, its data complete, so it
     * ROLLS FORWARD instead of duplicating into a fresh slot (which
     * would leave the orphan inside keepLast as time-travel history
@@ -726,7 +833,6 @@ object Snapshots {
           case v +: rest =>
             rest.foreach { o =>
               f.delete(new Path(dir, s"v=$o"), true)
-              MergeOnRead.invalidate(f, dir, o)
               retireClaim(f, dir, o)
             }
             publish(spark, dir, v)
@@ -737,8 +843,8 @@ object Snapshots {
     }
   }
 
-  /** The newest PUBLISHED version carrying any `_epoch.*` marker,
-    * with its marker set — the fence [[commitWithEpoch]] checks and
+  /** The newest PUBLISHED version carrying any epoch, with its epoch
+    * set — the fence [[commitWithEpoch]] checks and
     * the offset [[mirrorAppends]] resumes from. */
   private def newestMarked(f: FileSystem, dir: String,
       versions: Seq[Long], head: Long): Option[(Long, Set[Long])] =
@@ -747,7 +853,7 @@ object Snapshots {
       .collectFirst { case (v, ms) if ms.nonEmpty => (v, ms) }
 
   /** The highest epoch id the table's fence records (None when no
-    * published version carries a marker) — a consumer's durable
+    * published version carries an epoch) — a consumer's durable
     * offset: for an epoch-fenced table the fence IS the progress
     * marker, no separate offsets file to keep transactional with the
     * data. */
@@ -770,7 +876,7 @@ object Snapshots {
     *    previous version; the rerun re-reads and re-commits it;
     *  - die between the slot rename and the pointer publish → the
     *    rerun's [[commitWithEpoch]] finds the complete orphan
-    *    carrying the epoch marker and ROLLS IT FORWARD;
+    *    carrying the epoch and ROLLS IT FORWARD;
     *  - die after publish → the fence refuses the replayed epoch
     *    (`Left`) and the loop moves to the next version.
     * Only main-line source versions mirror ([[mainHistory]]: a crashed
@@ -845,15 +951,16 @@ object Snapshots {
     * partitioned layouts route new rows through the same
     * `partitionBy`. At 100 TB the cost is the delta's write plus a
     * metadata-speed copy of existing files — never a rescan of the
-    * table. On an empty table this is just [[commit]]. Epoch markers
-    * carry forward.
+    * table. On an empty table this is just [[commit]]; an append of
+    * no rows onto a table publishes nothing and returns the head.
+    * Epochs carry forward.
     *
     * Publishes under the Rebase policy: an append COMMUTES with any
     * concurrent commit (it rewrites nothing — its carry is re-staged
     * against whatever the new head holds), so a lost race always
-    * re-stages and retries; the version carries `_dml.json` op
-    * `append` with an empty touched set, so concurrent DML statements
-    * validate it as disjoint and retry instead of aborting. */
+    * re-stages and retries; the version's provenance is op `append`
+    * with an empty touched set, so concurrent DML statements validate
+    * it as disjoint and retry instead of aborting. */
   def appendVersion(spark: SparkSession, df: DataFrame, dir: String,
       maxRetries: Int = 3, publishWaitMs: Long = 30000L): Long =
     appendEpoch(spark, df, dir, None, Seal(), maxRetries, publishWaitMs)
@@ -866,10 +973,10 @@ object Snapshots {
       publishWaitMs: Long): Long = {
     val f = fs(spark, dir)
     commitStaged(spark, dir, Rebase(maxRetries, publishWaitMs)) { h =>
-      Right(Staged(
-        if (h == 0L) stageFrame(spark, dir, df,
-          first.copy(markers = epoch.map(e => s"_epoch.$e").toSeq))
-        else stageAppend(spark, f, dir, h, df, epoch), ()))
+      if (h == 0L) Right(Staged(stageFrame(spark, dir, df,
+        first.copy(epochs = epoch.toSeq)), ()))
+      else stageAppend(spark, f, dir, h, df, epoch)
+        .map(Staged(_, ())).toRight(())
     }._1
   }
 
@@ -880,7 +987,7 @@ object Snapshots {
     * carries no manifests of its own), and the partition layout — so
     * an overwrite never silently strips a table of its pruning. A lost
     * race re-stages and retries (replace-the-head semantics hold
-    * against any interleaving). NO `_dml.json` is written: a
+    * against any interleaving). The record carries NO provenance: a
     * concurrent DML statement racing an overwrite must abort (its base
     * rows were replaced wholesale), which is exactly how
     * validateIntervening treats a provenance-less version. */
@@ -895,7 +1002,7 @@ object Snapshots {
     commitStaged(spark, dir, Rebase(maxRetries, publishWaitMs)) { h =>
       if (h == 0L) Right(Staged(stageFrame(spark, dir, df), ()))
       else {
-        val phys = MergeOnRead.physicalFiles(spark, f, dir, h)
+        val phys = MergeOnRead.physicalFiles(f, dir, h)
         val (statsCols, bloomCols) = inheritedSidecars(spark, f,
           phys.map(_._1).distinct.sorted.map(x => s"$dir/v=$x"))
         // an overwrite to EMPTY keeps one schema-carrying file — and
@@ -938,8 +1045,8 @@ object Snapshots {
     * base sidecars are `sidecars` and read schema `schema`: the new
     * files are scanned for every column the base tracks, the `carried`
     * files are byte-copied through (names preserved) with their
-    * entries spliced, markers carry forward, the schema is kept, and
-    * the provenance records (v, op, touched). */
+    * entries spliced, epochs and ZORDER columns carry forward, the
+    * schema is kept, and the provenance records (v, op, touched). */
   private[operators] def cowSeal(dir: String, v: Long,
       sidecars: FileStats.Sidecars,
       schema: org.apache.spark.sql.types.StructType, carried: Seq[String],
@@ -953,25 +1060,28 @@ object Snapshots {
       keptBlooms = blooms.map { case (c, es) =>
         c -> es.filter(e => keep(e.relPath)) },
       carry = carried.map(r => (new Path(s"$vDir/$r"), r)),
-      markersFrom = Some(new Path(vDir)),
-      dml = Some((v, op, touched)),
+      base = Some(new Path(vDir)),
+      dml = Some(Provenance(v, op, touched)),
       schema = Some(schema))
   }
 
   /** Stage (but do NOT commit) the append of `df` onto version `v`:
     * the delta's files staged (partition layout preserved), existing
     * files carried — byte-copied on a plain head, by reference on an
-    * MoR head — sidecars spliced, epoch markers handled, and
-    * `_dml.json` op `append` (empty touched set) sealed in so
-    * concurrent DML validates an interleaved append as disjoint. An
-    * EPOCH-fenced append writes only ITS marker (the commitWithEpoch
-    * convention — the engine can only ever replay the newest epoch,
-    * and carrying the whole history would make a long-lived streaming
-    * sink O(batches) marker files per commit); a plain append carries
-    * markers forward so the fence survives interleaved maintenance. */
+    * MoR head — sidecars spliced, epochs handled, and provenance op
+    * `append` (empty touched set) sealed in so concurrent DML
+    * validates an interleaved append as disjoint. An EPOCH-fenced
+    * append records only ITS epoch (the commitWithEpoch convention —
+    * the engine can only ever replay the newest epoch, and carrying
+    * the whole history would grow a long-lived streaming sink's
+    * record by one id per commit); a plain append carries epochs
+    * forward so the fence survives interleaved maintenance. None for
+    * a plain append of no rows: its stage is deleted and nothing is
+    * carried (an epoch-fenced one still publishes its epoch). */
   private def stageAppend(spark: SparkSession,
       f: FileSystem, dir: String, v: Long,
-      df: DataFrame, epoch: Option[Long]): Path = {
+      df: DataFrame, epoch: Option[Long]): Option[Path] = {
+    import org.apache.spark.sql.functions.{count, lit}
     val vDir = s"$dir/v=$v"
     val target = read(spark, dir, v).schema
     val extra = df.columns.toSet -- target.fieldNames.toSet
@@ -979,20 +1089,43 @@ object Snapshots {
       s"appendVersion: columns not in the table schema: " +
         s"${extra.toSeq.sorted.mkString(",")} — evolve the schema " +
         "with a full commit first")
-    val conformed = conform(df, target)
-    val markersFrom = if (epoch.isEmpty) Some(new Path(vDir)) else None
-    val markers = epoch.map(e => s"_epoch.$e").toSeq
-    if (MergeOnRead.isMorVersion(spark, dir, v))
-      return MergeOnRead.stageAppend(spark, dir, v, conformed,
-        Seal(markersFrom = markersFrom, markers = markers,
-          dml = Some((v, "append", Nil)), schema = Some(target)))
-    val dataFiles = listDataRel(f, new Path(vDir)).map(_._1)
-    val st = stage(spark, dir)(writeFrame(conformed, _,
-      pcolsOf(dataFiles), rebalance = true))
-    seal(spark, dir, st, cowSeal(dir, v, sidecarsOf(spark, vDir), target,
-      dataFiles, "append", Nil)
-      .copy(markersFrom = markersFrom, markers = markers))
+    val phys = MergeOnRead.physicalFiles(f, dir, v)
+    // the delta's row count rides its stage write
+    val obs = new org.apache.spark.sql.Observation()
+    val st = stage(spark, dir)(writeFrame(conform(df, target)
+      .observe(obs, count(lit(1)).as("n")), _,
+      pcolsOf(phys.map(_._2)), rebalance = true))
+    if (epoch.isEmpty && stagedRows(spark, obs, st) == 0L) {
+      f.delete(st, true)
+      return None
+    }
+    val s =
+      if (MergeOnRead.isMorVersion(spark, dir, v))
+        MergeOnRead.carrySeal(f, dir, v).copy(
+          dml = Some(Provenance(v, "append", Nil)), schema = Some(target))
+      else cowSeal(dir, v, sidecarsOf(spark, vDir), target,
+        phys.map(_._2), "append", Nil)
+    Some(seal(spark, dir, st, s.copy(
+      base = if (epoch.isEmpty) Some(new Path(vDir)) else None,
+      epochs = epoch.toSeq)))
   }
+
+  /** The rows a stage write observed as `n` through `obs` — or, on
+    * Spark's empty-observation race ([[observedOrNone]]), the row
+    * counts of the stage's parquet footers, read on the driver: no
+    * Spark job either way. */
+  private def stagedRows(spark: SparkSession,
+      obs: org.apache.spark.sql.Observation, stage: Path): Long =
+    observedOrNone(obs).map(_("n").asInstanceOf[Long]).getOrElse {
+      val conf = spark.sparkContext.hadoopConfiguration
+      val f = stage.getFileSystem(conf)
+      listDataRel(f, stage).map { case (rel, _) =>
+        org.apache.parquet.hadoop.ParquetFileReader.readFooter(conf,
+          new Path(stage, rel),
+          org.apache.parquet.format.converter.ParquetMetadataConverter
+            .NO_FILTER).getBlocks.asScala.map(_.getRowCount).sum
+      }.sum
+    }
 
   /** [[appendVersion]] with the epoch fence — the streaming-sink
     * write primitive behind `writeStream.format("snapshot")`: each
@@ -1054,42 +1187,6 @@ object Snapshots {
       }
     }.toMap
 
-  private val DmlName = "_dml.json"
-
-  private def writeDml(f: FileSystem, stage: Path,
-      base: Long, op: String, touched: Seq[String]): Unit = {
-    val files = touched.sorted
-      .map(r => s""""${FileStats.jsonEscape(r)}"""").mkString(",")
-    val out = f.create(new Path(stage, DmlName), true)
-    try out.write(
-      s"""{"base":$base,"op":"$op","touched":[$files]}"""
-        .getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  /** (base, op, touched files) of a version's DML provenance; None
-    * when the version was not produced by a DML statement. */
-  private[operators] def readDml(f: FileSystem,
-      vDir: String): Option[(Long, String, Seq[String])] = {
-    if (!VersionDir.of(f, new Path(vDir)).hasDml) return None
-    val in = f.open(new Path(vDir, DmlName))
-    val text =
-      try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-        "UTF-8")
-      finally in.close()
-    val Head = """\{"base":(\d+),"op":"(\w+)","touched":\[""".r.unanchored
-    val FileR = """"((?:[^"\\]|\\.)*)"""".r
-    val (base, op) = text match {
-      case Head(b, o) => (b.toLong, o)
-      case _ => throw new IllegalStateException(
-        s"corrupt $DmlName in $vDir: $text")
-    }
-    val blob = text.substring(text.indexOf("\"touched\":[") + 11)
-    val files = FileR.findAllMatchIn(blob)
-      .map(m => FileStats.jsonUnescape(m.group(1))).toSeq
-    Some((base, op, files))
-  }
-
   /** Publish `v` only if the head is still `expected` — the guard
     * that keeps a Rebase/Abort committer from moving the pointer
     * BACKWARDS over a Replace committer (which allocates the next FREE
@@ -1104,25 +1201,14 @@ object Snapshots {
     else { publish(spark, dir, v); true }
   }
 
-  // ---- the schema record ----------------------------------------------
+  // ---- the read schema ------------------------------------------------
 
-  private val SchemaName = "_schema.json"
-
-  /** The read schema version directory `vDir` recorded in its
-    * `_schema.json` when it was sealed; None for a version with no
-    * record (a store written before records existed, or a version
-    * planted by hand). */
+  /** The read schema version directory `vDir` recorded when it was
+    * sealed; None for a version with no record (a version planted by
+    * hand) or no data file of its own. */
   private[operators] def schemaOf(spark: SparkSession, vDir: String)
-      : Option[org.apache.spark.sql.types.StructType] = {
-    val in =
-      try fs(spark, vDir).open(new Path(vDir, SchemaName))
-      catch { case _: java.io.FileNotFoundException => return None }
-    val text =
-      try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-      finally in.close()
-    Some(org.apache.spark.sql.types.DataType.fromJson(text)
-      .asInstanceOf[org.apache.spark.sql.types.StructType])
-  }
+      : Option[org.apache.spark.sql.types.StructType] =
+    VersionDir.of(fs(spark, vDir), new Path(vDir)).record.schema
 
   /** The schema `spark.read.parquet(dir)` infers when `dir` holds the
     * data files `rels` (paths relative to `dir`), with no Spark job:
@@ -1146,15 +1232,9 @@ object Snapshots {
       spark.read.schema(data).parquet(dir.toString).schema
     }
 
-  private def writeSchema(f: FileSystem, stage: Path,
-      schema: org.apache.spark.sql.types.StructType): Unit = {
-    val out = f.create(new Path(stage, SchemaName), true)
-    try out.write(schema.json.getBytes("UTF-8")) finally out.close()
-  }
-
   /** THE reader of a version's files: the data files `rels` (paths
     * relative to `vDir`; default: the whole version directory) under
-    * `basePath` `vDir`, typed by the version's `_schema.json` record —
+    * `basePath` `vDir`, typed by the schema in the version's record —
     * so no read of a recorded version starts a schema-inference Spark
     * job. A version without a record is read by inference. */
   private[operators] def readFileSet(spark: SparkSession, vDir: String,
@@ -1287,7 +1367,7 @@ object Snapshots {
     * row per existing `v=` directory (`published` marks main's
     * history up to the head, [[mainHistory]]'s rule; crashed orphans
     * stay visible for forensics), row counts from the stats manifest
-    * when one exists (never a data scan), epoch markers and sidecar
+    * when one exists (never a data scan), epochs and sidecar
     * presence. Pure metadata reads: O(versions) directory listings. */
   def history(spark: SparkSession, dir: String): Seq[VersionInfo] = {
     val f = fs(spark, dir)
@@ -1304,7 +1384,7 @@ object Snapshots {
         else None
       VersionInfo(v, published = root.published(v, head),
         data.size.toLong, data.map(_._2).sum, rows,
-        meta.epochs.toSeq.sorted, meta.hasStats, meta.bloomCols)
+        meta.record.epochs, meta.hasStats, meta.bloomCols)
     }
   }
 

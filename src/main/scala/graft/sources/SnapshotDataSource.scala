@@ -74,7 +74,7 @@ class SnapshotDataSource extends RelationProvider
 
   // ---- streaming WRITE: writeStream.format("snapshot") ------------
   // The fourth direction of the one-format story: each micro-batch
-  // commits as one version with its epoch marker sealed by the same
+  // commits as one version with its epoch id sealed by the same
   // atomic slot rename as any commit, through the commitWithEpoch
   // fence — a restarted query re-offering an already-published epoch
   // no-ops (exactly-once), and a crashed attempt that died between
@@ -292,7 +292,7 @@ class SnapshotDataSource extends RelationProvider
 }
 
 /** The v1 streaming sink behind `writeStream.format("snapshot")`:
-  * one committed version per micro-batch, `_epoch.<batchId>` fenced.
+  * one committed version per micro-batch, fenced by its batch id.
   * The engine's `data` frame carries an incremental (streaming)
   * plan; the ForeachBatchSink idiom — wrap its executed RDD in a
   * batch-tagged frame — lets the library write path run on it. */

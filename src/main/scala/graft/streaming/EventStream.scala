@@ -414,7 +414,7 @@ object EventStream {
     * [[mergeSink]] — whose exactly-once rests on the MERGE being
     * idempotent — this holds for non-idempotent batches too (append
     * logs, deltas): a crash-re-delivered epoch is detected from the
-    * head version's sealed `_epoch.N` marker and skipped, so the
+    * epoch id sealed in the head version's record and skipped, so the
     * table gains exactly one version per epoch no matter how many
     * times the engine replays it. Downstream readers get snapshot
     * isolation + time travel over the stream's history for free.
@@ -429,7 +429,7 @@ object EventStream {
         (batch: Dataset[org.apache.spark.sql.Row], epochId: Long) =>
           // optional stats/bloom sidecars keep the STREAMING table
           // pruning-capable like any batch-committed one — sealed
-          // with the epoch marker by the same atomic slot rename
+          // with the epoch id by the same atomic slot rename
           graft.operators.Snapshots.commitWithEpoch(
             batch.sparkSession, batch.toDF(), tableDir, epochId,
             statsCols, bloomCols)

@@ -135,7 +135,7 @@ class CommitPipelineSpec extends SparkSpec {
       .head.getLong(0) == 391L)
     // two statements race from the same head while a settled version
     // sits inside the range the winner's head descends through:
-    // validation follows main's `_dml.json` chain, not every v=N
+    // validation follows main's provenance chain, not every v=N
     val h = Snapshots.latestVersion(spark, dir)
     settle(h + 1, 8000L)
     val (v, rs) = PipelineHook.raceAt(dir, "seal") {

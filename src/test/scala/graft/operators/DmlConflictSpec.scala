@@ -33,6 +33,11 @@ class DmlConflictSpec extends SparkSpec {
       partitionByCols = Seq("b"))
   }
 
+  /** (base, op, touched) of the provenance in a version's record. */
+  private def dmlOf(vDir: String): Option[(Long, String, Seq[String])] =
+    Snapshots.VersionDir.of(hfs, new org.apache.hadoop.fs.Path(vDir))
+      .record.dml.map(d => (d.base, d.op, d.touched))
+
   /** A claim with no publisher: a committer that died after claiming. */
   private def squatNextSlot(dir: String): Unit =
     hfs.create(new org.apache.hadoop.fs.Path(dir, "_claim.2"),
@@ -43,17 +48,17 @@ class DmlConflictSpec extends SparkSpec {
     val dir = freshDir("graft-txp")
     build(dir)
     CopyOnWrite.deleteWhere(spark, dir, col("k") <= 99L)
-    val dml = Snapshots.readDml(hfs, s"$dir/v=2")
-      .getOrElse(fail("no _dml.json on a DML version"))
+    val dml = dmlOf(s"$dir/v=2")
+      .getOrElse(fail("no provenance on a DML version"))
     assert(dml._1 == 1L && dml._2 == "delete")
     assert(dml._3.size == 1 && dml._3.head.startsWith("b=0/"), dml._3)
     CopyOnWrite.updateWhere(spark, dir, col("k") === 399L,
       Map("k" -> lit(9999L)))
-    val up = Snapshots.readDml(hfs, s"$dir/v=3").get
+    val up = dmlOf(s"$dir/v=3").get
     assert(up._1 == 2L && up._2 == "update" &&
       up._3.head.startsWith("b=3/"))
     // non-DML versions carry none
-    assert(Snapshots.readDml(hfs, s"$dir/v=1").isEmpty)
+    assert(dmlOf(s"$dir/v=1").isEmpty)
   }
 
   test("two writers on DISJOINT files both land: the loser " +
@@ -142,14 +147,14 @@ class DmlConflictSpec extends SparkSpec {
     val dir = freshDir("graft-txmp")
     build(dir)
     MergeOnRead.deleteWhere(spark, dir, col("k") <= 99L)
-    val dml = Snapshots.readDml(hfs, s"$dir/v=2")
-      .getOrElse(fail("no _dml.json on a MoR DML version"))
+    val dml = dmlOf(s"$dir/v=2")
+      .getOrElse(fail("no provenance on a MoR DML version"))
     assert(dml._1 == 1L && dml._2 == "mor_delete")
     assert(dml._3.size == 1 && dml._3.head.startsWith("v=1/b=0/"),
       dml._3)
     MergeOnRead.updateWhere(spark, dir, col("k") === 399L,
       Map("k" -> lit(9999L)))
-    val up = Snapshots.readDml(hfs, s"$dir/v=3").get
+    val up = dmlOf(s"$dir/v=3").get
     assert(up._2 == "mor_update" && up._3.head.startsWith("v=1/b=3/"))
   }
 
@@ -218,8 +223,8 @@ class DmlConflictSpec extends SparkSpec {
     val src = (0L to 4L).map(i => (i, 0L)).toDF("k", "b")
     val (v2, _) = CopyOnWrite.mergeInto(spark, dir, src, Seq("k"))
     assert(v2 == 2L)
-    val dml = Snapshots.readDml(hfs, s"$dir/v=2")
-      .getOrElse(fail("merge published no _dml.json"))
+    val dml = dmlOf(s"$dir/v=2")
+      .getOrElse(fail("merge published no provenance"))
     assert(dml._1 == 1L && dml._2 == "merge", dml)
     assert(dml._3.size == 1 && dml._3.head.startsWith("b=0/"), dml._3)
     // disjoint race: worker deletes in b=3 while the merge (routed

@@ -339,14 +339,4 @@ class FileStatsSpec extends SparkSpec {
     val m = FileStats.readManifest(spark, dir2)
     assert(m.nonEmpty && m.head.cols.contains("detail.amount"))
   }
-
-  test("JSON escape codec round-trips every metacharacter class") {
-    val cases = Seq("plain", "\"q\"", "back\\slash", "n\nl", "r\rt\tx",
-      "ctl", "mix\"\\\nend", "")
-    cases.foreach { s =>
-      assert(FileStats.jsonUnescape(FileStats.jsonEscape(s)) == s,
-        s"round-trip failed for ${s.getBytes("UTF-8").mkString(",")}")
-    }
-    assert(!FileStats.jsonEscape("a\nb\"c").exists(c => c == '\n'))
-  }
 }

@@ -52,7 +52,7 @@ class MorDeleteSpec extends SparkSpec {
     // the MoR version directory holds NO data files at all
     assert(dataFilesIn(s"$morDir/v=2").isEmpty)
     assert(mor.filesReferenced == 4L)
-    // sidecar = tombstones + refs + _dml.json provenance; even on
+    // sidecar = tombstones + the version record; even on
     // this 400-row fixture it is a small fraction of the CoW movement
     // (at scale the ratio is bytes-vs-terabytes)
     assert(mor.bytesWritten < mor.cowBytesAvoided / 3,

@@ -3,7 +3,7 @@ package graft.operators
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** Each snapshot version records its read schema (`_schema.json`)
+/** Each snapshot version records its read schema (`_version.json`)
   * when it is sealed, and every read of a version's files takes it:
   * the record equals what `spark.read.parquet(vDir)` infers, for
   * every writer, except where the files a statement wrote or carried
@@ -240,7 +240,7 @@ class SchemaRecordSpec extends SparkSpec {
     val dir = freshDir("graft-rec-none")
     partitioned(dir)
     val vDir = s"$dir/v=1"
-    Seq("_schema.json", "._schema.json.crc")
+    Seq("_version.json", "._version.json.crc")
       .foreach(n => new java.io.File(vDir, n).delete())
     assert(Snapshots.schemaOf(spark, vDir).isEmpty)
     val inferred = spark.read.parquet(vDir)

@@ -10,6 +10,12 @@ class SnapshotsSpec extends SparkSpec {
     Option(new java.io.File(dir, "_staging").listFiles())
       .toSeq.flatten.map(_.getName)
 
+  private def hfs = org.apache.hadoop.fs.FileSystem.getLocal(
+    spark.sparkContext.hadoopConfiguration)
+
+  private def recordOf(vDir: String): Snapshots.VersionRecord =
+    Snapshots.VersionDir.of(hfs, new org.apache.hadoop.fs.Path(vDir)).record
+
   test("commit publishes atomically: versions are immutable, reads " +
     "resolve the pointer, an unpublished directory is invisible") {
     val dir = java.nio.file.Files
@@ -183,11 +189,11 @@ class SnapshotsSpec extends SparkSpec {
     val (nv, _) = SnapshotMaintenance.compact(spark, dir,
       targetBytes = 1L << 30)
     assert(nv == 4L)
-    // the compacted head must carry the source's _epoch.2 marker —
-    // the data-file listing rightly skips _-prefixed files, so
-    // without the explicit copy the fence silently vanished here
-    assert(new java.io.File(s"$dir/v=4/_epoch.2").exists(),
-      "compaction must carry the epoch marker forward")
+    // the compacted head must carry the source's epoch 2 — the
+    // data-file listing rightly skips _-prefixed files, so without
+    // the explicit carry the fence silently vanished here
+    assert(recordOf(s"$dir/v=4").epochs.contains(2L),
+      "compaction must carry the epoch forward")
     // crash-replay of epoch 2 (Structured Streaming re-executes the
     // last uncommitted micro-batch): the fence must hold
     val replay = Snapshots.commitWithEpoch(spark,
@@ -217,7 +223,9 @@ class SnapshotsSpec extends SparkSpec {
     // v=2 exists complete (data + marker + claim), pointer still at 1
     Seq((1, "e1-original")).toDF("id", "s").write.parquet(s"$dir/v=2")
     val d = new java.io.File(dir)
-    assert(new java.io.File(s"$dir/v=2/_epoch.1").createNewFile())
+    StoreJson.write(hfs, new org.apache.hadoop.fs.Path(s"$dir/v=2",
+      Snapshots.VersionRecord.Name),
+      Seq(Snapshots.VersionRecord(epochs = Seq(1L)).toJson))
     assert(new java.io.File(d, "_claim.2").createNewFile())
     // the replay must publish the EXISTING complete attempt, not
     // duplicate the epoch into a fresh slot above it
@@ -227,10 +235,10 @@ class SnapshotsSpec extends SparkSpec {
     assert(Snapshots.latestVersion(spark, dir) == 2L)
     assert(Snapshots.read(spark, dir).collect().head.getString(1)
       == "e1-original")
-    // exactly ONE version carries _epoch.1 — time travel can never
+    // exactly ONE version carries epoch 1 — time travel can never
     // serve the epoch twice
     val marked = d.listFiles().filter(_.getName.startsWith("v=")).toSeq
-      .filter(v => new java.io.File(v, "_epoch.1").exists())
+      .filter(v => recordOf(v.toString).epochs.contains(1L))
     assert(marked.map(_.getName) == Seq("v=2"), marked.mkString(","))
     // the crashed attempt's claim marker was retired, not left live
     assert(!new java.io.File(d, "_claim.2").exists())
@@ -301,7 +309,7 @@ class SnapshotsSpec extends SparkSpec {
       statsCols = Seq("k"), bloomCols = Seq("uid")) == Right(1L))
     assert(new java.io.File(s"$dir/v=1/_stats.json").exists())
     assert(new java.io.File(s"$dir/v=1/_bloom_uid.json").exists())
-    assert(new java.io.File(s"$dir/v=1/_epoch.0").exists())
+    assert(recordOf(s"$dir/v=1").epochs == Seq(0L))
     val (_, ps) = prunedRead(dir, col("k").between(0, 10))
     assert(ps.filesSkipped >= 1, ps.toString)
     val (pl, _) = prunedRead(dir, col("uid") === "u-150")
@@ -539,9 +547,7 @@ class SnapshotsSpec extends SparkSpec {
     // manifest recomputed: the table still prunes
     assert(FileStats.readManifest(spark, s"$dir/v=3").nonEmpty)
     // provenance: concurrent Tx DML sees the merge
-    val hfs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    assert(Snapshots.readDml(hfs, s"$dir/v=2").exists(_._2 == "merge"))
+    assert(recordOf(s"$dir/v=2").dml.exists(_.op == "merge"))
     // MERGE cardinality: two source rows matching ONE target row
     // refuse with the SQL-standard error, never silent duplication
     val dupSrc = Seq((5L, 1L), (5L, 2L)).toDF("id", "amt")

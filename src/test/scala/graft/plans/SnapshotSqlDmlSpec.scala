@@ -219,8 +219,8 @@ class SnapshotSqlDmlSpec extends SparkSpec {
       "INSERT mutated the published v=1 in place")
     assert(spark.sql(s"SELECT count(*) AS n FROM $t").head.getLong(0)
       == 401L)
-    val provPath = new org.apache.hadoop.fs.Path(s"$dir/v=2/_dml.json")
-    assert(hfs.exists(provPath), "append published no provenance")
+    val provPath = new org.apache.hadoop.fs.Path(s"$dir/v=2/_version.json")
+    assert(hfs.exists(provPath), "append published no record")
     val provText = {
       val in = hfs.open(provPath)
       try new String(
@@ -298,12 +298,18 @@ class SnapshotSqlDmlSpec extends SparkSpec {
     val (t, dir) = mkTable()
     def count(where: String): Long =
       spark.sql(s"SELECT count(*) FROM $t WHERE $where").head.getLong(0)
+    def versionDirs = new java.io.File(dir).list().toSeq
+      .filter(_.startsWith("v=")).sorted
+    val before = (Snapshots.latestVersion(spark, dir), versionDirs)
     val empty = Future(spark.sql(s"INSERT INTO $t (k, b, payload) " +
       "SELECT id AS k, " +
       "1 AS b, 'none' AS payload FROM range(10) WHERE false")
       .head.getLong(0))(scala.concurrent.ExecutionContext.global)
     assert(Await.result(empty, 120.seconds) == 0L)
     assert(count("true") == 400L)
+    // a no-op INSERT publishes nothing: no new head, no new v=N
+    assert((Snapshots.latestVersion(spark, dir), versionDirs) == before,
+      "an empty INSERT published a version")
     // the source is evaluated once: the count is of the rows written
     val drawn = spark.sql(s"INSERT INTO $t (k, b, payload) " +
       "SELECT id + 1000 AS k, " +

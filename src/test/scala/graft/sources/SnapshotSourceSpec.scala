@@ -320,12 +320,12 @@ class SnapshotSourceSpec extends SparkSpec {
     val got = spark.read.format("snapshot").load(dst)
     assert(got.count() == 30L)
     assert(got.select("k").distinct().count() == 30L)
-    // epoch markers seal each sink version (the exactly-once fence)
+    // epoch ids seal each sink version (the exactly-once fence)
     val f = new org.apache.hadoop.fs.Path(dst).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    val v1Files = f.listStatus(new org.apache.hadoop.fs.Path(
-      s"$dst/v=1")).map(_.getPath.getName)
-    assert(v1Files.exists(_.startsWith("_epoch.")), v1Files.toSeq)
+    val v1Record = Snapshots.VersionDir.of(f, new org.apache.hadoop.fs.Path(
+      s"$dst/v=1")).record
+    assert(v1Record.epochs.nonEmpty, v1Record)
     // new source commits + a RESTARTED query from the same
     // checkpoint: only the new versions land, zero redelivery
     (3 until 5).foreach(i => Snapshots.commit(spark,
